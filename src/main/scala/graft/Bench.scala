@@ -153,10 +153,10 @@ object Bench {
     // line is ~6 KB and the query NAMES alone are ~2.3 KB, so no complete
     // per-query line can ever fit the window (PERF_r16/r17 both ended up
     // with parsed:null and an empty per_query table). Re-emit the map in
-    // chunked JSON lines — each far under 2,000 chars, so whole chunks
-    // sit inside any tail window — then END stdout with one compact
-    // summary line (same metric/value/unit/sf keys, plus the slowest
-    // queries that fit) that is always complete inside the tail.
+    // chunked JSON lines of about 1,200 chars each, so the last chunks
+    // can sit whole inside the tail window, then END stdout with one
+    // compact summary line (same metric/value/unit/sf keys, plus the
+    // slowest queries that fit) that is always complete inside the tail.
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val items = results.map { case (k, v) =>
@@ -173,11 +173,12 @@ object Bench {
       println(s"""{"metric":"queries_chunk","part":${i + 1},""" +
         s""""of":${chunks.size},"unit":"sec","queries":{${c.mkString(",")}}}""")
     }
-    // Summary: headline totals + as many of the SLOWEST queries as fit a
-    // ~1,700-char line (the ones whose round-over-round drift matters;
-    // the full map is two lines up, in the full line, and in
-    // BENCH.local.json). Adding entries under "queries" is allowed by the
-    // bench contract; nothing is removed from the full line.
+    // Summary: headline totals + the longest slowest-first prefix of the
+    // queries that fits a ~1,700-char line (the ones whose
+    // round-over-round drift matters; the full map is two lines up, in
+    // the full line, and in BENCH.local.json). Adding entries under
+    // "queries" is allowed by the bench contract; nothing is removed
+    // from the full line.
     val summaryBase = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":{""" -> (
       s"""},"failed":${failed + extraFailed}""" +
         ingest.fold("")(r => s""","streaming_ingest_sec":${f3(r.wallSec)}""" +
@@ -189,10 +190,10 @@ object Bench {
     val bySlowest = results.sortBy(-_._2).map { case (k, v) =>
       JsonStr.q(k) + ":" + (if (v < 0) "-1" else f3(v))
     }
-    val picked = bySlowest.foldLeft(List.empty[String]) { (acc, it) =>
-      if (fixedLen + acc.map(_.length + 1).sum + it.length <= 1700) it :: acc
-      else acc
-    }.reverse
+    // a true slowest-first prefix: stop at the first entry that does not fit
+    val picked = bySlowest.zip(bySlowest.scanLeft(fixedLen)(_ + _.length + 1))
+      .takeWhile { case (it, used) => used + it.length <= 1700 }
+      .map(_._1)
     println(summaryBase._1 + picked.mkString(",") + summaryBase._2)
     spark.stop()
     if (failed > 0 || ingest.isEmpty || routed.isEmpty || routedMismatch)

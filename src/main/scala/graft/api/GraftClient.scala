@@ -88,8 +88,9 @@ import graft.streaming.BucketedKeyedCollection
   *     resume a deep page from; the drain contract (every live row,
   *     exact order, no duplicates across pages) needs a total keyset
   *     order only the store scan provides. Binary: keyset drain over
-  *     the packed words; sparse: postings-ranked pages with the pinned
-  *     snapshot.
+  *     the packed words; sparse: exact map-probe pages over the pinned
+  *     snapshot. Every iterator runs on the one [[pagedIterator]]
+  *     scaffold (drift check, short-page end).
   *   - '''searchBatch''' — same per-family stage 1 as single-query
   *     (cells / SQ8 codes / ADC / per-shard batched walk, masked when
   *     filtered), with one bounded top-k heap per query.
@@ -1974,12 +1975,9 @@ class GraftClient(spark: SparkSession, root: String,
       }
       // BIN_IVF_FLAT warms its cell layout (liveIndex is None for binary
       // collections too — freshness resolves through loadBinIndex)
-      loadBinIndex(pm).filter { case (_, v) => coll.currentVersion.contains(v) }
-        .foreach { case (_, v) =>
-          loadedIndexFrame(coll, cellsPath(pm), v,
-            () => spark.read.schema(binCellsSchema).parquet(cellsPath(pm)))
-            .count()
-        }
+      liveBinIndex(pm, coll).foreach { case (_, v) =>
+        binCells(pm, coll, v).count()
+      }
       n
     }.sum
   }
@@ -4146,8 +4144,9 @@ class GraftClient(spark: SparkSession, root: String,
           ef = ef)
       }
       .reduce(_ unionByName _)
-    projectOutputFields(paged(scored, offset, k), outputFields,
-      vecFields = m.extraVecFields.map(_.name).toSet)
+    projectOutputFields(
+      page(scored, offset, k)(col("distance"), col("vector_key")),
+      outputFields, vecFields = m.extraVecFields.map(_.name).toSet)
   }
 
   /** Milvus `output_fields` over a (vector_key, distance, metadata)
@@ -4250,7 +4249,9 @@ class GraftClient(spark: SparkSession, root: String,
             Seq("vector_key"), "left_semi"))
       }
       .reduce(_ unionByName _)
-    projectOutputFields(paged(scored, offset, k), outputFields)
+    projectOutputFields(
+      page(scored, offset, k)(col("distance"), col("vector_key")),
+      outputFields)
   }
 
   /** One-call Milvus `search` on a BINARY_VECTOR collection with the
@@ -4274,8 +4275,6 @@ class GraftClient(spark: SparkSession, root: String,
       consistencyLevel = consistencyLevel, matchGates = gates, field = field)
   }
 
-  /** One partition's scored binary candidates — [[scoredCandidates]]'s
-    * role for the packed-words family. */
   /** Milvus grouping search on a BINARY_VECTOR field —
     * `group_by_field`/`group_size` with [[searchGrouped]]'s exact
     * semantics and shape: top-`k` DISTINCT groups by their best
@@ -4301,68 +4300,65 @@ class GraftClient(spark: SparkSession, root: String,
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(groupSize >= 1, s"groupSize must be >= 1 (got $groupSize)")
     require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe)")
-    val cand = resolveParts(m, partitions)
+    val base = resolveParts(m, partitions)
       .map(p => binScored(partMeta(m, p), q, withTtl(m, filter), nprobe))
       .reduce(_ unionByName _)
-      .withColumn("__grp", element_at(col("metadata"), lit(groupByKey)))
-      .filter(col("__grp").isNotNull)
-      .select(col("__grp").as("group_value"), col("distance"),
-        col("vector_key").as("key"), col("metadata").as("meta"))
-      // both passes consume this frame — lazy checkpoint (pass 1's
-      // collect materializes; pass 2 reads the cache; the fetchDf
-      // lifecycle stance on the blocks)
-      .localCheckpoint(false)
-    val bests = cand.groupBy(col("group_value"))
-      .agg(min(col("distance")).as("__best"))
-      .orderBy(col("__best"), col("group_value"))
-      .limit(k)
-      .collect()
-    import spark.implicits._
-    val ranks = bests.zipWithIndex.toSeq
-      .map { case (r, i) => (r.getString(0), (i + 1).toLong) }
-      .toDF("group_value", "grp_rank")
-    val topk = graft.functions.VectorAggregates.topKDocs(groupSize)
-    cand.join(broadcast(ranks), Seq("group_value"))
-      .groupBy(col("group_value"), col("grp_rank"))
-      .agg(topk(col("distance"), col("key"), col("meta")).as("tops"))
-      .select(col("group_value"), col("grp_rank"),
-        posexplode(col("tops")).as(Seq("pos", "hit")))
-      .select(col("group_value"), col("grp_rank"),
-        (col("pos") + 1).cast("long").as("rn"),
-        col("hit.key").as("vector_key"), col("hit.dist").as("distance"),
-        col("hit.meta").as("metadata"))
-      .orderBy(col("grp_rank"), col("rn"))
+      .select(col("vector_key").as("key"), col("distance"),
+        col("metadata").as("meta"))
+    // both passes consume the candidates — checkpointed once
+    groupedTop(base, groupByKey, k, groupSize, "distance",
+      higherIsBetter = false, checkpoint = true)
   }
 
+  /** One partition's scored binary candidates — [[scoredCandidates]]'s
+    * role for the packed-words family: the `nprobe` nearest cells of a
+    * fresh BIN_IVF_FLAT layout, else the exact (scalar-pruned) scan. */
   private def binScored(pm: CollectionMeta, q: Array[Long],
       filter: Option[Column], nprobe: Int): DataFrame = {
     val coll = collection(pm)
-    // parquet read-back types the words as NULLABLE elements, which the
-    // fused kernels refuse (a null word would silently read as 0) — the
-    // coalesce-transform re-establishes the non-null element type the
-    // write boundary enforced (no row ever carries one)
-    val codes = transform(col("vec"), w => coalesce(w, lit(0L)))
-    val dist = pm.metric match {
-      case "hamming" =>
-        graft.functions.BinaryVectorFunctions
-          .hamming_distance(codes, typedLit(q)).cast("double")
-      case _ =>
-        graft.functions.BinaryVectorFunctions
-          .jaccard_distance(codes, typedLit(q))
-    }
-    val base = loadBinIndex(pm)
-        .filter { case (_, v) => coll.currentVersion.contains(v) } match {
+    val base = liveBinIndex(pm, coll) match {
       case Some((quant, v)) =>
-        val cells = quant.probes(q, nprobe)
-        loadedIndexFrame(coll, cellsPath(pm), v,
-          () => spark.read.schema(binCellsSchema).parquet(cellsPath(pm)))
-          .filter(col("centroidId").isin(cells: _*))
+        binCells(pm, coll, v)
+          .filter(col("centroidId").isin(quant.probes(q, nprobe): _*))
       case None => scalarPrunedRead(pm, coll, filter)
     }
-    filter.fold(base)(base.filter)
-      .select(col("key").as("vector_key"), dist.as("distance"),
-        col("meta").as("metadata"))
+    binProject(pm, filter.fold(base)(base.filter), typedLit(q))
   }
+
+  /** The BIN_IVF_FLAT quantizer and its stamp IF stamped at the store's
+    * current snapshot — the binary family's one staleness rule. */
+  private def liveBinIndex(pm: CollectionMeta, coll: BucketedKeyedCollection)
+      : Option[(graft.index.BinIvfIndex.BinQuantizer, Long)] =
+    loadBinIndex(pm).filter { case (_, v) => coll.currentVersion.contains(v) }
+
+  /** The BIN_IVF_FLAT cell layout stamped at `v` (loaded-frame cached). */
+  private def binCells(pm: CollectionMeta, coll: BucketedKeyedCollection,
+      v: Long): DataFrame =
+    loadedIndexFrame(coll, cellsPath(pm), v,
+      () => spark.read.schema(binCellsSchema).parquet(cellsPath(pm)))
+
+  /** The binary family's distance column against query words `q`:
+    * Hamming (exact small ints, cast double for the shared result
+    * envelope) or Jaccard over the bit sets. Parquet read-back types the
+    * stored words as NULLABLE elements, which the fused kernels refuse (a
+    * null word would silently read as 0) — the coalesce-transform
+    * re-establishes the non-null element type the write boundary
+    * enforced (no row ever carries one). */
+  private def binDistance(metric: String, q: Column): Column = {
+    val codes = transform(col("vec"), w => coalesce(w, lit(0L)))
+    metric match {
+      case "hamming" => graft.functions.BinaryVectorFunctions
+        .hamming_distance(codes, q).cast("double")
+      case _ => graft.functions.BinaryVectorFunctions.jaccard_distance(codes, q)
+    }
+  }
+
+  /** (vector_key, distance, metadata) — the shared result envelope over
+    * a binary rows frame. */
+  private def binProject(pm: CollectionMeta, rows: DataFrame,
+      q: Column): DataFrame =
+    rows.select(col("key").as("vector_key"),
+      binDistance(pm.metric, q).as("distance"), col("meta").as("metadata"))
 
   /** Binary range search — Milvus `radius`/`range_filter` params on a
     * BINARY_VECTOR field: every row whose distance satisfies
@@ -4400,11 +4396,9 @@ class GraftClient(spark: SparkSession, root: String,
     val banded = resolveParts(m, partitions).map { p =>
       val pm = partMeta(m, p)
       val coll = collection(pm)
-      val base = loadBinIndex(pm)
-          .filter { case (_, v) => coll.currentVersion.contains(v) } match {
+      val base = liveBinIndex(pm, coll) match {
         case Some((quant, v)) if pm.metric == "hamming" =>
-          val cellsDf = loadedIndexFrame(coll, cellsPath(pm), v,
-            () => spark.read.schema(binCellsSchema).parquet(cellsPath(pm)))
+          val cellsDf = binCells(pm, coll, v)
           readBinRadii(pm) match {
             case Some(rad) =>
               // a cell is droppable iff its MIN possible distance
@@ -4421,18 +4415,7 @@ class GraftClient(spark: SparkSession, root: String,
           }
         case _ => scalarPrunedRead(pm, coll, tFilter)
       }
-      val codes = transform(col("vec"), w => coalesce(w, lit(0L)))
-      val dist = pm.metric match {
-        case "hamming" =>
-          graft.functions.BinaryVectorFunctions
-            .hamming_distance(codes, typedLit(q)).cast("double")
-        case _ =>
-          graft.functions.BinaryVectorFunctions
-            .jaccard_distance(codes, typedLit(q))
-      }
-      tFilter.fold(base)(base.filter)
-        .select(col("key").as("vector_key"), dist.as("distance"),
-          col("meta").as("metadata"))
+      binProject(pm, tFilter.fold(base)(base.filter), typedLit(q))
         .filter(col("distance") < radius &&
           col("distance") >= rangeFilter)
     }.reduce(_ unionByName _)
@@ -4450,12 +4433,15 @@ class GraftClient(spark: SparkSession, root: String,
     * is the same double everywhere). Every page is ONE bounded
     * TakeOrderedAndProject job at ANY depth.
     *
-    * Snapshot contract (the float iterator's, verbatim): coverage is
-    * PINNED to the snapshot at creation. A commit landing mid-drain
-    * raises on the next page unless the caller consented via
-    * `allowDrift` — in which case pages keep reading the pinned
-    * snapshot while the retain window holds it (a vacuumed pin then
-    * fails the page job loudly; restart the iterator).
+    * Snapshot contract (the float iterator's, on the same
+    * [[pagedIterator]] scaffold): coverage is PINNED to the snapshot at
+    * creation. A commit landing mid-drain raises
+    * ConcurrentModificationException on the next page unless the caller
+    * consented via `allowDrift` — in which case pages keep reading the
+    * pinned snapshot while the retain window holds it (a vacuumed pin
+    * then fails the page with IllegalStateException; restart the
+    * iterator). A page shorter than `batchSize` ends the drain — no
+    * extra job fetches an empty page.
     *
     * Deep-page prune: while the BIN_IVF_FLAT index is stamped AT the
     * pinned snapshot, pages read the cell layout and LOSSLESSLY skip
@@ -4478,35 +4464,28 @@ class GraftClient(spark: SparkSession, root: String,
       s"query needs ${binWords(m.dim)} packed 64-bit words for " +
         s"dim ${m.dim} bits (got ${q.length})")
     require(batchSize >= 1, s"batchSize must be >= 1 (got $batchSize)")
-    val parts = resolveParts(m, partitions).map(p => partMeta(m, p))
     // TTL cutoff pinned at drain start (one read, one clock)
     val tFilter = withTtl(m, filter)
-    // creation-time pins: snapshot version + (if fresh) quantizer/radii
-    val pins = parts.map { pm =>
-      val coll = collection(pm)
-      val pin = coll.currentVersion
+    // creation-time pins: the snapshot versions pagedIterator checks and
+    // every page reads, plus (if fresh at the pin) quantizer and radii
+    val pins = snapshotPins(m, resolveParts(m, partitions))
+    val arms = pins.map { case (p, pin) =>
+      val pm = partMeta(m, p)
       val idx = loadBinIndex(pm)
         .filter { case (_, v) => pin.contains(v) && pm.metric == "hamming" }
         .map { case (quant, v) => (quant, v, readBinRadii(pm)) }
       (pm, pin, idx)
     }
-    def page(cursor: Option[(Double, String)]): Seq[Row] = {
-      val arms = pins.map { case (pm, pin, idx) =>
+    keysetIterator(m, pins, allowDrift, batchSize) { cursor =>
+      arms.map { case (pm, pin, idx) =>
         val coll = collection(pm)
-        val cur = coll.currentVersion
-        if (cur != pin && !allowDrift)
-          throw new IllegalStateException(s"${pm.name}: a commit landed " +
-            "mid-iteration (snapshot pinned at creation) — restart the " +
-            "iterator, or pass allowDrift = true to keep draining the " +
-            "pinned snapshot while the retain window holds it")
         // the cell layout serves only while its stamp (== pin at
         // creation) is still CURRENT — maintenance rewrites cells in
         // place, so a moved stamp means the cells no longer equal the
         // pinned snapshot
         val base = idx match {
-          case Some((quant, v, radii)) if cur.contains(v) =>
-            val cellsDf = loadedIndexFrame(coll, cellsPath(pm), v,
-              () => spark.read.schema(binCellsSchema).parquet(cellsPath(pm)))
+          case Some((quant, v, radii)) if coll.currentVersion.contains(v) =>
+            val cellsDf = binCells(pm, coll, v)
             (cursor, radii) match {
               case (Some((d0, _)), Some(rad)) =>
                 val dropped = rad.collect {
@@ -4517,54 +4496,10 @@ class GraftClient(spark: SparkSession, root: String,
                 else cellsDf.filter(!col("centroidId").isin(dropped: _*))
               case _ => cellsDf
             }
-          case _ => pin.fold(coll.read(spark))(v =>
-            try coll.readVersion(spark, v)
-            catch { case e: Exception => throw new IllegalStateException(
-              s"${pm.name}: the pinned snapshot was vacuumed mid-drain — " +
-                s"restart the iterator (${e.getMessage})") })
+          case _ => pinnedSnapshot(pm, coll, pin)
         }
-        val codes = transform(col("vec"), w => coalesce(w, lit(0L)))
-        val dist = pm.metric match {
-          case "hamming" =>
-            graft.functions.BinaryVectorFunctions
-              .hamming_distance(codes, typedLit(q)).cast("double")
-          case _ =>
-            graft.functions.BinaryVectorFunctions
-              .jaccard_distance(codes, typedLit(q))
-        }
-        val scored = tFilter.fold(base)(base.filter)
-          .select(col("key").as("vector_key"), dist.as("distance"),
-            col("meta").as("metadata"))
-        cursor.fold(scored) { case (d0, k0) =>
-          scored.filter(col("distance") > d0 ||
-            (col("distance") === d0 && col("vector_key") > k0))
-        }
-      }
-      arms.reduce(_ unionByName _)
-        .orderBy(col("distance"), col("vector_key"))
-        .limit(batchSize)
-        .collect().toSeq
-    }
-    new Iterator[Seq[Row]] {
-      private var cursor: Option[(Double, String)] = None
-      private var nextPage: Option[Seq[Row]] = None
-      private var exhausted = false
-      private def advance(): Unit =
-        if (!exhausted && nextPage.isEmpty) {
-          val rows = page(cursor)
-          if (rows.isEmpty) exhausted = true
-          else {
-            cursor = Some((rows.last.getDouble(1), rows.last.getString(0)))
-            nextPage = Some(rows)
-          }
-        }
-      override def hasNext: Boolean = { advance(); nextPage.isDefined }
-      override def next(): Seq[Row] = {
-        advance()
-        val out = nextPage.getOrElse(throw new NoSuchElementException)
-        nextPage = None
-        out
-      }
+        binProject(pm, tFilter.fold(base)(base.filter), typedLit(q))
+      }.reduce(_ unionByName _)
     }
   }
 
@@ -4606,8 +4541,7 @@ class GraftClient(spark: SparkSession, root: String,
     val candidates = resolveParts(m, partitions).map { part =>
       val pm = partMeta(m, part)
       val coll = collection(pm)
-      loadBinIndex(pm)
-          .filter { case (_, v) => coll.currentVersion.contains(v) } match {
+      liveBinIndex(pm, coll) match {
         case Some((quant, v)) if pm.metric == "hamming" =>
           val centersBc =
             cachedBroadcast(pm.name, "bincenters", v)(quant.centers)
@@ -4627,8 +4561,7 @@ class GraftClient(spark: SparkSession, root: String,
           }
           val qCells = q.withColumn("centroidId",
             explode(probeCells(col("qcodes"))))
-          loadedIndexFrame(coll, cellsPath(pm), v,
-            () => spark.read.schema(binCellsSchema).parquet(cellsPath(pm)))
+          binCells(pm, coll, v)
             .join(broadcast(qCells), Seq("centroidId"))
             .select(col("qid"), col("qcodes"), col("key"), col("vec"),
               col("meta"), col("ingest_ts"))
@@ -4638,19 +4571,12 @@ class GraftClient(spark: SparkSession, root: String,
               col("meta"), col("ingest_ts"))
       }
     }.reduce(_ unionByName _)
-    // both sides re-establish non-null word types for the fused kernels
-    // (parquet read-back and caller frames may carry nullable elements)
-    val codes = transform(col("vec"), w => coalesce(w, lit(0L)))
+    // caller query frames may carry nullable word elements too — the
+    // same non-null re-establishment binDistance applies to the store side
     val qc = transform(col("qcodes"), w => coalesce(w, lit(0L)))
-    val dist = m.metric match {
-      case "hamming" =>
-        graft.functions.BinaryVectorFunctions
-          .hamming_distance(codes, qc).cast("double")
-      case _ =>
-        graft.functions.BinaryVectorFunctions.jaccard_distance(codes, qc)
-    }
     tFilter.fold(candidates)(candidates.filter)
-      .select(col("qid"), dist.as("dist"), col("key"), col("meta"))
+      .select(col("qid"), binDistance(m.metric, qc).as("dist"), col("key"),
+        col("meta"))
       .groupBy(col("qid"))
       .agg(VectorAggregates.topKDocs(k)(col("dist"), col("key"), col("meta"))
         .as("hits"))
@@ -4846,24 +4772,19 @@ class GraftClient(spark: SparkSession, root: String,
     }
   }
 
-  /** Milvus `offset` pagination over a (vector_key, distance, metadata)
-    * result: top-(offset+k) stays pushed into TakeOrderedAndProject
-    * (every partition bounds to offset+k rows, k-way driver merge — no
-    * full sort at any offset), then a row-number window over the
-    * ≤ offset+k survivors drops the first page. Deep pagination costs
-    * O(offset+k) memory by construction — the same bound Milvus imposes
-    * by capping offset+limit. */
-  private def paged(scored: DataFrame, offset: Int, k: Int): DataFrame = {
-    val ordered = scored.orderBy(col("distance"), col("vector_key"))
-    if (offset <= 0) ordered.limit(k)
-    else {
-      import org.apache.spark.sql.expressions.Window
-      ordered.limit(offset + k)
-        .withColumn("__rn", row_number().over(
-          Window.orderBy(col("distance"), col("vector_key"))))
-        .filter(col("__rn") > offset).drop("__rn")
-        .orderBy(col("distance"), col("vector_key"))
-    }
+  /** Milvus `offset` pagination: rows `offset until offset + k` of
+    * `scored` in `order` — the ONE page rule every paged surface shares
+    * (float, binary, sparse, fused hybrid). Offset 0 plans as
+    * `orderBy.limit(k)`; a deeper page plans as ONE
+    * TakeOrderedAndProject(limit = offset+k, offset = offset): every
+    * partition bounds to offset+k rows, the driver's k-way merge drops
+    * the first `offset`, and no page runs a window or a full sort. Deep
+    * pagination costs O(offset+k) memory by construction — the same
+    * bound Milvus imposes by capping offset+limit. */
+  private def page(scored: DataFrame, offset: Int, k: Int)(
+      order: Column*): DataFrame = {
+    val ordered = scored.orderBy(order: _*)
+    if (offset <= 0) ordered.limit(k) else ordered.offset(offset).limit(k)
   }
 
   /** The IVF_SQ8 two-stage search (FAISS/Milvus `IVF_SQ8` semantics —
@@ -5399,37 +5320,60 @@ class GraftClient(spark: SparkSession, root: String,
               col("meta"))
       }
     }.reduce(_ unionByName _)
-    val cand = base
+    groupedTop(base, groupByKey, k, groupSize, "distance",
+      higherIsBetter = false, checkpoint = false)
+  }
+
+  /** The two-pass grouped tail every grouped surface shares (Milvus
+    * `group_by_field`/`group_size`). `base` is (key, `scoreCol`, meta);
+    * rows whose metadata lacks `groupByKey` drop.
+    *
+    *   - Pass 1 ranks the top-`k` groups by their best hit and collects
+    *     them. The ordering key (best, group_value) is unique per group,
+    *     so the k-row TakeOrdered + driver-side index assignment is a
+    *     deterministic dense ranking (ties in best break on
+    *     group_value, every rank distinct).
+    *   - Pass 2 broadcasts the k winners UNDER the per-group
+    *     top-`groupSize` heap: candidates of losing groups drop map-side
+    *     in the broadcast hash join, so the heap only ever aggregates k
+    *     groups.
+    *
+    * `checkpoint` materializes the candidates once for both passes
+    * (lazily — pass 1's collect fills it; the blocks live until the
+    * caller drops the result, the fetchDf lifecycle stance). Emits
+    * (group_value, grp_rank, rn, vector_key, `scoreCol`, metadata). */
+  private def groupedTop(base: DataFrame, groupByKey: String, k: Int,
+      groupSize: Int, scoreCol: String, higherIsBetter: Boolean,
+      checkpoint: Boolean): DataFrame = {
+    val grouped = base
       .withColumn("__grp", element_at(col("meta"), lit(groupByKey)))
       .filter(col("__grp").isNotNull)
-      .select(col("__grp").as("group_value"),
-        col("distance"), col("key"), col("meta"))
-    // pass 1 — top-k groups by best hit. Deterministic ranking: the
-    // ordering key (__best, group_value) is unique per group, so the
-    // k-row TakeOrdered + driver-side index assignment reproduces the
-    // previous dense_rank semantics exactly (ties in __best break on
-    // group_value, every rank distinct).
+      .select(col("__grp").as("group_value"), col(scoreCol), col("key"),
+        col("meta"))
+    val cand = if (checkpoint) grouped.localCheckpoint(false) else grouped
+    val s = col(scoreCol)
     val bests = cand.groupBy(col("group_value"))
-      .agg(min(col("distance")).as("__best"))
-      .orderBy(col("__best"), col("group_value"))
+      .agg((if (higherIsBetter) max(s) else min(s)).as("__best"))
+      .orderBy(if (higherIsBetter) desc("__best") else col("__best"),
+        col("group_value"))
       .limit(k)
       .collect()
     import spark.implicits._
     val ranks = bests.zipWithIndex.toSeq
       .map { case (r, i) => (r.getString(0), (i + 1).toLong) }
       .toDF("group_value", "grp_rank")
-    // pass 2 — broadcast the k winners UNDER the heap agg: candidates of
-    // losing groups are dropped map-side by the broadcast hash join, so
-    // the per-group top-`groupSize` heap only ever aggregates k groups
+    // the heap keeps the SMALLEST keys — similarity scores ride negated
     val topk = graft.functions.VectorAggregates.topKDocs(groupSize)
     cand.join(broadcast(ranks), Seq("group_value"))
       .groupBy(col("group_value"), col("grp_rank"))
-      .agg(topk(col("distance"), col("key"), col("meta")).as("tops"))
+      .agg(topk(if (higherIsBetter) -s else s, col("key"), col("meta"))
+        .as("tops"))
       .select(col("group_value"), col("grp_rank"),
         posexplode(col("tops")).as(Seq("pos", "hit")))
       .select(col("group_value"), col("grp_rank"),
         (col("pos") + 1).cast("long").as("rn"),
-        col("hit.key").as("vector_key"), col("hit.dist").as("distance"),
+        col("hit.key").as("vector_key"),
+        (if (higherIsBetter) -col("hit.dist") else col("hit.dist")).as(scoreCol),
         col("hit.meta").as("metadata"))
       .orderBy(col("grp_rank"), col("rn"))
   }
@@ -5779,10 +5723,8 @@ class GraftClient(spark: SparkSession, root: String,
         pqDrainAt(p)))
       mergedDrainIterator(m, parts, gates, qvec, fOpt, nprobe, refine,
         batchSize, allowDrift, liveAt, pqDrainAt)
-    else {
-    var cursor: Option[(Double, String)] = None
-    pagedIterator(m, parts, allowDrift, batchSize) { () =>
-      val scored = parts.zip(gates)
+    else keysetIterator(m, snapshotPins(m, parts), allowDrift, batchSize) { cursor =>
+      parts.zip(gates)
         .map { case (p, gate) =>
           val pm = partMeta(m, p)
           scoredCandidates(pm, qvec, fOpt, nprobe,
@@ -5798,15 +5740,6 @@ class GraftClient(spark: SparkSession, root: String,
             forceCellScan = pm.indexType == "IVF_PQ")
         }
         .reduce(_ unionByName _)
-      val after = cursor.fold(scored) { case (d, k0) =>
-        scored.filter(col("distance") > d ||
-          (col("distance") === d && col("vector_key") > k0))
-      }
-      val rows = after.orderBy(col("distance"), col("vector_key"))
-        .limit(batchSize).collect().toSeq
-      rows.lastOption.foreach(r => cursor = Some((r.getDouble(1), r.getString(0))))
-      rows
-    }
     }
   }
 
@@ -5872,12 +5805,7 @@ class GraftClient(spark: SparkSession, root: String,
           cursorDist = cursor.map(_._1), gate = gate,
           pinnedNoIndex = !hadLiveIndex,
           forceCellScan = pm.indexType == "IVF_PQ") // see searchIterator
-        val after = cursor.fold(scored) { case (d, k0) =>
-          scored.filter(col("distance") > d ||
-            (col("distance") === d && col("vector_key") > k0))
-        }
-        val rows = after.orderBy(col("distance"), col("vector_key"))
-          .limit(chunk).collect()
+        val rows = keysetPage(scored, cursor, chunk)
         if (rows.length < chunk) srcDone = true
         rows.lastOption.foreach(r =>
           cursor = Some((r.getDouble(1), r.getString(0))))
@@ -6128,7 +6056,7 @@ class GraftClient(spark: SparkSession, root: String,
         new PqStream(pm, gate)
       else new ExactStream(pm, gate, hadLiveIndex = liveAt(p))
     }
-    pagedIterator(m, parts, allowDrift, batchSize) { () =>
+    pagedIterator(m, snapshotPins(m, parts), allowDrift, batchSize) { () =>
       val out = scala.collection.mutable.ArrayBuffer.empty[Row]
       var more = true
       while (out.length < batchSize && more) {
@@ -6140,28 +6068,38 @@ class GraftClient(spark: SparkSession, root: String,
     }
   }
 
-  /** Shared scaffold for the two cursor surfaces: the prefetching
-    * hasNext/next state machine (short page ⇒ drained), with the
-    * per-page snapshot-pin check ahead of every fetch — ONE copy, so a
-    * fix to either rule cannot silently miss the other iterator. Pins
-    * are captured here, at iterator creation. */
-  private def pagedIterator(m: CollectionMeta, parts: Seq[String],
+  /** Each partition's snapshot version, captured ONCE at iterator
+    * creation: the pins [[pagedIterator]] checks before every page, and
+    * the versions a pinned-snapshot drain ([[searchBinaryIterator]],
+    * [[searchSparseIterator]]) reads — one capture, so a commit landing
+    * between two captures cannot slip past the check. */
+  private def snapshotPins(m: CollectionMeta,
+      parts: Seq[String]): Seq[(String, Option[Long])] =
+    parts.map(p => p -> collection(partMeta(m, p)).currentVersion)
+
+  /** Shared scaffold for the four cursor surfaces ([[searchIterator]],
+    * [[searchBinaryIterator]], [[searchSparseIterator]],
+    * [[queryIterator]]): the prefetching hasNext/next state machine
+    * (short page ⇒ drained, so a drain ends without fetching an empty
+    * page), with the per-page snapshot-pin check ahead of every fetch —
+    * ONE copy, so a fix to either rule cannot silently miss an iterator.
+    * Drift raises ConcurrentModificationException on every surface. */
+  private def pagedIterator(m: CollectionMeta, pins: Seq[(String, Option[Long])],
       allowDrift: Boolean, batchSize: Int)(
-      fetchPage: () => Seq[Row]): Iterator[Seq[Row]] = {
-    val pinned: Seq[(String, Option[Long])] =
-      parts.map(p => p -> collection(partMeta(m, p)).currentVersion)
+      fetchPage: () => Seq[Row]): Iterator[Seq[Row]] =
     new Iterator[Seq[Row]] {
       private var pending: Seq[Row] = null
       private var exhausted = false
 
       override def hasNext: Boolean = {
         if (pending == null && !exhausted) {
-          if (!allowDrift) pinned.foreach { case (p, v0) =>
+          if (!allowDrift) pins.foreach { case (p, v0) =>
             val now = collection(partMeta(m, p)).currentVersion
             if (now != v0) throw new java.util.ConcurrentModificationException(
-              s"collection '${m.name}' partition '$p' advanced from version $v0 " +
-                s"to $now mid-iteration — restart the iterator, or pass " +
-                "allowDrift = true to accept pages from mixed snapshots")
+              s"collection '${m.name}' partition '$p' advanced from version " +
+                s"$v0 (pinned at creation) to $now mid-iteration — restart " +
+                "the iterator, or pass allowDrift = true to keep draining " +
+                "across the commit")
           }
           val rows = fetchPage()
           if (rows.length < batchSize) exhausted = true // short page: drained
@@ -6175,7 +6113,52 @@ class GraftClient(spark: SparkSession, root: String,
         val out = pending; pending = null; out
       }
     }
+
+  /** A strict (score, vector_key) keyset drain on [[pagedIterator]]:
+    * `frame(cursor)` builds the (vector_key, score, metadata) candidates
+    * of the next page (it may use the cursor to prune what it reads),
+    * and the cursor advances to each page's last row. */
+  private def keysetIterator(m: CollectionMeta,
+      pins: Seq[(String, Option[Long])], allowDrift: Boolean, batchSize: Int,
+      scoreCol: String = "distance", higherIsBetter: Boolean = false)(
+      frame: Option[(Double, String)] => DataFrame): Iterator[Seq[Row]] = {
+    var cursor: Option[(Double, String)] = None
+    pagedIterator(m, pins, allowDrift, batchSize) { () =>
+      val rows = keysetPage(frame(cursor), cursor, batchSize, scoreCol,
+        higherIsBetter).toSeq
+      rows.lastOption.foreach(r => cursor = Some((r.getDouble(1), r.getString(0))))
+      rows
+    }
   }
+
+  /** One keyset page: the first `n` rows of `scored` strictly after
+    * `cursor` in (score, vector_key) order — score ascending for
+    * distances, descending when `higherIsBetter`. The cursor predicate
+    * is a plain comparison, so every page is ONE bounded
+    * TakeOrderedAndProject at any depth, and page boundaries inside a
+    * score tie can neither repeat nor drop a row. */
+  private def keysetPage(scored: DataFrame, cursor: Option[(Double, String)],
+      n: Int, scoreCol: String = "distance",
+      higherIsBetter: Boolean = false): Array[Row] = {
+    val s = col(scoreCol)
+    val after = cursor.fold(scored) { case (s0, k0) =>
+      scored.filter((if (higherIsBetter) s < s0 else s > s0) ||
+        (s === s0 && col("vector_key") > k0))
+    }
+    after.orderBy(if (higherIsBetter) s.desc else s, col("vector_key"))
+      .limit(n).collect()
+  }
+
+  /** The snapshot `pin` of one partition — what a pinned drain reads on
+    * every page. A pin the retain window already vacuumed fails the page
+    * loudly (restart the iterator). */
+  private def pinnedSnapshot(pm: CollectionMeta, coll: BucketedKeyedCollection,
+      pin: Option[Long]): DataFrame =
+    pin.fold(coll.read(spark))(v =>
+      try coll.readVersion(spark, v)
+      catch { case e: Exception => throw new IllegalStateException(
+        s"${pm.name}: the pinned snapshot was vacuumed mid-drain — " +
+          s"restart the iterator (${e.getMessage})") })
 
   /** Milvus `query_iterator`: scalar iteration over every row matching
     * `filter`, batched on a PRIMARY-KEY keyset cursor (`key > last`,
@@ -6233,7 +6216,7 @@ class GraftClient(spark: SparkSession, root: String,
       }
       .reduce(_ unionByName _)
     var cursor: Option[(String, String)] = None // (key, part)
-    pagedIterator(m, parts, allowDrift, batchSize) { () =>
+    pagedIterator(m, snapshotPins(m, parts), allowDrift, batchSize) { () =>
       val frame = tagged
       val after = cursor.fold(frame) { case (k0, p0) =>
         frame.filter(col("key") > k0 ||
@@ -6681,26 +6664,41 @@ class GraftClient(spark: SparkSession, root: String,
     require(sampleQueries >= 1, s"sampleQueries must be >= 1 (got $sampleQueries)")
     val m = partMeta(fieldMetaOpt(metaOrThrow(name), field), partition)
     requireFloatVec(m, "estimateRecall")
-    val src = collection(m).read(spark)
-    val sample = ttlGate(m).fold(src)(src.filter) // live rows only
-      .select(col("key"), col("vec"))
-      .orderBy(xxhash64(col("key")), col("key")).limit(sampleQueries)
-      .collect()
+    val sample = recallSample(m, sampleQueries)
     require(sample.nonEmpty, s"collection $name is empty — nothing to sample")
     val queries = sample.zipWithIndex
       .map { case (r, i) => (i.toLong, r.getSeq[Float](1)) }.toSeq
       .toDF("qid", "qvec")
+    meanOverlap(
+      searchBatch(name, queries, k, nprobe = nprobe, refine = refine,
+        forceExact = true, partitions = Seq(partition), field = field),
+      searchBatch(name, queries, k, nprobe = nprobe, refine = refine,
+        partitions = Seq(partition), ef = ef, field = field))
+  }
+
+  /** The recall estimators' deterministic sample: up to `n` live
+    * (key, vec) rows of one partition, ordered by key hash —
+    * reproducible, and spread across cells. */
+  private def recallSample(m: CollectionMeta, n: Int): Array[Row] = {
+    val src = collection(m).read(spark)
+    ttlGate(m).fold(src)(src.filter) // live rows only
+      .select(col("key"), col("vec"))
+      .orderBy(xxhash64(col("key")), col("key")).limit(n)
+      .collect()
+  }
+
+  /** Mean per-query overlap |approx ∩ exact| / k' of two batched
+    * (qid, vector_key, …) answers, k' = the exact arm's hit count for
+    * that query (≤ k on a small collection). */
+  private def meanOverlap(exact: DataFrame, approx: DataFrame): Double = {
     def hits(df: DataFrame): Map[Long, Set[String]] =
       df.select(col("qid"), col("vector_key")).collect()
         .groupBy(_.getLong(0))
         .map { case (q, rs) => q -> rs.map(_.getString(1)).toSet }
-    val exact = hits(searchBatch(name, queries, k, nprobe = nprobe,
-      refine = refine, forceExact = true, partitions = Seq(partition),
-      field = field))
-    val approx = hits(searchBatch(name, queries, k, nprobe = nprobe,
-      refine = refine, partitions = Seq(partition), ef = ef, field = field))
-    val recalls = exact.map { case (q, truth) =>
-      (approx.getOrElse(q, Set.empty) & truth).size.toDouble / truth.size
+    val truth = hits(exact)
+    val got = hits(approx)
+    val recalls = truth.map { case (q, t) =>
+      (got.getOrElse(q, Set.empty) & t).size.toDouble / t.size
     }
     recalls.sum / recalls.size
   }
@@ -6731,11 +6729,7 @@ class GraftClient(spark: SparkSession, root: String,
     require(sampleQueries >= 1, s"sampleQueries must be >= 1 (got $sampleQueries)")
     val m = partMeta(fieldMetaOpt(metaOrThrow(name), field), partition)
     requireFloatVec(m, "estimateRecallGrouped")
-    val src = collection(m).read(spark)
-    val sample = ttlGate(m).fold(src)(src.filter) // live rows only
-      .select(col("key"), col("vec"))
-      .orderBy(xxhash64(col("key")), col("key")).limit(sampleQueries)
-      .collect()
+    val sample = recallSample(m, sampleQueries)
     require(sample.nonEmpty, s"collection $name is empty — nothing to sample")
     // Seq(partition) UNIFORMLY (estimateRecall's convention): Nil would
     // resolve to ALL partitions while the sample comes from `partition`'s
@@ -6787,11 +6781,7 @@ class GraftClient(spark: SparkSession, root: String,
     requireFloatVec(m, "recommendIndex")
     require(sampleSize >= 8, s"sampleSize must be >= 8 (got $sampleSize)")
     val coll = collection(m)
-    val sampleSrc = coll.read(spark)
-    val sample = ttlGate(m).fold(sampleSrc)(sampleSrc.filter)
-      .select(col("key"), col("vec"))
-      .orderBy(xxhash64(col("key")), col("key")).limit(sampleSize)
-      .collect().map(_.getSeq[Float](1).toArray)
+    val sample = recallSample(m, sampleSize).map(_.getSeq[Float](1).toArray)
     require(sample.length >= 8,
       s"collection $name has only ${sample.length} rows — the regime " +
         "measure needs at least 8")
@@ -6892,33 +6882,21 @@ class GraftClient(spark: SparkSession, root: String,
     require(binaryVec(m),
       s"'${m.name}' is a ${m.vectorType} collection — estimateRecallBinary " +
         "serves BINARY_VECTOR; use estimateRecall for float vectors")
-    val nlist = loadBinIndex(m)
-      .filter { case (_, v) => collection(m).currentVersion.contains(v) }
+    val nlist = liveBinIndex(m, collection(m))
       .map(_._1.nlist)
       .getOrElse(throw new IllegalStateException(
         s"${m.name} has no FRESH BIN_IVF_FLAT index — buildIndex first " +
           "(without one, pruned and exact are the same scan)"))
-    val src = collection(m).read(spark)
-    val sample = ttlGate(m).fold(src)(src.filter) // live rows only
-      .select(col("key"), col("vec"))
-      .orderBy(xxhash64(col("key")), col("key")).limit(sampleQueries)
-      .collect()
+    val sample = recallSample(m, sampleQueries)
     require(sample.nonEmpty, s"collection $name is empty — nothing to sample")
     val queries = sample.zipWithIndex
       .map { case (r, i) => (i.toLong, r.getSeq[Long](1)) }.toSeq
       .toDF("qid", "qcodes")
-    def hits(df: DataFrame): Map[Long, Set[String]] =
-      df.select(col("qid"), col("vector_key")).collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getString(1)).toSet }
-    val exact = hits(searchBinaryBatch(name, queries, k, nprobe = nlist,
-      partitions = Seq(partition), field = field))
-    val approx = hits(searchBinaryBatch(name, queries, k, nprobe = nprobe,
-      partitions = Seq(partition), field = field))
-    val recalls = exact.map { case (q, truth) =>
-      (approx.getOrElse(q, Set.empty) & truth).size.toDouble / truth.size
-    }
-    recalls.sum / recalls.size
+    meanOverlap(
+      searchBinaryBatch(name, queries, k, nprobe = nlist,
+        partitions = Seq(partition), field = field),
+      searchBinaryBatch(name, queries, k, nprobe = nprobe,
+        partitions = Seq(partition), field = field))
   }
 
   // ---- Text-retrieval surface (C14/C19, parameterized) ----
@@ -7792,19 +7770,7 @@ class GraftClient(spark: SparkSession, root: String,
                    fusion: String = "rrf",
                    wVec: Double = 0.7, wLex: Double = 0.3,
                    matchGates: Seq[(Seq[String], String)] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(fusion == "rrf" || fusion == "weighted",
-      s"fusion must be 'rrf' or 'weighted' (got '$fusion')")
-    // Milvus WeightedRanker's weight contract: [0,1] each, not both zero.
-    // A negative weight silently INVERTS an arm's ranking and NaN poisons
-    // every fused score — fail at the boundary like every other knob.
-    if (fusion == "weighted") {
-      require(wVec >= 0.0 && wVec <= 1.0 && !wVec.isNaN,
-        s"wVec must be in [0, 1] (got $wVec)")
-      require(wLex >= 0.0 && wLex <= 1.0 && !wLex.isNaN,
-        s"wLex must be in [0, 1] (got $wLex)")
-      require(wVec + wLex > 0.0, "wVec and wLex must not both be 0")
-    }
+    requireFusion(fusion, "wVec" -> wVec, "wLex" -> wLex)
     // The metadata `filter` must bind BOTH arms: search() pre-filters the
     // vector arm, and the lexical arm gates its CANDIDATES on the keys
     // passing the filter — otherwise a filtered-out doc ranking high
@@ -7827,7 +7793,8 @@ class GraftClient(spark: SparkSession, root: String,
       useIndex = useIndex, restrictTo = passing) // (key, bm25)
     val vecTop = search(name, qvec, armK, filter, nprobe,
       matchGates = matchGates)
-    fuseArms(lexTop, vecTop, fusion, k, rrfK, wVec, wLex)
+    fusePair("lex", lexTop.select(col("key"), col("bm25").as("__s")), wLex,
+      vecTop, wVec, fusion, rrfK, k)
   }
 
   /** Milvus `hybrid_search` with a BM25-function request: the lexical
@@ -7845,76 +7812,92 @@ class GraftClient(spark: SparkSession, root: String,
                        fusion: String = "rrf",
                        wVec: Double = 0.7, wLex: Double = 0.3,
                        ef: Int = 0): DataFrame = {
+    requireFusion(fusion, "wVec" -> wVec, "wLex" -> wLex)
+    val lexTop = fullTextSearch(name, query, k = armK, filter = filter)
+      .select(col("vector_key").as("key"), col("distance").as("__s"))
+    val vecTop = search(name, qvec, armK, filter, nprobe, ef = ef)
+    fusePair("lex", lexTop, wLex, vecTop, wVec, fusion, rrfK, k)
+  }
+
+  /** The pairwise fusion weight contract (Milvus WeightedRanker): each
+    * weight in [0,1], not all zero. A negative weight silently INVERTS an
+    * arm's ranking and NaN poisons every fused score — fail at the
+    * boundary like every other knob. */
+  private def requireFusion(fusion: String, weights: (String, Double)*): Unit = {
     require(fusion == "rrf" || fusion == "weighted",
       s"fusion must be 'rrf' or 'weighted' (got '$fusion')")
     if (fusion == "weighted") {
-      require(wVec >= 0.0 && wVec <= 1.0 && !wVec.isNaN,
-        s"wVec must be in [0, 1] (got $wVec)")
-      require(wLex >= 0.0 && wLex <= 1.0 && !wLex.isNaN,
-        s"wLex must be in [0, 1] (got $wLex)")
-      require(wVec + wLex > 0.0, "wVec and wLex must not both be 0")
+      weights.foreach { case (n, w) =>
+        require(w >= 0.0 && w <= 1.0 && !w.isNaN, s"$n must be in [0, 1] (got $w)")
+      }
+      require(weights.map(_._2).sum > 0.0,
+        s"${weights.map(_._1).mkString(" and ")} must not both be 0")
     }
-    val lexTop = fullTextSearch(name, query, k = armK, filter = filter)
-      .select(col("vector_key").as("key"), col("distance").as("bm25"))
-    val vecTop = search(name, qvec, armK, filter, nprobe, ef = ef)
-    fuseArms(lexTop, vecTop, fusion, k, rrfK, wVec, wLex)
   }
 
-  /** The ONE fusion tail both hybrid surfaces share — RRF over ranks or
-    * Milvus-WeightedRanker min-max over scores; `lexTop` is (key, bm25),
-    * `vecTop` is search()'s envelope. */
-  private def fuseArms(lexTop: DataFrame, vecTop: DataFrame,
-      fusion: String, k: Int, rrfK: Int,
-      wVec: Double, wLex: Double): DataFrame = {
+  /** The pairwise hybrid tail: arm `name` ((key, __s), higher is
+    * better) fused with the dense arm `vecTop` (search()'s envelope),
+    * top `k` — emits (key, <name>_rank, vec_rank, rrf) or
+    * (key, <name>_norm, vec_norm, wscore). */
+  private def fusePair(name: String, top: DataFrame, w: Double,
+      vecTop: DataFrame, wVec: Double, fusion: String, rrfK: Int,
+      k: Int): DataFrame = {
+    val suffix = if (fusion == "rrf") "_rank" else "_norm"
+    fuse(Seq((top, false),
+        (vecTop.select(col("vector_key").as("key"), col("distance").as("__s")),
+          true)),
+      Seq(name + suffix, "vec" + suffix), fusion, rrfK, Seq(w, wVec), 0, k)
+  }
+
+  /** The ONE fusion every hybrid surface shares, over N arms. Each arm
+    * is a (key, __s) frame already top-armK-pushed, `asc` = a smaller
+    * __s is better; `cols(i)` names arm i's output column.
+    *
+    *   - "rrf": rank within each arm, emit (key, cols…,
+    *     rrf = Σ 1/(rrfK + rankᵢ)); an absent arm contributes 0.
+    *   - "weighted" (Milvus WeightedRanker): min-max normalize each arm
+    *     within its rows, emit (key, cols…, wscore = Σ wᵢ·normᵢ). A
+    *     degenerate arm (one hit, or all scores tied) maps to 1.0, NOT 0:
+    *     every retrieved doc is jointly the arm's best, and 0 would make
+    *     it indistinguishable from a doc the arm never retrieved. An
+    *     absent arm contributes 0.
+    *
+    * Fused scores round to 6 places; the n-way fuse is a full-outer
+    * equi-join on key; rows `offset until offset + k` by (fused DESC,
+    * key) come back. */
+  private def fuse(arms: Seq[(DataFrame, Boolean)], cols: Seq[String],
+      ranker: String, rrfK: Int, weights: Seq[Double],
+      offset: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    fusion match {
-      case "rrf" =>
-        val lex = lexTop.select(col("key"),
-          row_number().over(Window.orderBy(desc("bm25"), col("key")))
-            .cast("long").as("lex_rank"))
-        val vec = vecTop.select(col("vector_key").as("key"),
-          row_number().over(Window.orderBy(col("distance"), col("vector_key")))
-            .cast("long").as("vec_rank"))
-        lex.join(vec, Seq("key"), "full_outer")
-          .select(col("key"), col("lex_rank"), col("vec_rank"),
-            round(coalesce(lit(1.0) / (lit(rrfK) + col("lex_rank")), lit(0.0))
-              + coalesce(lit(1.0) / (lit(rrfK) + col("vec_rank")), lit(0.0)), 6).as("rrf"))
-          .orderBy(desc("rrf"), col("key"))
-          .limit(k)
-      case _ =>
-        // Milvus WeightedRanker semantics: each arm's scores min-max
-        // normalized to [0,1] WITHIN its top-armK (BM25 ascending-good,
-        // distance descending-good), fused as wVec·vec + wLex·lex; a doc
-        // un-retrieved by an arm contributes 0 from it. Rank fusion
-        // discards magnitudes — weighted fusion keeps them, for when one
-        // arm's confidence should dominate ties. The normalization
-        // windows see ≤armK rows (both arms are already top-k-pushed).
-        // A degenerate arm (one retrieved doc, or all scores tied) maps
-        // to 1.0, NOT 0: every retrieved doc is jointly the arm's best,
-        // and 0 would make the arm's only hit indistinguishable from a
-        // doc the arm never retrieved.
-        val wAll = Window.partitionBy()
-        val lex = lexTop
-          .withColumn("__mn", min(col("bm25")).over(wAll))
-          .withColumn("__mx", max(col("bm25")).over(wAll))
-          .select(col("key"),
-            when(col("__mx") > col("__mn"),
-              (col("bm25") - col("__mn")) / (col("__mx") - col("__mn")))
-              .otherwise(lit(1.0)).as("lex_norm"))
-        val vec = vecTop
-          .withColumn("__mn", min(col("distance")).over(wAll))
-          .withColumn("__mx", max(col("distance")).over(wAll))
-          .select(col("vector_key").as("key"),
-            when(col("__mx") > col("__mn"),
-              (col("__mx") - col("distance")) / (col("__mx") - col("__mn")))
-              .otherwise(lit(1.0)).as("vec_norm"))
-        lex.join(vec, Seq("key"), "full_outer")
-          .select(col("key"), col("lex_norm"), col("vec_norm"),
-            round(lit(wVec) * coalesce(col("vec_norm"), lit(0.0))
-              + lit(wLex) * coalesce(col("lex_norm"), lit(0.0)), 6).as("wscore"))
-          .orderBy(desc("wscore"), col("key"))
-          .limit(k)
+    val s = col("__s")
+    val perArm = arms.zip(cols).map { case ((df, asc), c) =>
+      val v =
+        if (ranker == "rrf")
+          // rank window, unpartitioned by design: it sees one arm's
+          // top-armK rows — at most armK here, n·armK across the arms
+          row_number().over(Window.orderBy(if (asc) s else s.desc, col("key")))
+            .cast("long")
+        else {
+          // min/max window over the same rows: at most armK per arm,
+          // n·armK across the arms
+          val arm = Window.partitionBy()
+          val (mn, mx) = (min(s).over(arm), max(s).over(arm))
+          when(mx > mn, if (asc) (mx - s) / (mx - mn) else (s - mn) / (mx - mn))
+            .otherwise(lit(1.0))
+        }
+      df.select(col("key"), v.as(c))
     }
+    val fused =
+      if (ranker == "rrf")
+        cols.map(c => coalesce(lit(1.0) / (lit(rrfK) + col(c)), lit(0.0)))
+          .reduce(_ + _)
+      else cols.zip(weights)
+        .map { case (c, w) => lit(w) * coalesce(col(c), lit(0.0)) }
+        .reduce(_ + _)
+    val fusedCol = if (ranker == "rrf") "rrf" else "wscore"
+    val joined = perArm.reduce(_.join(_, Seq("key"), "full_outer"))
+      .select(col("key") +: cols.map(col) :+ round(fused, 6).as(fusedCol): _*)
+    page(joined, offset, k)(desc(fusedCol), col("key"))
   }
 
   /** Milvus's N-ary `hybrid_search` — ANY number of AnnSearchRequests
@@ -7976,7 +7959,6 @@ class GraftClient(spark: SparkSession, root: String,
       outputFields: Seq[String] = Nil,
       partitions: Seq[String] = Nil,
       consistencyLevel: String = ""): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val m = metaOrThrow(name)
     // Milvus partition_names (r14): every arm scopes to the named
     // partitions — dense and sparse arms through their own surfaces'
@@ -8119,59 +8101,23 @@ class GraftClient(spark: SparkSession, root: String,
           .select(col("vector_key").as("key"), col("distance").as("__s")),
           false)
     }
-    val fused = ranker match {
-      case "rrf" =>
-        val ranked = arms.zipWithIndex.map { case ((df, asc), i) =>
-          val ord = if (asc) Window.orderBy(col("__s"), col("key"))
-                    else Window.orderBy(desc("__s"), col("key"))
-          df.select(col("key"),
-            row_number().over(ord).cast("long").as(s"rank_$i"))
-        }
-        val joined = ranked.reduce(_.join(_, Seq("key"), "full_outer"))
-        val rrf = arms.indices.map(i =>
-          coalesce(lit(1.0) / (lit(rrfK) + col(s"rank_$i")), lit(0.0)))
-          .reduce(_ + _)
-        joined.select(col("key") +: arms.indices.map(i => col(s"rank_$i")) :+
-          round(rrf, 6).as("rrf"): _*)
-      case _ =>
-        val wAll = Window.partitionBy()
-        val normed = arms.zipWithIndex.map { case ((df, asc), i) =>
-          val mn = min(col("__s")).over(wAll)
-          val mx = max(col("__s")).over(wAll)
-          val nrm = when(mx > mn,
-            if (asc) (mx - col("__s")) / (mx - mn)
-            else (col("__s") - mn) / (mx - mn)).otherwise(lit(1.0))
-          df.select(col("key"), nrm.as(s"norm_$i"))
-        }
-        val joined = normed.reduce(_.join(_, Seq("key"), "full_outer"))
-        val ws = requests.zipWithIndex.map { case (r, i) =>
-          lit(r.weight) * coalesce(col(s"norm_$i"), lit(0.0)) }.reduce(_ + _)
-        joined.select(col("key") +: arms.indices.map(i => col(s"norm_$i")) :+
-          round(ws, 6).as("wscore"): _*)
-    }
     val fusedCol = if (ranker == "rrf") "rrf" else "wscore"
-    val ordered = fused.orderBy(desc(fusedCol), col("key"))
-    // Milvus offset paging on the fused ranking (the pool is ≤ n·armK
-    // rows, so the window below is small by construction)
-    val page =
-      if (offset <= 0) ordered.limit(k)
-      else ordered.limit(offset + k)
-        .withColumn("__rn", row_number().over(
-          Window.orderBy(desc(fusedCol), col("key"))))
-        .filter(col("__rn") > offset).drop("__rn")
-        .orderBy(desc(fusedCol), col("key"))
+    // Milvus offset paging on the fused ranking (the pool is ≤ n·armK rows)
+    val top = fuse(arms,
+      arms.indices.map(i => if (ranker == "rrf") s"rank_$i" else s"norm_$i"),
+      ranker, rrfK, requests.map(_.weight), offset, k)
     // Milvus output_fields: the fused frame carries no metadata — the
     // ≤k winners broadcast-join the live stores for the requested
     // fields (the SCOPED stores: every hit lives in a scoped partition)
-    if (outputFields.isEmpty) page
+    if (outputFields.isEmpty) top
     else {
       val stores = scope
         .map(p => collection(partMeta(m, p)).read(spark))
         .reduce(_ unionByName _)
       val withMeta = stores.select(col("key"), col("meta").as("metadata"))
-        .join(broadcast(page), Seq("key"))
+        .join(broadcast(top), Seq("key"))
         .orderBy(desc(fusedCol), col("key"))
-      val keep = page.columns.map(col).toSeq
+      val keep = top.columns.map(col).toSeq
       withMeta.select(keep ++
         outputFields.filterNot(Set("key", fusedCol)).distinct.map {
           case "metadata" => col("metadata")
@@ -8450,8 +8396,9 @@ class GraftClient(spark: SparkSession, root: String,
     val scored = resolveParts(m, partitions)
       .map(p => sparseScored(partMeta(m, p), q, tFilter, offset + k, gate))
       .reduce(_ unionByName _)
-    projectOutputFields(pagedByScore(scored, offset, k), outputFields,
-      rankCol = "score")
+    projectOutputFields(
+      page(scored, offset, k)(desc("score"), col("vector_key")),
+      outputFields, rankCol = "score")
   }
 
   /** One-call Milvus `search` on a SPARSE_FLOAT_VECTOR collection with
@@ -8613,22 +8560,6 @@ class GraftClient(spark: SparkSession, root: String,
         col("meta").as("metadata"))
   }
 
-  /** [[paged]] for similarity-scored families (higher = better): same
-    * pushed top-(offset+k) + row-number page drop, ordered by
-    * (score DESC, key). */
-  private def pagedByScore(scored: DataFrame, offset: Int, k: Int): DataFrame = {
-    val ordered = scored.orderBy(desc("score"), col("vector_key"))
-    if (offset <= 0) ordered.limit(k)
-    else {
-      import org.apache.spark.sql.expressions.Window
-      ordered.limit(offset + k)
-        .withColumn("__rn", row_number().over(
-          Window.orderBy(desc("score"), col("vector_key"))))
-        .filter(col("__rn") > offset).drop("__rn")
-        .orderBy(desc("score"), col("vector_key"))
-    }
-  }
-
   /** Sparse range search — Milvus `radius`/`range_filter` on a
     * SPARSE_FLOAT_VECTOR field, with the SIMILARITY convention Milvus
     * uses for IP/cosine: every overlapping doc with
@@ -8718,10 +8649,10 @@ class GraftClient(spark: SparkSession, root: String,
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(groupSize >= 1, s"groupSize must be >= 1 (got $groupSize)")
     val tFilter = withTtl(m, filter)
-    val cand = resolveParts(m, partitions).map { p =>
+    val base = resolveParts(m, partitions).map { p =>
       val pm = partMeta(m, p)
       val coll = collection(pm)
-      val scored = sparseServableVersion(pm, coll) match {
+      sparseServableVersion(pm, coll) match {
         case None =>
           sparseExactScored(pm, coll, query, tFilter)
             .select(col("vector_key").as("key"), col("score"),
@@ -8737,43 +8668,11 @@ class GraftClient(spark: SparkSession, root: String,
             .join(hits, Seq("key"))
             .select(col("key"), col("score"), col("meta"))
       }
-      scored
     }.reduce(_ unionByName _)
-      .withColumn("__grp", element_at(col("meta"), lit(groupByKey)))
-      .filter(col("__grp").isNotNull)
-      .select(col("__grp").as("group_value"), col("score"), col("key"),
-        col("meta"))
-      // BOTH passes consume this frame — checkpoint it (lazily: pass 1's
-      // collect materializes) so pass 2 reads the cached candidates
-      // instead of re-running the postings/store join (r17; the fetchDf
-      // lifecycle stance: blocks live until the caller drops the result,
-      // ContextCleaner reclaims them then)
-      .localCheckpoint(false)
-    // pass 1 — top-k groups by best (highest) score; (best, group_value)
-    // is unique per group, so the k-row TakeOrdered + driver index
-    // assignment is a deterministic dense ranking
-    val bests = cand.groupBy(col("group_value"))
-      .agg(max(col("score")).as("__best"))
-      .orderBy(desc("__best"), col("group_value"))
-      .limit(k)
-      .collect()
-    import spark.implicits._
-    val ranks = bests.zipWithIndex.toSeq
-      .map { case (r, i) => (r.getString(0), (i + 1).toLong) }
-      .toDF("group_value", "grp_rank")
-    // pass 2 — winners broadcast UNDER the per-group bounded heap
-    // ("smaller is better" heap rides the negated score)
-    val topk = graft.functions.VectorAggregates.topKDocs(groupSize)
-    cand.join(broadcast(ranks), Seq("group_value"))
-      .groupBy(col("group_value"), col("grp_rank"))
-      .agg(topk(-col("score"), col("key"), col("meta")).as("tops"))
-      .select(col("group_value"), col("grp_rank"),
-        posexplode(col("tops")).as(Seq("pos", "hit")))
-      .select(col("group_value"), col("grp_rank"),
-        (col("pos") + 1).cast("long").as("rn"),
-        col("hit.key").as("vector_key"), (-col("hit.dist")).as("score"),
-        col("hit.meta").as("metadata"))
-      .orderBy(col("grp_rank"), col("rn"))
+    // both passes consume the candidates — checkpointed once so pass 2
+    // reads them instead of re-running the postings/store join (r17)
+    groupedTop(base, groupByKey, k, groupSize, "score",
+      higherIsBetter = true, checkpoint = true)
   }
 
   /** Milvus `search_iterator` on a SPARSE_FLOAT_VECTOR field: an
@@ -8781,9 +8680,12 @@ class GraftClient(spark: SparkSession, root: String,
     * `next()` one bounded Spark job of `batchSize` rows continuing from
     * a STRICT keyset cursor, so page boundaries can neither duplicate
     * nor drop a row at any depth. The snapshot is PINNED at creation
-    * ([[searchIterator]]'s drift contract: a mid-drain commit raises
-    * unless `allowDrift`, which keeps draining the pinned version while
-    * the retain window holds it).
+    * ([[searchIterator]]'s drift contract on the shared
+    * [[pagedIterator]] scaffold: a mid-drain commit raises
+    * ConcurrentModificationException unless `allowDrift`, which keeps
+    * draining the pinned version while the retain window holds it; a
+    * vacuumed pin fails the page with IllegalStateException). A page
+    * shorter than `batchSize` ends the drain without an empty-page job.
     *
     * The drain is served by the EXACT map-probe arm regardless of index
     * freshness — deliberately. A keyset cursor over float scores is
@@ -8809,57 +8711,18 @@ class GraftClient(spark: SparkSession, root: String,
     require(batchSize >= 1, s"batchSize must be >= 1 (got $batchSize)")
     // TTL cutoff pinned at drain start (one read, one clock)
     val tFilter = withTtl(m, filter)
-    val pins = resolveParts(m, partitions).map { p =>
-      val pm = partMeta(m, p)
-      (pm, collection(pm).currentVersion)
-    }
-    def page(cursor: Option[(Double, String)]): Seq[Row] = {
-      val arms = pins.map { case (pm, pin) =>
-        val coll = collection(pm)
-        if (coll.currentVersion != pin && !allowDrift)
-          throw new IllegalStateException(s"${pm.name}: a commit landed " +
-            "mid-iteration (snapshot pinned at creation) — restart the " +
-            "iterator, or pass allowDrift = true to keep draining the " +
-            "pinned snapshot while the retain window holds it")
-        val base = pin.fold(coll.read(spark))(v =>
-          try coll.readVersion(spark, v)
-          catch { case e: Exception => throw new IllegalStateException(
-            s"${pm.name}: the pinned snapshot was vacuumed mid-drain — " +
-              s"restart the iterator (${e.getMessage})") })
+    // creation-time pins: pagedIterator checks them, every page reads them
+    val pins = snapshotPins(m, resolveParts(m, partitions))
+    keysetIterator(m, pins, allowDrift, batchSize, scoreCol = "score",
+        higherIsBetter = true) { _ =>
+      pins.map { case (p, pin) =>
+        val pm = partMeta(m, p)
+        val base = pinnedSnapshot(pm, collection(pm), pin)
         val (overlaps, score) = sparseScoreExpr(pm, query)
-        val scored = tFilter.fold(base)(base.filter).filter(overlaps)
+        tFilter.fold(base)(base.filter).filter(overlaps)
           .select(col("key").as("vector_key"), score.as("score"),
             col("meta").as("metadata"))
-        cursor.fold(scored) { case (s0, k0) =>
-          scored.filter(col("score") < s0 ||
-            (col("score") === s0 && col("vector_key") > k0))
-        }
-      }
-      arms.reduce(_ unionByName _)
-        .orderBy(desc("score"), col("vector_key"))
-        .limit(batchSize)
-        .collect().toSeq
-    }
-    new Iterator[Seq[Row]] {
-      private var cursor: Option[(Double, String)] = None
-      private var nextPage: Option[Seq[Row]] = None
-      private var exhausted = false
-      private def advance(): Unit =
-        if (!exhausted && nextPage.isEmpty) {
-          val rows = page(cursor)
-          if (rows.isEmpty) exhausted = true
-          else {
-            cursor = Some((rows.last.getDouble(1), rows.last.getString(0)))
-            nextPage = Some(rows)
-          }
-        }
-      override def hasNext: Boolean = { advance(); nextPage.isDefined }
-      override def next(): Seq[Row] = {
-        advance()
-        val out = nextPage.getOrElse(throw new NoSuchElementException)
-        nextPage = None
-        out
-      }
+      }.reduce(_ unionByName _)
     }
   }
 
@@ -9014,21 +8877,12 @@ class GraftClient(spark: SparkSession, root: String,
                         fusion: String = "rrf",
                         wVec: Double = 0.7, wSparse: Double = 0.3,
                         matchGates: Seq[(Seq[String], String)] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // the dense arm ranks the collection's own float vectors — a sparse
     // collection has none (its single-field search IS searchSparse)
     requireFloatVec(metaOrThrow(name), "hybridDenseSparse (the dense arm)")
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(armK >= 1, s"armK must be >= 1 (got $armK)")
-    require(fusion == "rrf" || fusion == "weighted",
-      s"fusion must be 'rrf' or 'weighted' (got '$fusion')")
-    if (fusion == "weighted") {
-      require(wVec >= 0.0 && wVec <= 1.0 && !wVec.isNaN,
-        s"wVec must be in [0, 1] (got $wVec)")
-      require(wSparse >= 0.0 && wSparse <= 1.0 && !wSparse.isNaN,
-        s"wSparse must be in [0, 1] (got $wSparse)")
-      require(wVec + wSparse > 0.0, "wVec and wSparse must not both be 0")
-    }
+    requireFusion(fusion, "wVec" -> wVec, "wSparse" -> wSparse)
     val m = metaOrThrow(name)
     val dir =
       if (sparseDir.nonEmpty) sparseDir
@@ -9055,45 +8909,8 @@ class GraftClient(spark: SparkSession, root: String,
       .limit(armK)
     val vecTop = search(name, qvec, armK, filter, nprobe,
       matchGates = matchGates)
-    fusion match {
-      case "rrf" =>
-        val sp = sparseTop.select(col("key"),
-          row_number().over(Window.orderBy(desc("score"), col("key")))
-            .cast("long").as("sp_rank"))
-        val vec = vecTop.select(col("vector_key").as("key"),
-          row_number().over(Window.orderBy(col("distance"), col("vector_key")))
-            .cast("long").as("vec_rank"))
-        sp.join(vec, Seq("key"), "full_outer")
-          .select(col("key"), col("sp_rank"), col("vec_rank"),
-            round(coalesce(lit(1.0) / (lit(rrfK) + col("sp_rank")), lit(0.0))
-              + coalesce(lit(1.0) / (lit(rrfK) + col("vec_rank")), lit(0.0)), 6)
-              .as("rrf"))
-          .orderBy(desc("rrf"), col("key"))
-          .limit(k)
-      case _ =>
-        val wAll = Window.partitionBy()
-        val sp = sparseTop
-          .withColumn("__mn", min(col("score")).over(wAll))
-          .withColumn("__mx", max(col("score")).over(wAll))
-          .select(col("key"),
-            when(col("__mx") > col("__mn"),
-              (col("score") - col("__mn")) / (col("__mx") - col("__mn")))
-              .otherwise(lit(1.0)).as("sp_norm"))
-        val vec = vecTop
-          .withColumn("__mn", min(col("distance")).over(wAll))
-          .withColumn("__mx", max(col("distance")).over(wAll))
-          .select(col("vector_key").as("key"),
-            when(col("__mx") > col("__mn"),
-              (col("__mx") - col("distance")) / (col("__mx") - col("__mn")))
-              .otherwise(lit(1.0)).as("vec_norm"))
-        sp.join(vec, Seq("key"), "full_outer")
-          .select(col("key"), col("sp_norm"), col("vec_norm"),
-            round(lit(wVec) * coalesce(col("vec_norm"), lit(0.0))
-              + lit(wSparse) * coalesce(col("sp_norm"), lit(0.0)), 6)
-              .as("wscore"))
-          .orderBy(desc("wscore"), col("key"))
-          .limit(k)
-    }
+    fusePair("sp", sparseTop.select(col("key"), col("score").as("__s")),
+      wSparse, vecTop, wVec, fusion, rrfK, k)
   }
 
   // ---- Dedup surface (C8, parameterized) ----
@@ -9207,7 +9024,7 @@ object GraftClient {
   /** Pagination depth ceiling (`offset + k`), matching Milvus's
     * offset+limit cap of 16384: deep pagination costs O(offset+k)
     * memory per partition by construction (every partition bounds to
-    * offset+k rows before the page window), so the cap is the honest
+    * offset+k rows before the driver's page merge), so the cap is the honest
     * contract — and checking it in Long keeps the downstream Int
     * arithmetic overflow-free for any accepted arguments. */
   val MaxPageDepth: Long = 16384L

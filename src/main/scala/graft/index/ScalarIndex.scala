@@ -165,11 +165,19 @@ object ScalarIndex {
     if (!java.nio.file.Files.exists(appendsPath(dir))) 0
     else java.nio.file.Files.readString(appendsPath(dir)).trim.toInt
 
-  /** Increment and return the post-tick change count. A torn counter only
-    * skews WHEN compaction fires, never correctness. */
+  /** Increment and return the post-tick change count. The new count
+    * publishes through a temp file + ATOMIC_MOVE (the VERSION stamp's
+    * pattern), so a reader — or a crash mid-write — sees the old count or
+    * the new one, never an empty file that every later [[appendCount]]
+    * would fail to parse. */
   def bumpAppends(dir: String): Int = {
     val n = appendCount(dir) + 1
-    java.nio.file.Files.writeString(appendsPath(dir), n.toString)
+    val tmp = java.nio.file.Files.createTempFile(
+      java.nio.file.Paths.get(dir), ".appends-", "")
+    java.nio.file.Files.writeString(tmp, n.toString)
+    java.nio.file.Files.move(tmp, appendsPath(dir),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     n
   }
 

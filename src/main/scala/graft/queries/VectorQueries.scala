@@ -561,8 +561,8 @@ object VectorQueries {
   /** B6 (r14): Milvus offset paging on an HNSW collection, on the
     * ORACLE path — `search(offset = 10, k = 10)` pages THROUGH the
     * graph walk (walk depth = offset + k, the pool covers the page, the
-    * global page window ranks it). `ef ≥ corpus` + a corpus-covering
-    * pool make the walk exhaustive, so the second page is exactly
+    * global page drops the first `offset` rows). `ef ≥ corpus` + a
+    * corpus-covering pool make the walk exhaustive, so the second page is exactly
     * brute-force rows 11–20 and hash-comparable. Plan-asserted: the
     * exact fallback would return identical values. */
   def knnHnswPaged(spark: SparkSession, dir: String): DataFrame = {

@@ -404,7 +404,7 @@ class BinaryClientSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((key(900), code(900).toSeq, Map.empty[String, String]))
         .toDF("key", "vec", "meta"))
     live = live + (key(900) -> code(900))
-    intercept[IllegalStateException] { it.next() }
+    intercept[java.util.ConcurrentModificationException] { it.next() }
     // a fresh iterator covers the new snapshot; with drift consent it
     // keeps covering ITS pinned snapshot across a later commit
     val it2 = client.searchBinaryIterator("bi", q, batchSize = 64,

@@ -356,7 +356,7 @@ class SparseClientSpec extends AnyFunSuite with BeforeAndAfterAll {
       allowDrift = true)
     val p1 = it3.next().map(_.getString(0))
     upsertRows(client, "si", Seq(key(998) -> Map(0L -> 1e6)))
-    val e = intercept[IllegalStateException] { it2.next() }
+    val e = intercept[java.util.ConcurrentModificationException] { it2.next() }
     assert(e.getMessage.contains("pinned at creation"))
     val p2 = it3.next().map(_.getString(0))
     assert((p1 ++ p2) == all.map(_._1).take(10),
