@@ -1340,8 +1340,11 @@ class GraftClient(spark: SparkSession, root: String,
         val l = java.nio.file.Files.list(d)
         try {
           import scala.jdk.CollectionConverters._
+          // dot-names are never partitions (requirePartName refuses
+          // them): the routed commit's staging dir lives here
           l.iterator().asScala.filter(java.nio.file.Files.isDirectory(_))
-            .map(_.getFileName.toString).toSeq.sorted
+            .map(_.getFileName.toString).filterNot(_.startsWith("."))
+            .toSeq.sorted
         } finally l.close()
       }
     GraftClient.DefaultPartition +: extra
@@ -1378,7 +1381,7 @@ class GraftClient(spark: SparkSession, root: String,
     // ONE count job over the union (parquet count() is footer-only) —
     // a per-partition liveCount loop would schedule numPartitions jobs
     // on every write-path return value
-    readParts(m, partitions).count()
+    describedJobs("graft: count")(readParts(m, partitions).count())
 
   /** The physical partition a partition-key VALUE routes to — the same
     * stable hash both the write router and read scoping use:
@@ -1389,99 +1392,246 @@ class GraftClient(spark: SparkSession, root: String,
     s"_pk_${graft.core.CatalystHash.pmodXxhash64(value,
       org.apache.spark.sql.types.StringType, n)}"
 
-  /** Route a partition-key collection's batch: one merge-commit per
-    * touched physical partition (≤ numPartitions, usually far fewer).
-    * The routed frame is persisted so the router evaluates the caller's
-    * plan once across the per-partition commits. Atomicity is per
-    * partition — a crash mid-loop leaves whole-partition batches
-    * applied, never a torn single-partition commit (and Milvus promises
-    * nothing stronger across partitions either). */
+  /** Route a partition-key collection's batch through [[routedCommit]]:
+    * one commit plan over every partition store, whatever the number of
+    * partitions the batch touches. Within-batch duplicate keys resolve
+    * to the same content-chosen winner a single-store commit picks (max
+    * xxhash64 of the row's content, [[boundaryChecked]]), and the route
+    * is the WINNER's: a batch carrying one key twice under DIFFERENT pk
+    * values keeps exactly one copy, in its own partition (PartitionSpec
+    * pins the survivor). Atomicity is per partition — a crash mid-
+    * publish leaves whole-partition batches applied, never a torn
+    * single-partition commit (and Milvus promises nothing stronger
+    * across partitions either). */
   private def upsertRouted(m: CollectionMeta, df: DataFrame): Long = {
-    // Resolve within-batch duplicate keys to the SAME content-chosen
-    // winner mergeCommit would pick (max xxhash64 of the row's content,
-    // see its seq-assignment comment) BEFORE routing — and therefore
-    // before the fan-out. Without this, a batch carrying one key twice
-    // under DIFFERENT pk values routes a copy to each partition, and
-    // each copy's partition sees the OTHER copy in its moved-away delete
-    // set: deletes apply after puts inside a commit, so the key would be
-    // put-then-deleted in BOTH partitions and vanish from the collection
-    // (PartitionSpec pins the survivor). After the resolve every key has
-    // exactly one row and one route, which routedFanout requires.
-    // sparse primaries/fields hash their canonical JSON — Spark's hash
-    // expressions refuse MapType (mergeCommit's own convention; without
-    // it a sparse partition-key collection's batch upsert would fail
-    // analysis at this xxhash64)
-    val routed = IngestOps.upsertLatest(routeByPk(m, df), col("key"),
-        xxhash64(col("key") +:
-          (if (sparseVec(m)) to_json(col("vec")) else col("vec")) +:
-          m.extraVecFields.map(hashableFieldCol) :+
-          to_json(coalesce(col("meta"), map())): _*),
-        lit(0))
-      .persist()
-    try {
-      val touched = routed.select("__route").distinct()
-        .collect().map(_.getInt(0)).toSet // ≤ numPartitions ints
-      if (touched.nonEmpty) routedFanout(m, routed, touched, None)
-    } finally routed.unpersist()
+    routedCommit(m, routeByPk(m, df), None)
     countParts(m, Nil)
   }
 
-  /** The pk-move fan-out both routed writers share — EVERY partition
-    * commits: Milvus upsert is delete-by-PK + insert, so a key whose pk
-    * VALUE changed must MOVE — its new copy lands in the routed
-    * partition while the same commit clears it from every other one
-    * (otherwise the stale copy stays live there: unioned reads return
-    * both rows, counts inflate, and a pk-scoped read of the OLD value
-    * serves deleted data). Partitions holding none of the batch's keys
-    * resolve and commit NOTHING (the ghost pre-resolve + KeyBloom
-    * narrowing), so the steady state costs one narrowed resolve per
-    * partition. PRECONDITION: `routed` holds at most ONE row per key
-    * (upsertRouted's content-hash resolve / the streaming loop's
-    * arrival-order resolve) — a duplicate key routed two ways would
-    * appear in its own partition's moved-away delete set and be
-    * put-then-deleted everywhere. `extraDels` (the streaming loop's
-    * explicit delete events) fan to every partition unconditionally.
+  /** Test seam: runs once per routed-commit attempt after the plan has
+    * captured every partition's base version and resolved the batch,
+    * before any lock is taken — a write landing here must make the
+    * attempt lose its CAS. */
+  protected def beforeRoutedPublish(): Unit = ()
+
+  /** Test seam: runs inside a routed commit after the `published`-th of
+    * `of` partition publishes, under the store locks — throwing here
+    * stands for a crash between two partition pointer swaps. */
+  protected def afterPartitionPublish(published: Int, of: Int): Unit = ()
+
+  /** The commit both routed writers share: ONE plan that resolves the
+    * batch with the partition as a column, writes every touched
+    * (partition, bucket) directory in one Spark write, and publishes each
+    * touched partition store's manifest under that store's own lock.
     *
-    * The per-partition commits run CONCURRENTLY on a bounded pool:
-    * partition stores are disjoint physical stores (own dataPath, own
-    * commit lock, own index dirs — [[partMeta]]), so there is nothing
-    * to serialize between them, and a routed micro-batch's commits are
-    * individually SMALL (batch/numPartitions rows each) — run serially
-    * they spend most of the wall clock in per-commit driver planning
-    * while the executor sits idle, which is why the serial fan-out
-    * floored routed ingest at ~1/4 of default-store throughput.
-    * Concurrency is capped (not numPartitions-wide) so a 4096-partition
-    * collection doesn't submit 4096 interleaved job pipelines at once.
-    * Cross-partition atomicity is unchanged — each partition's commit
-    * is atomic, the set is not, exactly the serial contract (and
-    * Milvus promises nothing stronger across partitions either). */
-  private def routedFanout(m: CollectionMeta, routed: DataFrame,
-                           touched: Set[Int], extraDels: Option[DataFrame]): Unit = {
-    val fs = (0 until m.numPartitions).map { i =>
-      scala.concurrent.Future {
-        val putsI =
-          if (touched.contains(i))
-            Some(routed.filter(col("__route") === i)
-              .select(col("key") +: col("vec") +:
-                m.extraVecFields.map(f => col(f.name)) :+ col("meta"): _*))
-          else None
-        val movedAway = routed.filter(col("__route") =!= i).select("key")
-        mergeCommit(partMeta(m, s"_pk_$i"), putsI,
-          Some(extraDels.fold(movedAway)(_.select("key").union(movedAway))))
-      }(GraftClient.fanoutEc)
+    * Milvus upsert is delete-by-PK + insert, so a key whose pk VALUE
+    * changed must MOVE: its new copy lands in the routed partition while
+    * the same plan deletes it from every other partition whose live-key
+    * Bloom may hold it (otherwise the stale copy stays live there:
+    * unioned reads return both rows, counts inflate, and a pk-scoped read
+    * of the OLD value serves deleted data). `dels` (the streaming loop's
+    * explicit delete events) reach every non-empty partition the same
+    * way. Delete candidates outside the buckets the puts rewrite are
+    * resolved against the stores first, so a partition with no puts
+    * whose deletes match no live key commits NOTHING — no version bump.
+    *
+    * Jobs per attempt: the routing pass (distinct (partition, bucket,
+    * put?) counts — ≤ partitions × buckets rows reach the driver), the
+    * delete resolve when candidates fall outside the put buckets, one key
+    * collect for the Bloom merges (at most [[KeyBloom.DriverMergeMax]]
+    * keys, else each store takes the distributed merge), and the staged
+    * write. Publishing is driver-side file moves.
+    *
+    * Concurrency: the partitions dir's commit lock serializes routed
+    * commits of the collection (it guards the shared staging dir); the
+    * touched stores' locks are then taken in ascending partition order
+    * (parts dir → stores, dropPartition's order) and EVERY base version
+    * is checked before anything moves. A lost CAS publishes nothing and
+    * recomputes the whole plan, up to [[GraftClient.MaxCommitRetries]]
+    * attempts. Each store's Bloom merge runs before its pointer swap. A
+    * crash during publish leaves each partition in its old or its new
+    * state; the next routed commit sweeps the staging dir. */
+  private def routedCommit(m: CollectionMeta, routed: DataFrame,
+                           dels: Option[DataFrame]): Unit =
+    describedJobs("graft: routed commit") {
+      retryOnCas(routedCommitOnce(m, routed, dels))
     }
-    // surface EVERY partition's outcome before throwing: await each
-    // future to completion (no fail-fast abandonment — an abandoned
-    // in-flight commit could land after the caller saw the failure),
-    // then rethrow the first failure with the rest suppressed
-    val results = fs.map(f => scala.util.Try(
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-    val failures = results.collect { case scala.util.Failure(e) => e }
-    failures.headOption.foreach { first =>
-      failures.drop(1).foreach(first.addSuppressed)
-      throw first
+
+  private def routedCommitOnce(m: CollectionMeta, routed: DataFrame,
+                               dels: Option[DataFrame]): Unit = {
+    val stores = (0 until m.numPartitions).map { i =>
+      val pm = partMeta(m, s"_pk_$i")
+      i -> (pm, collection(pm))
+    }.toMap
+    // every store's base, captured BEFORE any other store read — the
+    // publish CASes on it (mergeCommitOnce's rule, store by store)
+    val base = stores.map { case (i, (_, c)) => i -> c.currentVersion }
+    val maxSeq = stores.map { case (i, (_, c)) => i -> c.maxSeq }
+    val bucketOf = stores(0)._2.bucketExpr
+    val batch = boundaryChecked(m, routed,
+        new java.sql.Timestamp(System.currentTimeMillis()),
+        element_at(typedLit(maxSeq.map { case (i, s) => i -> (s + 1) }),
+          col("__route")),
+        carry = Seq("__route"))
+      .persist()
+    // (key, __part) pairs to delete: every put key from each OTHER
+    // partition, every explicit delete from all — narrowed through each
+    // store's live-key Bloom after the bases were captured (writers merge
+    // their keys before their pointer swap, so the Bloom covers every
+    // commit ≤ base; a later commit fails our CAS). Empty stores hold
+    // nothing to delete.
+    val doomed = KeyBloom.narrowParts(spark,
+        stores.toSeq.collect { case (i, (pm, _)) if base(i).isDefined => i -> pm.dataPath },
+        (batch.select(col("key"), col("__route")) +: dels.toSeq.map(_.select(
+          requireKey(col("key"), capped = false).as("key"),
+          lit(null).cast("int").as("__route")))).reduce(_ unionByName _),
+        "__part")
+      .filter(col("__route").isNull || col("__part") =!= col("__route"))
+      .select("key", "__part")
+      .persist()
+    try {
+      val pass = describedJobs("graft: resolve routed batch + touched (partition, bucket)") {
+        batch.select(col("key"), col("__route").as("__part"), lit(true).as("__put"))
+          .unionByName(doomed.withColumn("__put", lit(false)))
+          .groupBy(col("__part"), bucketOf.as("__b"), col("__put")).count()
+          .collect().map(r => (r.getInt(0), r.getInt(1), r.getBoolean(2), r.getLong(3)))
+      }
+      val putPairs = pass.collect { case (p, b, true, _) => (p, b) }.toSet
+      val putCount = pass.collect { case (p, _, true, n) => (p, n) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      // delete candidates outside the buckets the puts rewrite anyway
+      // must match a live row to make their bucket (and store) commit
+      val uncovered = pass.collect { case (p, b, false, _) => (p, b) }.toSet -- putPairs
+      val hit =
+        if (uncovered.isEmpty) Set.empty[(Int, Int)]
+        else describedJobs("graft: resolve routed deletes") {
+          uncovered.groupMap(_._1)(_._2).toSeq.map { case (p, bs) =>
+              stores(p)._2.readBuckets(spark, bs.toSeq).select(col("key"))
+                .withColumn("__part", lit(p)) }
+            .reduce(_ unionByName _)
+            .join(doomed, Seq("key", "__part"), "left_semi")
+            .select(col("__part"), bucketOf.as("__b")).distinct()
+            .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+        }
+      val touched: Map[Int, Seq[Int]] = (putPairs ++ hit).toSeq
+        .groupMap(_._1)(_._2).map { case (p, bs) => p -> bs.sorted }
+      if (touched.nonEmpty) {
+        val order = touched.keys.toSeq.sorted
+        // pre-images bound to today's bucket dirs: the merge input, and
+        // after the publish the refresh's evicted side (the store keeps
+        // the previous snapshot's dirs for one more commit)
+        val pre = order.map(p => p -> stores(p)._2.readBuckets(spark, touched(p))).toMap
+        val bloomKeys: Option[Map[Int, Seq[String]]] =
+          if (putCount.values.sum > KeyBloom.DriverMergeMax) None
+          else Some(describedJobs("graft: key-bloom keys") {
+            batch.select(col("__route"), col("key")).collect()
+              .toSeq.groupMap(_.getInt(0))(_.getString(1))
+          })
+        beforeRoutedPublish()
+        val partsLock = java.nio.file.Paths.get(partsDir(m))
+        val staging = partsLock.resolve(".routed-stage")
+        val versions = BucketedKeyedCollection.withCommitLock(partsLock) {
+          // a staging dir left here is a routed commit that died before
+          // its publish finished; the lock is held, so it is not live
+          BucketedKeyedCollection.deleteTree(staging)
+          describedJobs("graft: store commit (staged write)") {
+            stageRouted(m, order, pre, batch, doomed, bucketOf, staging)
+          }
+          val staged = BucketedKeyedCollection.stagedDirs(staging, "__part")
+            .map { case (p, d) => p -> BucketedKeyedCollection.stagedDirs(d, "__b") }
+          val out = withStoreLocks(order.map(p => java.nio.file.Paths.get(stores(p)._1.dataPath))) {
+            order.foreach(p => stores(p)._2.requireBase(Some(base(p).getOrElse(-1L))))
+            describedJobs("graft: store commit (publish)") {
+              order.zipWithIndex.map { case (p, k) =>
+                val (pm, coll) = stores(p)
+                if (putCount.contains(p)) describedJobs("graft: key-bloom merge") {
+                  val live = () => coll.read(spark).select("key")
+                  bloomKeys match {
+                    case Some(keys) => KeyBloom.addCollectedKeys(pm.dataPath,
+                      keys.getOrElse(p, Nil), base(p).map(_ => live))
+                    case None => KeyBloom.addKeys(pm.dataPath,
+                      batch.filter(col("__route") === p).select("key"), live)
+                  }
+                }
+                val v = coll.publishStaged(touched(p), staged.getOrElse(p, Map.empty),
+                  if (putCount.contains(p)) maxSeq(p) + 1 else maxSeq(p),
+                  Some(base(p).getOrElse(-1L)))
+                recordCommitted(pm.dataPath, v)
+                afterPartitionPublish(k + 1, order.size)
+                p -> v
+              }.toMap
+            }
+          }
+          BucketedKeyedCollection.deleteTree(staging)
+          out
+        }
+        order.foreach { p =>
+          val (pm, coll) = stores(p)
+          def puts =
+            if (putCount.contains(p)) Some(batch.filter(col("__route") === p).drop("__route"))
+            else None
+          refreshStoreIndexes(pm, coll, base(p), versions(p),
+            (puts.map(_.select("key")).toSeq :+
+              doomed.filter(col("__part") === p).select("key")).reduce(_ union _),
+            pre(p), puts)
+        }
+      }
+    } finally {
+      batch.unpersist()
+      doomed.unpersist()
     }
   }
+
+  /** The routed commit's one Spark write: the touched (partition,
+    * bucket) slices of the stores (`pre`) merged with the batch and the
+    * doomed (key, partition) pairs ([[mergeNewest]]), written as
+    * `__part=<p>/__b=<b>` directories under `staging`. Clustering by
+    * (partition, bucket) once serves both the per-key window and the
+    * write, so each directory is one file. */
+  private def stageRouted(m: CollectionMeta, order: Seq[Int],
+      pre: Map[Int, DataFrame], batch: DataFrame, doomed: DataFrame,
+      bucketOf: Column, staging: java.nio.file.Path): Unit = {
+    val bucketed = (df: DataFrame) => df.withColumn("__b", bucketOf)
+    mergeNewest(m,
+        (order.map(p => pre(p).withColumn("__part", lit(p))) :+
+          batch.withColumnRenamed("__route", "__part")).map(bucketed),
+        Some(bucketed(doomed)), Seq("__part", "__b", "key"),
+        _.repartition(col("__part"), col("__b")))
+      .write.partitionBy("__part", "__b").mode("overwrite")
+      .parquet(staging.toString)
+  }
+
+  /** THE merge both commit paths write: the store rows and batch rows of
+    * `live` (store columns plus the non-store columns of `by`), newest
+    * `seq` per `by` kept, and every `doomed` row (the `by` columns) a
+    * tombstone whose seq beats every row — deletes apply after puts.
+    * `cluster` may partition the union first (the routed write clusters
+    * by partition and bucket; a window over a superset of those columns
+    * then needs no shuffle of its own). Tombstones instead of an anti
+    * join keep every union arm a plain scan in one stage: an anti join
+    * is pushed below a union, one broadcast per arm. */
+  private def mergeNewest(m: CollectionMeta, live: Seq[DataFrame],
+      doomed: Option[DataFrame], by: Seq[String],
+      cluster: DataFrame => DataFrame = identity): DataFrame = {
+    val schema = storeSchema(m)
+    val extra = by.filterNot(schema.fieldNames.contains).map(col)
+    val cols = schema.fieldNames.toIndexedSeq.map(col) ++ extra
+    val tombstones = doomed.map(_.select(schema.fields.toIndexedSeq.map(f => f.name match {
+      case "key" => col("key")
+      case "seq" => lit(Long.MaxValue).as("seq")
+      case n => lit(null).cast(f.dataType).as(n)
+    }) ++ extra :+ lit(true).as("__dead"): _*))
+    val merged = (live.map(_.select(cols :+ lit(false).as("__dead"): _*)) ++ tombstones)
+      .reduce(_ union _)
+    IngestOps.upsertLatest(cluster(merged), by.map(col), col("seq"), col("seq"))
+      .filter(!col("__dead")).select(cols: _*)
+  }
+
+  /** Run `f` holding the commit locks of `dirs`, taken in the given
+    * order and released in reverse. */
+  private def withStoreLocks[T](dirs: Seq[java.nio.file.Path])(f: => T): T =
+    dirs.foldRight(() => f)((d, inner) =>
+      () => BucketedKeyedCollection.withCommitLock(d)(inner()))()
 
   // the one routing expression every writer of a partition-key
   // collection uses: `__route = pmod(xxhash64(meta[pk]), numPartitions)`
@@ -1504,24 +1654,24 @@ class GraftClient(spark: SparkSession, root: String,
         .as("__route"): _*)
   }
 
-  /** One streaming micro-batch applied to a PARTITION-KEY collection:
-    * puts route through the same `pmod(xxhash64(meta[pk]))` router as
-    * batch upserts ([[routeByPk]] — write router and read scoping share
-    * the hash, so partition-scoped search sees streamed rows); deletes
-    * fan out to every `_pk_` partition, because a delete event carries
-    * only the key and the row's home depends on a pk value the event
-    * does not know — [[deleteByKeysDf]]'s unscoped stance, with the
-    * ghost pre-resolve making untouched partitions commit NOTHING —
-    * and each put's key fans as a delete to every NON-target partition,
-    * so a re-put with a CHANGED pk value moves the row (Milvus's
-    * delete-by-PK + insert, the [[upsertRouted]] contract). Each
-    * partition's puts and deletes apply as ONE snapshot version;
-    * atomicity is per partition, exactly the batch router's contract
-    * (Milvus promises nothing stronger across partitions either). CAS
-    * races with concurrent writers are absorbed by [[mergeCommit]]'s
-    * own bounded rebase-retry, and partition stores make contention
-    * rarer, not commoner (writers to DIFFERENT partitions never
-    * contend). */
+  /** One streaming micro-batch applied to a PARTITION-KEY collection,
+    * as ONE [[routedCommit]]: puts route through the same
+    * `pmod(xxhash64(meta[pk]))` router as batch upserts ([[routeByPk]] —
+    * write router and read scoping share the hash, so partition-scoped
+    * search sees streamed rows); deletes reach every non-empty `_pk_`
+    * partition whose live-key Bloom may hold the key, because a delete
+    * event carries only the key and the row's home depends on a pk value
+    * the event does not know ([[deleteByKeysDf]]'s unscoped stance); and
+    * each put's key is deleted from every NON-target partition, so a
+    * re-put with a CHANGED pk value moves the row (Milvus's delete-by-PK
+    * + insert, the [[upsertRouted]] contract). Each partition's puts and
+    * deletes apply as ONE snapshot version; partitions the batch does not
+    * change commit nothing, and a fully empty batch commits nowhere.
+    * Atomicity is per partition (Milvus promises nothing stronger across
+    * partitions either). CAS races with concurrent writers are absorbed
+    * by the commit's bounded whole-plan retry; past that bound the
+    * exception terminates the query — a sustained storm should surface,
+    * not loop. */
   private def ingestRoutedBatch(m: CollectionMeta, embedded: DataFrame,
                                 dels: DataFrame): Unit = {
     // streaming stance on a put missing the partition key: DROP the
@@ -1532,28 +1682,7 @@ class GraftClient(spark: SparkSession, root: String,
     // routeByPk's raise arm unreachable, so both writers share ONE
     // routing expression and can never hash differently.
     val pk = element_at(col("meta"), lit(m.partitionKey))
-    val routed = routeByPk(m, embedded.filter(pk.isNotNull)).persist()
-    val delsP = dels.persist()
-    try {
-      val touched = routed.select("__route").distinct()
-        .collect().map(_.getInt(0)).toSet // ≤ numPartitions ints
-      val hasDels = delsP.limit(1).count() > 0
-      // every partition commits whenever the batch carries ANYTHING:
-      // explicit deletes fan out (a delete event knows only the key),
-      // and puts fan their keys as deletes to every NON-target
-      // partition — Milvus upsert is delete-by-PK + insert, so a
-      // streamed re-put whose pk value changed MOVES the row instead of
-      // leaving a stale copy in its old partition (the batch router's
-      // upsertRouted contract). Untouched partitions ghost-resolve and
-      // commit nothing; a fully empty batch commits nowhere.
-      // CAS races with concurrent writers are absorbed by mergeCommit's
-      // own bounded rebase-retry (MaxCommitRetries, recomputed against
-      // the then-current snapshot); past that bound the exception
-      // terminates the query — a sustained storm should surface, not loop
-      if (touched.nonEmpty || hasDels)
-        routedFanout(m, routed, touched,
-          if (hasDels) Some(delsP) else None)
-    } finally { routed.unpersist(); delsP.unpersist() }
+    routedCommit(m, routeByPk(m, embedded.filter(pk.isNotNull)), Some(dels))
   }
 
   /** Expose the engine through `spark.sql` (A16/A17 from pure SQL): each
@@ -1634,20 +1763,18 @@ class GraftClient(spark: SparkSession, root: String,
     * happens either) — a small batch against a huge collection moves
     * `touched/buckets` of the data, not all of it. A key must appear in
     * at most one side; duplicate keys WITHIN `puts` resolve to a
-    * deterministic winner (see below). Returns the committed snapshot
-    * version, or None when the batch was effectively empty (no put
-    * survived, no delete matched) and nothing was committed.
+    * deterministic winner ([[boundaryChecked]]). Returns the committed
+    * snapshot version, or None when the batch was effectively empty (no
+    * put survived, no delete matched) and nothing was committed.
     *
     * Multi-writer: LOSING a CAS race is handled HERE, not by callers —
     * a ConcurrentModificationException from the commit means nothing was
     * written (the CAS throws under the commit lock before any bucket
     * move), so the merge is recomputed wholesale against the NEW current
-    * snapshot and retried, up to [[GraftClient.MaxCommitRetries]] times
-    * with linear backoff. Rebasing preserves cross-commit
-    * last-write-wins: the retried batch re-reads the interleaved
-    * writer's rows and re-resolves per key, exactly as if it had arrived
-    * after that commit. Past the bound the exception propagates —
-    * sustained contention should surface, not be absorbed silently. */
+    * snapshot and retried ([[retryOnCas]]). Rebasing preserves
+    * cross-commit last-write-wins: the retried batch re-reads the
+    * interleaved writer's rows and re-resolves per key, exactly as if it
+    * had arrived after that commit. */
   private def mergeCommit(m: CollectionMeta, puts: Option[DataFrame],
                           delKeys: Option[DataFrame],
                           ingestAt: Option[java.sql.Timestamp] = None): Option[Long] =
@@ -1666,18 +1793,28 @@ class GraftClient(spark: SparkSession, root: String,
     * constant closure. */
   private def mergeCommitRebasing(m: CollectionMeta, puts: Option[DataFrame],
                                   delKeysFn: Option[() => DataFrame],
-                                  ingestAt: Option[java.sql.Timestamp] = None): Option[Long] = {
-    var attempt = 1
-    var out: Option[Option[Long]] = None
+                                  ingestAt: Option[java.sql.Timestamp] = None): Option[Long] =
+    describedJobs("graft: commit") {
+      retryOnCas(mergeCommitOnce(m, puts, delKeysFn.map(_.apply()), ingestAt))
+    }
+
+  /** Run a commit attempt, recomputing it after a lost CAS race
+    * (ConcurrentModificationException: nothing was published) up to
+    * [[GraftClient.MaxCommitRetries]] attempts with linear backoff —
+    * contention here is a handful of writers on one collection racing
+    * micro-batches, not a thundering herd. Past the bound the exception
+    * propagates: sustained contention should surface, not be absorbed
+    * silently. */
+  private def retryOnCas[T](attempt: => T): T = {
+    var n = 1
+    var out: Option[T] = None
     while (out.isEmpty) {
-      try out = Some(mergeCommitOnce(m, puts, delKeysFn.map(_.apply()), ingestAt))
+      try out = Some(attempt)
       catch {
         case e: java.util.ConcurrentModificationException =>
-          if (attempt >= GraftClient.MaxCommitRetries) throw e
-          // linear backoff: contention here is a handful of writers on
-          // one collection racing micro-batches, not a thundering herd
-          Thread.sleep(20L * attempt)
-          attempt += 1
+          if (n >= GraftClient.MaxCommitRetries) throw e
+          Thread.sleep(20L * n)
+          n += 1
       }
     }
     out.get
@@ -1686,12 +1823,79 @@ class GraftClient(spark: SparkSession, root: String,
   /** Tag the Spark jobs `f` launches with a phase label — Spark UI
     * legibility plus the attribution IngestScaleBench's profiler groups
     * by (a streaming micro-batch's jobs otherwise all inherit the
-    * query-start call site, making the per-batch floor unreadable). */
+    * query-start call site, making the per-batch floor unreadable).
+    * Every commit runs under an outer `graft: ` label, so no job it
+    * launches escapes one. */
   private def describedJobs[T](label: String)(f: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(label)
     try f finally sc.setJobDescription(prev)
+  }
+
+  /** THE write boundary of every put path, single-store and routed: the
+    * null/family checks of `vec` and of every declared extra field, the
+    * key checks, the content-hash winner per key, and the batch's
+    * `ingest_ts` and `seq` columns. `carry` names input columns kept
+    * beside the store columns (the routed commit's `__route`; `seq` may
+    * read them).
+    *
+    * Seq assignment must be recompute-safe: a DataFrame is a bag, so
+    * there is no stable row order that would make "last duplicate in the
+    * batch wins" survive recomputation (persist() is best-effort — block
+    * eviction or executor loss between actions could reassign
+    * monotonically_increasing_id and record a manifest maxseq below a
+    * seq actually written). Instead the winner per key is a pure
+    * function of row CONTENT (max content hash) and every batch row of a
+    * store gets the SAME seq, its maxSeq + 1: distinct keys never compare
+    * seqs against each other, only against current rows (all <= maxSeq),
+    * so cross-commit last-write-wins holds and any recomputation
+    * reproduces the identical batch. Callers needing ordered within-batch
+    * semantics resolve per key first — the streaming micro-batch loop
+    * does, by arrival order. The batch timestamp is ONE driver literal
+    * for the same reason: current_timestamp() re-evaluates per action. */
+  private def boundaryChecked(m: CollectionMeta, df: DataFrame,
+      batchTs: java.sql.Timestamp, seq: Column,
+      carry: Seq[String] = Nil): DataFrame = {
+    // assert_dim is null-PROPAGATING (nullSafeEval never runs on
+    // null), so a null vec — e.g. an embedder returning null for a
+    // null payload — would commit and then rank first in every
+    // search (ASC NULLS FIRST) with a null distance, and NPE the
+    // index maintenance collect. Reject at the boundary like null
+    // keys; callers wanting skip semantics filter first (the
+    // streaming loop does — the reference's 400-per-event arm).
+    val nullChecked = when(col("vec").isNull, raise_error(lit(
+      "null vec in write batch — embedding failed or payload " +
+        "missing; filter null vecs before upserting")))
+    // the family checks are familyBoundaryCheck's ONE copy — the
+    // same rules every extra field's column passes
+    val vecChecked = nullChecked.otherwise(
+      familyBoundaryCheck(col("vec"), m.vectorType, m.dim, "vec"))
+    // multi-vector collections: every declared extra field is
+    // REQUIRED on every row (Milvus requires every non-nullable
+    // vector field on insert the same way; nullable added fields
+    // fill with typed nulls) and boundary-checked per its FAMILY
+    // like the primary — a missing column fails loudly up front
+    val withFields = withDeclaredFields(m, df)
+    val extraChecked = m.extraVecFields.map(f =>
+      checkedFieldCol(f).as(f.name))
+    val typed = withFields.select(
+      requireKey(col("key")).as("key") +:
+        vecChecked.as("vec") +:
+        extraChecked ++:
+        (coalesce(col("meta"), map()).as("meta") +: carry.map(col)): _*)
+    // sparse vecs are maps, which Spark's hash expressions refuse
+    // (order-dependent layout) — hash their canonical JSON instead;
+    // determinism-per-written-content is all the within-batch
+    // duplicate-winner rule needs
+    val hashableVec =
+      if (sparseVec(m)) to_json(col("vec")) else col("vec")
+    IngestOps.upsertLatest(typed, col("key"),
+        xxhash64(col("key") +: hashableVec +:
+          m.extraVecFields.map(hashableFieldCol) :+
+          to_json(col("meta")): _*), lit(0))
+      .select(typed.columns.toIndexedSeq.map(col) ++ Seq(
+        lit(batchTs).as("ingest_ts"), seq.as("seq")): _*)
   }
 
   private def mergeCommitOnce(m: CollectionMeta, puts: Option[DataFrame],
@@ -1705,69 +1909,11 @@ class GraftClient(spark: SparkSession, root: String,
     // clobbering the other writer's rows with a merge that never saw them
     val baseVersion = coll.currentVersion
     val maxSeq = coll.maxSeq
-    // Seq assignment must be recompute-safe: a DataFrame is a bag, so
-    // there is no stable row order that would make "last duplicate in the
-    // batch wins" survive recomputation (the old monotonically_increasing_id
-    // scheme leaned on persist(), which is best-effort — block eviction or
-    // executor loss between the actions below could reassign ids and record
-    // a manifest maxseq below a seq actually written). Instead the winner
-    // per key is a pure function of row CONTENT (max content hash) and
-    // every batch row gets the SAME seq, maxSeq + 1: distinct keys never
-    // compare seqs against each other, only against current rows (all
-    // <= maxSeq), so cross-commit last-write-wins is unchanged and any
-    // recomputation reproduces the identical batch. Callers needing
-    // ordered within-batch semantics resolve per key first — the streaming
-    // micro-batch loop does, by arrival order.
-    // the batch timestamp is stamped ONCE on the driver as a literal:
-    // current_timestamp() re-evaluates per action, so a cache-evicted
-    // recomputation of `decorated` (the store commit runs one action, the
-    // incremental index refresh another) could write diverging ingest_ts
-    // for the same keys — a literal makes every recomputation bit-identical
     val batchTs = ingestAt.getOrElse(
       new java.sql.Timestamp(System.currentTimeMillis()))
-    val decorated = puts.map { df =>
-      // assert_dim is null-PROPAGATING (nullSafeEval never runs on
-      // null), so a null vec — e.g. an embedder returning null for a
-      // null payload — would commit and then rank first in every
-      // search (ASC NULLS FIRST) with a null distance, and NPE the
-      // index maintenance collect. Reject at the boundary like null
-      // keys; callers wanting skip semantics filter first (the
-      // streaming loop does — the reference's 400-per-event arm).
-      val nullChecked = when(col("vec").isNull, raise_error(lit(
-        "null vec in write batch — embedding failed or payload " +
-          "missing; filter null vecs before upserting")))
-      // the family checks are familyBoundaryCheck's ONE copy — the
-      // same rules every extra field's column passes
-      val vecChecked = nullChecked.otherwise(
-        familyBoundaryCheck(col("vec"), m.vectorType, m.dim, "vec"))
-      // multi-vector collections: every declared extra field is
-      // REQUIRED on every row (Milvus requires every non-nullable
-      // vector field on insert the same way; nullable added fields
-      // fill with typed nulls) and boundary-checked per its FAMILY
-      // like the primary — a missing column fails loudly up front
-      val withFields = withDeclaredFields(m, df)
-      val extraChecked = m.extraVecFields.map(f =>
-        checkedFieldCol(f).as(f.name))
-      val typed = withFields.select(
-        requireKey(col("key")).as("key") +:
-          vecChecked.as("vec") +:
-          extraChecked :+
-          coalesce(col("meta"), map()).as("meta"): _*)
-      // sparse vecs are maps, which Spark's hash expressions refuse
-      // (order-dependent layout) — hash their canonical JSON instead;
-      // determinism-per-written-content is all the within-batch
-      // duplicate-winner rule needs
-      val hashableVec =
-        if (sparseVec(m)) to_json(col("vec")) else col("vec")
-      IngestOps.upsertLatest(typed, col("key"),
-          xxhash64(col("key") +: hashableVec +:
-            m.extraVecFields.map(hashableFieldCol) :+
-            to_json(col("meta")): _*), lit(0))
-        .select(typed.columns.toIndexedSeq.map(col) ++ Seq(
-          lit(batchTs).as("ingest_ts"),
-          lit(maxSeq + 1).as("seq")): _*)
-        .persist() // caching across the actions below — no longer correctness
-    }
+    val decorated = puts.map(df =>
+      boundaryChecked(m, df, batchTs, lit(maxSeq + 1))
+        .persist()) // caching across the actions below — no longer correctness
     // PURE-delete batches resolve their keys against the store FIRST (a
     // bucket-pruned left-semi): a delete of never-ingested keys must not
     // rewrite its hash buckets, bump the snapshot version, expire a
@@ -1788,18 +1934,16 @@ class GraftClient(spark: SparkSession, root: String,
       // GraftClientSpec pins the no-op.
       val k0 = d.select(requireKey(col("key"), capped = false).as("key"))
       // Partition stores narrow the delete side through the store's
-      // live-key Bloom sidecar FIRST (graft.index.KeyBloom): the routed
-      // fan-out hands every partition the whole batch's keys as deletes
-      // (pk-move + delete-event contracts), and without the summary each
-      // foreign partition pays a keys'-buckets resolve scan — and each
-      // put-side partition rewrites ghost buckets byte-identically — per
-      // batch, just to discover "not here". Dropping a key the Bloom
-      // rules out is sound (superset invariant ⇒ proven absent ⇒ the
-      // delete is a no-op by definition), and the read is race-free with
-      // this commit's CAS: the Bloom is consulted AFTER baseVersion is
-      // captured and writers merge their keys BEFORE their pointer swap,
-      // so the file covers every commit ≤ baseVersion — a later commit
-      // fails our CAS and the retry re-narrows against the fresh file.
+      // live-key Bloom sidecar FIRST (graft.index.KeyBloom): an unscoped
+      // delete visits every partition, and without the summary each
+      // partition pays a keys'-buckets resolve scan just to discover
+      // "not here". Dropping a key the Bloom rules out is sound
+      // (superset invariant ⇒ proven absent ⇒ the delete is a no-op by
+      // definition), and the read is race-free with this commit's CAS:
+      // the Bloom is consulted AFTER baseVersion is captured and writers
+      // merge their keys BEFORE their pointer swap, so the file covers
+      // every commit ≤ baseVersion — a later commit fails our CAS and
+      // the retry re-narrows against the fresh file.
       val k =
         if (partitionStore(m)) KeyBloom.narrow(spark, m.dataPath, k0) else k0
       val resolved =
@@ -1815,9 +1959,16 @@ class GraftClient(spark: SparkSession, root: String,
       val touchKeys = (decorated.map(_.select("key")).toSeq ++ keyed.map(_.select("key")))
         .reduceOption(_ union _)
       touchKeys.flatMap { tk =>
-        val preVersion = baseVersion
-        val touched = describedJobs("graft: resolve batch + touched buckets") {
-          touchedBuckets(coll, tk) }
+        // the touched buckets, with each bucket's put count — the Bloom
+        // merge's key count comes from here, not from a job of its own
+        val touchedPuts = describedJobs("graft: resolve batch + touched buckets") {
+          (decorated.map(_.select(col("key"), lit(1L).as("__put"))).toSeq ++
+              keyed.map(_.select(col("key"), lit(0L).as("__put"))))
+            .reduce(_ unionByName _)
+            .groupBy(coll.bucketExpr.as("__b")).agg(sum(col("__put")))
+            .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq
+        }
+        val touched = touchedPuts.map(_._1)
         // An effectively-empty batch (no put survived the object join, no
         // delete matched) commits NOTHING: no version bump, no needless
         // invalidation work — and a fresh IVF index stays fresh. This is
@@ -1825,10 +1976,7 @@ class GraftClient(spark: SparkSession, root: String,
         // streaming loop runs no separate isEmpty guard jobs).
         if (touched.isEmpty) None else {
           val current = coll.readBuckets(spark, touched)
-          val upserted = decorated.fold(current)(b => IngestOps.upsertLatest(
-            current.unionByName(b), col("key"), col("seq"), col("seq")))
-          val remaining = keyed.fold(upserted)(k => IngestOps.deleteByKey(upserted, k, "key"))
-            .select(storeSchema(m).fieldNames.toIndexedSeq.map(col): _*)
+          val remaining = mergeNewest(m, current +: decorated.toSeq, keyed, Seq("key"))
           // The seq watermark needs no aggregation job: batch rows all
           // carry maxSeq + 1 and current rows are ≤ maxSeq, so the new
           // high-water mark is known statically (a watermark above the
@@ -1840,62 +1988,33 @@ class GraftClient(spark: SparkSession, root: String,
           // superset — safe; the reverse order would publish rows the
           // Bloom cannot see, i.e. lost deletes on later fan-outs). The
           // sidecar's read-merge-write runs under the store's own commit
-          // lock so concurrent writers cannot drop each other's keys; a
+          // lock, after the CAS, so concurrent writers cannot drop each
+          // other's keys and an empty base really is an empty store; a
           // CAS retry re-adds the same keys, which merge idempotently.
-          decorated.filter(_ => partitionStore(m)).foreach { b =>
-            graft.streaming.BucketedKeyedCollection.withCommitLock(
-                java.nio.file.Paths.get(m.dataPath)) {
+          val expectedBase = Some(baseVersion.getOrElse(-1L))
+          val newVersion = graft.streaming.BucketedKeyedCollection.withCommitLock(
+              java.nio.file.Paths.get(m.dataPath)) {
+            coll.requireBase(expectedBase)
+            decorated.filter(_ => partitionStore(m)).foreach { b =>
               describedJobs("graft: key-bloom merge") {
-                KeyBloom.addKeys(m.dataPath, b.select("key"),
-                  () => coll.read(spark).select("key"))
+                val live = () => coll.read(spark).select("key")
+                if (touchedPuts.map(_._2).sum <= KeyBloom.DriverMergeMax)
+                  KeyBloom.addCollectedKeys(m.dataPath,
+                    b.select("key").collect().map(_.getString(0)).toSeq,
+                    baseVersion.map(_ => live))
+                else KeyBloom.addKeys(m.dataPath, b.select("key"), live)
               }
             }
+            describedJobs("graft: store commit (merge + write)") {
+              coll.commitBuckets(touched, remaining, newMaxSeq, expectedBase) }
           }
-          val newVersion = describedJobs("graft: store commit (merge + write)") {
-            coll.commitBuckets(touched, remaining, newMaxSeq,
-              expectedBase = Some(baseVersion.getOrElse(-1L))) }
           // Session floor + Bounded/Eventually cache: this client's own
           // acknowledged write IS a resolution of the new snapshot
           recordCommitted(m.dataPath, newVersion)
-          // keep a fresh IVF index fresh across the commit — `current` (the
-          // pre-image) stays readable here because the store retains the
-          // previous snapshot's directories for one more commit
-          describedJobs("graft: ivf refresh") {
-            // the refresh frames must carry EXACTLY the canonical five
-            // columns — a multi-vector batch's extra field columns would
-            // widen the cell-assign output past the cells layout's schema
-            val canon = Seq("key", "vec", "meta", "ingest_ts", "seq").map(col)
-            val (cur, dec) =
-              if (m.extraVecFields.isEmpty) (current, decorated)
-              else (current.select(canon: _*),
-                decorated.map(_.select(canon: _*)))
-            refreshIndexIncremental(m, preVersion, newVersion, tk, cur, dec) }
-          // extra vector fields' indexes roll forward on the SAME commit
-          // through the same machinery, each under its field view (the
-          // field column surfaced AS vec) and its OWN index dir/lock/
-          // stamp — so one field's staleness never depends on another's.
-          // Unindexed fields cost nothing (the no-dir fast path).
-          m.extraVecFields.foreach { f =>
-            // a NULLABLE field's slice mirrors its field view: only
-            // rows that HAVE the field. A put whose field is null still
-            // appears in touchKeys, so the refresh treats it as a
-            // delete of that key's old postings/cells — exactly the
-            // view's row set
-            val slice = (df: DataFrame) => {
-              val s = df.select(col("key"),
-                col(f.name).as("vec"), col("meta"), col("ingest_ts"),
-                col("seq"))
-              if (f.nullable) s.filter(col("vec").isNotNull) else s
-            }
-            describedJobs(s"graft: field ${f.name} ivf refresh") {
-              refreshIndexIncremental(fieldMeta(m, f.name), preVersion,
-                newVersion, tk, slice(current), decorated.map(slice)) }
-          }
-          // scalar indexes roll forward by appending the BATCH's own
-          // (value, bucket) pairs — batch-bounded, one pass for all
-          // indexed fields; pure deletes tick the compaction clock
-          describedJobs("graft: scalar refresh") {
-            refreshScalarIndexes(m, coll, preVersion, newVersion, decorated) }
+          // `current` (the pre-image) stays readable here because the
+          // store retains the previous snapshot's directories for one
+          // more commit
+          refreshStoreIndexes(m, coll, baseVersion, newVersion, tk, current, decorated)
           Some(newVersion)
         }
       }
@@ -1903,6 +2022,57 @@ class GraftClient(spark: SparkSession, root: String,
       decorated.foreach(_.unpersist())
       keyed.foreach(_.unpersist())
     }
+  }
+
+  /** THE per-store index refresh after a commit moved `coll` from
+    * `preVersion` to `newVersion`: the vector index (IVF/SQ8/PQ/HNSW/
+    * binary/sparse), every extra vector field's index, and the scalar
+    * indexes. `touchKeys`, `preImage` (the touched buckets' rows before
+    * the commit) and `puts` (the decorated batch) are this store's
+    * alone — a routed commit passes each published partition its own
+    * slices. Unindexed families cost nothing: the frames are built only
+    * when some refresh gets past its no-index fast path. */
+  private def refreshStoreIndexes(m: CollectionMeta, coll: BucketedKeyedCollection,
+      preVersion: Option[Long], newVersion: Long, touchKeys: => DataFrame,
+      preImage: => DataFrame, puts: => Option[DataFrame]): Unit = {
+    lazy val tk = touchKeys
+    lazy val pre = preImage
+    lazy val dec = puts
+    // the refresh frames must carry EXACTLY the canonical five
+    // columns — a multi-vector batch's extra field columns would
+    // widen the cell-assign output past the cells layout's schema
+    val canon = Seq("key", "vec", "meta", "ingest_ts", "seq").map(col)
+    def canonical(df: DataFrame) =
+      if (m.extraVecFields.isEmpty) df else df.select(canon: _*)
+    // keep a fresh IVF index fresh across the commit
+    describedJobs("graft: ivf refresh") {
+      refreshIndexIncremental(m, preVersion, newVersion, tk,
+        canonical(pre), dec.map(canonical)) }
+    // extra vector fields' indexes roll forward on the SAME commit
+    // through the same machinery, each under its field view (the
+    // field column surfaced AS vec) and its OWN index dir/lock/
+    // stamp — so one field's staleness never depends on another's.
+    m.extraVecFields.foreach { f =>
+      // a NULLABLE field's slice mirrors its field view: only
+      // rows that HAVE the field. A put whose field is null still
+      // appears in touchKeys, so the refresh treats it as a
+      // delete of that key's old postings/cells — exactly the
+      // view's row set
+      val slice = (df: DataFrame) => {
+        val s = df.select(col("key"),
+          col(f.name).as("vec"), col("meta"), col("ingest_ts"),
+          col("seq"))
+        if (f.nullable) s.filter(col("vec").isNotNull) else s
+      }
+      describedJobs(s"graft: field ${f.name} ivf refresh") {
+        refreshIndexIncremental(fieldMeta(m, f.name), preVersion,
+          newVersion, tk, slice(pre), dec.map(slice)) }
+    }
+    // scalar indexes roll forward by appending the BATCH's own
+    // (value, bucket) pairs — batch-bounded, one pass for all
+    // indexed fields; pure deletes tick the compaction clock
+    describedJobs("graft: scalar refresh") {
+      refreshScalarIndexes(m, coll, preVersion, newVersion, dec) }
   }
 
   /** Live row count of the current snapshot — parquet `count()` is
@@ -2788,9 +2958,10 @@ class GraftClient(spark: SparkSession, root: String,
             .select("key")
           val m0 = metaOrThrow(name)
           if (m0.partitionKey.nonEmpty) {
-            // routed collections: per-batch fan-out through the pk
-            // router — puts to their hash partitions, deletes to all;
-            // per-partition atomicity and CAS retry inside
+            // routed collections: one commit plan per batch through
+            // the pk router — puts to their hash partitions, deletes to
+            // every partition that may hold the key; per-partition
+            // atomicity and CAS retry inside
             ingestRoutedBatch(m0, embedded, dels)
           } else {
           // the whole micro-batch applies as ONE snapshot version — no
@@ -3110,17 +3281,29 @@ class GraftClient(spark: SparkSession, root: String,
     * summation slack is absorbed by [[GraftClient.RangePruneEps]].
     * Output: one (centroidId, radius) row per NON-EMPTY cell. */
   private def cellRadii(assigned: DataFrame,
-                        quant: IvfIndex.CoarseQuantizer): Map[Int, Double] = {
+                        quant: IvfIndex.CoarseQuantizer): Map[Int, Double] =
+    cellStats(assigned, quant).map { case (id, (_, r)) => id -> r }
+
+  /** Per NON-EMPTY cell of `assigned` (rows with `centroidId` and
+    * `__assign`): its refreshed probe center — the `vectorCentroid`
+    * mean [[IvfIndex.refreshCentroids]] takes — and its [[cellRadii]]
+    * radius to the frozen `quant` center, from one grouped aggregate. */
+  private def cellStats(assigned: DataFrame, quant: IvfIndex.CoarseQuantizer)
+      : Map[Int, (Array[Double], Double)] = {
     import spark.implicits._
     val centers = quant.centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toSeq.toDF("centroidId", "__center")
     assigned.join(broadcast(centers), Seq("centroidId"))
       .groupBy(col("centroidId"))
-      .agg(max(expr(
-        "sqrt(aggregate(zip_with(CAST(__assign AS ARRAY<DOUBLE>), __center, " +
-          "(x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), " +
-          "(acc, v) -> acc + v))")).as("radius"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      .agg(graft.functions.VectorAggregates.vectorCentroid(col("__assign")).as("centroid"),
+        max(expr(
+          "sqrt(aggregate(zip_with(CAST(__assign AS ARRAY<DOUBLE>), __center, " +
+            "(x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), " +
+            "(acc, v) -> acc + v))")).as("radius"))
+      .collect().map { r =>
+        val c = if (r.isNullAt(1)) null else r.getSeq[Float](1).map(_.toDouble).toArray
+        r.getInt(0) -> (c, r.getDouble(2))
+      }.toMap
   }
 
   private def writeCellRadii(radii: Map[Int, Double], m: CollectionMeta): Unit = {
@@ -3598,8 +3781,8 @@ class GraftClient(spark: SparkSession, root: String,
     * exact scan and `buildIndex` is the recovery path (later commits see
     * a stale index and skip this). */
   private def refreshIndexIncremental(m: CollectionMeta, preVersion: Option[Long],
-      newVersion: Long, touchKeys: DataFrame, preImage: DataFrame,
-      puts: Option[DataFrame]): Unit = {
+      newVersion: Long, touchKeys: => DataFrame, preImage: => DataFrame,
+      puts: => Option[DataFrame]): Unit = {
     // fast path: no index DIR means no build has ever STARTED (a build's
     // withCommitLock creates the dir before it pins its snapshot) —
     // taking the lock here would create the dir for every never-indexed
@@ -3637,11 +3820,12 @@ class GraftClient(spark: SparkSession, root: String,
           "__assign", centersBc)
         val inserted = puts.map(p => IvfIndex.assignCells(
           p.withColumn("__assign", assignSpace(m)(col("vec"))), "__assign", centersBc))
-        val oldCells = evicted.select("centroidId").distinct().collect().map(_.getInt(0))
-        val newCells = inserted.toSeq.flatMap(
-          _.select("centroidId").distinct().collect().map(_.getInt(0)))
-        val touchedCells = (oldCells ++ newCells).distinct.toSeq
-        if (touchedCells.nonEmpty) {
+        // old and new cells of the touched keys, in one action
+        val touchedCells = (evicted.select("centroidId") +:
+            inserted.map(_.select("centroidId")).toSeq)
+          .reduce(_ union _).distinct()
+          .collect().map(_.getInt(0)).toSeq
+        val (probe, radii) = if (touchedCells.isEmpty) (idx.probe, idx.radii) else {
           val survivors = IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema))
             .filter(col("centroidId").isin(touchedCells: _*))
             .join(keys, Seq("key"), "left_anti")
@@ -3651,8 +3835,16 @@ class GraftClient(spark: SparkSession, root: String,
           // bounded by the touched cells' rows
           val contents = inserted.fold(survivors)(i =>
             survivors.unionByName(i.drop("__assign"))).localCheckpoint()
-          val writtenCells = contents.select("centroidId").distinct()
-            .collect().map(_.getInt(0)).toSet
+          // ONE grouped aggregate over the new contents gives the cells
+          // written, their refreshed probe means (the touched cells move
+          // to their new means; untouched cells keep theirs) and their
+          // radii for range search's lossless prune — each the same
+          // expression as IvfIndex.refreshCentroids / cellRadii, so the
+          // values stay exact. Radii are measured against the FROZEN
+          // assign centers, never a loosening upper bound.
+          val cells = cellStats(
+            contents.withColumn("__assign", assignSpace(m)(col("vec"))), idx.assign)
+          val writtenCells = cells.keySet
           contents.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("centroidId").parquet(cellsPath(m))
@@ -3684,8 +3876,6 @@ class GraftClient(spark: SparkSession, root: String,
           // (PqEncode recomputes any row's codes bit-for-bit from vec +
           // cell — same recompute contract the assignment centers hold)
           if (pqIndexed(m)) idx.pq.foreach { pq =>
-            val centersBc = cachedBroadcast(m.name, "assign", idx.version)(
-              idx.assign.centers)
             val booksBc = cachedBroadcast(m.name, "pqbooks", idx.version)(
               pq.codebooks)
             PqIndex.encode(
@@ -3712,29 +3902,25 @@ class GraftClient(spark: SparkSession, root: String,
               writePqRecon((old -- touchedCells) ++ touched, m)
             }
           }
-          // probe centers of the touched cells move to the new cell means;
-          // untouched cells keep theirs (refreshCentroids only sees the
-          // touched cells' rows)
-          val refreshed = IvfIndex.refreshCentroids(
-            contents.withColumn("__assign", assignSpace(m)(col("vec"))),
-            "__assign", idx.probe)
+          val centers = idx.probe.centers.map(_.clone())
+          cells.foreach { case (id, (c, _)) =>
+            if (c != null && id >= 0 && id < centers.length) centers(id) = c }
+          val refreshed = IvfIndex.CoarseQuantizer(centers)
           writeCentroids(refreshed, s"${ivfDir(m)}/probe_centroids")
-          // range search's per-cell radii follow the same touched-cell
-          // merge: recompute EXACTLY from the touched cells' full new
-          // contents (`contents` holds every surviving + inserted row of
-          // those cells), keep untouched cells' values, drop emptied
-          // cells. Radii are measured against the FROZEN assign centers,
-          // so they stay exact — never a loosening upper bound. An index
-          // built before radii existed has no file: skip, and searchRange
-          // scans the whole cell layout (still exact, just unpruned).
-          readCellRadii(m).foreach { old =>
-            val touchedRadii = cellRadii(
-              contents.withColumn("__assign", assignSpace(m)(col("vec"))),
-              idx.assign)
-            writeCellRadii((old -- touchedCells) ++ touchedRadii, m)
-          }
+          // an index built before radii existed has no file: skip, and
+          // searchRange scans the whole cell layout (still exact, just
+          // unpruned)
+          val newRadii = idx.radii.map(old =>
+            (old -- touchedCells) ++ cells.map { case (id, (_, r)) => id -> r })
+          newRadii.foreach(writeCellRadii(_, m))
+          (refreshed, newRadii)
         }
         stampIndexVersion(m, newVersion)
+        // the refreshed index IS what the stamp now names: seed the
+        // cache so the first search after the commit does not re-read
+        // the centroid and radii tables
+        idxCache.put((m.name, newVersion),
+          idx.copy(probe = probe, version = newVersion, radii = radii))
       } finally keys.unpersist()
     case _ => () // no index, already stale, or pre-probe-table format —
                  // search falls back to the exact scan as before
@@ -7101,7 +7287,7 @@ class GraftClient(spark: SparkSession, root: String,
     * createScalarIndex is the recovery, exactly as for the IVF index. */
   private def refreshScalarIndexes(m: CollectionMeta,
       coll: BucketedKeyedCollection, preVersion: Option[Long],
-      newVersion: Long, puts: Option[DataFrame]): Unit = {
+      newVersion: Long, puts: => Option[DataFrame]): Unit = {
     val allFields = scalarIndexedFields(m)
     if (allFields.isEmpty) return
     // built lazily and ONCE (localCheckpoint), only if some field
@@ -9116,33 +9302,6 @@ object GraftClient {
     * via the constructor — tests use 0 and Long.MaxValue). Milvus's own
     * bounded window is likewise a few seconds. */
   val BoundedStalenessMs: Long = 5000L
-
-  /** Concurrent per-partition commits in a routed fan-out
-    * ([[GraftClient]]'s routedFanout). Partition stores are physically
-    * disjoint, so the cap bounds driver-side pressure (interleaved job
-    * pipelines, planner threads), not correctness; 8 keeps a
-    * numPartitions=8 routed collection fully parallel while a
-    * 4096-partition one queues. */
-  val FanoutParallelism: Int = 8
-
-  /** One shared daemon pool for every fan-out (a per-invocation pool
-    * would churn 8 threads per streaming micro-batch). Safe to share
-    * across clients/collections: fan-out tasks never submit to or block
-    * on this pool themselves (mergeCommit runs Spark jobs — the nesting
-    * that COULD deadlock a fixed pool doesn't exist here), so the only
-    * sharing effect is throughput division between concurrent routed
-    * writers. Indexed thread names keep jstack/Spark-UI attribution of
-    * a stuck partition commit possible. */
-  private[api] lazy val fanoutEc: scala.concurrent.ExecutionContext = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(FanoutParallelism,
-        (r: Runnable) => {
-          val t = new Thread(r, s"graft-fanout-${n.getAndIncrement()}")
-          t.setDaemon(true)
-          t
-        }))
-  }
 
   /** The implicit partition every collection is born with — Milvus's
     * `_default`. All single-partition APIs read/write it, so a

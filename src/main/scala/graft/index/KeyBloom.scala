@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.{col, explode, udf}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Per-store live-KEY Bloom sidecar — the membership summary that lets a
@@ -21,17 +21,20 @@ import org.apache.spark.util.sketch.BloomFilter
   * partition pays a keys'-buckets resolve scan per batch — I/O ∝
   * partitions × batch buckets, all of it to discover "not here".
   * [[narrow]] filters the delete batch through the partition's Bloom
-  * first, so a partition holding none of the keys resolves an EMPTY
-  * frame and reads zero buckets. A false positive only re-pays today's
-  * scan; a false NEGATIVE would lose a delete, so the file's one
-  * invariant is SUPERSET: it contains every key ever committed live to
-  * the store since the file existed (deletes never shrink it — they
-  * only widen false positives until an overflow rebuild re-tightens).
+  * first ([[narrowParts]] does it for every partition store at once,
+  * with the partition as a column), so a partition holding none of the
+  * keys resolves an EMPTY frame and reads zero buckets. A false
+  * positive only re-pays the scan; a false NEGATIVE would lose a
+  * delete, so the file's one invariant is SUPERSET: it contains every
+  * key ever committed live to the store since the file existed
+  * (deletes never shrink it — they only widen false positives until an
+  * overflow rebuild re-tightens).
   *
-  * Maintenance contract (enforced by the ONE writer path,
-  * `GraftClient.mergeCommitOnce`): on every put commit, [[addKeys]]
-  * merges the batch's keys BEFORE the store's pointer swap — a crash
-  * between the two leaves the Bloom a superset (safe); the reverse
+  * Maintenance contract (enforced by GraftClient's two commit paths,
+  * the single-store `mergeCommitOnce` and the routed commit plan): on
+  * every put commit, [[addKeys]] / [[addCollectedKeys]] merges the
+  * batch's keys BEFORE the store's pointer swap — a crash between the
+  * two leaves the Bloom a superset (safe); the reverse
   * order would publish rows invisible to the Bloom (lost deletes). All
   * file mutations run under the store's own commit lock, so concurrent
   * writers cannot interleave read-merge-write and drop each other's
@@ -40,12 +43,13 @@ import org.apache.spark.util.sketch.BloomFilter
   * File format: `[version][count][capacity]` (longs) + Spark
   * `BloomFilter` bytes, written to a temp file and ATOMIC_MOVE'd. The
   * embedded VERSION (not mtime — second-granularity stamps can alias
-  * same-second rewrites) keys the reader cache: [[narrow]] re-reads 24
-  * header bytes per call and reloads + re-broadcasts the ~bloom only
-  * when the version moved, so steady-state cost per fan-out is one tiny
-  * header read. When `count` would exceed `capacity`, the file is
-  * rebuilt from the store's LIVE keys at doubled capacity — an
-  * overflow-triggered compaction that also folds deleted keys' bits.
+  * same-second rewrites) keys the reader cache: [[narrow]] and
+  * [[narrowParts]] re-read 24 header bytes per store and reload +
+  * re-broadcast the ~bloom only when the version moved, so steady-state
+  * cost per commit is one tiny header read per store. When `count`
+  * would exceed `capacity`, the file is rebuilt from the store's LIVE
+  * keys at doubled capacity — an overflow-triggered compaction that also
+  * folds deleted keys' bits.
   *
   * Scale posture: the Bloom is ~1.2 bytes/key at 3% fpp (4M keys ≈
   * 3.5 MB), read per put-commit and broadcast per version change — I/O
@@ -113,62 +117,97 @@ object KeyBloom {
     * Bloom, creating it from `live() ∪ keys` when absent and rebuilding
     * it from `live()` at doubled capacity on overflow. MUST be called
     * under the store's commit lock and BEFORE the commit's pointer swap
-    * (see the object doc). */
+    * (see the object doc). Batches of at most [[DriverMergeMax]] keys
+    * are collected and merged on the driver ([[addCollectedKeys]]);
+    * bigger ones take the distributed treeAggregate. */
   def addKeys(storeDir: String, keys: DataFrame,
               live: () => DataFrame,
               defaultCapacity: Long = DefaultCapacity): Unit = {
-    val p = bloomPath(storeDir)
-    if (!Files.exists(p)) {
-      // size the first file for the keys it must actually hold — the
-      // store's LIVE set plus this batch, not just the batch (a bloom
-      // built over 1M live keys at a batch-sized capacity would be all
-      // ones: sound, but it prunes nothing)
-      val all = live().select(col("key")).unionByName(keys.select(col("key")))
-      val allN = all.count()
-      val cap = math.max(defaultCapacity, 2 * allN)
-      val b = bloomOf(all, cap)
-      // The initial version is a random epoch, NOT 1: a dropped-and-
-      // recreated store reuses its directory path, and a fresh file
-      // restarting at 1 would alias the reader cache's entry for the old
-      // incarnation — narrow would serve the STALE broadcast and lose
-      // deletes of the new store's keys (KeyBloomSpec pins the recreate
-      // case). Versions stay monotone within a file's lifetime; a
-      // cross-incarnation collision needs two random 62-bit starts to
-      // land on the same value, which we accept.
-      val epoch = java.util.concurrent.ThreadLocalRandom.current()
-        .nextLong(1L, Long.MaxValue / 2)
-      writeFile(storeDir, Loaded(epoch, allN, cap, b))
-    } else {
-      val n = keys.count() // callers pass a persisted batch — footer-cheap
-      val cur = readFile(p)
-      if (cur.count + n > cur.capacity) {
-        // overflow → rebuild from LIVE keys only (folds deleted keys'
-        // bits back out) sized to the live set, NOT doubled from the old
-        // capacity: `count` accrues per put (re-upserts included), so a
-        // stable key set under churn overflows periodically, and doubling
-        // from capacity would grow the file with CUMULATIVE writes
-        // forever — the rebuild must re-tighten to live cardinality, at
-        // 2× headroom so the next overflow is a live-set away
-        val liveKeys = live().select(col("key")).unionByName(keys.select(col("key")))
-        val liveN = liveKeys.count()
-        val cap = math.max(defaultCapacity, 2 * liveN)
-        writeFile(storeDir,
-          Loaded(cur.version + 1, liveN, cap, bloomOf(liveKeys, cap)))
-      } else {
-        // the common per-commit path: batch-bounded key sets fold into
-        // the already-deserialized filter on the driver (no Spark job,
-        // no capacity-sized per-task blooms shuffled back); only a
-        // genuinely large batch pays the distributed treeAggregate
-        if (n <= DriverMergeMax)
-          keys.select(col("key")).collect()
-            .foreach(r => if (!r.isNullAt(0)) cur.bloom.putString(r.getString(0)))
-        else
-          cur.bloom.mergeInPlace(bloomOf(keys.select(col("key")), cur.capacity))
-        writeFile(storeDir,
-          Loaded(cur.version + 1, cur.count + n, cur.capacity, cur.bloom))
+    val k = keys.select(col("key"))
+    if (!exists(storeDir))
+      writeFresh(storeDir, None, live().select(col("key")).unionByName(k), defaultCapacity)
+    else {
+      val n = k.count() // callers pass a persisted batch — footer-cheap
+      if (n <= DriverMergeMax)
+        addCollectedKeys(storeDir, k.collect().map(_.getString(0)).toSeq,
+          Some(live), defaultCapacity)
+      else {
+        val cur = readFile(bloomPath(storeDir))
+        if (cur.count + n > cur.capacity)
+          writeFresh(storeDir, Some(cur),
+            live().select(col("key")).unionByName(k), defaultCapacity)
+        else {
+          cur.bloom.mergeInPlace(bloomOf(k, cur.capacity))
+          writeFile(storeDir, cur.copy(version = cur.version + 1, count = cur.count + n))
+        }
       }
     }
   }
+
+  /** [[addKeys]] for a key set the caller already holds on the driver
+    * (at most [[DriverMergeMax]] keys). The common per-commit path folds
+    * them into the already-deserialized filter: no Spark job, no
+    * capacity-sized per-task blooms shuffled back. Only creating the
+    * file, or rebuilding it on overflow, reads `live` — and `live = None`
+    * states the store holds no rows yet, so even that stays on the
+    * driver (the batch IS the live set). Same locking and ordering
+    * contract as [[addKeys]]. */
+  def addCollectedKeys(storeDir: String, keys: Seq[String],
+                       live: Option[() => DataFrame],
+                       defaultCapacity: Long = DefaultCapacity): Unit = {
+    require(keys.size <= DriverMergeMax,
+      s"${keys.size} keys exceed the driver-side merge bound $DriverMergeMax")
+    val prev = if (exists(storeDir)) Some(readFile(bloomPath(storeDir))) else None
+    prev.filter(c => c.count + keys.size <= c.capacity) match {
+      case Some(cur) =>
+        keys.foreach(k => if (k != null) cur.bloom.putString(k))
+        writeFile(storeDir,
+          cur.copy(version = cur.version + 1, count = cur.count + keys.size))
+      case None => live match {
+        case Some(l) =>
+          val liveKeys = l().select(col("key"))
+          val spark = liveKeys.sparkSession
+          import spark.implicits._
+          writeFresh(storeDir, prev, liveKeys.unionByName(keys.toDF("key")),
+            defaultCapacity)
+        case None =>
+          val cap = math.max(defaultCapacity, 2L * keys.size)
+          val b = BloomFilter.create(cap, Fpp)
+          keys.foreach(k => if (k != null) b.putString(k))
+          writeFile(storeDir, Loaded(nextVersion(prev), keys.size, cap, b))
+      }
+    }
+  }
+
+  /** (Re)build the file from `all` — the store's LIVE keys plus the
+    * batch — sized to it at 2× headroom. On a first build this sizes the
+    * file for the keys it must actually hold, not just the batch (a
+    * bloom built over 1M live keys at a batch-sized capacity would be
+    * all ones: sound, but it prunes nothing). On overflow it rebuilds
+    * from live keys only (folding deleted keys' bits back out), NOT
+    * doubled from the old capacity: `count` accrues per put (re-upserts
+    * included), so a stable key set under churn overflows periodically,
+    * and doubling from capacity would grow the file with CUMULATIVE
+    * writes forever — the rebuild re-tightens to live cardinality, and
+    * the next overflow is a live-set away. */
+  private def writeFresh(storeDir: String, prev: Option[Loaded], all: DataFrame,
+                         defaultCapacity: Long): Unit = {
+    val n = all.count()
+    val cap = math.max(defaultCapacity, 2 * n)
+    writeFile(storeDir, Loaded(nextVersion(prev), n, cap, bloomOf(all, cap)))
+  }
+
+  /** The version a rewrite stamps: the previous file's + 1, or for a new
+    * file a random epoch, NOT 1 — a dropped-and-recreated store reuses
+    * its directory path, and a fresh file restarting at 1 would alias
+    * the reader cache's entry for the old incarnation: narrow would
+    * serve the STALE broadcast and lose deletes of the new store's keys
+    * (KeyBloomSpec pins the recreate case). Versions stay monotone
+    * within a file's lifetime; a cross-incarnation collision needs two
+    * random 62-bit starts to land on the same value, which we accept. */
+  private def nextVersion(prev: Option[Loaded]): Long =
+    prev.fold(java.util.concurrent.ThreadLocalRandom.current()
+      .nextLong(1L, Long.MaxValue / 2))(_.version + 1)
 
   // (storeDir → (version, broadcast)) — the broadcast is reused until the
   // file's embedded version moves; the superseded broadcast is destroyed
@@ -203,14 +242,42 @@ object KeyBloom {
     * must resolve, today's behavior). Sound by the superset invariant:
     * a dropped key is PROVEN absent from the store, so deleting it is a
     * no-op by definition. */
-  def narrow(spark: SparkSession, storeDir: String, keys: DataFrame): DataFrame = {
+  def narrow(spark: SparkSession, storeDir: String, keys: DataFrame): DataFrame =
+    broadcastOf(spark, storeDir) match {
+      case None => keys
+      case Some(bc) =>
+        val might = udf((k: String) => k != null && bc.value.mightContainString(k))
+        keys.filter(might(col("key")))
+    }
+
+  /** [[narrow]] over several stores at once, with the store as a column:
+    * one `(key, <partCol>)` row per key and per store in `stores`
+    * (partition id → store dir) whose Bloom cannot rule the key out. A
+    * store without a readable Bloom keeps every key. Same soundness
+    * argument as [[narrow]], store by store. */
+  def narrowParts(spark: SparkSession, stores: Seq[(Int, String)],
+                  keys: DataFrame, partCol: String): DataFrame = {
+    val filters = stores.map { case (p, d) => (p, broadcastOf(spark, d)) }.toArray
+    val might = udf((k: String) =>
+      if (k == null) Array.empty[Int]
+      else filters.collect {
+        case (p, bc) if bc.forall(_.value.mightContainString(k)) => p
+      })
+    keys.withColumn(partCol, explode(might(col("key"))))
+  }
+
+  /** The store's Bloom as a broadcast, reused until the file's version
+    * moves; None when there is no file or it cannot be read (a torn or
+    * racing file: skip the prune). */
+  private def broadcastOf(spark: SparkSession,
+                          storeDir: String): Option[Broadcast[BloomFilter]] = {
     val p = bloomPath(storeDir)
-    if (!Files.exists(p)) return keys
+    if (!Files.exists(p)) return None
     val version =
       try readHeaderVersion(p)
-      catch { case _: java.io.IOException => return keys } // torn/racing file: skip the prune
+      catch { case _: java.io.IOException => return None }
     val key = Paths.get(storeDir).toAbsolutePath.normalize.toString
-    val (_, bc) = cache.compute(key, (_, old) => {
+    Some(cache.compute(key, (_, old) => {
       if (old != null && old._1 == version) old
       else {
         // unpersist, never destroy: an in-flight narrow on another
@@ -220,8 +287,6 @@ object KeyBloom {
           try old._2.unpersist(false) catch { case _: Throwable => () }
         (version, spark.sparkContext.broadcast(readFile(p).bloom))
       }
-    })
-    val might = udf((k: String) => k != null && bc.value.mightContainString(k))
-    keys.filter(might(col("key")))
+    })._2)
   }
 }

@@ -26,8 +26,17 @@ object IngestOps {
   /** Last-write-wins per key: keep the newest row by `ts`, tiebreaking on
     * `tiebreak` (descending) so re-delivered same-timestamp events pick a
     * stable winner and oracle hashes never flap (SURVEY §7.4.1). */
-  def upsertLatest(df: DataFrame, key: Column, ts: Column, tiebreak: Column): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(ts.desc, tiebreak.desc)
+  def upsertLatest(df: DataFrame, key: Column, ts: Column, tiebreak: Column): DataFrame =
+    upsertLatest(df, Seq(key), ts, tiebreak)
+
+  /** [[upsertLatest]] over a composite key. A frame already
+    * hash-partitioned on a subset of `keys` keeps that partitioning (the
+    * window needs no further shuffle), which is what lets a routed
+    * commit cluster by (partition, bucket) once for both the resolve
+    * and its partitioned write. */
+  def upsertLatest(df: DataFrame, keys: Seq[Column], ts: Column,
+                   tiebreak: Column): DataFrame = {
+    val w = Window.partitionBy(keys: _*).orderBy(ts.desc, tiebreak.desc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")

@@ -270,7 +270,8 @@ class BucketedKeyedCollection(root: String, schema: StructType, keyCol: String,
   /** Commit `rows` as the complete new contents of the `touched` buckets
     * (every row of `rows` must hash into `touched`); all other buckets
     * carry over untouched. A touched bucket with no surviving rows is
-    * dropped from the manifest.
+    * dropped from the manifest. The commit is [[stage]]-then-
+    * [[publishStaged]] under one hold of the commit lock.
     *
     * Multi-writer contract: commits SERIALIZE on a per-collection lock
     * (in-process mutex + OS file lock, so two clients in one JVM and two
@@ -285,6 +286,23 @@ class BucketedKeyedCollection(root: String, schema: StructType, keyCol: String,
   def commitBuckets(touched: Seq[Int], rows: DataFrame, newMaxSeq: Long,
                     expectedBase: Option[Long] = None): Long =
     BucketedKeyedCollection.withCommitLock(dir) {
+    val next = requireBase(expectedBase) + 1
+    // a stale `.stage-*` dir is a commit that crashed before its publish;
+    // the lock is held, so none of them is live
+    listDir().filter(_.startsWith(".stage-"))
+      .foreach(n => deleteRecursively(dir.resolve(n)))
+    val staging = dir.resolve(f".stage-$next%08d")
+    val staged = stage(rows, staging)
+    try publishStaged(touched, staged, newMaxSeq, expectedBase)
+    finally deleteRecursively(staging) // leftover _SUCCESS markers
+    }
+
+  /** The CAS half of a commit: the current version, or
+    * ConcurrentModificationException when it is not `expectedBase` (no
+    * expectation = no check). Callers hold the commit lock, so a check
+    * that passes stays true until they release it. */
+  private[graft] def requireBase(expectedBase: Option[Long]): Long =
+    BucketedKeyedCollection.withCommitLock(dir) {
     val curV = currentVersion.getOrElse(-1L)
     expectedBase.filter(_ != curV).foreach { e =>
       throw new java.util.ConcurrentModificationException(
@@ -292,42 +310,53 @@ class BucketedKeyedCollection(root: String, schema: StructType, keyCol: String,
           s"against snapshot $e but the collection is now at $curV; " +
           "retry the write against the current snapshot")
     }
-    val next = curV + 1
-    // Retry safety: a commit that crashed after some bucket-dir moves but
-    // before the pointer swap leaves orphan `b*-v<next>` dirs (the retried
-    // commit recomputes the same `next`, and Files.move without
-    // REPLACE_EXISTING would throw FileAlreadyExistsException, wedging all
-    // future commits) and stale `.stage-*` dirs. Single-writer is assumed,
-    // so anything staged or versioned >= `next` is dead — clean it first.
-    // `.ptr-` temps are strandable by a crash between createTempFile and
-    // the atomic move below — harmless individually, an unbounded leak
-    // across crash-retry cycles; this cleanup already runs under the
-    // commit lock, so sweeping them here can't race a live publish
-    listDir().filter(n => n.startsWith(".stage-") || n.startsWith(".ptr-") ||
-        bucketDirVersion(n).exists(_ >= next))
-      .foreach(n => deleteRecursively(dir.resolve(n)))
-    val staging = dir.resolve(f".stage-$next%08d")
+    curV
+    }
+
+  /** Write `rows` into `staging` as one `__b=<bucket>` directory per
+    * bucket they hash into, and return those directories — the staged
+    * half of [[commitBuckets]]. Nothing is published. */
+  private def stage(rows: DataFrame, staging: Path): Map[Int, Path] = {
     rows.withColumn("__b", bucketExpr)
       .write.partitionBy("__b").mode("overwrite").parquet(staging.toString)
-    val written: Seq[Int] = {
-      val listing = Files.list(staging)
-      try listing.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("__b="))
-        .map(_.stripPrefix("__b=").toInt)
-        .toSeq
-      finally listing.close()
-    }
-    val stray = written.toSet -- touched.toSet
+    BucketedKeyedCollection.stagedDirs(staging, "__b")
+  }
+
+  /** Publish already-written bucket directories (`staged`: bucket → a
+    * directory of parquet files on this store's filesystem, each holding
+    * the bucket's complete new rows) as the next snapshot version: CAS
+    * on `expectedBase`, move each directory into place, write the
+    * manifest, swap the pointer, vacuum. Touched buckets absent from
+    * `staged` are emptied. [[commitBuckets]] stages into the store
+    * itself; a routed commit stages every partition store's buckets in
+    * one Spark write elsewhere and publishes each store through here,
+    * under locks it already holds.
+    *
+    * Retry safety: a publish that crashed after some bucket-dir moves
+    * but before the pointer swap leaves orphan `b*-v<next>` dirs (the
+    * retried publish recomputes the same `next`, and Files.move without
+    * REPLACE_EXISTING would throw FileAlreadyExistsException, wedging all
+    * future commits). Anything versioned >= `next` is dead under the
+    * lock, so it is cleaned first. `.ptr-` temps are strandable by a
+    * crash between createTempFile and the atomic move below — harmless
+    * individually, an unbounded leak across crash-retry cycles. */
+  private[graft] def publishStaged(touched: Seq[Int], staged: Map[Int, Path],
+                                   newMaxSeq: Long,
+                                   expectedBase: Option[Long]): Long =
+    BucketedKeyedCollection.withCommitLock(dir) {
+    val next = requireBase(expectedBase) + 1
+    listDir().filter(n => n.startsWith(".ptr-") ||
+        bucketDirVersion(n).exists(_ >= next))
+      .foreach(n => deleteRecursively(dir.resolve(n)))
+    val stray = staged.keySet -- touched.toSet
     require(stray.isEmpty,
       s"commitBuckets: rows hash into undeclared buckets $stray — the merge " +
         "would silently duplicate their keys")
-    val moved = written.map { b =>
+    val moved = staged.map { case (b, src) =>
       val rel = f"b$b%05d-v$next%08d"
-      Files.move(staging.resolve(s"__b=$b"), dir.resolve(rel))
+      Files.move(src, dir.resolve(rel))
       b -> rel
-    }.toMap
-    deleteRecursively(staging) // leftover _SUCCESS markers
+    }
     val updated = (currentForCommit.map(_.buckets).getOrElse(Map.empty) -- touched) ++ moved
     val body = (s"maxseq $newMaxSeq" +:
       updated.toSeq.sortBy(_._1).map { case (b, rel) => s"$b $rel" }).mkString("\n")
@@ -404,6 +433,19 @@ object BucketedKeyedCollection {
     try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
     finally walk.close()
   }
+
+  /** The `<column>=<int>` subdirectories of a Spark partitioned write
+    * at `staged` (none when the write produced no rows and no dir). */
+  private[graft] def stagedDirs(staged: Path, column: String): Map[Int, Path] =
+    if (!Files.isDirectory(staged)) Map.empty
+    else {
+      val listing = Files.list(staged)
+      try listing.iterator().asScala
+        .filter(_.getFileName.toString.startsWith(s"$column="))
+        .map(p => p.getFileName.toString.stripPrefix(s"$column=").toInt -> p)
+        .toMap
+      finally listing.close()
+    }
 
   // ---- load/release cache (Milvus load_collection, A20-compatible) ----
   //

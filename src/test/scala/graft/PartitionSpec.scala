@@ -419,4 +419,200 @@ class PartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getAs[String]("vector_key")).toSet.contains("doc12.txt"),
       "partition-scoped search must see streamed rows")
   }
+
+  // ---- the routed commit plan: one plan over every partition store ----
+
+  /** Spark job descriptions of the jobs started while `body` runs — the
+    * listener bus is drained before and after, so every start event is
+    * seen. */
+  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** One tenant value per physical partition of an `n`-partition
+    * collection, index = partition. */
+  private def tenantPerPartition(n: Int): IndexedSeq[String] = {
+    val byHome = (0 until 64 * n).map(i => s"t$i").groupBy(t =>
+      graft.core.CatalystHash.pmodXxhash64(t, org.apache.spark.sql.types.StringType, n))
+    (0 until n).map(p => byHome(p).head)
+  }
+
+  private def putNotif(key: String, tenant: String): String =
+    s"""{"Records":[{"eventVersion":"2.2","eventSource":"ceph:s3",""" +
+      s""""eventName":"ObjectCreated:Put","s3":{"bucket":{"name":"b"},""" +
+      s""""object":{"key":"$key","size":1,"tags":{"tenant":"$tenant"}}}}]}"""
+
+  test("one commit plan: routed batches run at most 2x a plain batch's jobs, one version per touched partition") {
+    import spark.implicits._
+    val (client, root) = newClient()
+    client.createCollection("plainj", dim = 2, buckets = 8)
+    client.createCollection("routedj", dim = 2, partitionKey = "tenant",
+      numPartitions = 8)
+    val tenants = tenantPerPartition(8)
+    def batch(gen: Int) = (0 until 200).map(i =>
+      (s"k$i", Seq(i.toFloat + gen, 0f), Map("tenant" -> tenants(i % 8))))
+      .toDF("key", "vec", "meta")
+    Seq("plainj", "routedj").foreach(c => client.upsert(c, batch(0)))
+    def pkVersions = client.flush("routedj").filter(_._1.startsWith("_pk_"))
+    val v0 = pkVersions
+    val (_, plainJobs) = jobsDuring(client.upsert("plainj", batch(1)))
+    val (_, routedJobs) = jobsDuring(client.upsert("routedj", batch(1)))
+    assert(routedJobs.size <= 2 * plainJobs.size,
+      s"routed upsert ran ${routedJobs.size} jobs, plain ${plainJobs.size}")
+    assert(pkVersions == v0.map { case (p, v) => p -> (v + 1) },
+      "every touched partition store gets exactly one new version")
+    // the one staged write clusters by (partition, bucket): every bucket
+    // directory the commit published holds one data file
+    val parts = s"${client.describe("routedj").dataPath}-parts"
+    pkVersions.foreach { case (p, v) =>
+      val store = java.nio.file.Paths.get(parts, p, "store")
+      val published = store.toFile.listFiles().filter(_.getName.endsWith(f"-v$v%08d"))
+      assert(published.nonEmpty, s"$p published no bucket directory")
+      published.foreach { d =>
+        val files = d.listFiles().count(f => f.getName.startsWith("part-"))
+        assert(files == 1, s"$p/${d.getName} holds $files data files")
+      }
+    }
+    // a routed micro-batch of the same events as a plain one
+    val objects = (0 until 200).map(i => (s"doc$i", s"document $i")).toDF("key", "text")
+    def drain(coll: String): Seq[String] = {
+      val land = java.nio.file.Paths.get(root, s"landing-$coll")
+      java.nio.file.Files.createDirectories(land)
+      java.nio.file.Files.write(land.resolve("f1.json"), (0 until 200)
+        .map(i => putNotif(s"doc$i", tenants(i % 8))).mkString("\n").getBytes)
+      jobsDuring(client.startIngest(coll, land.toString, objects,
+        embedder = graft.ingest.HashingEmbedder(2)).awaitTermination(120000))._2
+    }
+    val v1 = pkVersions
+    val plainBatch = drain("plainj")
+    val routedBatch = drain("routedj")
+    assert(routedBatch.size <= 2 * plainBatch.size,
+      s"routed micro-batch ran ${routedBatch.size} jobs, plain ${plainBatch.size}")
+    assert(pkVersions == v1.map { case (p, v) => p -> (v + 1) })
+    assert(client.count("routedj") == client.count("plainj"))
+  }
+
+  test("every job a plain or routed commit launches carries a graft: label") {
+    import spark.implicits._
+    val (client, root) = newClient()
+    client.createCollection("lp", dim = 2, buckets = 4)
+    client.createCollection("lr", dim = 2, partitionKey = "tenant", numPartitions = 4)
+    val tenants = tenantPerPartition(4)
+    val rows = (0 until 40).map(i =>
+      (s"k$i", Seq(i.toFloat, 0f), Map("tenant" -> tenants(i % 4))))
+    val objects = (0 until 40).map(i => (s"doc$i", s"document $i")).toDF("key", "text")
+    val (_, jobs) = jobsDuring {
+      Seq("lp", "lr").foreach { c =>
+        client.upsert(c, rows.toDF("key", "vec", "meta"))
+        client.upsert(c, rows.take(10).toDF("key", "vec", "meta"))
+        client.deleteByKeys(c, Seq("k1", "k2", "ghost"))
+        val land = java.nio.file.Paths.get(root, s"landing-$c")
+        java.nio.file.Files.createDirectories(land)
+        java.nio.file.Files.write(land.resolve("f1.json"), (0 until 40)
+          .map(i => putNotif(s"doc$i", tenants(i % 4))).mkString("\n").getBytes)
+        client.startIngest(c, land.toString, objects,
+          embedder = graft.ingest.HashingEmbedder(2)).awaitTermination(120000)
+      }
+    }
+    assert(jobs.nonEmpty)
+    val unlabeled = jobs.filterNot(_.startsWith("graft: "))
+    assert(unlabeled.isEmpty,
+      s"${unlabeled.size} of ${jobs.size} jobs carry no graft: label: ${unlabeled.distinct.take(5)}")
+  }
+
+  test("routed commit crash after k of N partition publishes: each partition old or new; the next commit sweeps staging") {
+    import spark.implicits._
+    @volatile var crashAfter = -1
+    val root = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val client = new GraftClient(spark, root) {
+      override protected def afterPartitionPublish(published: Int, of: Int): Unit =
+        if (published == crashAfter)
+          throw new IllegalStateException(s"injected crash after $published of $of publishes")
+    }
+    client.createCollection("cr", dim = 2, partitionKey = "tenant", numPartitions = 4)
+    val tenants = tenantPerPartition(4)
+    val old = (0 until 40).map(i => (s"k$i", i.toFloat, tenants(i % 4)))
+    // every key stays in its partition; 8 new keys join
+    val next = old.map { case (k, x, t) => (k, x + 100f, t) } ++
+      (40 until 48).map(i => (s"k$i", i.toFloat, tenants(i % 4)))
+    def df(rows: Seq[(String, Float, String)]) =
+      rows.map { case (k, x, t) => (k, Seq(x, 0f), Map("tenant" -> t)) }.toDF("key", "vec", "meta")
+    def byPartition(rows: Seq[(String, Float, String)]): Map[Int, Map[String, Float]] =
+      (0 until 4).map(p => p -> rows.filter(_._3 == tenants(p))
+        .map { case (k, x, _) => k -> x }.toMap).toMap
+    def stored(p: Int): Map[String, Float] =
+      client.queryWhere("cr", lit(true), partitions = Seq(s"_pk_$p")).collect()
+        .map(r => r.getAs[String]("key") -> r.getAs[Seq[Float]]("vec").head).toMap
+    client.upsert("cr", df(old))
+    val (before, after) = (byPartition(old), byPartition(next))
+    crashAfter = 2
+    val e = intercept[IllegalStateException](client.upsert("cr", df(next)))
+    assert(e.getMessage.contains("injected crash"))
+    val staging = java.nio.file.Paths.get(s"${client.describe("cr").dataPath}-parts/.routed-stage")
+    assert(java.nio.file.Files.exists(staging), "the crash leaves its staging dir behind")
+    assert(client.listPartitions("cr") == "_default" +: (0 until 4).map(p => s"_pk_$p"),
+      "the staging dir is never listed as a partition")
+    val states = (0 until 4).map { p =>
+      val now = stored(p)
+      if (now == before(p)) "old"
+      else if (now == after(p)) "new"
+      else fail(s"partition _pk_$p is torn: $now")
+    }
+    assert(states.count(_ == "new") == 2, s"exactly the first 2 publishes landed: $states")
+    val homes = (0 until 4).flatMap(p => stored(p).keys.map(_ -> p)).groupBy(_._1)
+    assert(homes.values.forall(_.size == 1), "no key is live in two partitions")
+    assert(old.forall { case (k, _, _) => homes.contains(k) }, "no pre-existing key was lost")
+    crashAfter = -1
+    client.upsert("cr", df(next))
+    assert(!java.nio.file.Files.exists(staging), "the next commit sweeps the stale staging dir")
+    assert((0 until 4).forall(p => stored(p) == after(p)))
+    assert(client.count("cr") == 48)
+  }
+
+  test("routed commit CAS race: a write between base capture and publish makes the plan retry; neither write is lost") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val tenants = tenantPerPartition(4)
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var armed = false
+    val intruder = Seq(("x", Seq(7f, 7f), Map("tenant" -> tenants(2)))).toDF("key", "vec", "meta")
+    val client = new GraftClient(spark, root) {
+      override protected def beforeRoutedPublish(): Unit = {
+        calls.incrementAndGet()
+        if (armed) { armed = false; upsert("race", intruder) }
+      }
+    }
+    client.createCollection("race", dim = 2, partitionKey = "tenant", numPartitions = 4)
+    def rows(x: Float) = (0 until 40).map(i =>
+      (s"k$i", Seq(i.toFloat + x, 0f), Map("tenant" -> tenants(i % 4))))
+      .toDF("key", "vec", "meta")
+    client.upsert("race", rows(0f))
+    val v0 = client.flush("race")
+    calls.set(0)
+    armed = true
+    client.upsert("race", rows(100f))
+    assert(calls.get() == 3, s"attempt, intruding commit, retried attempt: ${calls.get()} hook calls")
+    val v1 = client.flush("race")
+    assert(v1(s"_pk_2") == v0(s"_pk_2") + 2, "the intruder's partition holds both commits")
+    (0 until 4).filter(_ != 2).foreach(p =>
+      assert(v1(s"_pk_$p") == v0(s"_pk_$p") + 1, s"_pk_$p published once"))
+    val live = client.queryWhere("race", lit(true)).collect()
+      .map(r => r.getAs[String]("key") -> r.getAs[Seq[Float]]("vec").head).toMap
+    assert(live("x") == 7f, "the intruding write survives the retry")
+    assert((0 until 40).forall(i => live(s"k$i") == i + 100f), "the retried batch landed whole")
+    assert(live.size == 41)
+  }
 }
