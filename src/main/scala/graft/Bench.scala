@@ -1,5 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.{GraftShim, SparkSession}
 
 /** Per-round benchmark: one warmup pass (JIT + codegen + parquet footers),
   * then one timed pass per declared query. Emits a single JSON line the
@@ -15,8 +20,41 @@ import org.apache.spark.sql.SparkSession
   * restores the quiet-JVM numbers (4.5 s measured standalone at sf0.1).
   * Per-phase JVM stats (heap, GC, block-manager storage) are emitted so
   * the next fixture-pressure drift is visible in the artifact itself
-  * instead of needing three rounds of trend analysis. */
+  * instead of needing three rounds of trend analysis.
+  *
+  * `BENCH.local.json` also carries a `profile` key (not printed): per
+  * query, the Spark work of the timed pass kept as the min — jobs,
+  * stages, tasks and shuffle bytes read and written — counted by one
+  * listener. Counters reset and the listener bus drains OUTSIDE the
+  * timed region, so the timings are the same measurement as without
+  * them. */
 object Bench {
+  /** The Spark work of one pass, as counted by [[Counters]]. */
+  final case class Work(jobs: Long, stages: Long, tasks: Long,
+                        shuffleRead: Long, shuffleWrite: Long) {
+    def json(sec: Double): String =
+      s"""{"sec":$sec,"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+        s""""shuffle_read":$shuffleRead,"shuffle_write":$shuffleWrite}"""
+  }
+
+  /** Jobs started and stages completed since the last [[reset]]. */
+  final class Counters extends SparkListener {
+    private val jobs, stages, tasks, shuffleRead, shuffleWrite = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val m = e.stageInfo.taskMetrics
+      stages.incrementAndGet()
+      tasks.addAndGet(e.stageInfo.numTasks.toLong)
+      shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+      shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+    }
+    def reset(): Unit =
+      Seq(jobs, stages, tasks, shuffleRead, shuffleWrite).foreach(_.set(0))
+    def work: Work = Work(jobs.get, stages.get, tasks.get, shuffleRead.get,
+      shuffleWrite.get)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -28,25 +66,36 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val counters = new Counters
+    spark.sparkContext.addSparkListener(counters)
 
-    def runOnce(name: String): Double = {
+    // the pass's seconds and the Spark work it launched; the bus drains
+    // and the counters reset outside t0…t1
+    def runOnce(name: String): (Double, Work) = {
+      GraftShim.drainListenerBus(spark)
+      counters.reset()
       val t0 = System.nanoTime()
       try { SparkEntry.queries(name)(spark, sfDir).count() }
       catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0 }
-      (System.nanoTime() - t0) / 1e9
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        return (-1.0, counters.work) }
+      val sec = (System.nanoTime() - t0) / 1e9
+      GraftShim.drainListenerBus(spark)
+      (sec, counters.work)
     }
 
     /** The phase protocol (unchanged from the un-phased bench, just
       * scoped): warmup every query once, then two timed passes keeping
       * the min — local[32] on a shared box sees multi-second scheduling
       * noise that a single sample can't average out. */
-    def runPhase(names: Seq[String]): Map[String, Double] = {
+    def runPhase(names: Seq[String]): Map[String, (Double, Work)] = {
       names.foreach(runOnce)
       val pass1 = names.map(n => n -> runOnce(n)).toMap
       names.map { n =>
-        val t2 = runOnce(n)
-        n -> (if (pass1(n) < 0 || t2 < 0) -1.0 else math.min(pass1(n), t2))
+        val p1 = pass1(n)
+        val p2 = runOnce(n)
+        n -> (if (p1._1 < 0 || p2._1 < 0) (-1.0, p2._2)
+              else if (p1._1 <= p2._1) p1 else p2)
       }.toMap
     }
 
@@ -89,7 +138,8 @@ object Bench {
     val statsAfterDedup = jvmStats()
     val restResults = runPhase(restNames)
     val statsAfterRest = jvmStats()
-    val results = names.map(n => n -> (dedupResults ++ restResults)(n))
+    val timed = names.map(n => n -> (dedupResults ++ restResults)(n))
+    val results = timed.map { case (n, (sec, _)) => n -> sec }
     val qs = results.map { case (k, v) => JsonStr.q(k) + ":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -140,11 +190,16 @@ object Bench {
       s""""after_main_phase":$statsAfterRest}""" +
       s""","loadavg":$loadavg,"sf":${JsonStr.q(sfDir)}}"""
     println(line)
-    // the same JSON to a file: the driver's stdout capture truncates the
-    // per-query map (BENCH_r9/r10 both shipped "parsed": null), which
-    // blinds round-over-round comparison — the file copy survives intact
+    // the same JSON to a file, plus the per-query `profile` map: the
+    // driver's stdout capture truncates the per-query map (BENCH_r9/r10
+    // both shipped "parsed": null), which blinds round-over-round
+    // comparison — the file copy survives intact
+    val profile = timed.collect { case (n, (sec, w)) if sec >= 0 =>
+      JsonStr.q(n) + ":" + w.json(sec)
+    }.mkString("{", ",", "}")
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH.local.json"), line + "\n")
+      java.nio.file.Paths.get("BENCH.local.json"),
+      line.dropRight(1) + s""","profile":$profile}""" + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH.local.json write failed: ${e.getMessage}") }
     // Driver-tail contract repair (r18, additions only — the full line

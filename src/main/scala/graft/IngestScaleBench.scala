@@ -21,8 +21,8 @@ import graft.core.Tables
   * last-write-wins resolve → object join → embed (dim 384) → bucketed
   * merge-commit, one atomic snapshot per batch.
   *
-  * Prints one JSON line: events/s end-to-end, per-micro-batch commit
-  * cost, and the final live-key count (a correctness cross-check — the
+  * `graft.Bench` runs it once per arm and reports events/s end-to-end,
+  * per-micro-batch commit cost, and the final live-key count (a correctness cross-check — the
   * same resolve the oracle-checked `upsert_last_write_wins` verifies).
   */
 object IngestScaleBench {
@@ -154,70 +154,5 @@ object IngestScaleBench {
     graft.streaming.BucketedKeyedCollection.deleteTree(
       java.nio.file.Paths.get(root))
     Result(wallSec, nEvents, perBatchSec, live, liveHash)
-  }
-
-  /** Per-call-site Spark-job wall-time profiler — attribution for the
-    * micro-batch floor question: every job a batch launches carries its
-    * driver call site ("collect at GraftClient.scala:NNN"), so grouping
-    * job durations by site says WHERE the per-batch seconds go, and
-    * wall − Σ(job time) bounds the driver-side (non-job) residue. Jobs
-    * in this loop run sequentially from foreachBatch, so the sum is a
-    * faithful decomposition, not an overlap artifact. */
-  private class JobProfiler extends org.apache.spark.scheduler.SparkListener {
-    private val open = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-    val agg = new java.util.concurrent.ConcurrentHashMap[String, (Double, Int)]()
-    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val p = Option(j.properties)
-      // prefer the phase label (describedJobs) — a streaming batch's
-      // call site is uniformly the query-start line, useless here
-      val site = p.flatMap(x => Option(x.getProperty("spark.job.description")))
-        .orElse(p.flatMap(x => Option(x.getProperty("callSite.short"))))
-        .getOrElse("unknown")
-      open.put(j.jobId, (site, j.time))
-    }
-    override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-      Option(open.remove(j.jobId)).foreach { case (site, t0) =>
-        agg.merge(site, ((j.time - t0) / 1000.0, 1),
-          (a, b) => (a._1 + b._1, a._2 + b._2))
-      }
-    def report(): Seq[(String, Double, Int)] =
-      agg.asScala.toSeq.map { case (s, (t, n)) => (s, t, n) }
-        .sortBy(-_._2)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val profile = args.contains("profile")
-    val prof = if (profile) {
-      val p = new JobProfiler; spark.sparkContext.addSparkListener(p); Some(p)
-    } else None
-    val r =
-      if (args.contains("routed"))
-        run(spark, sfDir, partitionKey = "tenant", numPartitions = 8)
-      else run(spark, sfDir)
-    val body = if (args.contains("routed")) r.jsonPrefixed("ingest_routed")
-               else r.json
-    println(s"""{"metric":"ingest_events_per_sec","value":${r.eventsPerSec},""" +
-      s""""unit":"events/sec",$body,"sf":"$sfDir"}""")
-    prof.foreach { p =>
-      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-      val rows = p.report()
-      val jobSum = rows.map(_._2).sum
-      println(f"[profile] wall ${r.wallSec}%.1f s, spark jobs ${jobSum}%.1f s, " +
-        f"driver residue ${r.wallSec - jobSum}%.1f s, batches ${r.batchSec.length}")
-      rows.take(20).foreach { case (site, sec, n) =>
-        println(f"[profile] ${sec}%8.2f s  ${n}%5d jobs  $site")
-      }
-    }
-    spark.stop()
   }
 }

@@ -117,10 +117,11 @@ import graft.streaming.BucketedKeyedCollection
   *     field column to `vec` and prunes to it — an N-field
   *     collection's per-field search reads one vector column, not N;
   *     measured at 1M with zero overhead vs the standalone collection,
-  *     BASELINE r16 / FieldViewBench). Nullable added fields
-  *     ([[addCollectionField]]) additionally filter `IS NOT NULL` at
-  *     the scan: the view's row set is "rows that HAVE the field",
-  *     for searches, index builds and per-commit refreshes alike. */
+  *     BASELINE.md "Round-16 field-view overhead at 1M"). Nullable
+  *     added fields ([[addCollectionField]]) additionally filter
+  *     `IS NOT NULL` at the scan: the view's row set is "rows that HAVE
+  *     the field", for searches, index builds and per-commit refreshes
+  *     alike. */
 class GraftClient(spark: SparkSession, root: String,
                   boundedStalenessMs: Long = GraftClient.BoundedStalenessMs,
                   database: String = "default") {
@@ -600,21 +601,14 @@ class GraftClient(spark: SparkSession, root: String,
         s"field view '$field' is read-only — write through the collection")
   }
 
-  private def collection(meta: CollectionMeta) = {
-    val c =
-      if (meta.fieldView.nonEmpty)
-        new FieldViewCollection(meta.dataPath, storeSchema(meta),
-          meta.buckets, meta.retain, meta.fieldView,
-          meta.extraVecFields.find(_.name == meta.fieldView)
-            .exists(_.nullable))
-      else new BucketedKeyedCollection(meta.dataPath, storeSchema(meta),
-        "key", meta.buckets, retain = meta.retain)
-    // Data written by the pre-bucketed KeyedCollection layout migrates
-    // transparently on first open (one all-buckets rewrite) — the catalog
-    // parse is backward compatible, so the data must be too.
-    if (c.isLegacyLayout) c.migrateFromLegacy(spark)
-    c
-  }
+  private def collection(meta: CollectionMeta): BucketedKeyedCollection =
+    if (meta.fieldView.nonEmpty)
+      new FieldViewCollection(meta.dataPath, storeSchema(meta),
+        meta.buckets, meta.retain, meta.fieldView,
+        meta.extraVecFields.find(_.name == meta.fieldView)
+          .exists(_.nullable))
+    else new BucketedKeyedCollection(meta.dataPath, storeSchema(meta),
+      "key", meta.buckets, retain = meta.retain)
 
   /** Null keys would hash to a null bucket and corrupt the partitioned
     * write — reject them at the write boundary, like the dimension check.
@@ -1821,8 +1815,8 @@ class GraftClient(spark: SparkSession, root: String,
   }
 
   /** Tag the Spark jobs `f` launches with a phase label — Spark UI
-    * legibility plus the attribution IngestScaleBench's profiler groups
-    * by (a streaming micro-batch's jobs otherwise all inherit the
+    * legibility plus the per-phase job attribution `perfbench --trace 1`
+    * groups by (a streaming micro-batch's jobs otherwise all inherit the
     * query-start call site, making the per-batch floor unreadable).
     * Every commit runs under an outer `graft: ` label, so no job it
     * launches escapes one. */
@@ -2139,7 +2133,7 @@ class GraftClient(spark: SparkSession, root: String,
       }
       // HNSW warms its graph blobs (liveIndex is None for graph layouts;
       // servable covers the tail era — graphs serve across commits)
-      hnswServable(pm, coll).foreach { case (vB, _) =>
+      hnswServable(pm).foreach { case (vB, _) =>
         loadedIndexFrame(coll, hnswGraphsPath(pm), vB,
           () => HnswIndex.loadShards(spark, hnswGraphsPath(pm))).count()
       }
@@ -2277,7 +2271,7 @@ class GraftClient(spark: SparkSession, root: String,
       // Milvus's compact seals growing segments the same way. No-op
       // when the tail is empty.
       val hnsw =
-        if (hnswIndexed(pm) && readHnswMeta(pm).exists(_.tailEst > 0)) {
+        if (hnswServable(pm).exists(_._2.tailEst > 0)) {
           graft.streaming.BucketedKeyedCollection.withCommitLock(
               java.nio.file.Paths.get(ivfDir(pm))) {
             val v = coll.currentVersion.getOrElse(0L)
@@ -2292,7 +2286,7 @@ class GraftClient(spark: SparkSession, root: String,
         .filter(_.indexType == "HNSW")
         .map(f => (f.name, fieldMeta(pm, f.name)))
         .filter { case (_, fm) =>
-          hnswIndexed(fm) && readHnswMeta(fm).exists(_.tailEst > 0) }
+          hnswServable(fm).exists(_._2.tailEst > 0) }
         .map { case (fname, fm) =>
           graft.streaming.BucketedKeyedCollection.withCommitLock(
               java.nio.file.Paths.get(ivfDir(fm))) {
@@ -3191,15 +3185,16 @@ class GraftClient(spark: SparkSession, root: String,
   private def hnswMetaPath(m: CollectionMeta) =
     java.nio.file.Paths.get(ivfDir(m), "hnsw_meta")
 
-  private def readHnswMeta(m: CollectionMeta): Option[HnswMeta] = {
+  /** Written before every stamp (build and fold), so a stamped HNSW
+    * index always has it. */
+  private def readHnswMeta(m: CollectionMeta): HnswMeta = {
     val p = hnswMetaPath(m)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
+    graft.index.Artifact.required(p.toString) {
       val kv = new String(java.nio.file.Files.readAllBytes(p)).split("\n")
         .filter(_.nonEmpty).map { l =>
           val Array(k, v) = l.split(" ", 2); k -> v.trim.toLong
         }.toMap
-      Some(HnswMeta(kv("maxseq"), kv("graphrows"), kv.getOrElse("tailest", 0L)))
+      HnswMeta(kv("maxseq"), kv("graphrows"), kv("tailest"))
     }
   }
 
@@ -3214,26 +3209,16 @@ class GraftClient(spark: SparkSession, root: String,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** HNSW servability: graphs + tail bookkeeping present. UNLIKE the
-    * IVF family's stamp-equals-current rule, a tail-era HNSW layout
-    * serves index-backed searches at ANY later snapshot — the graph arm
-    * takes live rows with seq ≤ S_b, the tail arm exact-scans the
-    * churned buckets' rows with seq > S_b, and the two partition the
-    * live set exactly (see [[refreshHnswIncremental]]). Pre-tail
-    * layouts (no hnsw_meta) keep the strict rule. Returns (stamped
-    * build version, meta). */
-  private def hnswServable(m: CollectionMeta,
-      coll: BucketedKeyedCollection): Option[(Long, HnswMeta)] =
+  /** HNSW servability: stamped graphs. UNLIKE the IVF family's
+    * stamp-equals-current rule, an HNSW layout serves index-backed
+    * searches at ANY later snapshot — the graph arm takes live rows
+    * with seq ≤ S_b, the tail arm exact-scans the churned buckets' rows
+    * with seq > S_b, and the two partition the live set exactly (see
+    * [[refreshHnswIncremental]]). Returns (stamped build version,
+    * meta). */
+  private def hnswServable(m: CollectionMeta): Option[(Long, HnswMeta)] =
     if (!hnswIndexed(m)) None
-    else readVersionFile(ivfDir(m)).flatMap { vB =>
-      readHnswMeta(m) match {
-        case Some(meta) => Some((vB, meta))
-        case None => // legacy layout: strict freshness, empty tail
-          if (coll.currentVersion.contains(vB))
-            Some((vB, HnswMeta(coll.maxSeq, 0L, 0L)))
-          else None
-      }
-    }
+    else readVersionFile(ivfDir(m)).map(vB => (vB, readHnswMeta(m)))
 
   /** Metrics the IVF prune can serve. Cosine rides the L2 prune in
     * unit-normalized space (for unit vectors, cosine order ≡ L2 order);
@@ -3266,9 +3251,9 @@ class GraftClient(spark: SparkSession, root: String,
     // explicit schema: an inferred read fires a footer job per index-
     // version load — the exact latency the cellsSchema comment above
     // says interactive paths must not pay
-    IvfIndex.CoarseQuantizer(
+    graft.index.Artifact.required(path)(IvfIndex.CoarseQuantizer(
       spark.read.schema("centroid_id INT, center ARRAY<DOUBLE>").parquet(path)
-        .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray))
+        .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)))
 
   private def cellRadiiPath(m: CollectionMeta) = s"${ivfDir(m)}/cell_radii"
 
@@ -3312,12 +3297,11 @@ class GraftClient(spark: SparkSession, root: String,
       .coalesce(1).write.mode("overwrite").parquet(cellRadiiPath(m))
   }
 
-  private def readPqRecon(m: CollectionMeta): Option[Map[Int, Double]] = {
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(pqReconPath(m)))) None
-    else Some(spark.read.schema("centroid_id INT, bound DOUBLE")
-      .parquet(pqReconPath(m))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap)
-  }
+  private def readPqRecon(m: CollectionMeta): Map[Int, Double] =
+    graft.index.Artifact.required(pqReconPath(m))(
+      spark.read.schema("centroid_id INT, bound DOUBLE")
+        .parquet(pqReconPath(m))
+        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap)
 
   private def pqReconPath(m: CollectionMeta) = s"${ivfDir(m)}/pq_recon"
 
@@ -3344,12 +3328,11 @@ class GraftClient(spark: SparkSession, root: String,
       .coalesce(1).write.mode("overwrite").parquet(pqReconPath(m))
   }
 
-  private def readCellRadii(m: CollectionMeta): Option[Map[Int, Double]] = {
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(cellRadiiPath(m)))) None
-    else Some(spark.read.schema("centroid_id INT, radius DOUBLE")
-      .parquet(cellRadiiPath(m))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap)
-  }
+  private def readCellRadii(m: CollectionMeta): Map[Int, Double] =
+    graft.index.Artifact.required(cellRadiiPath(m))(
+      spark.read.schema("centroid_id INT, radius DOUBLE")
+        .parquet(cellRadiiPath(m))
+        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap)
 
   /** Build (or rebuild) the IVF_FLAT index over the CURRENT snapshot —
     * the reference's `create_index(IVF_FLAT, L2, nlist)`
@@ -3563,11 +3546,11 @@ class GraftClient(spark: SparkSession, root: String,
       .coalesce(1).write.mode("overwrite").parquet(binRadiiPath(m))
   }
 
-  private def readBinRadii(m: CollectionMeta): Option[Map[Int, Int]] =
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(binRadiiPath(m)))) None
-    else Some(spark.read.schema("centroid_id INT, radius INT")
-      .parquet(binRadiiPath(m))
-      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
+  private def readBinRadii(m: CollectionMeta): Map[Int, Int] =
+    graft.index.Artifact.required(binRadiiPath(m))(
+      spark.read.schema("centroid_id INT, radius INT")
+        .parquet(binRadiiPath(m))
+        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
 
   /** HNSW build: one graph per store bucket (the shard route IS the
     * bucket route, so a merge commit's touched buckets name exactly the
@@ -3712,15 +3695,13 @@ class GraftClient(spark: SparkSession, root: String,
     binIdxCache.keySet().removeIf(k => dead(k._1))
   }
 
-  /** `maintainable` = the index carries the probe table (new format);
-    * pre-probe-table indexes still serve reads (probe falls back to the
-    * assignment centers) but are never maintained incrementally — their
-    * rows were placed by KMeans.transform, which our deterministic kernel
-    * cannot reproduce. */
+  /** A stamped float index's driver-side tables: the frozen assignment
+    * centers, the refreshed probe centers, the per-cell radii, and (IVF_PQ)
+    * the codebooks. */
   private case class LoadedIndex(assign: IvfIndex.CoarseQuantizer,
                                  probe: IvfIndex.CoarseQuantizer,
-                                 version: Long, maintainable: Boolean,
-                                 radii: Option[Map[Int, Double]],
+                                 version: Long,
+                                 radii: Map[Int, Double],
                                  pq: Option[PqIndex.ProductQuantizer] = None)
 
   /** Per-(collection, version) LoadedIndex cache: the VERSION file is
@@ -3732,7 +3713,11 @@ class GraftClient(spark: SparkSession, root: String,
   private val idxCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), LoadedIndex]()
 
-  private def loadIndex(m: CollectionMeta): Option[LoadedIndex] =
+  /** The float index IF it is stamped at snapshot `at`. Every table it
+    * loads is written before the stamp, so a stamp at `at` implies all of
+    * them; a stamp anywhere else (a crash mid-refresh, a build overtaken
+    * by a commit) reads as no index, and its tables are never opened. */
+  private def loadIndex(m: CollectionMeta, at: Option[Long]): Option[LoadedIndex] =
     // HNSW layouts have no centroid tables to load — their freshness
     // resolves through hnswServable, and every LoadedIndex consumer
     // (cell prunes, quantized stages) correctly sees "no IVF index".
@@ -3740,23 +3725,19 @@ class GraftClient(spark: SparkSession, root: String,
     // sparse collections through sparseIndexServable (their ivfDir holds
     // a postings layout + stamp, no centroids to read).
     if (m.indexType == "HNSW" || binaryVec(m) || sparseVec(m)) None
-    else readVersionFile(ivfDir(m)).map { v =>
+    else readVersionFile(ivfDir(m)).filter(at.contains).map { v =>
       val it = idxCache.keySet().iterator()
       while (it.hasNext) {
         val k = it.next()
         if (k._1 == m.name && k._2 != v) it.remove()
       }
       idxCache.computeIfAbsent((m.name, v), { _ =>
-        val assign = readCentroids(s"${ivfDir(m)}/centroids")
-        val probePath = s"${ivfDir(m)}/probe_centroids"
-        val hasProbe = java.nio.file.Files.exists(java.nio.file.Paths.get(probePath))
         val pq =
-          if (pqIndexed(m) && java.nio.file.Files.exists(
-              java.nio.file.Paths.get(pqCodebooksPath(m))))
-            Some(PqIndex.readCodebooks(spark, pqCodebooksPath(m)))
+          if (pqIndexed(m)) Some(graft.index.Artifact.required(
+            pqCodebooksPath(m))(PqIndex.readCodebooks(spark, pqCodebooksPath(m))))
           else None
-        LoadedIndex(assign, if (hasProbe) readCentroids(probePath) else assign,
-          v, hasProbe, readCellRadii(m), pq)
+        LoadedIndex(readCentroids(s"${ivfDir(m)}/centroids"),
+          readCentroids(s"${ivfDir(m)}/probe_centroids"), v, readCellRadii(m), pq)
       })
     }
 
@@ -3800,14 +3781,13 @@ class GraftClient(spark: SparkSession, root: String,
     graft.streaming.BucketedKeyedCollection.withCommitLock(
         java.nio.file.Paths.get(ivfDir(m))) {
     if (m.indexType == "HNSW")
-      refreshHnswIncremental(m, preVersion, newVersion, touchKeys, preImage, puts)
+      refreshHnswIncremental(m, newVersion, touchKeys)
     else if (binaryVec(m))
       refreshBinIvfIncremental(m, preVersion, newVersion, touchKeys, preImage, puts)
     else if (sparseVec(m))
       refreshSparseInvIncremental(m, preVersion, newVersion, touchKeys, puts)
-    else loadIndex(m) match {
-    case Some(idx) if idx.maintainable && preVersion.contains(idx.version)
-        && indexableMetric(m.metric) =>
+    else loadIndex(m, preVersion) match {
+    case Some(idx) if indexableMetric(m.metric) =>
       val keys = touchKeys.distinct().persist()
       try {
         // old copies of the touched keys — their cells are recomputable
@@ -3893,26 +3873,19 @@ class GraftClient(spark: SparkSession, root: String,
             // the FROZEN codebooks (same recompute the re-encode above
             // just ran — the bound stays exact, never a loosening upper
             // bound), keep untouched cells' values, drop emptied cells.
-            // A pre-bounds legacy index has no file: skip, and the
-            // iterator keeps its float-cell drain (correct, unpruned).
-            readPqRecon(m).foreach { old =>
-              val touched = pqReconBounds(
-                contents.withColumn("__v", assignSpace(m)(col("vec"))),
-                centersBc, booksBc)
-              writePqRecon((old -- touchedCells) ++ touched, m)
-            }
+            val touched = pqReconBounds(
+              contents.withColumn("__v", assignSpace(m)(col("vec"))),
+              centersBc, booksBc)
+            writePqRecon((readPqRecon(m) -- touchedCells) ++ touched, m)
           }
           val centers = idx.probe.centers.map(_.clone())
           cells.foreach { case (id, (c, _)) =>
             if (c != null && id >= 0 && id < centers.length) centers(id) = c }
           val refreshed = IvfIndex.CoarseQuantizer(centers)
           writeCentroids(refreshed, s"${ivfDir(m)}/probe_centroids")
-          // an index built before radii existed has no file: skip, and
-          // searchRange scans the whole cell layout (still exact, just
-          // unpruned)
-          val newRadii = idx.radii.map(old =>
-            (old -- touchedCells) ++ cells.map { case (id, (_, r)) => id -> r })
-          newRadii.foreach(writeCellRadii(_, m))
+          val newRadii = (idx.radii -- touchedCells) ++
+            cells.map { case (id, (_, r)) => id -> r }
+          writeCellRadii(newRadii, m)
           (refreshed, newRadii)
         }
         stampIndexVersion(m, newVersion)
@@ -3922,8 +3895,8 @@ class GraftClient(spark: SparkSession, root: String,
         idxCache.put((m.name, newVersion),
           idx.copy(probe = probe, version = newVersion, radii = radii))
       } finally keys.unpersist()
-    case _ => () // no index, already stale, or pre-probe-table format —
-                 // search falls back to the exact scan as before
+    case _ => () // no index or already stale — search falls back to the
+                 // exact scan
     }
     }
   }
@@ -3946,7 +3919,8 @@ class GraftClient(spark: SparkSession, root: String,
     if (!SparseIndex.exists(sparsePostingsPath(m))) return
     // only roll forward an index that covered the PRE-image — stamping
     // over writes it never saw would be ghost-fresh (the loadIndex
-    // maintainable-check of the float family, done on the stamp file)
+    // loadIndex(m, preVersion) check of the float family, done on the
+    // stamp file)
     if (!readVersionFile(ivfDir(m)).exists(v => preVersion.contains(v)))
       return
     val delta = puts.map(storePostings).getOrElse(
@@ -4009,13 +3983,9 @@ class GraftClient(spark: SparkSession, root: String,
             // touched-cell merge as the float family's cell_radii:
             // recompute EXACTLY from the touched cells' full new
             // contents against the FROZEN centers, keep untouched
-            // cells' values, drop emptied cells (a pre-radii legacy
-            // layout has no file: skip — searchBinaryRange scans the
-            // whole cell layout, still exact)
-            readBinRadii(m).foreach { old =>
-              val touched = binCellRadii(contents, quant.centers)
-              writeBinRadii((old -- touchedCells) ++ touched, m)
-            }
+            // cells' values, drop emptied cells
+            writeBinRadii((readBinRadii(m) -- touchedCells) ++
+              binCellRadii(contents, quant.centers), m)
           }
           stampIndexVersion(m, newVersion)
         } finally keys.unpersist()
@@ -4056,29 +4026,20 @@ class GraftClient(spark: SparkSession, root: String,
     * Crash-safety: a fold that dies mid-overwrite leaves mixed old/new
     * shard dirs — all readable, all sound under the OLD S_b (rebuilding
     * from newer content only ADDS coverage), and the stale meta makes
-    * the next commit retry the fold. Pre-tail layouts (no hnsw_meta)
-    * keep the original per-commit touched-shard rebuild. */
-  private def refreshHnswIncremental(m: CollectionMeta, preVersion: Option[Long],
-      newVersion: Long, touchKeys: DataFrame, preImage: DataFrame,
-      puts: Option[DataFrame]): Unit =
-    readVersionFile(ivfDir(m)) match {
-      case Some(vB) if indexableMetric(m.metric) =>
-        readHnswMeta(m) match {
-          case Some(meta0) =>
-            val batchRows = touchKeys.count()
-            val meta = meta0.copy(tailEst = meta0.tailEst + batchRows)
-            if (meta.tailEst.toDouble >=
-                GraftClient.HnswTailFoldRatio * math.max(1L, meta.graphRows))
-              foldHnswTail(m, newVersion)
-            else writeHnswMeta(m, meta) // O(1) commit — VERSION stays at
-                                        // the build version; the tail
-                                        // arm covers everything since
-          case None if preVersion.contains(vB) =>
-            legacyHnswRebuild(m, newVersion, touchKeys, preImage, puts)
-          case None => () // legacy layout already stale — exact fallback
-        }
-      case _ => () // never built — nothing to maintain
-    }
+    * the next commit retry the fold. */
+  private def refreshHnswIncremental(m: CollectionMeta, newVersion: Long,
+      touchKeys: DataFrame): Unit =
+    if (readVersionFile(ivfDir(m)).isDefined && indexableMetric(m.metric)) {
+      val meta0 = readHnswMeta(m)
+      val batchRows = touchKeys.count()
+      val meta = meta0.copy(tailEst = meta0.tailEst + batchRows)
+      if (meta.tailEst.toDouble >=
+          GraftClient.HnswTailFoldRatio * math.max(1L, meta.graphRows))
+        foldHnswTail(m, newVersion)
+      else writeHnswMeta(m, meta) // O(1) commit — VERSION stays at the
+                                  // build version; the tail arm covers
+                                  // everything since
+    } // else never built — nothing to maintain
 
   /** Fold the growing tail into the graphs: rebuild ONLY the buckets
     * changed since the last build/fold (their current content — puts,
@@ -4128,41 +4089,6 @@ class GraftClient(spark: SparkSession, root: String,
     graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(m))
   }
 
-  /** The pre-tail per-commit rebuild, kept verbatim for layouts built
-    * before hnsw_meta existed (their stamp-equals-current freshness
-    * contract still holds). */
-  private def legacyHnswRebuild(m: CollectionMeta, newVersion: Long,
-      touchKeys: DataFrame, preImage: DataFrame,
-      puts: Option[DataFrame]): Unit = {
-    val keys = touchKeys.distinct().persist()
-    try {
-      val touchedShards = keys
-        .select(pmod(xxhash64(col("key")), lit(m.buckets.toLong))
-          .cast("int").as("__s"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      if (touchedShards.nonEmpty) {
-        val survivors = preImage.join(keys, Seq("key"), "left_anti")
-        val contents = puts.fold(survivors)(p =>
-          survivors.unionByName(p.select(survivors.columns.map(col).toIndexedSeq: _*)))
-        val rebuilt = HnswIndex.buildShards(
-            contents.withColumn("__assign", assignSpace(m)(col("vec")))
-              .select(col("key"), col("__assign")),
-            "__assign", m.buckets, m.hnswM, m.hnswEfC)
-          .localCheckpoint()
-        val written = rebuilt.select("shard").distinct()
-          .collect().map(_.getInt(0)).toSet
-        rebuilt.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .option("compression", "uncompressed")
-          .partitionBy("shard").parquet(hnswGraphsPath(m))
-        (touchedShards -- written).foreach { s =>
-          deleteDir(s"${hnswGraphsPath(m)}/shard=$s")
-        }
-      }
-      stampIndexVersion(m, newVersion)
-    } finally keys.unpersist()
-  }
-
   /** Distributed per-query cell probe: cells chosen executor-side against
     * the broadcast probe centers — no driver loop over the query set. The
     * kernel is the codegen'd [[graft.functions.NearestCentroids]]
@@ -4185,8 +4111,15 @@ class GraftClient(spark: SparkSession, root: String,
     * holding the OLD file listing across a maintenance commit can hit a
     * missing file and should retry; full snapshot isolation would
     * version the cell dirs like the keyed store's buckets.) */
-  private def stampIndexVersion(m: CollectionMeta, version: Long): Unit =
+  private def stampIndexVersion(m: CollectionMeta, version: Long): Unit = {
+    beforeIndexStamp()
     stampVersionFile(ivfDir(m), version)
+  }
+
+  /** Test seam: runs in every vector-index build, refresh and fold after
+    * its artifacts are written, just before the VERSION stamp — throwing
+    * here stands for a crash between the two. */
+  protected def beforeIndexStamp(): Unit = ()
 
   private def stampVersionFile(dirPath: String, version: Long): Unit = {
     val dir = java.nio.file.Paths.get(dirPath)
@@ -4217,9 +4150,8 @@ class GraftClient(spark: SparkSession, root: String,
     * candidates come from the `nprobe` nearest cells of the partitioned
     * at-rest layout — a parquet partition prune. Merge-commits maintain
     * the index incrementally, so it normally STAYS fresh across
-    * upserts/deletes; if it is stale anyway (crash mid-refresh, legacy
-    * format), the exact snapshot scan runs — never
-    * stale results. Dot-metric collections always scan exactly (no
+    * upserts/deletes; if it is stale anyway (crash mid-refresh), the
+    * exact snapshot scan runs — never stale results. Dot-metric collections always scan exactly (no
     * Voronoi prune exists for inner product). A metadata `filter`
     * composes WITH the index — Milvus accepts filter+index the same way
     * (`milvus-app/pythonvectordbceph_milvus.py:111`): the filter is
@@ -4585,20 +4517,16 @@ class GraftClient(spark: SparkSession, root: String,
       val base = liveBinIndex(pm, coll) match {
         case Some((quant, v)) if pm.metric == "hamming" =>
           val cellsDf = binCells(pm, coll, v)
-          readBinRadii(pm) match {
-            case Some(rad) =>
-              // a cell is droppable iff its MIN possible distance
-              // (d(q, cᵢ) − radiusᵢ, triangle inequality) is >= radius —
-              // every row it holds would fail `dist < radius`
-              val dropped = rad.collect {
-                case (cell, rc)
-                  if quant.hamming(quant.centers(cell), q) - rc >=
-                    math.ceil(radius) => cell
-              }.toSeq
-              if (dropped.isEmpty) cellsDf
-              else cellsDf.filter(!col("centroidId").isin(dropped: _*))
-            case None => cellsDf // pre-radii layout: whole layout, exact
-          }
+          // a cell is droppable iff its MIN possible distance
+          // (d(q, cᵢ) − radiusᵢ, triangle inequality) is >= radius —
+          // every row it holds would fail `dist < radius`
+          val dropped = readBinRadii(pm).collect {
+            case (cell, rc)
+              if quant.hamming(quant.centers(cell), q) - rc >=
+                math.ceil(radius) => cell
+          }.toSeq
+          if (dropped.isEmpty) cellsDf
+          else cellsDf.filter(!col("centroidId").isin(dropped: _*))
         case _ => scalarPrunedRead(pm, coll, tFilter)
       }
       binProject(pm, tFilter.fold(base)(base.filter), typedLit(q))
@@ -4672,9 +4600,9 @@ class GraftClient(spark: SparkSession, root: String,
         val base = idx match {
           case Some((quant, v, radii)) if coll.currentVersion.contains(v) =>
             val cellsDf = binCells(pm, coll, v)
-            (cursor, radii) match {
-              case (Some((d0, _)), Some(rad)) =>
-                val dropped = rad.collect {
+            cursor match {
+              case Some((d0, _)) =>
+                val dropped = radii.collect {
                   case (cell, rc)
                     if quant.hamming(quant.centers(cell), q) + rc < d0 => cell
                 }.toSeq
@@ -4819,7 +4747,7 @@ class GraftClient(spark: SparkSession, root: String,
     // deep pages, and a graph emits only its beam, which has no keyset
     // to resume from.
     if (cursorDist.isEmpty && !pinnedNoIndex && !forceCellScan)
-      hnswServable(pm, coll) match {
+      hnswServable(pm) match {
         case Some((vB, hm)) =>
           return if (filter.isEmpty && gate.isEmpty)
             hnswScored(pm, coll, vB, hm, qvec, depth, refine, ef)
@@ -4878,38 +4806,37 @@ class GraftClient(spark: SparkSession, root: String,
     * the normalized space, widening by CosineSimEps in sim space first —
     * the same fp-slack treatment searchRange derives. Cells absent from
     * the radii map are never dropped (sound by construction). None when
-    * the index has no radii (legacy) or the metric can't prune. */
+    * the metric can't prune. */
   private def cursorDroppable(pm: CollectionMeta, idx: LoadedIndex,
-      qa: Array[Float], cursorDist: Double): Option[Int => Boolean] =
-    idx.radii.flatMap { rad =>
-      val maxChord: Option[Double] = pm.metric match {
-        // keep rows with dist >= cursor (ties resolve by key): droppable
-        // iff centerDist + r < cursor, with fp slack
-        case "l2" => Some(cursorDist)
-        case "cosine" =>
-          // dist = −sim; the cursor keeps sim <= s0 = −cursor (plus key
-          // ties). A cell's MIN sim is 1 − (centerDist+r)²/2; droppable
-          // iff min sim > s0 + eps ⟺ centerDist + r < chord(s0 + eps).
-          val s0 = -cursorDist + GraftClient.CosineSimEps
-          if (s0 >= 1.0) None // cursor still at the top — nothing prunable
-          else Some(math.sqrt(math.max(0.0, 2.0 - 2.0 * s0)))
-        case _ => None
-      }
-      maxChord.map { bound =>
-        val centerDist = idx.assign.distancesTo(qa)
-        val dropped = rad.collect {
-          case (cell, rc) if cell < centerDist.length &&
-            centerDist(cell) + rc + GraftClient.RangePruneEps < bound => cell
-        }.toSet
-        (c: Int) => dropped.contains(c)
-      }
+      qa: Array[Float], cursorDist: Double): Option[Int => Boolean] = {
+    val maxChord: Option[Double] = pm.metric match {
+      // keep rows with dist >= cursor (ties resolve by key): droppable
+      // iff centerDist + r < cursor, with fp slack
+      case "l2" => Some(cursorDist)
+      case "cosine" =>
+        // dist = −sim; the cursor keeps sim <= s0 = −cursor (plus key
+        // ties). A cell's MIN sim is 1 − (centerDist+r)²/2; droppable
+        // iff min sim > s0 + eps ⟺ centerDist + r < chord(s0 + eps).
+        val s0 = -cursorDist + GraftClient.CosineSimEps
+        if (s0 >= 1.0) None // cursor still at the top — nothing prunable
+        else Some(math.sqrt(math.max(0.0, 2.0 - 2.0 * s0)))
+      case _ => None
     }
+    maxChord.map { bound =>
+      val centerDist = idx.assign.distancesTo(qa)
+      val dropped = idx.radii.collect {
+        case (cell, rc) if cell < centerDist.length &&
+          centerDist(cell) + rc + GraftClient.RangePruneEps < bound => cell
+      }.toSet
+      (c: Int) => dropped.contains(c)
+    }
+  }
 
   /** The loaded index IF it is stamped at the store's current snapshot —
     * the ONE staleness rule every search surface shares. */
   private def liveIndex(m: CollectionMeta,
                         coll: BucketedKeyedCollection): Option[LoadedIndex] =
-    loadIndex(m).filter(idx => coll.currentVersion.contains(idx.version))
+    loadIndex(m, coll.currentVersion)
 
   /** Candidate source shared by search/searchRange/searchGrouped: the
     * chosen cells of the float index layout when a fresh prunable index
@@ -4920,9 +4847,9 @@ class GraftClient(spark: SparkSession, root: String,
     * (range search): only cells proven out are skipped, so a layout cell
     * the pruner knows nothing about is scanned by construction —
     * soundness cannot depend on metadata completeness.
-    * [[GraftClient.AllCells]] scans the whole layout (unprunable bound,
-    * radii-less legacy index). One scaffold so the staleness rule and
-    * the cells schema cannot silently diverge across the surfaces.
+    * [[GraftClient.AllCells]] scans the whole layout (unprunable bound).
+    * One scaffold so the staleness rule and the cells schema cannot
+    * silently diverge across the surfaces.
     * `exactScan` is the no-index fallback frame — callers holding a
     * metadata filter pass [[scalarPrunedRead]] so the exact path rides
     * the scalar-index bucket prune (the indexed path reads the cells
@@ -5244,8 +5171,8 @@ class GraftClient(spark: SparkSession, root: String,
     * (`‖q−cᵢ‖ ≤ radius + radiusᵢ` in assign space — a LOSSLESS prune, so
     * the result is identical to the exact scan at a fraction of the IO;
     * cosine's similarity bound maps to unit-sphere chord length
-    * `sqrt(2−2·sim)`). Stale index, dot metric, or a pre-radii legacy
-    * index → exact scan, same answer. SQ8 collections prune identically
+    * `sqrt(2−2·sim)`). Stale index or dot metric → exact scan, same
+    * answer. SQ8 collections prune identically
     * but read the FLOAT cells: a range predicate is a hard boundary, and
     * keeping it exact over quantized codes would need per-cell error
     * bounds.
@@ -5295,8 +5222,8 @@ class GraftClient(spark: SparkSession, root: String,
           2.0 - 2.0 * (simMin - GraftClient.CosineSimEps))))
       case _ => None
     }
-    // stale/dot → exact snapshot scan; fresh but radii-less (legacy) or
-    // unprunable bound → all cells, still exact. The prune is an
+    // stale/dot → exact snapshot scan; unprunable bound → all cells,
+    // still exact. The prune is an
     // EXCLUSION list (DropCells): only cells PROVEN out by the triangle
     // inequality are skipped, so a layout cell absent from the radii map
     // or outside the quantizer's range — unreachable today because
@@ -5318,13 +5245,13 @@ class GraftClient(spark: SparkSession, root: String,
       val coll = collection(pm)
       val src = prunedCellsOrScan(pm, coll, liveIndex(pm, coll),
           scalarPrunedRead(pm, coll, tFilter)) { idx =>
-        (for (rad <- idx.radii; r <- pruneRadius) yield {
+        pruneRadius.map { r =>
           val centerDist = idx.assign.distancesTo(qa)
-          GraftClient.DropCells(rad.collect {
+          GraftClient.DropCells(idx.radii.collect {
             case (cell, rc) if cell < centerDist.length &&
               centerDist(cell) > r + rc + GraftClient.RangePruneEps => cell
           }.toSeq): GraftClient.CellChoice
-        }).getOrElse(GraftClient.AllCells)
+        }.getOrElse(GraftClient.AllCells)
       }
       tFilter.fold(src)(src.filter)
         .select(col("key"), col("vec"), col("meta"))
@@ -5437,7 +5364,7 @@ class GraftClient(spark: SparkSession, root: String,
       val coll = collection(pm)
       // forceExact bypasses every index layout — the ground-truth arm,
       // exactly searchBatch's knob (oracle twins and recall rows)
-      (if (forceExact) None else hnswServable(pm, coll)) match {
+      (if (forceExact) None else hnswServable(pm)) match {
         case Some((vB, hm)) =>
           def walk(mult: Int): DataFrame = {
             // group-aware over-fetch, computed in LONG and capped at
@@ -5890,16 +5817,15 @@ class GraftClient(spark: SparkSession, root: String,
     // Whether the filter resolves against the PQ codes schema — one
     // plan-only probe, partition-independent, evaluated once like liveAt
     lazy val fTouchesVec = filterTouchesVec(fOpt)
-    // PQ partitions drain through the quantized-keyset margin path IFF
-    // the measured per-cell reconstruction bounds exist (builds since
-    // pq_recon; legacy indexes keep the float-cell drain), the metric
-    // rides the assign-space L2 order, and the filter resolves against
-    // the codes schema. Evaluated ONCE here, same pin discipline as
-    // liveAt — the stream constructor re-checks liveness loudly.
+    // PQ partitions drain through the quantized-keyset margin path (on
+    // the measured per-cell reconstruction bounds every PQ build writes)
+    // IFF the index is live, the metric rides the assign-space L2 order,
+    // and the filter resolves against the codes schema. Evaluated ONCE
+    // here, same pin discipline as liveAt — the stream constructor
+    // re-checks liveness loudly.
     val pqDrainAt: Map[String, Boolean] = parts.map(p => p -> {
       val pm = partMeta(m, p)
-      liveAt(p) && pqIndexed(pm) && indexableMetric(pm.metric) &&
-        readPqRecon(pm).isDefined && !fTouchesVec
+      liveAt(p) && pqIndexed(pm) && indexableMetric(pm.metric) && !fTouchesVec
     }).toMap
     // SQ8/PQ partitions with a LIVE index page their stage 1 on a
     // quantized keyset (see the scaladoc); everything else keeps the
@@ -5920,9 +5846,9 @@ class GraftClient(spark: SparkSession, root: String,
             gate = gate, // drain-start-pinned TEXT_MATCH key set (above)
             pinnedNoIndex = !liveAt(p),
             // an IVF_PQ partition on THIS path is not margin-drainable
-            // (legacy index without pq_recon bounds, vec-referencing
-            // filter, or stale) — it drains the FLOAT cells, the layout
-            // every IVF type keeps; indexType is immutable, no TOCTOU
+            // (vec-referencing filter, or stale) — it drains the FLOAT
+            // cells, the layout every IVF type keeps; indexType is
+            // immutable, no TOCTOU
             forceCellScan = pm.indexType == "IVF_PQ")
         }
         .reduce(_ unionByName _)
@@ -6215,10 +6141,7 @@ class GraftClient(spark: SparkSession, root: String,
       // VERIFIED here against the pruned layout (≤ nprobe rows), loud
       // beats silently-truncated.
       override protected val eps: Double = {
-        val bounds = readPqRecon(pm).getOrElse(
-          throw new IllegalStateException(s"${pm.name}: pq_recon bounds " +
-            "vanished between dispatch and stream creation — rebuild the " +
-            "index or restart the iterator"))
+        val bounds = readPqRecon(pm)
         val present = codes.select("centroidId").distinct()
           .collect().map(_.getInt(0))
         val missing = present.filterNot(bounds.contains)
@@ -6427,7 +6350,7 @@ class GraftClient(spark: SparkSession, root: String,
     liveIndex(pm, coll).flatMap { idx =>
       val qa = if (pm.metric == "cosine") normalizeQuery(qvec) else qvec
       cursorDroppable(pm, idx, qa, cursorDist)
-        .map(drop => idx.radii.map(_.keys.count(drop)).getOrElse(0))
+        .map(drop => idx.radii.keys.count(drop))
     }.getOrElse(0)
   }
 
@@ -6468,7 +6391,7 @@ class GraftClient(spark: SparkSession, root: String,
         // stamp-equals-current; stamped_version still shows the fold
         // point for operators watching tail growth
         Seq((("HNSW", fieldLabel,
-          hnswServable(m, collection(m)).isDefined,
+          hnswServable(m).isDefined,
           readVersionFile(ivfDir(m)).getOrElse(-1L),
           collection(m).currentVersion.getOrElse(-1L),
           s"""{"M":${m.hnswM},"efConstruction":${m.hnswEfC}}""")))
@@ -6502,7 +6425,8 @@ class GraftClient(spark: SparkSession, root: String,
     * before trusting nprobe/radius behavior on their corpus (one hot
     * cell = one slow probe; one huge radius = a cell the range prune can
     * never exclude; many empty cells = nlist oversized for the data).
-    * Columns: (centroidId, n_rows, radius, fresh). One scan of the cell
+    * Columns: (centroidId, n_rows, radius, fresh). A stale index reports
+    * its stored cells with null radii. One scan of the cell
     * layout — an admin-sized job, not a query-path one. Pairs with
     * [[estimateRecall]]: that measures the recall knob's effect, this
     * shows the layout property causing it. */
@@ -6512,30 +6436,27 @@ class GraftClient(spark: SparkSession, root: String,
     val m = partMeta(metaOrThrow(name), partition)
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(cellsPath(m))),
       s"${m.name} has no IVF index — buildIndex first")
-    val coll = collection(m)
-    // ONE index load serves both the freshness column and the cell-id
-    // seed — two loads could straddle a concurrent rebuild and describe
-    // different quantizers
-    val idx = loadIndex(m)
-    val fresh = idx.exists(i => coll.currentVersion.contains(i.version))
-    val radii = readCellRadii(m).getOrElse(Map.empty[Int, Double]).toSeq
+    // ONE index load serves the freshness column, the cell-id seed and
+    // the radii — two loads could straddle a concurrent rebuild and
+    // describe different quantizers
+    val idx = liveIndex(m, collection(m))
+    val radii = idx.fold(Seq.empty[(Int, Double)])(_.radii.toSeq)
     val counts = IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema))
       .groupBy(col("centroidId"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_rows"))
     // seed the report with EVERY quantizer cell, not just the populated
     // ones: the empty cells ARE the oversized-nlist signal this report
     // exists to surface, and a groupBy over stored rows can never emit a
-    // zero. FULL outer with the stored counts: a crashed rebuild can
-    // leave cells outside the (stale) quantizer's id range on disk —
-    // those rows must stay counted, not silently dropped by the seed.
+    // zero. FULL outer with the stored counts keeps any stored cell the
+    // quantizer does not name counted, not silently dropped by the seed.
     val base = idx match {
       case Some(i) => (0 until i.assign.nlist).toDF("centroidId")
-      case None => counts.select("centroidId") // no quantizer: report what's stored
+      case None => counts.select("centroidId") // stale: report what's stored
     }
     base.join(counts, Seq("centroidId"), "full_outer")
       .na.fill(0L, Seq("n_rows"))
       .join(radii.toDF("centroidId", "radius"), Seq("centroidId"), "left_outer")
-      .withColumn("fresh", lit(fresh))
+      .withColumn("fresh", lit(idx.isDefined))
       .orderBy(col("centroidId"))
   }
 
@@ -6633,7 +6554,7 @@ class GraftClient(spark: SparkSession, root: String,
     // floor and filtered tail arm as the single-query path.
     val hnswV: Option[(Long, HnswMeta)] =
       if (forceExact || nQ > 100000L) None
-      else hnswServable(m, coll)
+      else hnswServable(m)
     (hnswV match {
       case Some((vB, hm)) =>
         val queriesArr = q.collect().map { r =>
@@ -7017,9 +6938,8 @@ class GraftClient(spark: SparkSession, root: String,
     val rows = coll.read(spark).count()
     val servable = m.indexType match {
       case "FLAT" => false
-      case "HNSW" => hnswServable(m, coll).isDefined
-      case _ => loadIndex(m).exists(idx =>
-        coll.currentVersion.contains(idx.version))
+      case "HNSW" => hnswServable(m).isDefined
+      case _ => liveIndex(m, coll).isDefined
     }
     val recall =
       if (!servable) None
@@ -7231,8 +7151,7 @@ class GraftClient(spark: SparkSession, root: String,
     * over-scan, never a wrong prune), so a high `zone_rows` tells the
     * operator the spans may be stale-wide and a compaction
     * ([[createScalarIndex]] re-run, or the automatic `scalarCompactAt`
-    * trigger) will re-derive tight ones. Empty for layouts that predate
-    * zone maps (range prune is off entirely there). */
+    * trigger) will re-derive tight ones. */
   def scalarIndexZoneStats(name: String, field: String): DataFrame = {
     val m = metaOrThrow(name)
     requireScalarField(field)
@@ -7557,16 +7476,14 @@ class GraftClient(spark: SparkSession, root: String,
             // dirs) — that is a failure, not a wrongness, and the full
             // scan is always a sound answer. Per field: the equality
             // value set prunes via posting lists, range/numeric
-            // conjuncts via zone spans; both present → intersect. A
-            // field with only range conjuncts over a pre-zone-map layout
-            // contributes nothing (bucketsForRange = None).
+            // conjuncts via zone spans; both present → intersect.
             val buckets = scala.util.Try(usable
               .flatMap { fd =>
                 val dir = scalarFieldDir(pm, fd)
                 val eqB = implied.get(fd)
                   .map(vs => ScalarIndex.bucketsFor(spark, dir, vs))
                 val rgB = ranges.get(fd)
-                  .flatMap(cs => ScalarIndex.bucketsForRange(spark, dir, cs))
+                  .map(cs => ScalarIndex.bucketsForRange(spark, dir, cs))
                 (eqB, rgB) match {
                   case (Some(a), Some(b)) => Some(a intersect b)
                   case (a, b) => a.orElse(b)
@@ -7606,7 +7523,7 @@ class GraftClient(spark: SparkSession, root: String,
     * so [[searchLexical]] falls back to scoring the caller's frame and a
     * re-run of buildTextIndex is the recovery path, never a stale score. */
   /** `analyzer`/`stopWords` are Milvus 2.5's `analyzer_params` surface
-    * ("whitespace" — the legacy exact-token default; "standard":
+    * ("whitespace" — the exact-token default; "standard":
     * lowercase + split on non-letter/digit runs, Milvus's standard
     * tokenizer + lowercase filter; "english": Milvus's built-in preset,
     * standard + Lucene's English stop set + Porter stemming, with
@@ -9114,8 +9031,8 @@ class GraftClient(spark: SparkSession, root: String,
     * are dropped before min-hashing (production's stopword filter). This
     * is scale safety, not tuning — corpus-wide tokens concentrate some
     * fraction of all docs into ONE band bucket, whose join cost is
-    * O(bucket²); DedupScaleBench measured the blowup and BASELINE.md
-    * records it. Uncapped matches the declared oracle queries. */
+    * O(bucket²); BASELINE.md "Text dedup at volume" records the
+    * measured blowup. Uncapped matches the declared oracle queries. */
   def dedupCandidates(docs: DataFrame, idCol: String = "key",
                       textCol: String = "text",
                       dfCap: Option[Int] = None): DataFrame =

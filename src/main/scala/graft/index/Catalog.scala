@@ -143,8 +143,8 @@ class Catalog(root: String) {
   // extraVecFields round-trip as one string field: field names are
   // validated identifier-shaped ([A-Za-z0-9_]+) and the other parts are
   // enum/int/bool, so ':'/';' separators can never appear in a value.
-  // Short forms stay parseable for backward compat: a 4-part entry is a
-  // pre-family (dense, non-nullable) catalog's, a 5-part one pre-nullable
+  // A 4-part entry (a pre-family catalog's: dense, non-nullable) still
+  // parses.
   private def renderVecFields(fs: Seq[VecField]): String =
     fs.map(f => s"${f.name}:${f.dim}:${f.metric}:${f.indexType}:" +
       s"${f.family}:${f.nullable}").mkString(";")
@@ -154,7 +154,6 @@ class Catalog(root: String) {
     else s.split(";").toSeq.map { part =>
       part.split(":") match {
         case Array(n, d, met, it) => VecField(n, d.toInt, met, it)
-        case Array(n, d, met, it, fam) => VecField(n, d.toInt, met, it, fam)
         case Array(n, d, met, it, fam, nl) =>
           VecField(n, d.toInt, met, it, fam, nl.toBoolean)
         case _ => sys.error(s"corrupt extraVecFields entry: $part")
@@ -187,39 +186,30 @@ class Catalog(root: String) {
     m.map(_.group(1).toInt).getOrElse(sys.error(s"catalog entry missing $key: $json"))
   }
 
-  private def intFieldOr(json: String, key: String, default: Int): Int =
-    s""""$key":(-?\\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt).getOrElse(default)
+  private def longField(json: String, key: String): Long = {
+    val m = s""""$key":(-?\\d+)""".r.findFirstMatchIn(json)
+    m.map(_.group(1).toLong).getOrElse(sys.error(s"catalog entry missing $key: $json"))
+  }
 
-  private def longFieldOr(json: String, key: String, default: Long): Long =
-    s""""$key":(-?\\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(default)
-
-  private def strFieldOr(json: String, key: String, default: String): String =
-    (s""""$key":"((?:\\\\.|[^"\\\\])*)"""").r.findFirstMatchIn(json)
-      .map(m => unesc(m.group(1))).getOrElse(default)
-
+  // every key render writes is required: an entry missing one was not
+  // written by this catalog
   private def parse(json: String): CollectionMeta =
     CollectionMeta(strField(json, "name"), intField(json, "dim"),
       strField(json, "metric"), strField(json, "indexType"),
       intField(json, "nlist"), strField(json, "dataPath"),
-      intFieldOr(json, "buckets", 16), intFieldOr(json, "retain", 2),
-      // absent in pre-partition catalogs — parse stays backward compatible
-      strFieldOr(json, "partitionKey", ""),
-      intFieldOr(json, "numPartitions", 0),
-      intFieldOr(json, "pqM", 0),
-      intFieldOr(json, "pqNbits", 8),
-      strFieldOr(json, "consistency", "Strong"),
-      intFieldOr(json, "hnswM", 0),
-      intFieldOr(json, "hnswEfC", 0),
-      // absent in pre-binary catalogs — every earlier collection is float
-      strFieldOr(json, "vectorType", "FLOAT_VECTOR"),
-      // absent in pre-multi-vector catalogs — single-field collections
-      parseVecFields(strFieldOr(json, "extraVecFields", "")),
+      intField(json, "buckets"), intField(json, "retain"),
+      strField(json, "partitionKey"),
+      intField(json, "numPartitions"),
+      intField(json, "pqM"),
+      intField(json, "pqNbits"),
+      strField(json, "consistency"),
+      intField(json, "hnswM"),
+      intField(json, "hnswEfC"),
+      strField(json, "vectorType"),
+      parseVecFields(strField(json, "extraVecFields")),
       // fieldView is derived-only — a cataloged meta always parses ""
       fieldView = "",
-      // absent in pre-TTL catalogs — every earlier collection never expires
-      ttlSeconds = longFieldOr(json, "ttlSeconds", 0L))
+      ttlSeconds = longField(json, "ttlSeconds"))
 
   /** Idempotent create: returns false (and leaves metadata untouched) when
     * the collection already exists — `has_collection` gate semantics.

@@ -15,6 +15,8 @@ import org.apache.spark.sql.functions._
   * {{{
   *   <dir>/values/bucket=N/ (parquet)  — rows (value STRING); bucket is
   *                                       the KEYED STORE's hash bucket
+  *   <dir>/zones/ (parquet)            — per-bucket value spans (the
+  *                                       range prune's zone maps)
   *   <dir>/VERSION                     — stamped by the client, LAST
   * }}}
   *
@@ -113,9 +115,9 @@ object ScalarIndex {
     * cost ∝ the batch, never the touched buckets' rows (the earlier
     * rewrite-touched-partitions scheme re-derived every touched bucket's
     * full posting set per commit, which for a per-row-unique field made
-    * an all-buckets commit rewrite the whole index; ScalarScaleBench
-    * measured the tax). Append-only is MONOTONE, which is also what
-    * keeps it sound with no coordination:
+    * an all-buckets commit rewrite the whole index; BASELINE.md "Scalar
+    * metadata index" records the measured tax). Append-only is MONOTONE,
+    * which is also what keeps it sound with no coordination:
     *   - new rows' pairs are added before the stamp — the index stays
     *     value-complete for the new snapshot;
     *   - deleted/superseded rows' old pairs simply LINGER as dead
@@ -132,23 +134,18 @@ object ScalarIndex {
   def appendPairs(entries: DataFrame, dir: String): Unit = {
     val pairs = entries.select(col("value").cast("string"),
       col("bucket").cast("int"))
-    // Zones append ONLY onto an existing zones dir. Only [[write]] (the
-    // full build/compaction) may CREATE one: a pre-zone-map layout has
-    // no zones dir, and an append that created it would publish spans
-    // covering just this batch — bucketsForRange keys completeness off
-    // the dir's existence, so it would then PRUNE every bucket absent
-    // from the batch and silently drop matching rows until the next
-    // compaction. Skipping keeps such layouts on the no-range-prune path
-    // (bucketsForRange → None, sound) until compaction builds full zones.
-    // Zones (when present) go FIRST: a reader between the two appends
-    // then sees zones covering values not yet listed (over-wide spans
-    // over-scan — sound) instead of values outside every zone (a span
-    // that could wrongly prune the new value's bucket). Both frames are
+    // Zones append ONLY onto the zones dir [[write]] created: an append
+    // that created it would publish spans covering just this batch, and
+    // bucketsForRange would then PRUNE every bucket absent from the
+    // batch. Zones go FIRST: a reader between the two appends then sees
+    // zones covering values not yet listed (over-wide spans over-scan —
+    // sound) instead of values outside every zone (a span that could
+    // wrongly prune the new value's bucket). Both frames are
     // batch-bounded; the callers hand in a checkpointed batch, so the
     // double consumption is two cheap local scans, not two lineage
     // replays.
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(zonesPath(dir))))
-      zoneRows(pairs).write.mode("append").parquet(zonesPath(dir))
+    Artifact.required(zonesPath(dir))(
+      zoneRows(pairs).write.mode("append").parquet(zonesPath(dir)))
     pairs.distinct()
       .repartition(col("bucket")) // ≤ one file per bucket per append —
                                   // see the write() comment
@@ -198,20 +195,16 @@ object ScalarIndex {
   }
 
   /** The store buckets that may contain a live row satisfying ALL of
-    * `cons` (conjoined range/numeric constraints) per the zone maps —
-    * or None when the layout predates zone maps (indexes built before
-    * this feature; the next compaction/build adds them), in which case
-    * the caller must not prune on ranges. Appended zone rows ACCUMULATE
+    * `cons` (conjoined range/numeric constraints, at least one) per the
+    * zone maps [[write]] builds. Appended zone rows ACCUMULATE
     * per bucket, so the per-bucket span is the min/max across all of a
     * bucket's rows — dead values only widen a span (over-scan, never a
     * wrong prune), exactly the posting lists' monotone story. The read
     * is bucket-count-sized parquet; the collect ≤ buckets ints. */
   def bucketsForRange(spark: SparkSession, dir: String,
-                      cons: Seq[ZoneCon]): Option[Set[Int]] = {
-    if (cons.isEmpty) return None
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(zonesPath(dir))))
-      return None
-    val spans = spark.read.schema(zonesSchema).parquet(zonesPath(dir))
+                      cons: Seq[ZoneCon]): Set[Int] = {
+    require(cons.nonEmpty, "bucketsForRange needs at least one constraint")
+    val spans = zones(spark, dir)
       .groupBy(col("bucket"))
       .agg(min(col("nmin")).as("nmin"), max(col("nmax")).as("nmax"),
         min(col("smin")).as("smin"), max(col("smax")).as("smax"))
@@ -236,9 +229,13 @@ object ScalarIndex {
       case StrCmp(op, _) =>
         throw new IllegalArgumentException(s"unknown zone op '$op'")
     }.reduce(_ && _)
-    Some(spans.filter(keep).select("bucket")
-      .collect().map(_.getInt(0)).toSet)
+    spans.filter(keep).select("bucket")
+      .collect().map(_.getInt(0)).toSet
   }
+
+  private def zones(spark: SparkSession, dir: String): DataFrame =
+    Artifact.required(zonesPath(dir))(
+      spark.read.schema(zonesSchema).parquet(zonesPath(dir)))
 
   /** Observability: per-field index shape — distinct values, posting
     * rows, and the hottest values by bucket fan-out (a value present in
@@ -261,21 +258,12 @@ object ScalarIndex {
     * bucket whose extreme value was deleted keeps its wide span (sound:
     * over-scan only) — so `zone_rows` is the drift gauge: high counts
     * mean the spans may be far wider than the live data and the next
-    * compaction will both fold the rows and re-derive tight spans.
-    * Empty result when the layout predates zone maps (range prune is
-    * off entirely there — see [[bucketsForRange]]). */
-  def zoneStats(spark: SparkSession, dir: String): DataFrame = {
-    val zones =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(zonesPath(dir))))
-        spark.read.schema(zonesSchema).parquet(zonesPath(dir))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(zonesSchema))
-    zones
+    * compaction will both fold the rows and re-derive tight spans. */
+  def zoneStats(spark: SparkSession, dir: String): DataFrame =
+    zones(spark, dir)
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("zone_rows"),
         min(col("nmin")).as("nmin"), max(col("nmax")).as("nmax"),
         min(col("smin")).as("smin"), max(col("smax")).as("smax"))
       .orderBy(col("bucket"))
-  }
 }

@@ -32,18 +32,16 @@ import graft.operators.SparseSearch
   *     (re-upserted or deleted). A row in segment i is live iff its id
   *     is in no tombstone of a LATER segment j > i — the exact
   *     [[TextIndex]] masking rule.
-  *   - `META` — bucket count, id column name, and the live segment list
-  *     in commit order; swapped atomically (temp file + ATOMIC_MOVE), so
-  *     readers only ever see complete segments. Pre-segment 2-line
-  *     METAs (`buckets\nidCol`) still read — their single unsuffixed
-  *     `postings/` + `norms/` layout serves queries unchanged — but
-  *     [[append]] on one fails loudly naming the rebuild recovery.
+  *   - `META` — bucket count, id column name, the live segment list in
+  *     commit order, and the stored postings schema; swapped atomically
+  *     (temp file + ATOMIC_MOVE), so readers only ever see complete
+  *     segments.
   *
   * Score parity: the scoring path is [[SparseSearch]]'s own dot kernel
   * over the pruned live postings — the dim prune is LOSSLESS for both
   * metrics (a posting outside the query's dims contributes zero to
   * every dot) and the tombstone mask only removes superseded rows, so
-  * riding the index (segmented or not) never changes a result, only the
+  * riding the index (one segment or many) never changes a result, only the
   * bytes read. Query cost per live segment is one pruned scan plus a
   * churn-sized anti-join; [[append]] auto-compacts past its thresholds
   * (an index-sized parquet merge — postings are the source of truth, so
@@ -103,8 +101,7 @@ object SparseIndex {
 
   // Atomically publish META naming `gens` live, then sweep everything
   // the list no longer references — superseded/crash-stranded segment
-  // dirs, .meta- temps, and the pre-segment `postings/`/`norms/` dirs a
-  // rebuild supersedes. Callers hold the commit lock.
+  // dirs and .meta- temps. Callers hold the commit lock.
   private def publishMeta(path: String, buckets: Int, idCol: String,
                           gens: Seq[String], schemaDdl: String): Unit = {
     val dir = java.nio.file.Paths.get(path)
@@ -123,8 +120,7 @@ object SparseIndex {
         .filter { n =>
           val seg = Seq("postings-", "norms-", "tombstones-")
             .find(n.startsWith).map(p => n.drop(p.length))
-          seg.exists(!live.contains(_)) || n.startsWith(".meta-") ||
-            n == "postings" || n == "norms" // pre-segment layout, superseded
+          seg.exists(!live.contains(_)) || n.startsWith(".meta-")
         }
         .toSeq
         .foreach(n => graft.streaming.BucketedKeyedCollection.deleteTree(
@@ -132,27 +128,20 @@ object SparseIndex {
     } finally listing.close()
   }
 
-  // (buckets, idCol, live segment list, stored postings schema) — gens
-  // None for a pre-segment layout (single unsuffixed postings/ + norms/
-  // dirs); schema None for METAs written before it was recorded (reads
-  // fall back to footer inference there). The explicit schema is what
-  // keeps an EMPTY segment readable: a pure-delete append's partitioned
-  // postings write emits no part files, so inference has no footer.
+  // (buckets, idCol, live segment list, stored postings schema) — every
+  // publishMeta writes all four. The explicit schema is what keeps an
+  // EMPTY segment readable: a pure-delete append's partitioned postings
+  // write emits no part files, so inference has no footer.
   private def readMeta(path: String)
-      : (Int, String, Option[Seq[String]],
-         Option[org.apache.spark.sql.types.StructType]) = {
+      : (Int, String, Seq[String], org.apache.spark.sql.types.StructType) = {
     require(java.nio.file.Files.exists(metaPath(path)),
       s"no sparse index at $path — build first")
     val lines = java.nio.file.Files.readString(metaPath(path)).split("\n")
-    val gens =
-      if (lines.length >= 3 && lines(2).trim.nonEmpty)
-        Some(lines(2).trim.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      else None
-    val schema =
-      if (lines.length >= 4 && lines(3).trim.nonEmpty)
-        Some(org.apache.spark.sql.types.StructType.fromDDL(lines(3).trim))
-      else None
-    (lines(0).trim.toInt, lines(1).trim, gens, schema)
+    if (lines.length < 4 || lines(2).trim.isEmpty || lines(3).trim.isEmpty)
+      throw Artifact.missing(s"${metaPath(path)} segment list and schema")
+    (lines(0).trim.toInt, lines(1).trim,
+      lines(2).trim.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
+      org.apache.spark.sql.types.StructType.fromDDL(lines(3).trim))
   }
 
   // the norms/tombstones side-table schemas derive from the postings
@@ -170,25 +159,23 @@ object SparseIndex {
     java.nio.file.Files.exists(metaPath(path))
 
   /** Number of live segments — the auto-compaction trigger [[append]]
-    * checks (1 for a fresh build or a pre-segment layout). */
-  def segmentCount(path: String): Int = readMeta(path)._3.fold(1)(_.size)
+    * checks (1 for a fresh build). */
+  def segmentCount(path: String): Int = readMeta(path)._3.size
 
   /** Fraction of physically-stored doc rows that are DEAD (tombstoned
     * prior versions) — [[append]]'s second compaction trigger, for
     * re-upsert/delete-heavy churn that keeps the segment count small
     * while per-query dead weight grows. Footer-only parquet counts. */
   def tombstoneRatio(spark: SparkSession, path: String): Double = {
-    val (_, _, gensOpt, _) = readMeta(path)
-    gensOpt.fold(0.0) { gens =>
-      def rows(prefix: String): Long = gens.map { g =>
-        val p = java.nio.file.Paths.get(path, s"$prefix-$g")
-        if (java.nio.file.Files.exists(p))
-          spark.read.parquet(p.toString).count()
-        else 0L
-      }.sum
-      val total = rows("norms")
-      if (total == 0L) 0.0 else rows("tombstones").toDouble / total
-    }
+    val (_, _, gens, _) = readMeta(path)
+    def rows(prefix: String): Long = gens.map { g =>
+      val p = java.nio.file.Paths.get(path, s"$prefix-$g")
+      if (java.nio.file.Files.exists(p))
+        spark.read.parquet(p.toString).count()
+      else 0L
+    }.sum
+    val total = rows("norms")
+    if (total == 0L) 0.0 else rows("tombstones").toDouble / total
   }
 
   /** Append a DELTA segment: `postingsDelta` carries the COMPLETE
@@ -212,25 +199,21 @@ object SparseIndex {
     graft.streaming.BucketedKeyedCollection.withCommitLock(
         java.nio.file.Paths.get(path)) {
       val spark = postingsDelta.sparkSession
-      val (buckets, idCol, gensOpt, schemaOpt) = readMeta(path)
-      val gens = gensOpt.getOrElse(throw new IllegalStateException(
-        s"$path was built before segment support — rebuild it once " +
-          "(SparseIndex.build) to enable appends"))
+      val (buckets, idCol, gens, schema) = readMeta(path)
       val gen = java.util.UUID.randomUUID.toString.take(8)
       // prior LIVE versions of every id this delta touches, via the
       // norms doc manifests — a narrow (id) join, no postings scan
       val touched = deletedIds.foldLeft(
         postingsDelta.select(col(idCol)).distinct())(
         (t, d) => t.union(d.toDF(idCol)).distinct())
-      val prior = liveNorms(spark, path, gens, idCol, schemaOpt)
+      val prior = liveNorms(spark, path, gens, idCol, schema)
         .select(col(idCol))
         .join(touched, Seq(idCol), "left_semi")
-      val ddl = writeSegment(postingsDelta, path, gen, buckets, idCol)
+      writeSegment(postingsDelta, path, gen, buckets, idCol)
       prior.write.mode("overwrite").parquet(s"$path/tombstones-$gen")
       // keep the FIRST recorded schema: the id type is the index's
       // contract and a delta must conform to it, not redefine it
-      publishMeta(path, buckets, idCol, gens :+ gen,
-        schemaOpt.fold(ddl)(_.toDDL))
+      publishMeta(path, buckets, idCol, gens :+ gen, schema.toDDL)
       if (segmentCount(path) > compactAt ||
           tombstoneRatio(spark, path) > tombstoneRatioAt)
         compact(spark, path)
@@ -243,10 +226,10 @@ object SparseIndex {
   def compact(spark: SparkSession, path: String): Unit = {
     graft.streaming.BucketedKeyedCollection.withCommitLock(
         java.nio.file.Paths.get(path)) {
-      val (buckets, idCol, gensOpt, schemaOpt) = readMeta(path)
-      gensOpt.filter(_.size > 1).foreach { gens =>
+      val (buckets, idCol, gens, schema) = readMeta(path)
+      if (gens.size > 1) {
         val gen = java.util.UUID.randomUUID.toString.take(8)
-        val compacted = livePostings(spark, path, gens, idCol, None, schemaOpt)
+        val compacted = livePostings(spark, path, gens, idCol, None, schema)
           // drop the old segment's physical bucket column before the
           // rewrite re-derives it (dim hashing is stable, but deriving
           // fresh keeps one code path for both write sites)
@@ -257,13 +240,12 @@ object SparseIndex {
           .repartition(col("bucket"))
           .write.mode("overwrite").partitionBy("bucket")
           .parquet(s"$path/postings-$gen")
-        liveNorms(spark, path, gens, idCol, schemaOpt).write.mode("overwrite")
+        liveNorms(spark, path, gens, idCol, schema).write.mode("overwrite")
           .parquet(s"$path/norms-$gen")
-        // fallback schema from the PLAN, never a re-read: an all-dead
+        // the stored schema carries over, never a re-read: an all-dead
         // compaction writes an EMPTY partitioned dir (no footers), the
         // exact case the stored schema exists for
-        publishMeta(path, buckets, idCol, Seq(gen),
-          schemaOpt.fold(compacted.schema.toDDL)(_.toDDL))
+        publishMeta(path, buckets, idCol, Seq(gen), schema.toDDL)
       }
     }
   }
@@ -272,13 +254,14 @@ object SparseIndex {
   // segment i is live iff its id is in no tombstone of a later segment.
   private def maskedUnion(spark: SparkSession, path: String,
                           gens: Seq[String], idCol: String,
-                          postingsSchema: Option[org.apache.spark.sql.types.StructType],
+                          postingsSchema: org.apache.spark.sql.types.StructType,
                           read: String => DataFrame): DataFrame = {
+    // a build or compaction segment supersedes nothing and has no
+    // tombstones dir; only appended segments write one
     val tombs = gens.map(g =>
       if (java.nio.file.Files.exists(
           java.nio.file.Paths.get(path, s"tombstones-$g")))
-        Some(postingsSchema.fold(spark.read)(ps =>
-            spark.read.schema(idSchema(ps)))
+        Some(spark.read.schema(idSchema(postingsSchema))
           .parquet(s"$path/tombstones-$g").select(col(idCol)))
       else None)
     gens.indices.map { i =>
@@ -292,53 +275,41 @@ object SparseIndex {
   private def livePostings(spark: SparkSession, path: String,
                            gens: Seq[String], idCol: String,
                            prune: Option[org.apache.spark.sql.Column],
-                           schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+                           schema: org.apache.spark.sql.types.StructType): DataFrame =
     maskedUnion(spark, path, gens, idCol, schema, { g =>
-      val seg = schema.fold(spark.read)(spark.read.schema)
-        .parquet(s"$path/postings-$g")
+      val seg = spark.read.schema(schema).parquet(s"$path/postings-$g")
       prune.fold(seg)(seg.filter)
     })
 
   private def liveNorms(spark: SparkSession, path: String,
                         gens: Seq[String], idCol: String,
-                        schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+                        schema: org.apache.spark.sql.types.StructType): DataFrame =
     maskedUnion(spark, path, gens, idCol, schema,
-      g => schema.fold(spark.read)(ps => spark.read.schema(normsSchema(ps)))
-        .parquet(s"$path/norms-$g"))
+      g => spark.read.schema(normsSchema(schema)).parquet(s"$path/norms-$g"))
 
   /** The dim-pruned LIVE postings scan shared by [[topK]] and
     * [[topKBatch]]: per segment, partition prune to the dims' buckets +
     * pushed `dim IN` filter, then the tombstone mask. */
   private def prunedPostings(spark: SparkSession, path: String,
       dims: Seq[Long], buckets: Int, idCol: String,
-      gensOpt: Option[Seq[String]],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+      gens: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val qBuckets = dims.map(dimBucket(_, buckets)).distinct
     val prune = col("bucket").isin(qBuckets: _*) && col("dim").isin(dims: _*)
-    gensOpt.fold(
-      spark.read.parquet(s"$path/postings").filter(prune)
-        .select(col(idCol), col("dim"), col("w")))(gens =>
-      livePostings(spark, path, gens, idCol, Some(prune), schema)
-        .select(col(idCol), col("dim"), col("w")))
+    livePostings(spark, path, gens, idCol, Some(prune), schema)
+      .select(col(idCol), col("dim"), col("w"))
   }
-
-  // cosine's norm side table: live across segments, or the legacy dir
-  private def normsFrame(spark: SparkSession, path: String, idCol: String,
-                         gensOpt: Option[Seq[String]],
-                         schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    gensOpt.fold(spark.read.parquet(s"$path/norms"))(gens =>
-      liveNorms(spark, path, gens, idCol, schema))
 
   /** Top-k against one query through the pruned layout. Same results as
     * `SparseSearch.topK` over the full live postings (prune is
     * lossless); I/O is the queried buckets only. */
   def topK(spark: SparkSession, path: String, query: Seq[(Long, Double)],
            k: Int, metric: String = "dot"): DataFrame = {
-    val (buckets, idCol, gensOpt, schemaOpt) = readMeta(path)
+    val (buckets, idCol, gens, schema) = readMeta(path)
     require(query.nonEmpty, "query sparse vector has no nonzero dimensions")
     val live = query.filter(_._2 != 0.0)
     val pruned = prunedPostings(spark, path, live.map(_._1), buckets, idCol,
-      gensOpt, schemaOpt)
+      gens, schema)
     metric match {
       case "dot" => SparseSearch.topK(pruned, live, k, "dot", idCol)
       case "cosine" =>
@@ -347,7 +318,7 @@ object SparseIndex {
         val qn = math.sqrt(live.map(t => t._2 * t._2).sum)
         require(qn > 0.0, "query vector has zero norm")
         val dots = SparseSearch.dotScores(pruned, live, idCol)
-        val norms = normsFrame(spark, path, idCol, gensOpt, schemaOpt)
+        val norms = liveNorms(spark, path, gens, idCol, schema)
         dots.join(norms, Seq(idCol))
           .select(col(idCol), (col("__dot") / (col("nrm") * lit(qn))).as("score"))
           .orderBy(desc("score"), col(idCol))
@@ -364,18 +335,18 @@ object SparseIndex {
     * identically 0 — the inverted index's membership rule). */
   def scores(spark: SparkSession, path: String, query: Seq[(Long, Double)],
              metric: String = "dot"): DataFrame = {
-    val (buckets, idCol, gensOpt, schemaOpt) = readMeta(path)
+    val (buckets, idCol, gens, schema) = readMeta(path)
     require(query.nonEmpty, "query sparse vector has no nonzero dimensions")
     val live = query.filter(_._2 != 0.0)
     val pruned = prunedPostings(spark, path, live.map(_._1), buckets, idCol,
-      gensOpt, schemaOpt)
+      gens, schema)
     val dots = SparseSearch.dotScores(pruned, live, idCol)
     metric match {
       case "dot" => dots.select(col(idCol), col("__dot").as("score"))
       case "cosine" =>
         val qn = math.sqrt(live.map(t => t._2 * t._2).sum)
         require(qn > 0.0, "query vector has zero norm")
-        val norms = normsFrame(spark, path, idCol, gensOpt, schemaOpt)
+        val norms = liveNorms(spark, path, gens, idCol, schema)
         dots.join(norms, Seq(idCol))
           .select(col(idCol), (col("__dot") / (col("nrm") * lit(qn))).as("score"))
       case other =>
@@ -388,12 +359,12 @@ object SparseIndex {
     * definition, so the union is query-batch-sized, not corpus-sized). */
   def topKBatch(spark: SparkSession, path: String, queryPostings: DataFrame,
                 k: Int, metric: String = "dot"): DataFrame = {
-    val (buckets, idCol, gensOpt, schemaOpt) = readMeta(path)
+    val (buckets, idCol, gens, schema) = readMeta(path)
     val dims = queryPostings.select(col("dim").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSeq
     require(dims.nonEmpty, "query batch has no nonzero dimensions")
-    val pruned = prunedPostings(spark, path, dims, buckets, idCol, gensOpt,
-      schemaOpt)
+    val pruned = prunedPostings(spark, path, dims, buckets, idCol, gens,
+      schema)
     metric match {
       case "dot" => SparseSearch.topKBatch(pruned, queryPostings, k, "dot", idCol)
       case "cosine" =>
@@ -401,7 +372,7 @@ object SparseIndex {
         // norms; the bounded heap still caps rows per (partition, qid).
         // Zero-weight query postings dropped like SparseSearch.topKBatch:
         // an all-zero qid must match nothing, not emit NaN scores.
-        val norms = normsFrame(spark, path, idCol, gensOpt, schemaOpt)
+        val norms = liveNorms(spark, path, gens, idCol, schema)
         val liveQ = queryPostings.filter(col("w") =!= 0.0)
         val q0 = liveQ.select(col("qid"), col("dim"), col("w").as("__qw"))
         val qnorms = liveQ.groupBy(col("qid"))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
   * mis-match, the exact failure mode a migrating Milvus caller hits if
   * their collection declared an analyzer this engine ignored).
   *
-  *   - `whitespace` (the legacy default): the single-space split every
+  *   - `whitespace` (the default): the single-space split every
   *     C14 operator uses — terms must match tokens exactly, bit-for-bit
   *     the pre-analyzer behavior.
   *   - `standard`: Unicode-ish tokenization — lowercase, then split on
@@ -29,9 +29,7 @@ import org.apache.spark.sql.types.StructType
   * queries, chosen because Milvus's observable behavior analyzes the
   * query string the same way).
   *
-  * Serialized as META line 4 (`tokenizer` or `tokenizer|stop1,stop2`);
-  * a 3-line legacy META parses as the whitespace analyzer, so existing
-  * indexes read unchanged. */
+  * Serialized as META line 4 (`tokenizer` or `tokenizer|stop1,stop2`). */
 case class Analyzer(tokenizer: String = "whitespace",
                     stopWords: Seq[String] = Nil,
                     stemmer: String = "none",
@@ -443,21 +441,16 @@ object TextIndex {
 
   // META: line 1 buckets, line 2 postings schema DDL, line 3 the live
   // segment tokens in COMMIT ORDER (comma-separated; a full build is the
-  // one-segment case, so pre-segment single-token METAs parse unchanged),
-  // line 4 (since r12, OPTIONAL) the serialized analyzer — a 3-line
-  // legacy META parses as the whitespace analyzer, bit-identical to the
-  // pre-analyzer behavior
+  // one-segment case), line 4 the serialized analyzer. publishMeta always
+  // writes all four.
   private def readMeta(path: String): (Int, StructType, Seq[String], Analyzer) = {
     val lines = new String(java.nio.file.Files.readAllBytes(metaPath(path)),
       "UTF-8").split("\n", 4)
-    require(lines.length >= 3,
-      s"$path/META is not a generation-format text index — rebuild it " +
-        "(TextIndex.build / GraftClient.buildTextIndex)")
+    if (lines.length < 4 || lines(3).trim.isEmpty)
+      throw Artifact.missing(s"${metaPath(path)} analyzer line")
     (lines(0).trim.toInt, StructType.fromDDL(lines(1)),
       lines(2).trim.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-      if (lines.length >= 4 && lines(3).trim.nonEmpty)
-        Analyzer.deserialize(lines(3).trim)
-      else Analyzer.Whitespace)
+      Analyzer.deserialize(lines(3).trim))
   }
 
   /** The analyzer the index was built with — what a caller must mirror
@@ -498,7 +491,7 @@ object TextIndex {
   // unaffected.
   private def publishMeta(path: String, buckets: Int, schemaDdl: String,
                           gens: Seq[String],
-                          analyzer: Analyzer = Analyzer.Whitespace): Unit = {
+                          analyzer: Analyzer): Unit = {
     val dir = java.nio.file.Paths.get(path)
     val tmp = java.nio.file.Files.createTempFile(dir, ".meta-", "")
     java.nio.file.Files.write(tmp,
@@ -617,12 +610,6 @@ object TextIndex {
       val (buckets, schema, gens, analyzer) = readMeta(path)
       require(schema.fields.head.name == idCol,
         s"idCol '$idCol' does not match the index's '${schema.fields.head.name}'")
-      // an index built before segment support has no doclen tables —
-      // fail with the recovery path, not a parquet path-not-found
-      require(gens.forall(g => java.nio.file.Files.exists(
-          java.nio.file.Paths.get(path, s"doclen-$g"))),
-        s"$path was built before segment support — rebuild it once " +
-          "(TextIndex.build / GraftClient.buildTextIndex) to enable appends")
       val gen = java.util.UUID.randomUUID.toString.take(8)
       val withLen = docsDelta
         .select(col(idCol), analyzer.tokensCol(col(textCol)).as("__ws"))
@@ -651,9 +638,6 @@ object TextIndex {
             .agg(count(lit(1)), coalesce(sum(col("dlen")), lit(0L))).head()
           val old = spark.read.schema(statsSchema)
             .parquet(s"$path/stats-${gens.last}").head()
-          require(!old.isNullAt(2),
-            s"$path was built before segment support — rebuild it once " +
-              "(TextIndex.build / GraftClient.buildTextIndex) to enable appends")
           val nDocs = old.getLong(0) + deltaStats.getLong(0) -
             supersededStats.getLong(0) -
             delStats.map(_.getLong(0)).getOrElse(0L)
@@ -824,9 +808,6 @@ object TextIndex {
     require(exists(path), s"no text index at $path — run build first")
     val (buckets, schema, gens, analyzer) = readMeta(path)
     val idCol = schema.fields.head.name
-    require(slop.isEmpty || schema.fieldNames.contains("pos"),
-      s"$path was built before positional postings — rebuild it once " +
-        "(TextIndex.build / GraftClient.buildTextIndex) to enable PHRASE_MATCH")
     // query terms pass through the INDEX's analyzer (META) — a
     // standard-analyzer index lowercases/splits the query exactly as it
     // tokenized the corpus, stop terms drop from the query. A query that
@@ -1056,9 +1037,6 @@ object TextIndex {
     // layout's newest stats row is a 1-row driver read
     val statRows = paths.zip(metas).map { case (p, (_, _, gens, _)) =>
       val r = spark.read.schema(statsSchema).parquet(s"$p/stats-${gens.last}").head()
-      require(!r.isNullAt(2),
-        s"$p was built before exact sum_dlen stats — rebuild it once " +
-          "(TextIndex.build) to enable merged-stats scoring")
       (r.getLong(0), r.getLong(2))
     }
     val nDocs = statRows.map(_._1).sum

@@ -545,9 +545,15 @@ object DedupQueries {
       java.lang.Long.parseLong(hex.substring(0, 4), 16) - 32768L
     }
     // slice to the 16×64 plane grid exactly as the r16 inner join on d
-    // did (coords beyond d=63 had no plane row and dropped out)
-    val q = transform(slice(col("embedding"), 1, 64),
-      x => floor(x.cast("double") * 1000).cast("long"))
+    // did (coords beyond d=63 had no plane row and dropped out). A
+    // shorter embedding would zip against nulls whose bits silently read
+    // 0 — it raises instead, inside the same projection
+    val q = when(size(col("embedding")) < 64, raise_error(concat(
+        lit("dedup_embedding_lsh needs embeddings of at least 64 dims; vec_id "),
+        col("vec_id").cast("string"), lit(" has "),
+        size(col("embedding")).cast("string"))))
+      .otherwise(transform(slice(col("embedding"), 1, 64),
+        x => floor(x.cast("double") * 1000).cast("long")))
     val qe = e.select(col("vec_id"), q.as("q"))
     def bit(p: Int): Column = {
       val ws = array((0 until 64).map(d => lit(w(p, d))): _*)

@@ -9,29 +9,31 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.apache.spark.sql.types.StructType
 
-/** The 100 TB form of [[KeyedCollection]]: rows hash-bucketed by key, one
-  * parquet directory per (bucket, version), and a manifest mapping each
-  * bucket to its live version. A commit rewrites ONLY the buckets a batch
-  * touches — a 1000-row micro-batch against a 100 TB index rewrites
-  * ~`touched/numBuckets` of the data instead of all of it, which is the
-  * difference between an ingest path that works at scale and one that
-  * recopies the world per batch.
+/** The keyed vector store at 100 TB shape — the at-rest form of the
+  * reference's vector store (one row per live key, same-key overwrite,
+  * `s3vectors-app/pythonvectordbceph.py:194-206`): rows hash-bucketed by
+  * key, one parquet directory per (bucket, version), and a manifest
+  * mapping each bucket to its live version. A commit rewrites ONLY the
+  * buckets a batch touches — a 1000-row micro-batch against a 100 TB
+  * index rewrites ~`touched/numBuckets` of the data instead of all of
+  * it, which is the difference between an ingest path that works at
+  * scale and one that recopies the world per batch.
   *
-  * Consistency model is unchanged from KeyedCollection: the manifest id is
-  * the snapshot version, published by an atomic pointer swap, so a reader
-  * always sees a complete, consistent set of bucket directories (A20).
-  * The manifest also carries the seq high-water mark, so allocating new
-  * upsert sequence numbers needs no index scan. On a real cluster this
-  * layout IS a table format's manifest + data files (Delta/Iceberg); the
-  * merge plan feeding it is identical.
+  * The manifest id is the snapshot version, published by an atomic
+  * pointer swap (`CURRENT`), so a reader always sees a complete,
+  * consistent set of bucket directories (A20). The manifest also carries
+  * the seq high-water mark, so allocating new upsert sequence numbers
+  * needs no index scan. On a real cluster this layout IS a table
+  * format's manifest + data files (Delta/Iceberg); the merge plan
+  * feeding it is identical.
   *
   * `numBuckets` is immutable for the collection's lifetime — bucket
   * assignment is `pmod(xxhash64(key), numBuckets)`, so changing it would
   * strand existing rows in buckets the merge no longer reads (it is
   * persisted in the catalog's CollectionMeta for exactly that reason).
   *
-  * Same reader-validity constraint as KeyedCollection: a lazy DataFrame
-  * from `read`/`readBuckets` stays valid for `retain - 1` further commits.
+  * Reader validity: a lazy DataFrame from `read`/`readBuckets` stays
+  * valid for `retain - 1` further commits.
   * Writers: commits serialize on a per-collection lock, and a caller
   * passing its merge's base version gets compare-and-swap semantics — a
   * concurrent interleaving commit raises instead of being clobbered
@@ -61,11 +63,8 @@ class BucketedKeyedCollection(root: String, schema: StructType, keyCol: String,
   private def readManifest(v: Long): Manifest = {
     if (!Files.exists(manifestPath(v)))
       throw new IllegalStateException(
-        f"$root: CURRENT points at version $v but manifest-$v%08d is missing — " + (
-          if (Files.exists(dir.resolve(f"v$v%08d")))
-            "this is a legacy (pre-bucketed) KeyedCollection layout; " +
-              "call migrateFromLegacy(spark) to rewrite it into buckets"
-          else "the collection directory is corrupt"))
+        f"$root: CURRENT points at version $v but manifest-$v%08d is " +
+          "missing — the collection directory is corrupt")
     val lines = Files.readAllLines(manifestPath(v)).asScala.toSeq
     val maxSeq = lines.head.stripPrefix("maxseq ").trim.toLong
     val buckets = lines.tail.filter(_.nonEmpty).map { l =>
@@ -76,53 +75,6 @@ class BucketedKeyedCollection(root: String, schema: StructType, keyCol: String,
   }
 
   private def current: Option[Manifest] = currentVersion.map(readManifest)
-
-  /** Commit-side view of the manifest: a legacy layout (CURRENT without a
-    * manifest) commits as if empty — the only commit that runs in that
-    * state is [[migrateFromLegacy]], which rewrites every bucket. Readers
-    * keep the strict view so an unmigrated store fails loudly. */
-  private def currentForCommit: Option[Manifest] =
-    currentVersion.filter(v => Files.exists(manifestPath(v))).map(readManifest)
-
-  /** True when the directory holds the pre-bucketed [[KeyedCollection]]
-    * layout: a CURRENT pointer whose manifest is absent but whose legacy
-    * whole-snapshot dir (`vNNNNNNNN`) exists. Such data is unreadable by
-    * this class until [[migrateFromLegacy]] rewrites it into buckets. */
-  def isLegacyLayout: Boolean = currentVersion.exists { v =>
-    !Files.exists(manifestPath(v)) && Files.exists(dir.resolve(f"v$v%08d"))
-  }
-
-  /** One-time rewrite of a legacy KeyedCollection snapshot into the
-    * bucketed layout — one all-buckets commit, then the legacy version
-    * dirs (which `prune` never matches) are dropped. The seq high-water
-    * mark seeds from the data's `seq` column when the schema has one.
-    *
-    * Runs under the commit lock and is IDEMPOTENT: two concurrent first
-    * opens of a legacy store both reach the check-then-migrate, and the
-    * loser must see "already migrated" and return the live version —
-    * not throw out of what the caller experiences as a plain read. The
-    * inner commitBuckets re-enters the same lock (reentrancy handled by
-    * withCommitLock). */
-  def migrateFromLegacy(spark: SparkSession): Long = withWriteLock {
-    if (!isLegacyLayout) {
-      // lost the open race: the other opener migrated while we waited
-      currentVersion.getOrElse(
-        throw new IllegalArgumentException(
-          s"$root is not a legacy KeyedCollection layout"))
-    } else {
-      val v = currentVersion.get
-      val rows = spark.read.schema(schema).parquet(dir.resolve(f"v$v%08d").toString)
-      val maxSeq =
-        if (schema.fieldNames.contains("seq"))
-          rows.agg(org.apache.spark.sql.functions.coalesce(
-            org.apache.spark.sql.functions.max(col("seq")), lit(0L))).head().getLong(0)
-        else 0L
-      val next = commitBuckets(0 until numBuckets, rows, maxSeq,
-        expectedBase = Some(v))
-      listDir().filter(_.matches("v\\d{8,}")).foreach(n => deleteRecursively(dir.resolve(n)))
-      next
-    }
-  }
 
   /** Seq high-water mark of the latest snapshot — no index scan needed. */
   def maxSeq: Long = current.map(_.maxSeq).getOrElse(0L)
@@ -357,7 +309,7 @@ class BucketedKeyedCollection(root: String, schema: StructType, keyCol: String,
       Files.move(src, dir.resolve(rel))
       b -> rel
     }
-    val updated = (currentForCommit.map(_.buckets).getOrElse(Map.empty) -- touched) ++ moved
+    val updated = (current.map(_.buckets).getOrElse(Map.empty) -- touched) ++ moved
     val body = (s"maxseq $newMaxSeq" +:
       updated.toSeq.sortBy(_._1).map { case (b, rel) => s"$b $rel" }).mkString("\n")
     Files.write(manifestPath(next), body.getBytes(StandardCharsets.UTF_8))
@@ -622,8 +574,8 @@ object BucketedKeyedCollection {
   // Paths whose commit lock the CURRENT THREAD already holds. The JVM
   // ReentrantLock re-enters fine, but FileChannel.lock would then throw
   // OverlappingFileLockException (same JVM already holds the region), so
-  // true reentrancy — an admin op composing another locked op on the same
-  // dir, e.g. migrate-under-collection-open — must skip BOTH acquisitions
+  // true reentrancy — a locked op composing another locked op on the same
+  // dir, e.g. commitBuckets calling publishStaged — must skip BOTH acquisitions
   // when the outer frame owns them.
   private val heldByThread = new ThreadLocal[scala.collection.mutable.Set[String]] {
     override def initialValue(): scala.collection.mutable.Set[String] =

@@ -144,32 +144,6 @@ class BucketedCollectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!java.nio.file.Files.exists(stage), "stale staging dirs are pruned")
   }
 
-  test("legacy KeyedCollection layout is detected and migrates into buckets") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-legacy").toString
-    val legacy = new graft.streaming.KeyedCollection(root, schema)
-    legacy.commit((0 until 30).map(i => (s"k$i", i.toLong, (i % 7).toLong))
-      .toDF("key", "value", "seq"))
-    val coll = new BucketedKeyedCollection(root, schema, "key", 4)
-    assert(coll.isLegacyLayout)
-    val err = intercept[IllegalStateException] { coll.read(spark) }
-    assert(err.getMessage.contains("legacy"), s"opaque error: ${err.getMessage}")
-    coll.migrateFromLegacy(spark)
-    assert(!coll.isLegacyLayout)
-    assert(rowsOf(coll) == (0 until 30).map(i => (s"k$i", i.toLong)).toSet)
-    assert(coll.maxSeq == 6L, "seq high-water mark seeds from the data")
-    // migrated store keeps working: touched-bucket commit on top
-    val b = bucketOf(coll, "k3")
-    val survivors = (0 until 30).filter(i => bucketOf(coll, s"k$i") == b)
-      .map(i => (s"k$i", if (i == 3) 777L else i.toLong, 7L))
-    coll.commitBuckets(Seq(b), survivors.toDF("key", "value", "seq"), 7L)
-    assert(rowsOf(coll).contains(("k3", 777L)))
-    // IDEMPOTENT: a second migrate (the loser of a concurrent first-open
-    // race) must return the live version, not throw — the caller
-    // experiences it as a plain read
-    assert(coll.migrateFromLegacy(spark) == coll.currentVersion.get)
-  }
-
   test("commit lock is reentrant on the same thread, exclusive across threads") {
     import scala.jdk.CollectionConverters._
     val (root, coll) = freshColl(buckets = 2)
@@ -275,27 +249,6 @@ class BucketedCollectionSpec extends AnyFunSuite with BeforeAndAfterAll {
       "unpublished manifest must not surface as a version")
     intercept[IllegalArgumentException] { coll.readVersion(spark, ghost) }
     java.nio.file.Files.delete(java.nio.file.Paths.get(root, f"manifest-$ghost%08d"))
-  }
-
-  test("KeyedCollection: stray v* files neither wedge commits nor get deleted") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-kc-stray").toString
-    val kc = new graft.streaming.KeyedCollection(root, schema)
-    kc.commit(Seq(("a", 1L, 1L)).toDF("key", "value", "seq"))
-    // a user/tool drops non-numeric v* files into the collection root —
-    // the prune must neither NumberFormatException (wedging every later
-    // commit AFTER its pointer swap) nor sweep them as version dirs
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "vacuum.log"),
-      "hi".getBytes)
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "v2-backup"),
-      "hi".getBytes)
-    (2 to 4).foreach(i =>
-      kc.commit(Seq(("a", i.toLong, i.toLong)).toDF("key", "value", "seq")))
-    assert(kc.read(spark).collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      == Set(("a", 4L)))
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root, "vacuum.log")) &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(root, "v2-backup")),
-      "stray files must survive the vacuum untouched")
   }
 
   test("a lazy reader stays valid across retain-1 commits (the documented window)") {

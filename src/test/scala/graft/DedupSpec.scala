@@ -204,4 +204,21 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cand.size < allPairs / 5,
       s"bucketing must prune the pair space (|cand|=${cand.size} of $allPairs)")
   }
+
+  test("dedup_embedding_lsh raises on embeddings shorter than its 64 planes") {
+    import spark.implicits._
+    // a 32-dim corpus: each plane's 64 weights would zip against 32
+    // nulls, whose bits silently read 0 — the query must refuse instead
+    val dir = java.nio.file.Files.createTempDirectory("lsh-short").toString
+    (0 until 20).map(i => (i.toLong, Seq.tabulate(32)(d => ((i * 7 + d) % 11).toFloat)))
+      .toDF("vec_id", "embedding")
+      .write.parquet(s"$dir/embeddings.parquet")
+    val e = intercept[Exception](
+      graft.queries.DedupQueries.dedupEmbeddingLsh(spark, dir).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains(
+      "dedup_embedding_lsh needs embeddings of at least 64 dims")),
+      s"expected the named short-embedding error, got: ${msgs.mkString(" | ")}")
+  }
 }

@@ -1673,28 +1673,6 @@ class GraftClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(client.count("rz") == 1L)
   }
 
-  test("a collection written by the legacy layout opens and migrates") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-legacy-cl").toString
-    val client = new GraftClient(spark, root)
-    client.createCollection("old", dim = 2)
-    // fabricate the pre-bucketed layout at the collection's data path
-    val legacy = new graft.streaming.KeyedCollection(
-      client.describe("old").dataPath,
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "key STRING, vec ARRAY<FLOAT>, meta MAP<STRING,STRING>, ingest_ts TIMESTAMP, seq BIGINT"))
-    legacy.commit(Seq(
-      ("a", Seq(1.0f, 0.0f), Map("k" -> "1"), new java.sql.Timestamp(0L), 3L),
-      ("b", Seq(0.0f, 1.0f), Map("k" -> "2"), new java.sql.Timestamp(0L), 5L)
-    ).toDF("key", "vec", "meta", "ingest_ts", "seq"))
-    // first client op detects + migrates, then everything works on top
-    val hit = client.search("old", Array(1.0f, 0.0f), k = 1).head()
-    assert(hit.getAs[String]("vector_key") == "a")
-    client.upsert("old", Seq(("c", Seq(0.5f, 0.5f), Map.empty[String, String]))
-      .toDF("key", "vec", "meta"))
-    assert(client.search("old", Array(1.0f, 0.0f), k = 10).count() == 3)
-  }
-
   test("cosine and dot metrics order correctly") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-client2").toString

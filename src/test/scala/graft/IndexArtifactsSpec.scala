@@ -1,0 +1,216 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+
+import graft.api.GraftClient
+
+/** The index readers REQUIRE every artifact a current build writes (the
+  * probe table, cell radii, binary radii, `pq_recon`, `hnsw_meta`): a
+  * stamped index without one raises a missing-artifact error instead of
+  * serving a fallback. This spec pins the writer side of that contract —
+  * every build, maintained commit and rebucket leaves each artifact in
+  * place — and the crash side: a failure between the artifact writes and
+  * the VERSION stamp leaves an unstamped or stale index, which answers
+  * exactly through the snapshot scan rather than raising. */
+class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val spark = SparkSession.builder()
+    .master("local[4]")
+    .appName("index-artifacts-spec")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  private final class InjectedCrash
+      extends RuntimeException("injected crash before the VERSION stamp")
+
+  /** A client whose vector-index stamp throws while `armed`. */
+  private final class CrashingClient(root: String) extends GraftClient(spark, root) {
+    @volatile var armed = false
+    override protected def beforeIndexStamp(): Unit =
+      if (armed) throw new InjectedCrash
+  }
+
+  private case class Family(indexType: String, binary: Boolean,
+                            artifacts: Seq[String])
+
+  private val families = Seq(
+    Family("IVF_FLAT", binary = false,
+      Seq("cells", "centroids", "probe_centroids", "cell_radii")),
+    Family("IVF_SQ8", binary = false,
+      Seq("cells", "centroids", "probe_centroids", "cell_radii", "sq8cells")),
+    Family("IVF_PQ", binary = false,
+      Seq("cells", "centroids", "probe_centroids", "cell_radii", "pqcells",
+        "pq_codebooks", "pq_recon")),
+    Family("HNSW", binary = false, Seq("hnsw_graphs", "hnsw_meta")),
+    Family("BIN_IVF_FLAT", binary = true,
+      Seq("cells", "bin_centroids", "bin_radii")))
+
+  private def floatVec(seed: Int): Seq[Float] = {
+    val r = new scala.util.Random(seed)
+    Seq.fill(8)(r.nextFloat())
+  }
+
+  private def binVec(seed: Int): Seq[Long] = {
+    val r = new scala.util.Random(seed)
+    Seq.fill(2)(r.nextLong())
+  }
+
+  private def create(c: GraftClient, f: Family): Unit =
+    if (f.binary)
+      c.createCollection("c", dim = 128, metric = "hamming",
+        indexType = f.indexType, nlist = 4, buckets = 4,
+        vectorType = "BINARY_VECTOR")
+    else
+      c.createCollection("c", dim = 8, indexType = f.indexType, nlist = 4,
+        buckets = 4, pqNbits = if (f.indexType == "IVF_PQ") 4 else 8)
+
+  /** Upserts (key, seed) rows — the seed determines the vector. */
+  private def upsert(c: GraftClient, f: Family, rows: Seq[(String, Int)]): Unit = {
+    import spark.implicits._
+    val df: DataFrame =
+      if (f.binary) rows.map { case (k, s) => (k, binVec(s), Map.empty[String, String]) }
+        .toDF("key", "vec", "meta")
+      else rows.map { case (k, s) => (k, floatVec(s), Map.empty[String, String]) }
+        .toDF("key", "vec", "meta")
+    c.upsert("c", df)
+  }
+
+  /** Brute-force top-10 keys over the live model, (distance, key) order. */
+  private def exactTop(f: Family, live: Map[String, Int], q: Int): Seq[String] =
+    live.toSeq.map { case (k, s) =>
+      val d =
+        if (f.binary) binVec(s).zip(binVec(q))
+          .map { case (a, b) => java.lang.Long.bitCount(a ^ b) }.sum.toDouble
+        else math.sqrt(floatVec(s).zip(floatVec(q))
+          .map { case (a, b) => val x = a.toDouble - b; x * x }.sum)
+      (d, k)
+    }.sorted.take(10).map(_._2)
+
+  private def searchTop(c: GraftClient, f: Family, q: Int): Seq[String] = {
+    val df =
+      if (f.binary) c.searchBinary("c", binVec(q).toArray, k = 10)
+      else c.search("c", floatVec(q).toArray, k = 10)
+    df.collect().map(_.getString(0)).toSeq
+  }
+
+  private def ivfDir(c: GraftClient): java.nio.file.Path =
+    java.nio.file.Paths.get(s"${c.describe("c").dataPath}-ivf")
+
+  private def stamped(c: GraftClient): Boolean =
+    java.nio.file.Files.exists(ivfDir(c).resolve("VERSION"))
+
+  private def fresh(c: GraftClient): Boolean =
+    c.listIndexes("c").collect()
+      .exists(r => r.getString(1) == "vec" && r.getBoolean(2))
+
+  private def assertArtifacts(c: GraftClient, f: Family, when: String): Unit = {
+    assert(stamped(c), s"${f.indexType} $when: no VERSION stamp")
+    f.artifacts.foreach { a =>
+      assert(java.nio.file.Files.exists(ivfDir(c).resolve(a)),
+        s"${f.indexType} $when: stamped index lacks $a")
+    }
+    assert(fresh(c), s"${f.indexType} $when: index must read fresh")
+  }
+
+  private def newRoot(): String =
+    java.nio.file.Files.createTempDirectory("index-artifacts").toString
+
+  test("every build, maintained commit and rebucket leaves each required artifact") {
+    families.foreach { f =>
+      val c = new GraftClient(spark, newRoot())
+      create(c, f)
+      var live = (0 until 120).map(i => f"k$i%03d" -> i).toMap
+      upsert(c, f, live.toSeq)
+      c.buildIndex("c", nlist = 4)
+      assertArtifacts(c, f, "after buildIndex")
+
+      // 5 new keys, 5 overwrites, then 3 deletes: two maintained commits
+      val batch = (120 until 125).map(i => f"k$i%03d" -> i) ++
+        (0 until 5).map(i => f"k$i%03d" -> (1000 + i))
+      upsert(c, f, batch)
+      c.deleteByKeys("c", Seq("k010", "k011", "k012"))
+      live = live ++ batch -- Seq("k010", "k011", "k012")
+      assertArtifacts(c, f, "after a maintained upsert + delete")
+
+      // rebucket re-homes the store and drops the index: nothing stamped
+      // is left behind without its artifacts, and a rebuild has them all
+      c.rebucket("c", 8)
+      assert(!stamped(c), s"${f.indexType}: rebucket must not leave a stamp")
+      assert(searchTop(c, f, 7) == exactTop(f, live, 7))
+      c.buildIndex("c", nlist = 4)
+      assertArtifacts(c, f, "after rebucket + buildIndex")
+    }
+  }
+
+  test("a crash between the artifact writes and the VERSION stamp reads as " +
+       "stale (exact answers), not as a missing artifact") {
+    families.foreach { f =>
+      val c = new CrashingClient(newRoot())
+      create(c, f)
+      var live = (0 until 120).map(i => f"k$i%03d" -> i).toMap
+      upsert(c, f, live.toSeq)
+
+      // a first build dies before its stamp: unstamped → exact scan
+      c.armed = true
+      intercept[InjectedCrash](c.buildIndex("c", nlist = 4))
+      c.armed = false
+      assert(!stamped(c) && !fresh(c))
+      Seq(3, 77).foreach(q =>
+        assert(searchTop(c, f, q) == exactTop(f, live, q),
+          s"${f.indexType}: unstamped build must answer exactly (q=$q)"))
+
+      if (f.indexType != "HNSW") { // HNSW commits do not restamp
+        c.buildIndex("c", nlist = 4)
+        assert(fresh(c))
+        // a maintenance refresh dies before its stamp: the store commit
+        // is published, the index stays at the old stamp → stale
+        val batch = (120 until 130).map(i => f"k$i%03d" -> i) :+ ("k000" -> 500)
+        c.armed = true
+        intercept[InjectedCrash](upsert(c, f, batch))
+        c.armed = false
+        live = live ++ batch
+        assert(!fresh(c), s"${f.indexType}: a crashed refresh must read stale")
+        Seq(3, 77, 500).foreach(q =>
+          assert(searchTop(c, f, q) == exactTop(f, live, q),
+            s"${f.indexType}: stale index must answer exactly (q=$q)"))
+        // the next commit succeeds and the index stays stale, not wrong
+        c.deleteByKeys("c", Seq("k001"))
+        live = live - "k001"
+        assert(!fresh(c))
+        assert(searchTop(c, f, 1) == exactTop(f, live, 1))
+      }
+      // buildIndex is the recovery
+      c.buildIndex("c", nlist = 4)
+      assertArtifacts(c, f, "after the recovery build")
+    }
+  }
+
+  test("a stamped index missing a required artifact raises the missing-artifact error") {
+    Seq("IVF_FLAT" -> "cell_radii", "HNSW" -> "hnsw_meta",
+        "BIN_IVF_FLAT" -> "bin_radii").foreach { case (it, artifact) =>
+      val f = families.find(_.indexType == it).get
+      val root = newRoot()
+      val c = new GraftClient(spark, root)
+      create(c, f)
+      upsert(c, f, (0 until 60).map(i => f"k$i%03d" -> i))
+      c.buildIndex("c", nlist = 4)
+      val path = ivfDir(c).resolve(artifact)
+      graft.streaming.BucketedKeyedCollection.deleteTree(path)
+      // a new client: nothing of the index is cached yet. Binary top-k
+      // needs no radii, so the binary family reads them through its
+      // range search
+      val fresh = new GraftClient(spark, root)
+      val e = intercept[IllegalStateException](
+        if (f.binary)
+          fresh.searchBinaryRange("c", binVec(3).toArray, radius = 64).collect()
+        else searchTop(fresh, f, 3))
+      assert(e.getMessage.contains(path.toString) &&
+        e.getMessage.contains("rebuild the index"), s"$it: ${e.getMessage}")
+    }
+  }
+}

@@ -461,41 +461,6 @@ class ScalarIndexSpec extends AnyFunSuite {
     assert(after("SCALAR") && after("IVF_FLAT") && !after("TEXT"))
   }
 
-  test("append onto a pre-zone-map layout creates NO partial zones — range stays full-scan-correct") {
-    import spark.implicits._
-    val c = mkClient()
-    c.createCollection("col", dim = 4)
-    c.upsert("col", (0 until 200).map { i =>
-      val price = if (i == 7) "5000" else if (i == 42) "6000" else (i % 10).toString
-      (s"k$i", vec(i), Map("price" -> price))
-    }.toDF("key", "vec", "meta"))
-    c.createScalarIndex("col", "price")
-    // simulate a layout built before zone maps: values exist, zones don't
-    val zonesDir = java.nio.file.Paths.get(
-      s"${c.describe("col").dataPath}-scalar/price/zones")
-    graft.streaming.BucketedKeyedCollection.deleteTree(zonesDir)
-    // an append (per-commit refresh) of a LOW-price batch: the old bug
-    // recreated zones/ covering only this batch, and bucketsForRange —
-    // keying completeness off the dir's existence — then pruned every
-    // bucket absent from the batch, silently dropping k7/k42
-    c.upsert("col", Seq(("kA", vec(11), Map("price" -> "3")))
-      .toDF("key", "vec", "meta"))
-    assert(!java.nio.file.Files.exists(zonesDir),
-      "appendPairs must not create a partial zones dir on a legacy layout")
-    val hi = c.queryWhere("col", c.milvusFilter("price > 1000"))
-    assert(hi.select("key").collect().map(_.getString(0)).toSet ==
-      Set("k7", "k42"),
-      "range query must fall back to the full scan, never a partial-zone prune")
-    // the next full build (createScalarIndex re-run = compaction)
-    // restores complete zones and the prune
-    c.createScalarIndex("col", "price")
-    assert(java.nio.file.Files.exists(zonesDir))
-    val pruned = c.queryWhere("col", c.milvusFilter("price > 1000"))
-    assert(pruned.select("key").collect().map(_.getString(0)).toSet ==
-      Set("k7", "k42"))
-    assert(bucketDirsRead(pruned).size <= 2)
-  }
-
   test("scalarIndexZoneStats: zone_rows drifts up per append, compaction folds it to 1") {
     import spark.implicits._
     val c = mkClient()

@@ -197,35 +197,4 @@ class SparseIndexSpec extends AnyFunSuite {
     SparseIndex.compact(spark, dir)
     assert(SparseIndex.segmentCount(dir) == 1 && ids() == expect)
   }
-
-  test("pre-segment layouts: queries serve unchanged, append names the rebuild recovery") {
-    // simulate an index written before segment support: unsuffixed
-    // postings/ + norms/ dirs and a 2-line META
-    val dir = java.nio.file.Files.createTempDirectory("sparse-legacy").toString
-    SparseIndex.build(postingsDf, dir, buckets = 16)
-    val meta = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(dir, "META")).split("\n")
-    val gen = meta(2).trim
-    java.nio.file.Files.move(java.nio.file.Paths.get(dir, s"postings-$gen"),
-      java.nio.file.Paths.get(dir, "postings"))
-    java.nio.file.Files.move(java.nio.file.Paths.get(dir, s"norms-$gen"),
-      java.nio.file.Paths.get(dir, "norms"))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "META"),
-      s"${meta(0)}\n${meta(1)}\n")
-    val got = SparseIndex.topK(spark, dir, query, k = 12)
-      .collect().map(_.getLong(0)).toSeq
-    val raw = SparseSearch.topK(postingsDf, query, k = 12)
-      .collect().map(_.getLong(0)).toSeq
-    assert(got == raw, "legacy layout must keep serving")
-    val e = intercept[IllegalStateException](
-      SparseIndex.append(postingsDf.limit(1), dir))
-    assert(e.getMessage.contains("rebuild"),
-      s"append on a legacy layout must name the recovery, got: ${e.getMessage}")
-    // and a rebuild upgrades in place (sweeping the legacy dirs)
-    SparseIndex.build(postingsDf, dir, buckets = 16)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "postings")))
-    SparseIndex.append(toPostings(Map(999L -> Map(2L -> 5.0))), dir)
-    assert(SparseIndex.topK(spark, dir, query, k = 81)
-      .collect().map(_.getLong(0)).contains(999L))
-  }
 }

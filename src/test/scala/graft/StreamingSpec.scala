@@ -327,35 +327,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lastPerKey == batch, s"stateful stream $lastPerKey vs batch $batch")
   }
 
-  test("KeyedCollection: streaming upsert into versioned parquet snapshots") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-coll").toString
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "key STRING, bucket STRING, tags MAP<STRING,STRING>, event_ts TIMESTAMP, seq BIGINT")
-    val coll = new graft.streaming.KeyedCollection(root, schema)
-    assert(coll.read(spark).count() == 0, "empty before first commit")
-
-    val stream = MemoryStream[(String, Timestamp, Long)]
-    val parsed = StreamingIngest.parseEvents(
-      stream.toDF().toDF("value", "event_ts", "seq"), tsCol = Some("event_ts"))
-    val q = parsed.writeStream.outputMode("append")
-      .foreachBatch(coll.upsertBatch(spark) _).start()
-    stream.addData(eventLog.take(3))
-    q.processAllAvailable()
-    val mid = coll.read(spark).select("key", "seq").as[(String, Long)].collect().toSet
-    assert(mid == Set(("a.txt", 3L), ("b.txt", 2L)), s"after first batch: $mid")
-    stream.addData(eventLog.drop(3))
-    q.processAllAvailable()
-    q.stop()
-    val fin = coll.read(spark).select("key", "seq").as[(String, Long)].collect().toSet
-    assert(fin == Set(("a.txt", 3L), ("c.txt", 7L)), s"final: $fin")
-    // snapshot isolation artifacts: CURRENT pointer + at most 2 versions
-    val files = new java.io.File(root).list().toSeq
-    assert(files.contains("CURRENT"))
-    assert(files.count(_.startsWith("v")) <= 2, s"old versions pruned: $files")
-  }
-
   test("Trigger.AvailableNow drains all pending events before answering (A20)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
