@@ -2087,8 +2087,13 @@ class GraftClient(spark: SparkSession, root: String,
   /** Milvus `load_collection` (`partitions` nonempty = `load_partitions`):
     * pin the named partitions' CURRENT snapshots in executor memory —
     * one persisted columnar frame per partition store, plus the live
-    * vector-index layouts (IVF cells, SQ8 codes) — so repeated searches
-    * scan RAM instead of re-reading parquet. Returns the rows
+    * vector-index layouts — so repeated searches scan RAM instead of
+    * re-reading parquet. The centroid-partitioned layouts (IVF_FLAT and
+    * BIN_IVF_FLAT cells, SQ8 and PQ codes) load as one cached RDD with
+    * one cell per partition: a probe selects partitions, so a search runs
+    * one task per probed cell and its generated code does not depend on
+    * the probe set (see [[cellsFrame]]); HNSW graph blobs load as a
+    * persisted frame. Returns the rows
     * materialized (Milvus's load also waits for full load). Unlike
     * Milvus, loading is OPTIONAL — an unloaded collection still searches
     * straight from parquet; load is the hot-collection lever, the moral
@@ -2119,17 +2124,12 @@ class GraftClient(spark: SparkSession, root: String,
       // them nothing). SQ8 warms BOTH layouts: stage 1 reads the codes,
       // range search reads the float cells.
       liveIndex(pm, coll).foreach { idx =>
+        val all = GraftClient.AllCells
         if (sq8Indexed(pm))
-          loadedIndexFrame(coll, sq8CellsPath(pm), idx.version,
-            () => Sq8Index.loadQuantized(spark, sq8CellsPath(pm),
-              Some(sq8CellsSchema))).count()
+          cellsFrame(coll, sq8CellsPath(pm), sq8CellsSchema, idx.version, all).count()
         if (pqIndexed(pm)) // PQ warms its codes like SQ8 does
-          loadedIndexFrame(coll, pqCellsPath(pm), idx.version,
-            () => PqIndex.loadEncoded(spark, pqCellsPath(pm),
-              Some(pqCellsSchema))).count()
-        loadedIndexFrame(coll, cellsPath(pm), idx.version,
-          () => IvfIndex.loadIndexed(spark, cellsPath(pm),
-            Some(cellsSchema))).count()
+          cellsFrame(coll, pqCellsPath(pm), pqCellsSchema, idx.version, all).count()
+        cellsFrame(coll, cellsPath(pm), cellsSchema, idx.version, all).count()
       }
       // HNSW warms its graph blobs (liveIndex is None for graph layouts;
       // servable covers the tail era — graphs serve across commits)
@@ -2140,7 +2140,7 @@ class GraftClient(spark: SparkSession, root: String,
       // BIN_IVF_FLAT warms its cell layout (liveIndex is None for binary
       // collections too — freshness resolves through loadBinIndex)
       liveBinIndex(pm, coll).foreach { case (_, v) =>
-        binCells(pm, coll, v).count()
+        binCells(pm, coll, v, GraftClient.AllCells).count()
       }
       n
     }.sum
@@ -2170,6 +2170,37 @@ class GraftClient(spark: SparkSession, root: String,
         .indexFrame(path, version, mk, () => coll.isLoaded)
         .getOrElse(mk())
     else mk()
+
+  /** The `choice` cells of the centroid-partitioned index layout at
+    * `path` (IVF_FLAT / BIN_IVF_FLAT cells, SQ8 / PQ codes) stamped at
+    * `version` — the ONE place a search selects cells. Loaded: the
+    * partitions of the cached cell layout that hold those cells (see
+    * [[graft.streaming.BucketedKeyedCollection.CellLayout]]; the choice
+    * lives in the RDD, so no probe set compiles code and an unchosen
+    * cell runs no task). Otherwise (including a release racing the
+    * build): the parquet layout with the choice as a partition filter —
+    * a directory prune, evaluated interpreted at planning. */
+  private def cellsFrame(coll: BucketedKeyedCollection, path: String,
+      schema: StructType, version: Long,
+      choice: GraftClient.CellChoice): DataFrame = {
+    val read = () => spark.read.schema(schema).parquet(path)
+    val layout =
+      if (!coll.isLoaded) None
+      else graft.streaming.BucketedKeyedCollection
+        .cellLayout(path, version, read, () => coll.isLoaded)
+    (choice, layout) match {
+      case (GraftClient.KeepCells(cs), Some(l)) => l.select(spark, cs.toSet)
+      case (GraftClient.DropCells(cs), Some(l)) =>
+        val dropped = cs.toSet
+        l.select(spark, c => !dropped(c))
+      case (GraftClient.AllCells, Some(l)) => l.select(spark, _ => true)
+      case (GraftClient.KeepCells(cs), None) if cs.isEmpty => read().filter(lit(false))
+      case (GraftClient.KeepCells(cs), None) => read().filter(col("centroidId").isin(cs: _*))
+      case (GraftClient.DropCells(cs), None) if cs.nonEmpty =>
+        read().filter(!col("centroidId").isin(cs: _*))
+      case (_, None) => read()
+    }
+  }
 
   /** Milvus `get_load_state`: Loaded / PartiallyLoaded (some partitions
     * pinned — e.g. `loadCollection(name, partitions = ...)`) /
@@ -4436,8 +4467,7 @@ class GraftClient(spark: SparkSession, root: String,
     val coll = collection(pm)
     val base = liveBinIndex(pm, coll) match {
       case Some((quant, v)) =>
-        binCells(pm, coll, v)
-          .filter(col("centroidId").isin(quant.probes(q, nprobe): _*))
+        binCells(pm, coll, v, GraftClient.KeepCells(quant.probes(q, nprobe)))
       case None => scalarPrunedRead(pm, coll, filter)
     }
     binProject(pm, filter.fold(base)(base.filter), typedLit(q))
@@ -4449,11 +4479,10 @@ class GraftClient(spark: SparkSession, root: String,
       : Option[(graft.index.BinIvfIndex.BinQuantizer, Long)] =
     loadBinIndex(pm).filter { case (_, v) => coll.currentVersion.contains(v) }
 
-  /** The BIN_IVF_FLAT cell layout stamped at `v` (loaded-frame cached). */
+  /** The `choice` cells of the BIN_IVF_FLAT layout stamped at `v`. */
   private def binCells(pm: CollectionMeta, coll: BucketedKeyedCollection,
-      v: Long): DataFrame =
-    loadedIndexFrame(coll, cellsPath(pm), v,
-      () => spark.read.schema(binCellsSchema).parquet(cellsPath(pm)))
+      v: Long, choice: GraftClient.CellChoice): DataFrame =
+    cellsFrame(coll, cellsPath(pm), binCellsSchema, v, choice)
 
   /** The binary family's distance column against query words `q`:
     * Hamming (exact small ints, cast double for the shared result
@@ -4516,17 +4545,14 @@ class GraftClient(spark: SparkSession, root: String,
       val coll = collection(pm)
       val base = liveBinIndex(pm, coll) match {
         case Some((quant, v)) if pm.metric == "hamming" =>
-          val cellsDf = binCells(pm, coll, v)
           // a cell is droppable iff its MIN possible distance
           // (d(q, cᵢ) − radiusᵢ, triangle inequality) is >= radius —
           // every row it holds would fail `dist < radius`
-          val dropped = readBinRadii(pm).collect {
+          binCells(pm, coll, v, GraftClient.DropCells(readBinRadii(pm).collect {
             case (cell, rc)
               if quant.hamming(quant.centers(cell), q) - rc >=
                 math.ceil(radius) => cell
-          }.toSeq
-          if (dropped.isEmpty) cellsDf
-          else cellsDf.filter(!col("centroidId").isin(dropped: _*))
+          }.toSeq))
         case _ => scalarPrunedRead(pm, coll, tFilter)
       }
       binProject(pm, tFilter.fold(base)(base.filter), typedLit(q))
@@ -4599,17 +4625,13 @@ class GraftClient(spark: SparkSession, root: String,
         // pinned snapshot
         val base = idx match {
           case Some((quant, v, radii)) if coll.currentVersion.contains(v) =>
-            val cellsDf = binCells(pm, coll, v)
-            cursor match {
-              case Some((d0, _)) =>
-                val dropped = radii.collect {
-                  case (cell, rc)
-                    if quant.hamming(quant.centers(cell), q) + rc < d0 => cell
-                }.toSeq
-                if (dropped.isEmpty) cellsDf
-                else cellsDf.filter(!col("centroidId").isin(dropped: _*))
-              case _ => cellsDf
-            }
+            binCells(pm, coll, v, cursor match {
+              case Some((d0, _)) => GraftClient.DropCells(radii.collect {
+                case (cell, rc)
+                  if quant.hamming(quant.centers(cell), q) + rc < d0 => cell
+              }.toSeq)
+              case _ => GraftClient.AllCells
+            })
           case _ => pinnedSnapshot(pm, coll, pin)
         }
         binProject(pm, tFilter.fold(base)(base.filter), typedLit(q))
@@ -4675,7 +4697,7 @@ class GraftClient(spark: SparkSession, root: String,
           }
           val qCells = q.withColumn("centroidId",
             explode(probeCells(col("qcodes"))))
-          binCells(pm, coll, v)
+          binCells(pm, coll, v, GraftClient.AllCells)
             .join(broadcast(qCells), Seq("centroidId"))
             .select(col("qid"), col("qcodes"), col("key"), col("vec"),
               col("meta"), col("ingest_ts"))
@@ -4860,15 +4882,7 @@ class GraftClient(spark: SparkSession, root: String,
       choose: LoadedIndex => GraftClient.CellChoice): DataFrame =
     liveIdx match {
       case Some(idx) if indexableMetric(m.metric) =>
-        val cellsDf = loadedIndexFrame(coll, cellsPath(m), idx.version,
-          () => IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema)))
-        choose(idx) match {
-          case GraftClient.KeepCells(cs) if cs.isEmpty => cellsDf.filter(lit(false))
-          case GraftClient.KeepCells(cs) => cellsDf.filter(col("centroidId").isin(cs: _*))
-          case GraftClient.DropCells(cs) if cs.isEmpty => cellsDf
-          case GraftClient.DropCells(cs) => cellsDf.filter(!col("centroidId").isin(cs: _*))
-          case GraftClient.AllCells => cellsDf
-        }
+        cellsFrame(coll, cellsPath(m), cellsSchema, idx.version, choose(idx))
       case _ => exactScan
     }
 
@@ -4929,10 +4943,8 @@ class GraftClient(spark: SparkSession, root: String,
     // the same float-rounded vector that probes the cells
     val qa = if (m.metric == "cosine") normalizeQuery(qvec) else qvec
     val q1 = typedLit(qa)
-    val cells = idx.probe.probes(qa, nprobe)
-    val sq8 = loadedIndexFrame(coll, sq8CellsPath(m), idx.version,
-        () => Sq8Index.loadQuantized(spark, sq8CellsPath(m), Some(sq8CellsSchema)))
-      .filter(col("centroidId").isin(cells: _*))
+    val sq8 = cellsFrame(coll, sq8CellsPath(m), sq8CellsSchema, idx.version,
+      GraftClient.KeepCells(idx.probe.probes(qa, nprobe)))
     val metaFiltered = filter.fold(sq8)(sq8.filter)
     // the TEXT_MATCH gate applies BEFORE the stage-1 depth bound, like
     // the metadata filter: a gated-out candidate must not consume
@@ -4971,15 +4983,14 @@ class GraftClient(spark: SparkSession, root: String,
     val qa = if (m.metric == "cosine") normalizeQuery(qvec) else qvec
     val cells = idx.probe.probes(qa, nprobe)
     // per-cell ADC tables, indexed by centroidId (null ⇔ unprobed — the
-    // isin filter below guarantees the kernel never reads one); ~nprobe
+    // cell selection below guarantees the kernel never reads one); ~nprobe
     // · m·ksub doubles, broadcast per query and reclaimed by the
     // ContextCleaner like any expired plan broadcast
     val luts = Array.fill[Array[Double]](idx.assign.nlist)(null)
     cells.foreach(c => luts(c) = pq.lutFor(qa, idx.assign.centers(c)))
     val lutsBc = spark.sparkContext.broadcast(luts)
-    val codes = loadedIndexFrame(coll, pqCellsPath(m), idx.version,
-        () => PqIndex.loadEncoded(spark, pqCellsPath(m), Some(pqCellsSchema)))
-      .filter(col("centroidId").isin(cells: _*))
+    val codes = cellsFrame(coll, pqCellsPath(m), pqCellsSchema, idx.version,
+      GraftClient.KeepCells(cells))
     val metaFiltered = filter.fold(codes)(codes.filter)
     val cand = gate.fold(metaFiltered)(g =>
         metaFiltered.join(g, Seq("key"), "left_semi"))
@@ -6079,9 +6090,8 @@ class GraftClient(spark: SparkSession, root: String,
       private val qa = if (pm.metric == "cosine") normalizeQuery(qvec) else qvec
       private val q1 = typedLit(qa)
       private val cells = idx.probe.probes(qa, nprobe)
-      private def codes = Sq8Index
-        .loadQuantized(spark, sq8CellsPath(pm), Some(sq8CellsSchema))
-        .filter(col("centroidId").isin(cells: _*))
+      private def codes = cellsFrame(coll, sq8CellsPath(pm), sq8CellsSchema,
+        idx.version, GraftClient.KeepCells(cells))
       override protected def s1Frame: DataFrame = {
         val mf = filter.fold(codes)(codes.filter)
         gate.fold(mf)(g => mf.join(g, Seq("key"), "left_semi"))
@@ -6122,9 +6132,8 @@ class GraftClient(spark: SparkSession, root: String,
       private val luts = Array.fill[Array[Double]](idx.assign.nlist)(null)
       cells.foreach(c => luts(c) = pq.lutFor(qa, idx.assign.centers(c)))
       private val lutsBc = spark.sparkContext.broadcast(luts)
-      private def codes = loadedIndexFrame(coll, pqCellsPath(pm), idx.version,
-          () => PqIndex.loadEncoded(spark, pqCellsPath(pm), Some(pqCellsSchema)))
-        .filter(col("centroidId").isin(cells: _*))
+      private def codes = cellsFrame(coll, pqCellsPath(pm), pqCellsSchema,
+        idx.version, GraftClient.KeepCells(cells))
       override protected def s1Frame: DataFrame = {
         val mf = filter.fold(codes)(codes.filter)
         gate.fold(mf)(g => mf.join(g, Seq("key"), "left_semi"))
@@ -6711,8 +6720,8 @@ class GraftClient(spark: SparkSession, root: String,
             (if (normalize) l2_normalize(col("qvec")) else col("qvec")).as("__qv"))
           .withColumn("centroidId", explode(
             probeCellsCol(m, idx, col("__qv"), normalize = false, nprobe)))
-        val scanned = loadedIndexFrame(coll, pqCellsPath(m), idx.version,
-            () => PqIndex.loadEncoded(spark, pqCellsPath(m), Some(pqCellsSchema)))
+        val scanned = cellsFrame(coll, pqCellsPath(m), pqCellsSchema,
+            idx.version, GraftClient.AllCells)
           .join(probed, Seq("centroidId"))
         val stage1 = filter.fold(scanned)(scanned.filter)
           .select(col("qid"),

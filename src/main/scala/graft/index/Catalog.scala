@@ -143,8 +143,6 @@ class Catalog(root: String) {
   // extraVecFields round-trip as one string field: field names are
   // validated identifier-shaped ([A-Za-z0-9_]+) and the other parts are
   // enum/int/bool, so ':'/';' separators can never appear in a value.
-  // A 4-part entry (a pre-family catalog's: dense, non-nullable) still
-  // parses.
   private def renderVecFields(fs: Seq[VecField]): String =
     fs.map(f => s"${f.name}:${f.dim}:${f.metric}:${f.indexType}:" +
       s"${f.family}:${f.nullable}").mkString(";")
@@ -153,7 +151,6 @@ class Catalog(root: String) {
     if (s.isEmpty) Nil
     else s.split(";").toSeq.map { part =>
       part.split(":") match {
-        case Array(n, d, met, it) => VecField(n, d.toInt, met, it)
         case Array(n, d, met, it, fam, nl) =>
           VecField(n, d.toInt, met, it, fam, nl.toBoolean)
         case _ => sys.error(s"corrupt extraVecFields entry: $part")

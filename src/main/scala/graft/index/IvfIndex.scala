@@ -124,10 +124,13 @@ object IvfIndex {
     r.parquet(path)
   }
 
-  /** Top-k L2 search probing only `nprobe` cells. Over a loaded at-rest
-    * index this plans as PartitionFilters: [centroidId IN probes] →
-    * Project(dist) → TakeOrderedAndProject — the pruned-exact-scan shape
-    * (§4.3): IO touches nprobe/nlist of the data. */
+  /** Top-k L2 search probing only `nprobe` cells. Over the at-rest
+    * parquet layout this plans as PartitionFilters: [centroidId IN probes]
+    * → Project(dist) → TakeOrderedAndProject — the pruned-exact-scan
+    * shape (§4.3): IO touches nprobe/nlist of the data. (A LOADED client
+    * collection does not come through here: it selects the probed cells'
+    * partitions of its cached cell layout — GraftClient.cellsFrame — so
+    * the probe set never enters the plan.) */
   def searchL2(indexed: DataFrame, quantizer: CoarseQuantizer, vecCol: String,
                idCol: String, q: Array[Float], k: Int, nprobe: Int): DataFrame = {
     val cells = quantizer.probes(q, nprobe)

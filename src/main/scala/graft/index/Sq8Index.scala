@@ -61,8 +61,11 @@ object Sq8Index {
   }
 
   /** Stage 1: approximate top-k by SQ8 distance over `nprobe` probed
-    * cells. Plan shape: partition-prune → fused sq8 kernel →
-    * TakeOrderedAndProject (same as the exact search, smaller IO). */
+    * cells. Plan shape over the parquet layout: partition-prune → fused
+    * sq8 kernel → TakeOrderedAndProject (same as the exact search,
+    * smaller IO). A loaded client collection selects the probed cells'
+    * partitions of its cached codes layout instead (GraftClient.cellsFrame),
+    * with the same kernel and top-k above the scan. */
   def searchApproxL2(sq8: DataFrame, quant: IvfIndex.CoarseQuantizer,
                      idCol: String, q: Array[Float], k: Int, nprobe: Int): DataFrame = {
     val cells = quant.probes(q, nprobe)

@@ -5,7 +5,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.apache.spark.sql.types.StructType
 
@@ -427,6 +430,15 @@ object BucketedKeyedCollection {
   // is unpersisted. deleteTree (drop/rebucket/vacuum) evicts through
   // evictUnder, so no cached frame outlives its files. Frames are
   // MEMORY_AND_DISK — an oversized load spills instead of OOMing.
+  //
+  // Index layouts of a loaded root are cached per (layout path, index
+  // VERSION stamp) beside the snapshot frames, under the same loaded
+  // flag, eviction and release-race rules: the centroid-partitioned
+  // layouts as CellLayouts (one cell per RDD partition, probed by
+  // partition pruning), the HNSW graph blobs as persisted frames
+  // (indexFrame). The first search after a commit that moved the stamp
+  // re-reads and re-partitions the layout — the same per-commit re-scan
+  // the snapshot frame pays, charged to that search, not to the commit.
   private val loadedRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -457,15 +469,36 @@ object BucketedKeyedCollection {
     try df.unpersist(blocking = false)
     catch { case _: Throwable => () } // a stopped session can't unpersist
 
-  private[graft] final case class VersionedFrame(version: Long, df: DataFrame)
+  /** A cached index-layout entry for one index VERSION stamp. */
+  private[graft] sealed trait Versioned {
+    def version: Long
+    def alive: Boolean
+    def pin(): Unit
+    def drop(): Unit
+  }
 
-  // Loaded frames for INDEX layouts (IVF cells / SQ8 codes), keyed by
-  // canonical path + the index VERSION stamp. Unlike bucket dirs these
-  // layouts are maintained IN PLACE (cell dirs rewritten/deleted per
-  // refresh), so the stamp is the only safe cache key: a refresh stamps
-  // a new version (swap on next read), its in-place cell DELETES evict
-  // through deleteTree below, and rebuild-at-unchanged-version sites
-  // evict explicitly (GraftClient.buildIndex).
+  private[graft] final case class VersionedFrame(version: Long, df: DataFrame)
+      extends Versioned {
+    def alive: Boolean = sessionAlive(df)
+    def pin(): Unit = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def drop(): Unit = quietUnpersist(df)
+  }
+
+  // Loaded frames for the index layouts that are NOT split by centroid
+  // (HNSW graph blobs), keyed by canonical path + the index VERSION
+  // stamp. Unlike bucket dirs these layouts are maintained IN PLACE, so
+  // the stamp is the only safe cache key: a refresh stamps a new version
+  // (swap on next read), in-place deletes evict through deleteTree
+  // above, and rebuild-at-unchanged-version sites evict explicitly
+  // (GraftClient.buildIndex).
+  //
+  // Every version of one path reads the same parquet relation, and
+  // Spark's CacheManager keys cached data by PLAN, not by DataFrame: a
+  // superseded frame and its successor are ONE cache entry. So the
+  // superseded frame is unpersisted BEFORE the successor is persisted
+  // (the other order would uncache the successor too), and a build that
+  // lost the race is never persisted at all (unpersisting it would
+  // uncache the winner).
   private val indexFrameCache =
     new java.util.concurrent.ConcurrentHashMap[String, VersionedFrame]()
 
@@ -475,32 +508,106 @@ object BucketedKeyedCollection {
     * constructing a parquet relation over a many-dir layout launches a
     * parallel file-listing job past
     * spark.sql.sources.parallelPartitionDiscovery.threshold, and a Spark
-    * job must never run under a lock that eviction sweeps also take; a
-    * build that loses the insert race is unpersisted unmaterialized
-    * (cheap). `stillLoaded` is re-checked under the lock so a release
-    * racing the build cannot resurrect a pinned frame
-    * (loadState=NotLoaded with corpus-sized memory held). */
+    * job must never run under a lock that eviction sweeps also take.
+    * `stillLoaded` is re-checked under the lock so a release racing the
+    * build cannot resurrect a pinned frame (loadState=NotLoaded with
+    * corpus-sized memory held). */
   private[graft] def indexFrame(path: String, version: Long,
-      mk: () => DataFrame, stillLoaded: () => Boolean): Option[DataFrame] = {
+      mk: () => DataFrame, stillLoaded: () => Boolean): Option[DataFrame] =
+    versioned(indexFrameCache, path, version, mk, stillLoaded)(
+      (_, v, df) => VersionedFrame(v, df)).map(_.df)
+
+  /** A loaded centroid-partitioned index layout (IVF_FLAT and
+    * BIN_IVF_FLAT cells, SQ8 and PQ codes) stamped at `version`: ONE
+    * persisted RDD whose partition `i` holds every row of cell
+    * `cells(i)`, and nothing else. A probe selects partitions
+    * ([[select]]) instead of filtering rows, so the search plan is the
+    * same for every probe set — no per-query generated code — and a
+    * job over `n` probed cells runs `n` tasks and reads no other cell. */
+  private[graft] final case class CellLayout(version: Long,
+      rows: RDD[InternalRow], schema: StructType, cells: IndexedSeq[Int])
+      extends Versioned {
+    def alive: Boolean = !rows.sparkContext.isStopped
+    def pin(): Unit = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def drop(): Unit =
+      try rows.unpersist(blocking = false)
+      catch { case _: Throwable => () }
+
+    /** The layout's rows of the cells `keep` accepts, as a frame. */
+    def select(spark: SparkSession, keep: Int => Boolean): DataFrame = {
+      val picked = cells.indices.filter(i => keep(cells(i))).toSet
+      val rdd =
+        if (picked.size == cells.size) rows
+        else PartitionPruningRDD.create(rows, picked)
+      GraftShim.internalCreateDataFrame(spark, rdd, schema)
+    }
+  }
+
+  private object CellLayout {
+    private val CellDir = "/centroidId=(-?\\d+)/".r
+
+    /** Re-partition the parquet layout `df` (a `partitionBy(centroidId)`
+      * write at `pathKey`) one cell per partition. The cell ids come from
+      * the file listing `df` already holds — no job. */
+    def build(pathKey: String, version: Long, df: DataFrame): CellLayout = {
+      val schema = df.schema
+      val cells = df.inputFiles.toSeq
+        .flatMap(f => CellDir.findFirstMatchIn(f).map(_.group(1).toInt))
+        .distinct.sorted.toIndexedSeq
+      val slot = cells.zipWithIndex.toMap
+      val at = schema.fieldIndex("centroidId")
+      val rows: RDD[InternalRow] =
+        if (cells.isEmpty) df.sparkSession.sparkContext.emptyRDD[InternalRow]
+        else df.queryExecution.toRdd.mapPartitions { it =>
+          val toUnsafe = UnsafeProjection.create(schema)
+          it.map(r => (slot(r.getInt(at)), toUnsafe(r).copy(): InternalRow))
+        }.partitionBy(new CellPartitioner(cells.size)).values
+      CellLayout(version, rows.setName(s"$pathKey@v$version"), schema, cells)
+    }
+  }
+
+  /** Keys are already partition indexes. */
+  private final class CellPartitioner(n: Int) extends org.apache.spark.Partitioner {
+    override def numPartitions: Int = n
+    override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
+  // Loaded cell layouts, keyed like indexFrameCache (canonical path +
+  // version stamp) and invalidated the same ways. Unlike a frame, each
+  // RDD is its own cache entry, so versions of one path never alias.
+  private val cellLayoutCache =
+    new java.util.concurrent.ConcurrentHashMap[String, CellLayout]()
+
+  /** The loaded [[CellLayout]] for `path` at `version` — [[indexFrame]]'s
+    * contract (build outside the lock, loaded flag re-checked under it,
+    * superseded layout unpersisted) for the centroid-partitioned
+    * layouts. `mk` reads the parquet layout; building re-reads and
+    * re-partitions it lazily, on the first job over the new layout. */
+  private[graft] def cellLayout(path: String, version: Long,
+      mk: () => DataFrame, stillLoaded: () => Boolean): Option[CellLayout] =
+    versioned(cellLayoutCache, path, version, mk, stillLoaded)(CellLayout.build)
+
+  /** The build-or-swap shared by [[indexFrame]] and [[cellLayout]]. */
+  private def versioned[V <: Versioned](
+      cache: java.util.concurrent.ConcurrentHashMap[String, V], path: String,
+      version: Long, mk: () => DataFrame, stillLoaded: () => Boolean)(
+      build: (String, Long, DataFrame) => V): Option[V] = {
     val pathKey = Paths.get(path).toAbsolutePath.normalize.toString
-    val hit = Option(indexFrameCache.get(pathKey))
-      .filter(v => v.version == version && sessionAlive(v.df))
-    if (hit.isDefined) return hit.map(_.df)
-    val fresh = VersionedFrame(version,
-      mk().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    Option(indexFrameCache.compute(pathKey, (_, old) => {
+    def current(v: V) = v != null && v.version == version && v.alive
+    val hit = Option(cache.get(pathKey)).filter(current)
+    if (hit.isDefined) return hit
+    val fresh = build(pathKey, version, mk())
+    Option(cache.compute(pathKey, (_, old) => {
       if (!stillLoaded()) {
-        if (old != null) quietUnpersist(old.df)
-        quietUnpersist(fresh.df)
-        null
-      } else if (old != null && old.version == version && sessionAlive(old.df)) {
-        quietUnpersist(fresh.df) // lost the build race
-        old
-      } else {
-        if (old != null) quietUnpersist(old.df)
+        if (old != null) old.drop()
+        null.asInstanceOf[V]
+      } else if (current(old)) old // lost the build race: fresh never pinned
+      else {
+        if (old != null) old.drop()
+        fresh.pin()
         fresh
       }
-    })).map(_.df)
+    }))
   }
 
   /** The root's snapshot entry for exactly `rels`, building (and
@@ -544,20 +651,21 @@ object BucketedKeyedCollection {
     val slash = prefix + java.io.File.separator
     loadedRoots.removeIf(r => r == prefix || r.startsWith(slash))
     def sweep[V](m: java.util.concurrent.ConcurrentHashMap[String, V],
-        dfOf: V => DataFrame): Unit = {
+        drop: V => Unit): Unit = {
       val it = m.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
         val k = e.getKey
         if (k == prefix || k.startsWith(slash) ||
             prefix.startsWith(k + java.io.File.separator)) {
-          quietUnpersist(dfOf(e.getValue))
+          drop(e.getValue)
           it.remove()
         }
       }
     }
-    sweep(snapshotCache, (v: SnapshotCache) => v.df)
-    sweep(indexFrameCache, (v: VersionedFrame) => v.df)
+    sweep(snapshotCache, (v: SnapshotCache) => quietUnpersist(v.df))
+    sweep(indexFrameCache, (v: VersionedFrame) => v.drop())
+    sweep(cellLayoutCache, (l: CellLayout) => l.drop())
   }
 
   // Per-collection commit mutexes, keyed by canonical root. The JVM-level

@@ -17,6 +17,14 @@ object GraftShim {
   def functionRegistry(spark: SparkSession): FunctionRegistry =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
 
+  /** A frame over already-internal rows — no per-row conversion, and a
+    * plan (`Scan ExistingRDD`) whose generated code depends only on
+    * `schema`, never on which partitions of `rows` survive a prune. */
+  def internalCreateDataFrame(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** Block until every queued listener-bus event has been delivered —
     * lets a test assert "no job was launched" deterministically instead
     * of sleeping a wall-clock guess (flaky both ways under load). */

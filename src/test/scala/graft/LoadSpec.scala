@@ -140,10 +140,11 @@ class LoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = Array(0f, 0f)
     val before = client.search("ivf", q, k = 5).collect().map(_.getString(0)).toSeq
     client.loadCollection("ivf")
-    val plan = client.search("ivf", q, k = 5)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("InMemoryTableScan"),
-      s"indexed loaded search must scan the cached cells frame, plan was:\n${plan.take(1500)}")
+    val layout = client.describe("ivf").dataPath + "-ivf"
+    val loaded = client.search("ivf", q, k = 5)
+    assert(LayoutScans.of(loaded, layout) == Seq("cells"),
+      "indexed loaded search must scan the loaded cell layout, not parquet, plan was:\n" +
+        loaded.queryExecution.executedPlan.toString.take(1500))
     assert(client.search("ivf", q, k = 5).collect().map(_.getString(0)).toSeq == before,
       "loading must never change indexed results")
     // a post-load commit refreshes the index (new stamp) — the frame must
@@ -156,9 +157,8 @@ class LoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     client.buildIndex("ivf", nlist = 2)
     assert(client.search("ivf", q, k = 1).collect().head.getString(0) == "fresh")
     client.releaseCollection("ivf")
-    assert(!client.search("ivf", q, k = 5)
-      .queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
-      "release must unpin the index frame")
+    assert(LayoutScans.of(client.search("ivf", q, k = 5), layout) == Seq("parquet"),
+      "release must unpin the cell layout")
   }
 
   test("loading an IVF_SQ8 collection pins codes + cells + store: both stages ride the cache") {
@@ -172,10 +172,12 @@ class LoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = Array(0f, 0f)
     val before = client.search("sq8", q, k = 5).collect().map(_.getString(0)).toSeq
     client.loadCollection("sq8")
-    val plan = client.search("sq8", q, k = 5)
-      .queryExecution.executedPlan.toString
+    val loaded = client.search("sq8", q, k = 5)
+    val plan = loaded.queryExecution.executedPlan.toString
     assert(plan.contains("InMemoryTableScan"),
-      s"SQ8 loaded search must ride cached frames, plan was:\n${plan.take(1500)}")
+      s"SQ8 stage 2 must ride the cached store frame, plan was:\n${plan.take(1500)}")
+    assert(LayoutScans.of(loaded, client.describe("sq8").dataPath + "-ivf") == Seq("cells"),
+      s"SQ8 stage 1 must scan the loaded codes layout, not parquet, plan was:\n${plan.take(1500)}")
     assert(client.search("sq8", q, k = 5).collect().map(_.getString(0)).toSeq == before,
       "loading must never change SQ8 results")
     client.releaseCollection("sq8")

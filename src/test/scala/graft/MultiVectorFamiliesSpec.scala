@@ -995,20 +995,5 @@ class MultiVectorFamiliesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (key, v) => (key, dot(v, q)) }
       .sortBy { case (key, s) => (-s, key) }.map(_._1)
     assert(got3 == expect3)
-
-    // catalog version-compat: a pre-family 4-part entry still parses
-    // (simulated by writing the old serialization directly)
-    val c2 = mkClient()
-    c2.createCollection("old", dim = dim,
-      vectorFields = Seq(VecField("dv", 4, "l2", "FLAT")))
-    val root = c2.describe("old").dataPath.stripSuffix("/data/old")
-    val catFile = java.nio.file.Paths.get(root, "catalog", "old.json")
-    val json = new String(java.nio.file.Files.readAllBytes(catFile))
-    assert(json.contains("dv:4:l2:FLAT:FLOAT_VECTOR:false"))
-    java.nio.file.Files.write(catFile, json
-      .replace("dv:4:l2:FLAT:FLOAT_VECTOR:false", "dv:4:l2:FLAT")
-      .getBytes)
-    assert(c2.describe("old").extraVecFields ==
-      Seq(VecField("dv", 4, "l2", "FLAT")))
   }
 }
