@@ -1567,7 +1567,7 @@ class GraftClient(spark: SparkSession, root: String,
           refreshStoreIndexes(pm, coll, base(p), versions(p),
             (puts.map(_.select("key")).toSeq :+
               doomed.filter(col("__part") === p).select("key")).reduce(_ union _),
-            pre(p), puts)
+            puts)
         }
       }
     } finally {
@@ -2005,10 +2005,7 @@ class GraftClient(spark: SparkSession, root: String,
           // Session floor + Bounded/Eventually cache: this client's own
           // acknowledged write IS a resolution of the new snapshot
           recordCommitted(m.dataPath, newVersion)
-          // `current` (the pre-image) stays readable here because the
-          // store retains the previous snapshot's directories for one
-          // more commit
-          refreshStoreIndexes(m, coll, baseVersion, newVersion, tk, current, decorated)
+          refreshStoreIndexes(m, coll, baseVersion, newVersion, tk, decorated)
           Some(newVersion)
         }
       }
@@ -2021,16 +2018,14 @@ class GraftClient(spark: SparkSession, root: String,
   /** THE per-store index refresh after a commit moved `coll` from
     * `preVersion` to `newVersion`: the vector index (IVF/SQ8/PQ/HNSW/
     * binary/sparse), every extra vector field's index, and the scalar
-    * indexes. `touchKeys`, `preImage` (the touched buckets' rows before
-    * the commit) and `puts` (the decorated batch) are this store's
-    * alone — a routed commit passes each published partition its own
-    * slices. Unindexed families cost nothing: the frames are built only
-    * when some refresh gets past its no-index fast path. */
+    * indexes. `touchKeys` and `puts` (the decorated batch) are this
+    * store's alone — a routed commit passes each published partition its
+    * own slices. Unindexed families cost nothing: the frames are built
+    * only when some refresh gets past its no-index fast path. */
   private def refreshStoreIndexes(m: CollectionMeta, coll: BucketedKeyedCollection,
       preVersion: Option[Long], newVersion: Long, touchKeys: => DataFrame,
-      preImage: => DataFrame, puts: => Option[DataFrame]): Unit = {
+      puts: => Option[DataFrame]): Unit = {
     lazy val tk = touchKeys
-    lazy val pre = preImage
     lazy val dec = puts
     // the refresh frames must carry EXACTLY the canonical five
     // columns — a multi-vector batch's extra field columns would
@@ -2040,8 +2035,7 @@ class GraftClient(spark: SparkSession, root: String,
       if (m.extraVecFields.isEmpty) df else df.select(canon: _*)
     // keep a fresh IVF index fresh across the commit
     describedJobs("graft: ivf refresh") {
-      refreshIndexIncremental(m, preVersion, newVersion, tk,
-        canonical(pre), dec.map(canonical)) }
+      refreshIndexIncremental(m, preVersion, newVersion, tk, dec.map(canonical)) }
     // extra vector fields' indexes roll forward on the SAME commit
     // through the same machinery, each under its field view (the
     // field column surfaced AS vec) and its OWN index dir/lock/
@@ -2060,7 +2054,7 @@ class GraftClient(spark: SparkSession, root: String,
       }
       describedJobs(s"graft: field ${f.name} ivf refresh") {
         refreshIndexIncremental(fieldMeta(m, f.name), preVersion,
-          newVersion, tk, slice(pre), dec.map(slice)) }
+          newVersion, tk, dec.map(slice)) }
     }
     // scalar indexes roll forward by appending the BATCH's own
     // (value, bucket) pairs — batch-bounded, one pass for all
@@ -2125,11 +2119,8 @@ class GraftClient(spark: SparkSession, root: String,
       // range search reads the float cells.
       liveIndex(pm, coll).foreach { idx =>
         val all = GraftClient.AllCells
-        if (sq8Indexed(pm))
-          cellsFrame(coll, sq8CellsPath(pm), sq8CellsSchema, idx.version, all).count()
-        if (pqIndexed(pm)) // PQ warms its codes like SQ8 does
-          cellsFrame(coll, pqCellsPath(pm), pqCellsSchema, idx.version, all).count()
-        cellsFrame(coll, cellsPath(pm), cellsSchema, idx.version, all).count()
+        cellLayouts(pm).foreach { case (layout, schema) =>
+          cellsFrame(pm, coll, layout, schema, idx.delta, all).count() }
       }
       // HNSW warms its graph blobs (liveIndex is None for graph layouts;
       // servable covers the tail era — graphs serve across commits)
@@ -2139,8 +2130,8 @@ class GraftClient(spark: SparkSession, root: String,
       }
       // BIN_IVF_FLAT warms its cell layout (liveIndex is None for binary
       // collections too — freshness resolves through loadBinIndex)
-      liveBinIndex(pm, coll).foreach { case (_, v) =>
-        binCells(pm, coll, v, GraftClient.AllCells).count()
+      liveBinIndex(pm, coll).foreach { idx =>
+        binCells(pm, coll, idx, GraftClient.AllCells).count()
       }
       n
     }.sum
@@ -2171,36 +2162,95 @@ class GraftClient(spark: SparkSession, root: String,
         .getOrElse(mk())
     else mk()
 
-  /** The `choice` cells of the centroid-partitioned index layout at
-    * `path` (IVF_FLAT / BIN_IVF_FLAT cells, SQ8 / PQ codes) stamped at
-    * `version` — the ONE place a search selects cells. Loaded: the
-    * partitions of the cached cell layout that hold those cells (see
-    * [[graft.streaming.BucketedKeyedCollection.CellLayout]]; the choice
-    * lives in the RDD, so no probe set compiles code and an unchosen
-    * cell runs no task). Otherwise (including a release racing the
+  /** The `choice` cells of the centroid-partitioned index layout
+    * `layout` (IVF_FLAT / BIN_IVF_FLAT cells, SQ8 / PQ codes) as the
+    * stamp of `delta` serves them — the ONE place a search selects cells:
+    * the chosen base cells without the keys the delta supersedes, plus
+    * EVERY delta row whatever the choice (the brute-forced growing
+    * segment — cell prunes and radii concern the base alone). An empty
+    * delta plans exactly the base read. Loaded: the partitions of the
+    * cached cell layout that hold the chosen cells, keyed by the base
+    * version so it survives every commit until a fold (see
+    * [[graft.streaming.BucketedKeyedCollection.CellLayout]]); the
+    * choice, the superseded keys and the delta rows all live in the RDD,
+    * so none of them compiles code, an unchosen cell runs no task, and
+    * the delta adds none. Otherwise (including a release racing the
     * build): the parquet layout with the choice as a partition filter —
-    * a directory prune, evaluated interpreted at planning. */
-  private def cellsFrame(coll: BucketedKeyedCollection, path: String,
-      schema: StructType, version: Long,
-      choice: GraftClient.CellChoice): DataFrame = {
-    val read = () => spark.read.schema(schema).parquet(path)
-    val layout =
-      if (!coll.isLoaded) None
-      else graft.streaming.BucketedKeyedCollection
-        .cellLayout(path, version, read, () => coll.isLoaded)
-    (choice, layout) match {
-      case (GraftClient.KeepCells(cs), Some(l)) => l.select(spark, cs.toSet)
-      case (GraftClient.DropCells(cs), Some(l)) =>
-        val dropped = cs.toSet
-        l.select(spark, c => !dropped(c))
-      case (GraftClient.AllCells, Some(l)) => l.select(spark, _ => true)
-      case (GraftClient.KeepCells(cs), None) if cs.isEmpty => read().filter(lit(false))
-      case (GraftClient.KeepCells(cs), None) => read().filter(col("centroidId").isin(cs: _*))
-      case (GraftClient.DropCells(cs), None) if cs.nonEmpty =>
-        read().filter(!col("centroidId").isin(cs: _*))
-      case (_, None) => read()
+    * a directory prune, evaluated interpreted at planning — and the
+    * delta rows as one more partition. */
+  private def cellsFrame(m: CollectionMeta, coll: BucketedKeyedCollection,
+      layout: String, schema: StructType, delta: CellDelta,
+      choice: GraftClient.CellChoice): DataFrame =
+    loadedCells(m, coll, layout, schema, delta) match {
+      case Some(l) => l.select(spark, keeps(choice), supersededKeys(delta),
+        delta.broadcastRows(spark, layout, schema))
+      case None =>
+        val base = parquetCells(m, layout, schema, delta, choice)
+        delta.frame(spark, layout, schema).fold(base)(base.union)
     }
+
+  /** [[cellsFrame]] for a batch of queries: each query's probed base
+    * cells (`probed` — one row per query and probed cell, joined on
+    * `centroidId`) plus every delta row for every query (`queries` — one
+    * row per query, with `probed`'s columns but the cell). */
+  private def probedCellsFrame(m: CollectionMeta, coll: BucketedKeyedCollection,
+      layout: String, schema: StructType, delta: CellDelta,
+      probed: DataFrame, queries: DataFrame): DataFrame = {
+    val base = loadedCells(m, coll, layout, schema, delta) match {
+      case Some(l) => l.select(spark, _ => true, supersededKeys(delta))
+      case None => parquetCells(m, layout, schema, delta, GraftClient.AllCells)
+    }
+    val probedBase = base.join(probed, Seq("centroidId"))
+    delta.frame(spark, layout, schema)
+      .fold(probedBase)(d => probedBase.unionByName(d.crossJoin(queries)))
   }
+
+  /** The loaded cell layout of `layout` — keyed by the base version, so
+    * it survives every commit until a fold — when the collection is
+    * loaded. */
+  private def loadedCells(m: CollectionMeta, coll: BucketedKeyedCollection,
+      layout: String, schema: StructType, delta: CellDelta)
+      : Option[BucketedKeyedCollection.CellLayout] = {
+    val path = s"${ivfDir(m)}/$layout"
+    if (!coll.isLoaded) None
+    else BucketedKeyedCollection.cellLayout(path, delta.base,
+      () => spark.read.schema(schema).parquet(path), () => coll.isLoaded)
+  }
+
+  private def keeps(choice: GraftClient.CellChoice): Int => Boolean = choice match {
+    case GraftClient.KeepCells(cs) => cs.toSet
+    case GraftClient.DropCells(cs) => val dropped = cs.toSet; c => !dropped(c)
+    case GraftClient.AllCells => _ => true
+  }
+
+  private def supersededKeys(delta: CellDelta)
+      : Option[org.apache.spark.broadcast.Broadcast[Set[org.apache.spark.unsafe.types.UTF8String]]] =
+    if (delta.isEmpty) None else Some(delta.supersededBroadcast(spark))
+
+  /** The `choice` base cells of the parquet layout `layout`, minus the
+    * keys `delta` supersedes. */
+  private def parquetCells(m: CollectionMeta, layout: String, schema: StructType,
+      delta: CellDelta, choice: GraftClient.CellChoice): DataFrame = {
+    val read = spark.read.schema(schema).parquet(s"${ivfDir(m)}/$layout")
+    val chosen = choice match {
+      case GraftClient.KeepCells(cs) if cs.isEmpty => read.filter(lit(false))
+      case GraftClient.KeepCells(cs) => read.filter(col("centroidId").isin(cs: _*))
+      case GraftClient.DropCells(cs) if cs.nonEmpty =>
+        read.filter(!col("centroidId").isin(cs: _*))
+      case _ => read
+    }
+    if (delta.isEmpty) chosen else chosen.filter(!supersededCol(delta))
+  }
+
+  /** Whether a row's key is one `delta` supersedes — a set lookup whose
+    * generated code is the same for every set (an `isin` list would
+    * inline a comparison per key). */
+  private def supersededCol(delta: CellDelta): Column =
+    org.apache.spark.sql.GraftShim.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.GraftShim.expression(col("key")),
+        delta.superseded.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+          .toSet[Any]))
 
   /** Milvus `get_load_state`: Loaded / PartiallyLoaded (some partitions
     * pinned — e.g. `loadCollection(name, partitions = ...)`) /
@@ -2250,12 +2300,16 @@ class GraftClient(spark: SparkSession, root: String,
     *   - text postings: [[graft.index.TextIndex.compact]] (segments →
     *     one generation; index-sized I/O, never a corpus re-tokenize);
     *   - sparse postings: [[graft.index.SparseIndex.compact]] (same).
+    *   - IVF_FLAT / IVF_SQ8 / IVF_PQ / BIN_IVF_FLAT delta segments (the
+    *     primary's and each extra vector field's): folded into the base
+    *     cells — the same fold the tail-ratio clock triggers at commit —
+    *     so the on-disk cells then hold exactly the live rows;
+    *   - HNSW growing tails: folded back into the graphs.
     * The STORE itself needs no compaction: merge-commits rewrite whole
     * buckets, so deletes fold at write time — the compaction Milvus
-    * runs after the fact is built into the commit here. IVF/SQ8 cells
-    * are maintained exactly per-commit; [[buildIndex]] is the explicit
-    * rebuild knob. Returns one (partition, artifact, detail) row per
-    * compacted artifact. */
+    * runs after the fact is built into the commit here. [[buildIndex]]
+    * is the explicit rebuild knob. Returns one (partition, artifact,
+    * detail) row per compacted artifact. */
   def compact(name: String): Seq[(String, String, String)] = {
     val m = metaOrThrow(name)
     listedPartitions(m).flatMap { p =>
@@ -2326,6 +2380,13 @@ class GraftClient(spark: SparkSession, root: String,
           }
           (p, "hnsw", s"$fname tail folded")
         }
+      // IVF-family delta segments — the primary's and each extra vector
+      // field's, each under its own index dir's lock and stamp — fold
+      // into their base cells on demand (the commit-time fold, early)
+      val cellFolds = (("", pm) +: pm.extraVecFields.map(f => (f.name, fieldMeta(pm, f.name))))
+        .filter { case (_, fm) => foldCellDelta(fm) }
+        .map { case (fname, _) =>
+          (p, "ivf", if (fname.isEmpty) "delta folded" else s"$fname delta folded") }
       // NAMED sparse fields' postings accumulate one delta segment per
       // commit exactly like a sparse collection's own index (the field
       // refresh shares refreshSparseInvIncremental) — fold each on
@@ -2358,7 +2419,7 @@ class GraftClient(spark: SparkSession, root: String,
         case None => Nil
       }
       scalars ++ text ++ sparse ++ sparseOwn ++ hnsw ++ fieldHnsw ++
-        fieldSparse ++ ttl
+        cellFolds ++ fieldSparse ++ ttl
     }
   }
 
@@ -3129,28 +3190,24 @@ class GraftClient(spark: SparkSession, root: String,
     m.indexType == "BIN_IVF_FLAT" &&
       java.nio.file.Files.exists(java.nio.file.Paths.get(cellsPath(m)))
 
-  /** Per-(collection, version) trained binary quantizer — the same
+  /** Per-(collection, version) loaded binary index — the same
     * collect-once-per-version contract [[idxCache]] keeps for the float
     * centroid tables (the VERSION file is re-read every call; the
-    * nlist-row centroid collect is not). */
-  private val binIdxCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), graft.index.BinIvfIndex.BinQuantizer]()
+    * nlist-row centroid collect and the segment reads are not). */
+  private val binIdxCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), LoadedBinIndex]()
 
-  private def loadBinIndex(m: CollectionMeta)
-      : Option[(graft.index.BinIvfIndex.BinQuantizer, Long)] =
+  private def loadBinIndex(m: CollectionMeta): Option[LoadedBinIndex] =
     if (!binIndexed(m)) None
     else readVersionFile(ivfDir(m)).map { v =>
-      val it = binIdxCache.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k._1 == m.name && k._2 != v) it.remove()
-      }
-      (binIdxCache.computeIfAbsent((m.name, v), { _ =>
-        graft.index.BinIvfIndex.BinQuantizer(
+      val state = readDeltaState(m)
+      cachedAt(binIdxCache, m.name, v, state)(_.delta) {
+        LoadedBinIndex(graft.index.BinIvfIndex.BinQuantizer(
           spark.read.schema("centroid_id INT, center ARRAY<BIGINT>")
             .parquet(binCentroidsPath(m))
-            .collect().sortBy(_.getInt(0)).map(_.getSeq[Long](1).toArray))
-      }), v)
+            .collect().sortBy(_.getInt(0)).map(_.getSeq[Long](1).toArray)),
+          v, readCellDelta(m, v, state))
+      }
     }
 
   /** Whether the collection's index carries SQ8 quantized cells — the
@@ -3288,24 +3345,23 @@ class GraftClient(spark: SparkSession, root: String,
 
   private def cellRadiiPath(m: CollectionMeta) = s"${ivfDir(m)}/cell_radii"
 
-  /** Per-cell max assign-space L2 distance to the FROZEN assignment
-    * center — the triangle-inequality bound [[searchRange]] prunes cells
-    * with (`‖q−cᵢ‖ ≤ r + radiusᵢ` keeps cell i; anything farther cannot
-    * contain a point within `r` of `q`). Distances are computed in pure
-    * double arithmetic against the double centers, the same math the
-    * driver-side prune uses; the residual float(__assign)-vs-double
-    * summation slack is absorbed by [[GraftClient.RangePruneEps]].
-    * Output: one (centroidId, radius) row per NON-EMPTY cell. */
-  private def cellRadii(assigned: DataFrame,
-                        quant: IvfIndex.CoarseQuantizer): Map[Int, Double] =
-    cellStats(assigned, quant).map { case (id, (_, r)) => id -> r }
+  /** One NON-EMPTY cell of an assigned frame: its refreshed probe
+    * center, its radius and its row count. */
+  private case class CellStat(center: Array[Double], radius: Double, rows: Long)
 
   /** Per NON-EMPTY cell of `assigned` (rows with `centroidId` and
-    * `__assign`): its refreshed probe center — the `vectorCentroid`
-    * mean [[IvfIndex.refreshCentroids]] takes — and its [[cellRadii]]
-    * radius to the frozen `quant` center, from one grouped aggregate. */
+    * `__assign`), from one grouped aggregate: its refreshed probe center
+    * — the `vectorCentroid` mean [[IvfIndex.refreshCentroids]] takes —,
+    * its row count, and its radius, the max assign-space L2 distance to
+    * the FROZEN `quant` center: the triangle-inequality bound
+    * [[searchRange]] prunes cells with (`‖q−cᵢ‖ ≤ r + radiusᵢ` keeps cell
+    * i; anything farther cannot contain a point within `r` of `q`).
+    * Distances are computed in pure double arithmetic against the double
+    * centers, the same math the driver-side prune uses; the residual
+    * float(__assign)-vs-double summation slack is absorbed by
+    * [[GraftClient.RangePruneEps]]. */
   private def cellStats(assigned: DataFrame, quant: IvfIndex.CoarseQuantizer)
-      : Map[Int, (Array[Double], Double)] = {
+      : Map[Int, CellStat] = {
     import spark.implicits._
     val centers = quant.centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toSeq.toDF("centroidId", "__center")
@@ -3315,10 +3371,11 @@ class GraftClient(spark: SparkSession, root: String,
         max(expr(
           "sqrt(aggregate(zip_with(CAST(__assign AS ARRAY<DOUBLE>), __center, " +
             "(x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), " +
-            "(acc, v) -> acc + v))")).as("radius"))
+            "(acc, v) -> acc + v))")).as("radius"),
+        org.apache.spark.sql.functions.count(lit(1)).as("rows"))
       .collect().map { r =>
         val c = if (r.isNullAt(1)) null else r.getSeq[Float](1).map(_.toDouble).toArray
-        r.getInt(0) -> (c, r.getDouble(2))
+        r.getInt(0) -> CellStat(c, r.getDouble(2), r.getLong(3))
       }.toMap
   }
 
@@ -3373,12 +3430,12 @@ class GraftClient(spark: SparkSession, root: String,
     *
     *   - `centroids` — the frozen ASSIGNMENT centers. These never move
     *     after build, so any row's cell is recomputable from its vector
-    *     alone — which is what lets incremental maintenance evict a key's
-    *     old copy without a key→cell map.
+    *     alone — which is what lets a commit assign its rows to cells
+    *     without reading the index, and a fold find the cells it rewrites.
     *   - `probe_centroids` — the refreshed PER-CELL MEANS used to choose
-    *     cells at query time. Incremental commits move these toward the
-    *     cells' true current means, so probe quality tracks drift while
-    *     cell membership stays frozen.
+    *     cells at query time. Folds move these toward the cells' true
+    *     current means, so probe quality tracks drift while cell
+    *     membership stays frozen.
     *
     * Collections created with `indexType = "IVF_SQ8"` additionally get
     * SQ8-quantized cells (`qvec` binary + `qmax` double — 0.30× the bytes
@@ -3544,21 +3601,21 @@ class GraftClient(spark: SparkSession, root: String,
       // the distances are exact small ints, so unlike the float family's
       // cell_radii no fp slack term is ever needed); read the just-written
       // cells back (partition-local) like the float build does
-      writeBinRadii(binCellRadii(
-        spark.read.schema(binCellsSchema).parquet(cellsPath(m)),
-        quant.centers), m)
-      stampIndexVersion(m, version)
+      val stats = binCellStats(
+        spark.read.schema(binCellsSchema).parquet(cellsPath(m)), quant.centers)
+      writeBinRadii(stats.map { case (cell, (r, _)) => cell -> r }, m)
+      publishBase(m, version, stats.values.map(_._2).sum)
       invalidateIndexCaches(m.name)
       graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(m))
     }
 
   private def binRadiiPath(m: CollectionMeta) = s"${ivfDir(m)}/bin_radii"
 
-  /** Per-cell MAX Hamming distance to the frozen k-majority center —
-    * one fused-kernel pass over the given cells' rows; nlist-row
-    * result. */
-  private def binCellRadii(cells: DataFrame,
-      centers: Array[Array[Long]]): Map[Int, Int] = {
+  /** Per-cell MAX Hamming distance to the frozen k-majority center, and
+    * the cell's row count — one fused-kernel pass over the given cells'
+    * rows; nlist-row result. */
+  private def binCellStats(cells: DataFrame,
+      centers: Array[Array[Long]]): Map[Int, (Int, Long)] = {
     import spark.implicits._
     val centersDf = centers.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -3567,8 +3624,9 @@ class GraftClient(spark: SparkSession, root: String,
       .groupBy(col("centroidId"))
       .agg(max(graft.functions.BinaryVectorFunctions.hamming_distance(
         transform(col("vec"), w => coalesce(w, lit(0L))),
-        transform(col("__center"), w => coalesce(w, lit(0L))))).as("radius"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1).toInt).toMap
+        transform(col("__center"), w => coalesce(w, lit(0L))))).as("radius"),
+        org.apache.spark.sql.functions.count(lit(1)).as("rows"))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1).toInt, r.getLong(2))).toMap
   }
 
   private def writeBinRadii(radii: Map[Int, Int], m: CollectionMeta): Unit = {
@@ -3653,8 +3711,9 @@ class GraftClient(spark: SparkSession, root: String,
     // IVF_PQ: train per-subspace codebooks on the residuals (assign
     // space, frozen coarse centers), persist them beside the centroid
     // tables, and write the m-bytes-per-vector encoded cells. Codebooks
-    // freeze at build exactly like the assignment centers — incremental
-    // maintenance re-encodes touched cells bit-for-bit against them.
+    // freeze at build exactly like the assignment centers — commits
+    // encode their delta rows, and folds re-encode touched cells,
+    // bit-for-bit against them.
     if (m.indexType == "IVF_PQ") {
       val pqm = if (m.pqM > 0) m.pqM else PqIndex.defaultM(m.dim)
       val assignedCells = IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema))
@@ -3671,23 +3730,27 @@ class GraftClient(spark: SparkSession, root: String,
       // page PQ stage 1 on the (adc, key) keyset with a sound hold-back
       // margin instead of falling back to the float-cell drain. One more
       // fused-encode pass over the cells (codebooks are frozen, so the
-      // bound is exact for the codes just written); maintained
-      // touched-cell-exactly at every merge commit like cell_radii.
+      // bound is exact for the codes just written); recomputed for the
+      // touched cells at every fold like cell_radii.
       writePqRecon(pqReconBounds(assignedCells, centersBc, booksBc), m)
     }
     writeCentroids(quant, s"${ivfDir(m)}/centroids")
     writeCentroids(quant, s"${ivfDir(m)}/probe_centroids")
     // per-cell radii for range search's lossless prune — computed against
-    // the frozen assignment centers, maintained per-commit like the cells.
-    // Read the JUST-WRITTEN cells back rather than re-evaluating the
-    // unpersisted `indexed` plan: that lineage repeats the full snapshot
-    // scan, assignment, and clustering shuffle — roughly doubling build
-    // cost — while the parquet read-back is partition-local (the SQ8
-    // branch above reads back for the same reason).
-    writeCellRadii(cellRadii(
+    // the frozen assignment centers, recomputed for the touched cells at
+    // every fold. Read the JUST-WRITTEN cells back rather than
+    // re-evaluating the unpersisted `indexed` plan: that lineage repeats
+    // the full snapshot scan, assignment, and clustering shuffle —
+    // roughly doubling build cost — while the parquet read-back is
+    // partition-local (the SQ8 branch above reads back for the same
+    // reason). The same aggregate counts the base rows the fold clock
+    // measures the delta against.
+    val stats = cellStats(
       IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema))
-        .withColumn("__assign", assignSpace(m)(col("vec"))), quant), m)
-    stampIndexVersion(m, version)
+        .withColumn("__assign", assignSpace(m)(col("vec"))), quant)
+    writeCellRadii(stats.map { case (id, s) => id -> s.radius }, m)
+    // a fresh base: empty delta, superseded segments swept after the stamp
+    publishBase(m, version, stats.values.map(_.rows).sum)
     // a REBUILD can land at an unchanged store version (e.g. new nlist,
     // no new upserts) — version-keyed caches must not serve the old
     // quantizers over the new cells. Invalidate under the RESOLVED name:
@@ -3726,21 +3789,131 @@ class GraftClient(spark: SparkSession, root: String,
     binIdxCache.keySet().removeIf(k => dead(k._1))
   }
 
+  /** What a stamped centroid-partitioned index (IVF_FLAT, IVF_SQ8 and
+    * IVF_PQ cells and codes, BIN_IVF_FLAT cells, extra vector fields
+    * included) serves on top of its base cells: the commits since the
+    * base — its last build or fold — resolved from their segments.
+    * `superseded` holds every key those commits touched; the base serves
+    * only rows whose key is not in it. `rows` holds, per layout, the
+    * latest row of every key they put and did not delete since; a search
+    * scans every one of them, whatever cells it probes — Milvus's
+    * brute-forced growing segment. A commit folds the delta into the base
+    * once `superseded` reaches [[GraftClient.TailFoldRatio]] of the base
+    * rows, so the rows held here in driver memory stay under 0.2× the
+    * base rows. `recon` holds each PQ row's reconstruction error. */
+  private final class CellDelta(val state: DeltaState, val superseded: Set[String],
+      val rows: Map[String, Map[String, Row]], val recon: Map[String, Double]) {
+    def base: Long = state.base
+    def isEmpty: Boolean = superseded.isEmpty
+
+    /** Whether this is the delta `st` names at stamp `v` (a rebuild or
+      * fold by another client moves the base). */
+    def matches(st: DeltaState, v: Long): Boolean =
+      st.base == base && st.upTo(v) == state.segments
+
+    /** This delta after commit `v`, which touched `touched`, put `puts`
+      * per layout and wrote the segments of `written`. */
+    def advance(v: Long, touched: Set[String], puts: Map[String, Seq[Row]],
+        written: Seq[String], putRecon: Map[String, Double]): CellDelta =
+      new CellDelta(state.copy(segments = state.segments :+ (v -> written)),
+        superseded ++ touched,
+        (rows.keySet ++ puts.keySet).map { layout =>
+          layout -> ((rows.getOrElse(layout, Map.empty) -- touched) ++
+            puts.getOrElse(layout, Nil).map(r => r.getString(0) -> r))
+        }.toMap,
+        (recon -- touched) ++ putRecon)
+
+    /** The cells the delta's rows of `layout` are assigned to. */
+    def cellsOf(layout: String): Set[Int] =
+      rows.getOrElse(layout, Map.empty).values.map(r => r.getInt(r.length - 1)).toSet
+
+    /** Per cell, the largest reconstruction error among the delta's PQ
+      * codes. */
+    def reconBounds: Map[Int, Double] =
+      rows.getOrElse("pqcells", Map.empty).toSeq.groupMapReduce {
+        case (_, r) => r.getInt(r.length - 1) } { case (k, _) => recon(k) }(math.max)
+
+    // per layout, built once per delta and without a job: the rows as
+    // internal rows, their frame, their broadcast; and the broadcast keys
+    private val internal = new java.util.concurrent.ConcurrentHashMap[
+      String, Array[org.apache.spark.sql.catalyst.InternalRow]]()
+    private val frames =
+      new java.util.concurrent.ConcurrentHashMap[String, Option[DataFrame]]()
+    private val rowsBc = new java.util.concurrent.ConcurrentHashMap[String,
+      Option[org.apache.spark.broadcast.Broadcast[Array[org.apache.spark.sql.catalyst.InternalRow]]]]()
+    @volatile private var keysBc
+        : org.apache.spark.broadcast.Broadcast[Set[org.apache.spark.unsafe.types.UTF8String]] = _
+
+    private def internalRows(layout: String, schema: StructType)
+        : Array[org.apache.spark.sql.catalyst.InternalRow] =
+      internal.computeIfAbsent(layout, _ => {
+        val toCatalyst =
+          org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(schema)
+        val unsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
+        rows.getOrElse(layout, Map.empty).values.map(r => unsafe(toCatalyst(r)
+          .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]).copy(): org.apache.spark.sql.catalyst.InternalRow)
+          .toArray
+      })
+
+    /** The delta's rows of `layout` as a one-partition frame of `schema`;
+      * None when it has none. */
+    def frame(spark: SparkSession, layout: String, schema: StructType): Option[DataFrame] =
+      frames.computeIfAbsent(layout, _ => {
+        val rs = internalRows(layout, schema)
+        if (rs.isEmpty) None
+        else Some(org.apache.spark.sql.GraftShim.internalCreateDataFrame(spark,
+          spark.sparkContext.parallelize(rs.toSeq, 1), schema))
+      })
+
+    /** The delta's rows of `layout` as a broadcast — what a loaded cell
+      * layout deals over the partitions a search chooses; None when it
+      * has none. */
+    def broadcastRows(spark: SparkSession, layout: String, schema: StructType)
+        : Option[org.apache.spark.broadcast.Broadcast[Array[org.apache.spark.sql.catalyst.InternalRow]]] =
+      rowsBc.computeIfAbsent(layout, _ => {
+        val rs = internalRows(layout, schema)
+        if (rs.isEmpty) None else Some(spark.sparkContext.broadcast(rs))
+      })
+
+    /** The superseded keys as a broadcast — what a loaded cell layout
+      * filters its partitions by. */
+    def supersededBroadcast(spark: SparkSession)
+        : org.apache.spark.broadcast.Broadcast[Set[org.apache.spark.unsafe.types.UTF8String]] =
+      synchronized {
+        if (keysBc == null) keysBc = spark.sparkContext.broadcast(
+          superseded.map(org.apache.spark.unsafe.types.UTF8String.fromString))
+        keysBc
+      }
+  }
+
+  private object CellDelta {
+    /** The delta of a stamp that is its base: nothing on top. */
+    def empty(state: DeltaState): CellDelta =
+      new CellDelta(state, Set.empty, Map.empty, Map.empty)
+  }
+
+  /** A stamped BIN_IVF_FLAT index: the frozen k-majority centers and the
+    * delta the stamp serves on top of the base cells. */
+  private case class LoadedBinIndex(quant: graft.index.BinIvfIndex.BinQuantizer,
+      version: Long, delta: CellDelta)
+
   /** A stamped float index's driver-side tables: the frozen assignment
-    * centers, the refreshed probe centers, the per-cell radii, and (IVF_PQ)
-    * the codebooks. */
+    * centers, the refreshed probe centers, the per-cell radii of the base
+    * cells, (IVF_PQ) the codebooks, and the delta the stamp serves on top
+    * of the base cells. */
   private case class LoadedIndex(assign: IvfIndex.CoarseQuantizer,
                                  probe: IvfIndex.CoarseQuantizer,
                                  version: Long,
                                  radii: Map[Int, Double],
-                                 pq: Option[PqIndex.ProductQuantizer] = None)
+                                 pq: Option[PqIndex.ProductQuantizer],
+                                 delta: CellDelta)
 
   /** Per-(collection, version) LoadedIndex cache: the VERSION file is
     * re-read on every call (staleness must always be detected), but the
-    * centroid-table collects — several Spark jobs of pure latency — run
-    * once per index version, not once per search. Maintenance/rebuild
-    * stamps a new VERSION, which keys a fresh load; superseded entries
-    * are evicted like [[bcCache]]. */
+    * centroid-table collects and the segment reads — Spark jobs of pure
+    * latency — run once per index version, not once per search. A commit
+    * seeds the entry of the version it stamps; superseded entries are
+    * evicted like [[bcCache]]. */
   private val idxCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), LoadedIndex]()
 
@@ -3757,44 +3930,262 @@ class GraftClient(spark: SparkSession, root: String,
     // a postings layout + stamp, no centroids to read).
     if (m.indexType == "HNSW" || binaryVec(m) || sparseVec(m)) None
     else readVersionFile(ivfDir(m)).filter(at.contains).map { v =>
-      val it = idxCache.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k._1 == m.name && k._2 != v) it.remove()
-      }
-      idxCache.computeIfAbsent((m.name, v), { _ =>
+      val state = readDeltaState(m)
+      cachedAt(idxCache, m.name, v, state)(_.delta) {
         val pq =
           if (pqIndexed(m)) Some(graft.index.Artifact.required(
             pqCodebooksPath(m))(PqIndex.readCodebooks(spark, pqCodebooksPath(m))))
           else None
         LoadedIndex(readCentroids(s"${ivfDir(m)}/centroids"),
-          readCentroids(s"${ivfDir(m)}/probe_centroids"), v, readCellRadii(m), pq)
+          readCentroids(s"${ivfDir(m)}/probe_centroids"), v, readCellRadii(m), pq,
+          readCellDelta(m, v, state))
+      }
+    }
+
+  /** `cache`'s entry for `name` at stamp `v` while its delta still
+    * matches the on-disk `state` (another client may have rebuilt or
+    * folded the index), else `load` — cached. Entries of every other
+    * stamp of `name` are evicted. */
+  private def cachedAt[T](cache: java.util.concurrent.ConcurrentHashMap[(String, Long), T],
+      name: String, v: Long, state: DeltaState)(delta: T => CellDelta)(load: => T): T = {
+    cache.keySet().removeIf(k => k._1 == name && k._2 != v)
+    Option(cache.get((name, v))).filter(e => delta(e).matches(state, v)).getOrElse {
+      val e = load
+      cache.put((name, v), e)
+      e
+    }
+  }
+
+  /** The delta bookkeeping of a centroid-partitioned index — its `DELTA`
+    * file beside the VERSION stamp: the version its base cells hold (the
+    * last build or fold), their row count, and one entry per segment
+    * appended since (the commit's version and the layouts it wrote).
+    * Rewritten before every stamp that changes it; a reader at stamp `v`
+    * takes the segments in (base, v]. */
+  private case class DeltaState(base: Long, baseRows: Long,
+      segments: Seq[(Long, Seq[String])]) {
+    def upTo(v: Long): Seq[(Long, Seq[String])] =
+      segments.filter { case (s, _) => s > base && s <= v }
+  }
+
+  private def deltaStatePath(m: CollectionMeta) = s"${ivfDir(m)}/DELTA"
+  private def segmentsDir(m: CollectionMeta) = s"${ivfDir(m)}/delta"
+  private def segmentPath(m: CollectionMeta, layout: String, v: Long) =
+    f"${segmentsDir(m)}/$layout-$v%08d"
+
+  private def writeDeltaState(m: CollectionMeta, st: DeltaState): Unit =
+    writeAtomically(ivfDir(m), "DELTA",
+      (s"base ${st.base} rows ${st.baseRows}" +: st.segments.map { case (v, ls) =>
+        (s"segment $v" +: ls).mkString(" ") }).mkString("\n"))
+
+  private def readDeltaState(m: CollectionMeta): DeltaState =
+    graft.index.Artifact.required(deltaStatePath(m)) {
+      val lines = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(deltaStatePath(m)))).split("\n").filter(_.nonEmpty)
+      val Array("base", base, "rows", rows) = lines.head.split(" ")
+      DeltaState(base.toLong, rows.toLong, lines.toSeq.tail.map { l =>
+        val w = l.split(" ")
+        (w(1).toLong, w.toSeq.drop(2))
       })
     }
 
-  /** Incrementally maintain the IVF index across one merge-commit: evict
-    * the touched keys from their old cells, insert the new rows into their
-    * (deterministically assigned) cells, refresh the touched cells' probe
-    * centers to the new means, and stamp the index with the new snapshot
-    * version — so `search` keeps its `centroidId` partition prune after
-    * upserts/deletes instead of silently degrading to an exact full scan
-    * until the next full rebuild. The reference's backend keeps its index
-    * live across upserts the same way
+  /** The layouts a centroid-partitioned index keeps, each with its
+    * schema: the cells (float or binary) — the primary layout, whose
+    * segments also carry the commit's deleted keys — then the SQ8 or PQ
+    * codes. */
+  private def cellLayouts(m: CollectionMeta): Seq[(String, StructType)] =
+    if (binaryVec(m)) Seq("cells" -> binCellsSchema)
+    else ("cells" -> cellsSchema) +:
+      ((if (sq8Indexed(m)) Seq("sq8cells" -> sq8CellsSchema) else Nil) ++
+        (if (pqIndexed(m)) Seq("pqcells" -> pqCellsSchema) else Nil))
+
+  /** A segment file's schema: the layout's rows, the commit version, and
+    * (PQ codes) each row's reconstruction error. */
+  private def segmentSchema(layout: String, schema: StructType): StructType = {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val s = schema.add("__seg", LongType)
+    if (layout == "pqcells") s.add("__recon", DoubleType) else s
+  }
+
+  /** The delta of `m`'s index at stamp `v`: every segment `state` names
+    * up to `v`, read once per layout (one job each) and resolved commit
+    * by commit. A named segment that is missing raises the
+    * missing-artifact error. */
+  private def readCellDelta(m: CollectionMeta, v: Long, state: DeltaState): CellDelta = {
+    val segs = state.upTo(v)
+    val empty = CellDelta.empty(state.copy(segments = Nil))
+    if (segs.isEmpty) empty
+    else {
+      val layouts = cellLayouts(m)
+      val read = layouts.map { case (layout, schema) =>
+        val paths = segs.collect { case (s, ls) if ls.contains(layout) =>
+          segmentPath(m, layout, s) }
+        paths.foreach(p => if (!java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+          throw graft.index.Artifact.missing(p))
+        layout -> (if (paths.isEmpty) Map.empty[Long, Seq[Row]]
+          else spark.read.schema(segmentSchema(layout, schema)).parquet(paths: _*)
+            .collect().toSeq.groupBy(_.getAs[Long]("__seg")))
+      }.toMap
+      segs.foldLeft(empty) { case (d, (s, written)) =>
+        val rows = layouts.map { case (layout, schema) =>
+          layout -> read(layout).getOrElse(s, Nil)
+            .filterNot(_.isNullAt(schema.length - 1)) // deleted keys: no cell
+        }.toMap
+        val recon = rows.getOrElse("pqcells", Nil)
+          .map(r => r.getString(0) -> r.getAs[Double]("__recon")).toMap
+        d.advance(s, read("cells").getOrElse(s, Nil).map(_.getString(0)).toSet,
+          layouts.map { case (layout, schema) =>
+            layout -> rows(layout).map(r => Row.fromSeq(r.toSeq.take(schema.length)))
+          }.toMap, written, recon)
+      }
+    }
+  }
+
+  /** One commit's share of an index delta: the keys it touched and, per
+    * layout, the rows it put (cells assigned with the frozen centers,
+    * codes encoded with the frozen quantizer), with each PQ row's
+    * reconstruction error. */
+  private case class CommitRows(touched: Set[String],
+      puts: Map[String, Seq[Row]], recon: Map[String, Double])
+
+  /** The [[CommitRows]] of a commit, from ONE job: `coded` (the put rows
+    * with every layout's columns) and the commit's touched keys. Deletes
+    * never share a key with the puts of their batch (the streaming loop
+    * keeps each key's latest event; routed moves delete other
+    * partitions' copies), so a touched key without a put row is a
+    * delete. */
+  private def collectCommit(m: CollectionMeta, touchKeys: DataFrame,
+      coded: Option[DataFrame]): CommitRows = {
+    val rows = coded match {
+      case Some(c) =>
+        val wide = c.withColumn("__put", lit(true))
+        wide.union(touchKeys.select(wide.schema.fields.toIndexedSeq.map(f => f.name match {
+          case "key" => col("key")
+          case "__put" => lit(false).as("__put")
+          case n => lit(null).cast(f.dataType).as(n)
+        }): _*)).collect()
+      case None => touchKeys.select(col("key"), lit(false).as("__put")).collect()
+    }
+    val puts = rows.filter(_.getAs[Boolean]("__put")).toSeq
+    CommitRows(rows.map(_.getString(0)).toSet,
+      if (puts.isEmpty) Map.empty
+      else cellLayouts(m).map { case (layout, schema) =>
+        val at = schema.fieldNames.map(puts.head.fieldIndex)
+        layout -> puts.map(r => Row.fromSeq(at.toSeq.map(r.get)))
+      }.toMap,
+      if (puts.isEmpty || !puts.head.schema.fieldNames.contains("__recon")) Map.empty
+      else puts.map(r => r.getString(0) -> r.getAs[Double]("__recon")).toMap)
+  }
+
+  /** The commit path of every centroid-partitioned index: fold when the
+    * keys touched since the base — this commit's included — reach
+    * [[GraftClient.TailFoldRatio]] of the base rows, else append this
+    * commit's segments (the cells one also lists its deleted keys), then
+    * the DELTA bookkeeping, then the stamp. `seed` receives the appended
+    * delta, so the committing client's next search reads no segment. */
+  private def appendOrFold(m: CollectionMeta, delta: CellDelta, v: Long,
+      batch: CommitRows)(fold: CellDelta => Unit)(seed: CellDelta => Unit): Unit = {
+    val written = cellLayouts(m).filter { case (layout, _) =>
+      layout == "cells" || batch.puts.get(layout).exists(_.nonEmpty) }
+    val next = delta.advance(v, batch.touched, batch.puts, written.map(_._1), batch.recon)
+    if (next.superseded.size >=
+        GraftClient.TailFoldRatio * math.max(1L, delta.state.baseRows)) fold(next)
+    else {
+      import scala.jdk.CollectionConverters._
+      written.foreach { case (layout, schema) =>
+        val puts = batch.puts.getOrElse(layout, Nil)
+        val deleted =
+          if (layout != "cells") Nil
+          else (batch.touched -- puts.map(_.getString(0))).toSeq.map(k =>
+            Row.fromSeq(k +: Seq.fill(schema.length - 1)(null)))
+        val rows = (puts ++ deleted).map(r => Row.fromSeq(r.toSeq :+ v :++
+          (if (layout == "pqcells") Seq(batch.recon(r.getString(0))) else Nil)))
+        spark.createDataFrame(rows.asJava, segmentSchema(layout, schema))
+          .coalesce(1).write.mode("overwrite").parquet(segmentPath(m, layout, v))
+      }
+      writeDeltaState(m, next.state)
+      stampIndexVersion(m, v)
+      seed(next)
+    }
+  }
+
+  /** The fold's durable tail, shared by the float and binary folds and
+    * by the builds: the DELTA bookkeeping of a base at `v` with
+    * `baseRows` rows, the stamp, then the superseded segments. Returns
+    * the (empty) delta the stamp serves. */
+  private def publishBase(m: CollectionMeta, v: Long, baseRows: Long): CellDelta = {
+    val state = DeltaState(v, baseRows, Nil)
+    writeDeltaState(m, state)
+    stampIndexVersion(m, v)
+    deleteDir(segmentsDir(m))
+    CellDelta.empty(state)
+  }
+
+  /** The touched-cell merge — the one rewrite path of a base layout,
+    * run by a fold: the new contents of every base cell that holds a key
+    * of `delta.superseded` or receives one of its delta rows (the cell's
+    * surviving base rows plus those delta rows), materialized so the
+    * layout can be overwritten under the plan; the touched cells; and
+    * how many base rows the superseded keys evicted. */
+  private def mergedCells(m: CollectionMeta, schema: StructType,
+      delta: CellDelta): (Option[DataFrame], Seq[Int], Long) = {
+    import scala.jdk.CollectionConverters._
+    val base = spark.read.schema(schema).parquet(cellsPath(m))
+    // the cells of the superseded keys' base copies: one key-column scan
+    val evicted = base.filter(supersededCol(delta)).select("centroidId")
+      .collect().map(_.getInt(0))
+    val touched = (evicted.toSet ++ delta.cellsOf("cells")).toSeq.sorted
+    val contents = if (touched.isEmpty) None else Some(
+      base.filter(col("centroidId").isin(touched: _*) && !supersededCol(delta))
+        .unionByName(spark.createDataFrame(
+          delta.rows.getOrElse("cells", Map.empty).values.toSeq.asJava, schema))
+        .localCheckpoint())
+    (contents, touched, evicted.length.toLong)
+  }
+
+  /** Dynamic-overwrite the `touched` cells of the layout at `path` with
+    * `contents`. A touched cell the contents leave empty (absent from
+    * `written`) loses its directory: the overwrite only replaces the
+    * partitions present in the write, and a deleted key must not
+    * linger. */
+  private def overwriteCells(contents: DataFrame, path: String,
+      touched: Seq[Int], written: Set[Int]): Unit = {
+    contents.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("centroidId").parquet(path)
+    (touched.toSet -- written).foreach(cell => deleteDir(s"$path/centroidId=$cell"))
+  }
+
+  /** Keep a fresh IVF index fresh across one merge commit without
+    * touching its base cells: the commit appends one immutable delta
+    * segment per layout — its put rows assigned with the frozen
+    * assignment centers (SQ8 and PQ codes encoded with the frozen
+    * quantizer and codebooks, bit-identical to what a fold writes) and
+    * its deleted keys — then the DELTA bookkeeping, then the stamp.
+    * Searches serve the base cells minus every key touched since the
+    * base, plus every delta row ([[cellsFrame]]), so the index stays
+    * exact under full probe and `search` keeps its cell prune across
+    * upserts and deletes. The reference's backend keeps its index live
+    * across upserts the same way — Milvus appends writes to a growing
+    * segment that is searched by brute force until it is sealed
     * (`milvus-app/pythonvectordbceph_milvus.py:100-102,154`).
     *
-    * Cost is bounded by the batch: only the cells holding touched keys are
-    * read and rewritten (a `centroidId` partition prune), the probe
-    * refresh aggregates only those cells' rows, and the frozen assignment
-    * centers make an old row's cell recomputable from its vector — no
-    * key→cell sidecar to maintain.
+    * Cost is ONE job over the batch plus one small write per segment;
+    * nothing of the base is read. Once the keys touched since the base
+    * reach [[GraftClient.TailFoldRatio]] of the base rows, the commit
+    * FOLDS instead ([[foldIvf]]): the touched-cell merge rewrites the
+    * cells the delta touches, refreshes their probe centers and radii,
+    * and starts a new base. Between folds the base only loses rows, so
+    * the probe centers and radii stay sound for the base, and the loaded
+    * cell layout — keyed by the base version — survives every commit.
     *
-    * Crash-safety: VERSION is stamped last. A crash mid-rewrite leaves
-    * VERSION behind the store version, so `search` falls back to the
-    * exact scan and `buildIndex` is the recovery path (later commits see
-    * a stale index and skip this). */
+    * Crash-safety: segments and DELTA are written before the VERSION
+    * stamp. A crash before the stamp leaves VERSION behind the store
+    * version, so `search` falls back to the exact scan and `buildIndex`
+    * is the recovery path (later commits see a stale index and skip
+    * this). */
   private def refreshIndexIncremental(m: CollectionMeta, preVersion: Option[Long],
-      newVersion: Long, touchKeys: => DataFrame, preImage: => DataFrame,
-      puts: => Option[DataFrame]): Unit = {
+      newVersion: Long, touchKeys: => DataFrame, puts: => Option[DataFrame]): Unit = {
     // fast path: no index DIR means no build has ever STARTED (a build's
     // withCommitLock creates the dir before it pins its snapshot) —
     // taking the lock here would create the dir for every never-indexed
@@ -3814,123 +4205,107 @@ class GraftClient(spark: SparkSession, root: String,
     if (m.indexType == "HNSW")
       refreshHnswIncremental(m, newVersion, touchKeys)
     else if (binaryVec(m))
-      refreshBinIvfIncremental(m, preVersion, newVersion, touchKeys, preImage, puts)
+      refreshBinIvfIncremental(m, preVersion, newVersion, touchKeys, puts)
     else if (sparseVec(m))
       refreshSparseInvIncremental(m, preVersion, newVersion, touchKeys, puts)
     else loadIndex(m, preVersion) match {
     case Some(idx) if indexableMetric(m.metric) =>
-      val keys = touchKeys.distinct().persist()
-      try {
-        // old copies of the touched keys — their cells are recomputable
-        // because the assignment centers are frozen at build time
-        val centersBc =
-          cachedBroadcast(m.name, "assign", idx.version)(idx.assign.centers)
-        val evicted = IvfIndex.assignCells(
-          preImage.join(keys, Seq("key"), "left_semi")
-            .withColumn("__assign", assignSpace(m)(col("vec"))),
-          "__assign", centersBc)
-        val inserted = puts.map(p => IvfIndex.assignCells(
-          p.withColumn("__assign", assignSpace(m)(col("vec"))), "__assign", centersBc))
-        // old and new cells of the touched keys, in one action
-        val touchedCells = (evicted.select("centroidId") +:
-            inserted.map(_.select("centroidId")).toSeq)
-          .reduce(_ union _).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val (probe, radii) = if (touchedCells.isEmpty) (idx.probe, idx.radii) else {
-          val survivors = IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema))
-            .filter(col("centroidId").isin(touchedCells: _*))
-            .join(keys, Seq("key"), "left_anti")
-          // localCheckpoint: materializes the new cell contents before the
-          // dynamic partition overwrite below (a path can't be overwritten
-          // while the plan still reads it), and the materialized set is
-          // bounded by the touched cells' rows
-          val contents = inserted.fold(survivors)(i =>
-            survivors.unionByName(i.drop("__assign"))).localCheckpoint()
-          // ONE grouped aggregate over the new contents gives the cells
-          // written, their refreshed probe means (the touched cells move
-          // to their new means; untouched cells keep theirs) and their
-          // radii for range search's lossless prune — each the same
-          // expression as IvfIndex.refreshCentroids / cellRadii, so the
-          // values stay exact. Radii are measured against the FROZEN
-          // assign centers, never a loosening upper bound.
-          val cells = cellStats(
-            contents.withColumn("__assign", assignSpace(m)(col("vec"))), idx.assign)
-          val writtenCells = cells.keySet
-          contents.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("centroidId").parquet(cellsPath(m))
-          // dynamic overwrite only replaces partitions PRESENT in the
-          // write — a touched cell left with no surviving rows must have
-          // its directory dropped explicitly, or deleted keys would linger
-          (touchedCells.toSet -- writtenCells).foreach { cell =>
-            deleteDir(s"${cellsPath(m)}/centroidId=$cell")
-          }
-          // SQ8 cells mirror the float cells cell-for-cell: re-quantize
-          // ONLY the touched cells' new contents (same dynamic partition
-          // overwrite, same emptied-dir sweep) — an upsert/delete batch
-          // re-encodes batch-bounded rows, never the whole index. Codes
-          // are encoded in the ASSIGN space (normalized for cosine),
-          // exactly as buildIndex wrote them
-          if (sq8Indexed(m)) {
-            Sq8Index.quantize(
-                contents.withColumn("__v", assignSpace(m)(col("vec"))).drop("vec"),
-                "__v")
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("centroidId").parquet(sq8CellsPath(m))
-            (touchedCells.toSet -- writtenCells).foreach { cell =>
-              deleteDir(s"${sq8CellsPath(m)}/centroidId=$cell")
-            }
-          }
-          // PQ cells mirror the float cells the same way: re-encode ONLY
-          // the touched cells' new contents against the FROZEN codebooks
-          // (PqEncode recomputes any row's codes bit-for-bit from vec +
-          // cell — same recompute contract the assignment centers hold)
-          if (pqIndexed(m)) idx.pq.foreach { pq =>
-            val booksBc = cachedBroadcast(m.name, "pqbooks", idx.version)(
-              pq.codebooks)
-            PqIndex.encode(
-                contents.withColumn("__v", assignSpace(m)(col("vec"))).drop("vec"),
-                "__v", centersBc, booksBc)
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("centroidId").parquet(pqCellsPath(m))
-            (touchedCells.toSet -- writtenCells).foreach { cell =>
-              deleteDir(s"${pqCellsPath(m)}/centroidId=$cell")
-            }
-            // the margin drain's per-cell reconstruction bounds follow
-            // the same touched-cell merge as cell_radii: recompute
-            // EXACTLY from the touched cells' full new contents against
-            // the FROZEN codebooks (same recompute the re-encode above
-            // just ran — the bound stays exact, never a loosening upper
-            // bound), keep untouched cells' values, drop emptied cells.
-            val touched = pqReconBounds(
-              contents.withColumn("__v", assignSpace(m)(col("vec"))),
-              centersBc, booksBc)
-            writePqRecon((readPqRecon(m) -- touchedCells) ++ touched, m)
-          }
-          val centers = idx.probe.centers.map(_.clone())
-          cells.foreach { case (id, (c, _)) =>
-            if (c != null && id >= 0 && id < centers.length) centers(id) = c }
-          val refreshed = IvfIndex.CoarseQuantizer(centers)
-          writeCentroids(refreshed, s"${ivfDir(m)}/probe_centroids")
-          val newRadii = (idx.radii -- touchedCells) ++
-            cells.map { case (id, (_, r)) => id -> r }
-          writeCellRadii(newRadii, m)
-          (refreshed, newRadii)
-        }
-        stampIndexVersion(m, newVersion)
-        // the refreshed index IS what the stamp now names: seed the
-        // cache so the first search after the commit does not re-read
-        // the centroid and radii tables
-        idxCache.put((m.name, newVersion),
-          idx.copy(probe = probe, version = newVersion, radii = radii))
-      } finally keys.unpersist()
+      val centersBc =
+        cachedBroadcast(m.name, "assign", idx.delta.base)(idx.assign.centers)
+      val coded = puts.map { p =>
+        val assigned = IvfIndex.assignCells(
+          p.withColumn("__assign", assignSpace(m)(col("vec"))), "__assign", centersBc)
+        val sq8 =
+          if (!sq8Indexed(m)) assigned
+          else Sq8Index.quantize(assigned.withColumn("__v", col("__assign")), "__v")
+        idx.pq.filter(_ => pqIndexed(m)).fold(sq8) { pq =>
+          val booksBc =
+            cachedBroadcast(m.name, "pqbooks", idx.delta.base)(pq.codebooks)
+          PqIndex.encode(sq8.withColumn("__v", col("__assign")), "__v", centersBc, booksBc)
+            .withColumn("__recon", graft.functions.PqFunctions.pq_recon_error(
+              col("__assign"), col("centroidId"), centersBc, booksBc))
+        }.drop("__assign")
+      }
+      appendOrFold(m, idx.delta, newVersion, collectCommit(m, touchKeys, coded))(
+        foldIvf(m, idx, _, newVersion)) { next =>
+        // the stamp now names this delta: seed the cache so the first
+        // search after the commit reads neither the tables nor a segment
+        idxCache.put((m.name, newVersion), idx.copy(version = newVersion, delta = next))
+      }
     case _ => () // no index or already stale — search falls back to the
                  // exact scan
     }
     }
   }
+
+  /** Fold `delta` into the float index's base cells and stamp `v`: the
+    * touched-cell merge ([[mergedCells]]) rewrites the cells the delta
+    * touches — and their SQ8 or PQ codes, re-encoded against the frozen
+    * quantizer — moves their probe centers to the new means, recomputes
+    * their radii and PQ reconstruction bounds exactly against the frozen
+    * centers, and publishes the result as the new base. */
+  private def foldIvf(m: CollectionMeta, idx: LoadedIndex, delta: CellDelta,
+      v: Long): Unit = {
+    val (merged, touched, evicted) = mergedCells(m, cellsSchema, delta)
+    val (probe, radii) = merged.fold((idx.probe, idx.radii)) { contents =>
+      // ONE grouped aggregate over the new contents gives the cells
+      // written, their refreshed probe means (the touched cells move to
+      // their new means; untouched cells keep theirs) and their radii for
+      // range search's lossless prune — each the same expression as
+      // IvfIndex.refreshCentroids / the build's radii, so the values stay
+      // exact. Radii are measured against the FROZEN assign centers.
+      val assigned = contents.withColumn("__assign", assignSpace(m)(col("vec")))
+      val cells = cellStats(assigned, idx.assign)
+      val written = cells.keySet
+      overwriteCells(contents, cellsPath(m), touched, written)
+      // SQ8 and PQ codes mirror the float cells cell-for-cell: re-encode
+      // ONLY the touched cells' new contents, in the ASSIGN space
+      // (normalized for cosine), exactly as buildIndex wrote them
+      val inAssign = contents.withColumn("__v", assignSpace(m)(col("vec"))).drop("vec")
+      if (sq8Indexed(m))
+        overwriteCells(Sq8Index.quantize(inAssign, "__v"), sq8CellsPath(m), touched, written)
+      if (pqIndexed(m)) idx.pq.foreach { pq =>
+        val centersBc = cachedBroadcast(m.name, "assign", idx.delta.base)(idx.assign.centers)
+        val booksBc = cachedBroadcast(m.name, "pqbooks", idx.delta.base)(pq.codebooks)
+        overwriteCells(PqIndex.encode(inAssign, "__v", centersBc, booksBc),
+          pqCellsPath(m), touched, written)
+        // the margin drain's per-cell reconstruction bounds follow the
+        // same touched-cell merge as the radii: recomputed EXACTLY from
+        // the touched cells' new contents, untouched cells kept
+        writePqRecon((readPqRecon(m) -- touched) ++
+          pqReconBounds(assigned.withColumn("__v", col("__assign")), centersBc, booksBc), m)
+      }
+      val centers = idx.probe.centers.map(_.clone())
+      cells.foreach { case (id, s) =>
+        if (s.center != null && id >= 0 && id < centers.length) centers(id) = s.center }
+      val refreshed = IvfIndex.CoarseQuantizer(centers)
+      writeCentroids(refreshed, s"${ivfDir(m)}/probe_centroids")
+      val newRadii = (idx.radii -- touched) ++ cells.map { case (id, s) => id -> s.radius }
+      writeCellRadii(newRadii, m)
+      (refreshed, newRadii)
+    }
+    val next = publishBase(m, v,
+      delta.state.baseRows - evicted + delta.rows.getOrElse("cells", Map.empty).size)
+    idxCache.put((m.name, v),
+      idx.copy(probe = probe, version = v, radii = radii, delta = next))
+  }
+
+  /** Fold the delta of `m`'s centroid-partitioned index into its base
+    * cells when the index is fresh and the delta is not empty —
+    * [[compact]]'s arm. Returns whether it folded. */
+  private def foldCellDelta(m: CollectionMeta): Boolean =
+    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ivfDir(m))) &&
+      graft.streaming.BucketedKeyedCollection.withCommitLock(
+          java.nio.file.Paths.get(ivfDir(m))) {
+        val v = collection(m).currentVersion
+        loadIndex(m, v).filter(i => !i.delta.isEmpty && indexableMetric(m.metric)) match {
+          case Some(idx) => foldIvf(m, idx, idx.delta, idx.version); true
+          case None => loadBinIndex(m).filter(b => v.contains(b.version) && !b.delta.isEmpty) match {
+            case Some(b) => foldBinIvf(m, b, b.delta, b.version); true
+            case None => false
+          }
+        }
+      }
 
   /** SPARSE_INVERTED_INDEX's per-commit maintenance — the
     * [[appendSparseIndex]] contract made AUTOMATIC, which only a sparse
@@ -3967,61 +4342,48 @@ class GraftClient(spark: SparkSession, root: String,
     stampIndexVersion(m, newVersion)
   }
 
-  /** BIN_IVF_FLAT's per-commit maintenance — the float family's
-    * touched-cell merge verbatim, minus the refreshed probe table (a
-    * k-majority center has no incremental mean to track; probing always
-    * uses the frozen assignment centers, so probe quality degrades only
-    * with genuine distribution drift — a rebuild's concern). Evict the
-    * touched keys' old copies (their cells are recomputable from codes
-    * against the frozen centers), insert the new rows into their
-    * assigned cells, dynamic-partition-overwrite only those cells, drop
-    * emptied dirs, stamp the new version LAST. A stale stamp (crash
-    * mid-rewrite) makes searchBinary fall back to the exact scan;
-    * buildIndex is the recovery, exactly the float contract. */
+  /** BIN_IVF_FLAT's per-commit maintenance — the float family's delta
+    * segments ([[refreshIndexIncremental]]) minus the codes and the probe
+    * table (a k-majority center has no incremental mean to track; probing
+    * always uses the frozen assignment centers, so probe quality degrades
+    * only with genuine distribution drift — a rebuild's concern). The
+    * commit appends its rows assigned with the frozen centers and its
+    * deleted keys; past the tail ratio it folds ([[foldBinIvf]]). Stamped
+    * LAST: a stale stamp (crash before it) makes searchBinary fall back
+    * to the exact scan; buildIndex is the recovery, exactly the float
+    * contract. */
   private def refreshBinIvfIncremental(m: CollectionMeta,
       preVersion: Option[Long], newVersion: Long, touchKeys: DataFrame,
-      preImage: DataFrame, puts: Option[DataFrame]): Unit =
+      puts: Option[DataFrame]): Unit =
     loadBinIndex(m) match {
-      case Some((quant, v)) if preVersion.contains(v) =>
-        val keys = touchKeys.distinct().persist()
-        try {
-          val centersBc = cachedBroadcast(m.name, "bincenters", v)(quant.centers)
-          val evicted = graft.index.BinIvfIndex.assignCells(
-            preImage.join(keys, Seq("key"), "left_semi"), "vec", centersBc)
-          val inserted = puts.map(p =>
-            graft.index.BinIvfIndex.assignCells(p, "vec", centersBc))
-          val oldCells = evicted.select("centroidId").distinct()
-            .collect().map(_.getInt(0))
-          val newCells = inserted.toSeq.flatMap(
-            _.select("centroidId").distinct().collect().map(_.getInt(0)))
-          val touchedCells = (oldCells ++ newCells).distinct.toSeq
-          if (touchedCells.nonEmpty) {
-            val survivors = spark.read.schema(binCellsSchema)
-              .parquet(cellsPath(m))
-              .filter(col("centroidId").isin(touchedCells: _*))
-              .join(keys, Seq("key"), "left_anti")
-            val contents = inserted.fold(survivors)(i =>
-              survivors.unionByName(i)).localCheckpoint()
-            val writtenCells = contents.select("centroidId").distinct()
-              .collect().map(_.getInt(0)).toSet
-            contents.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("centroidId").parquet(cellsPath(m))
-            (touchedCells.toSet -- writtenCells).foreach { cell =>
-              deleteDir(s"${cellsPath(m)}/centroidId=$cell")
-            }
-            // the range prune's per-cell Hamming radii follow the same
-            // touched-cell merge as the float family's cell_radii:
-            // recompute EXACTLY from the touched cells' full new
-            // contents against the FROZEN centers, keep untouched
-            // cells' values, drop emptied cells
-            writeBinRadii((readBinRadii(m) -- touchedCells) ++
-              binCellRadii(contents, quant.centers), m)
-          }
-          stampIndexVersion(m, newVersion)
-        } finally keys.unpersist()
+      case Some(idx) if preVersion.contains(idx.version) =>
+        val centersBc = cachedBroadcast(m.name, "bincenters", idx.delta.base)(
+          idx.quant.centers)
+        val coded = puts.map(graft.index.BinIvfIndex.assignCells(_, "vec", centersBc))
+        appendOrFold(m, idx.delta, newVersion, collectCommit(m, touchKeys, coded))(
+          foldBinIvf(m, idx, _, newVersion)) { next =>
+          binIdxCache.put((m.name, newVersion), idx.copy(version = newVersion, delta = next))
+        }
       case _ => () // no index or already stale — exact-scan fallback
     }
+
+  /** Fold `delta` into the binary index's base cells and stamp `v`: the
+    * touched-cell merge, then the touched cells' Hamming radii
+    * recomputed EXACTLY from their new contents against the FROZEN
+    * centers (untouched cells keep theirs, emptied cells drop out). */
+  private def foldBinIvf(m: CollectionMeta, idx: LoadedBinIndex,
+      delta: CellDelta, v: Long): Unit = {
+    val (merged, touched, evicted) = mergedCells(m, binCellsSchema, delta)
+    merged.foreach { contents =>
+      val stats = binCellStats(contents, idx.quant.centers)
+      overwriteCells(contents, cellsPath(m), touched, stats.keySet)
+      writeBinRadii((readBinRadii(m) -- touched) ++
+        stats.map { case (cell, (r, _)) => cell -> r }, m)
+    }
+    val next = publishBase(m, v,
+      delta.state.baseRows - evicted + delta.rows.getOrElse("cells", Map.empty).size)
+    binIdxCache.put((m.name, v), idx.copy(version = v, delta = next))
+  }
 
   /** HNSW's per-commit maintenance — the GROWING-TAIL design (Milvus's
     * own growing/sealed-segment architecture, re-expressed on the keyed
@@ -4045,7 +4407,7 @@ class GraftClient(spark: SparkSession, root: String,
     *     its live row comes from the tail — counted exactly once;
     *   - a key deleted since the build simply fails the live-store join.
     *
-    * When the tail estimate crosses [[GraftClient.HnswTailFoldRatio]] of
+    * When the tail estimate crosses [[GraftClient.TailFoldRatio]] of
     * the graph rows, the commit FOLDS: rebuilds only the changed
     * buckets' graphs from current content and advances S_b ([[
     * foldHnswTail]]) — so maintenance cost scales with CHURN SINCE LAST
@@ -4065,7 +4427,7 @@ class GraftClient(spark: SparkSession, root: String,
       val batchRows = touchKeys.count()
       val meta = meta0.copy(tailEst = meta0.tailEst + batchRows)
       if (meta.tailEst.toDouble >=
-          GraftClient.HnswTailFoldRatio * math.max(1L, meta.graphRows))
+          GraftClient.TailFoldRatio * math.max(1L, meta.graphRows))
         foldHnswTail(m, newVersion)
       else writeHnswMeta(m, meta) // O(1) commit — VERSION stays at the
                                   // build version; the tail arm covers
@@ -4130,16 +4492,16 @@ class GraftClient(spark: SparkSession, root: String,
   private def probeCellsCol(m: CollectionMeta, idx: LoadedIndex, v: Column,
       normalize: Boolean, nprobe: Int): Column =
     nearest_centroids(v,
-      cachedBroadcast(m.name, "probe", idx.version)(idx.probe.centers),
+      cachedBroadcast(m.name, "probe", idx.delta.base)(idx.probe.centers),
       nprobe, normalize)
 
   /** Atomic VERSION stamp — temp file + ATOMIC_MOVE, the same publish
     * pattern as the keyed store's CURRENT pointer. A truncate-in-place
     * write would let a concurrent loadIndex read an EMPTY file and throw
     * NumberFormatException out of search() instead of taking the
-    * designed stale-index fallback. (The cell parquet under it is still
-    * rewritten in place by dynamic partition overwrite — a search plan
-    * holding the OLD file listing across a maintenance commit can hit a
+    * designed stale-index fallback. (A fold still rewrites the cell
+    * parquet in place by dynamic partition overwrite — a search plan
+    * holding the OLD file listing across a folding commit can hit a
     * missing file and should retry; full snapshot isolation would
     * version the cell dirs like the keyed store's buckets.) */
   private def stampIndexVersion(m: CollectionMeta, version: Long): Unit = {
@@ -4152,12 +4514,17 @@ class GraftClient(spark: SparkSession, root: String,
     * here stands for a crash between the two. */
   protected def beforeIndexStamp(): Unit = ()
 
-  private def stampVersionFile(dirPath: String, version: Long): Unit = {
+  private def stampVersionFile(dirPath: String, version: Long): Unit =
+    writeAtomically(dirPath, "VERSION", version.toString)
+
+  /** Publish `content` as `dirPath/name` — temp file + ATOMIC_MOVE, so a
+    * reader sees the old file or the new one, never a torn write. */
+  private def writeAtomically(dirPath: String, name: String, content: String): Unit = {
     val dir = java.nio.file.Paths.get(dirPath)
     java.nio.file.Files.createDirectories(dir)
     val tmp = java.nio.file.Files.createTempFile(dir, ".ver-", "")
-    java.nio.file.Files.write(tmp, version.toString.getBytes)
-    java.nio.file.Files.move(tmp, dir.resolve("VERSION"),
+    java.nio.file.Files.write(tmp, content.getBytes)
+    java.nio.file.Files.move(tmp, dir.resolve(name),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
@@ -4466,23 +4833,23 @@ class GraftClient(spark: SparkSession, root: String,
       filter: Option[Column], nprobe: Int): DataFrame = {
     val coll = collection(pm)
     val base = liveBinIndex(pm, coll) match {
-      case Some((quant, v)) =>
-        binCells(pm, coll, v, GraftClient.KeepCells(quant.probes(q, nprobe)))
+      case Some(idx) =>
+        binCells(pm, coll, idx, GraftClient.KeepCells(idx.quant.probes(q, nprobe)))
       case None => scalarPrunedRead(pm, coll, filter)
     }
     binProject(pm, filter.fold(base)(base.filter), typedLit(q))
   }
 
-  /** The BIN_IVF_FLAT quantizer and its stamp IF stamped at the store's
-    * current snapshot — the binary family's one staleness rule. */
+  /** The BIN_IVF_FLAT index IF stamped at the store's current snapshot
+    * — the binary family's one staleness rule. */
   private def liveBinIndex(pm: CollectionMeta, coll: BucketedKeyedCollection)
-      : Option[(graft.index.BinIvfIndex.BinQuantizer, Long)] =
-    loadBinIndex(pm).filter { case (_, v) => coll.currentVersion.contains(v) }
+      : Option[LoadedBinIndex] =
+    loadBinIndex(pm).filter(idx => coll.currentVersion.contains(idx.version))
 
-  /** The `choice` cells of the BIN_IVF_FLAT layout stamped at `v`. */
+  /** The `choice` cells of the BIN_IVF_FLAT layout as `idx` serves them. */
   private def binCells(pm: CollectionMeta, coll: BucketedKeyedCollection,
-      v: Long, choice: GraftClient.CellChoice): DataFrame =
-    cellsFrame(coll, cellsPath(pm), binCellsSchema, v, choice)
+      idx: LoadedBinIndex, choice: GraftClient.CellChoice): DataFrame =
+    cellsFrame(pm, coll, "cells", binCellsSchema, idx.delta, choice)
 
   /** The binary family's distance column against query words `q`:
     * Hamming (exact small ints, cast double for the shared result
@@ -4544,11 +4911,12 @@ class GraftClient(spark: SparkSession, root: String,
       val pm = partMeta(m, p)
       val coll = collection(pm)
       val base = liveBinIndex(pm, coll) match {
-        case Some((quant, v)) if pm.metric == "hamming" =>
+        case Some(idx) if pm.metric == "hamming" =>
           // a cell is droppable iff its MIN possible distance
           // (d(q, cᵢ) − radiusᵢ, triangle inequality) is >= radius —
           // every row it holds would fail `dist < radius`
-          binCells(pm, coll, v, GraftClient.DropCells(readBinRadii(pm).collect {
+          val quant = idx.quant
+          binCells(pm, coll, idx, GraftClient.DropCells(readBinRadii(pm).collect {
             case (cell, rc)
               if quant.hamming(quant.centers(cell), q) - rc >=
                 math.ceil(radius) => cell
@@ -4612,20 +4980,20 @@ class GraftClient(spark: SparkSession, root: String,
     val arms = pins.map { case (p, pin) =>
       val pm = partMeta(m, p)
       val idx = loadBinIndex(pm)
-        .filter { case (_, v) => pin.contains(v) && pm.metric == "hamming" }
-        .map { case (quant, v) => (quant, v, readBinRadii(pm)) }
+        .filter(b => pin.contains(b.version) && pm.metric == "hamming")
+        .map(b => (b, readBinRadii(pm)))
       (pm, pin, idx)
     }
     keysetIterator(m, pins, allowDrift, batchSize) { cursor =>
       arms.map { case (pm, pin, idx) =>
         val coll = collection(pm)
-        // the cell layout serves only while its stamp (== pin at
-        // creation) is still CURRENT — maintenance rewrites cells in
-        // place, so a moved stamp means the cells no longer equal the
-        // pinned snapshot
+        // the index serves only while its stamp (== pin at creation)
+        // is still CURRENT — a moved stamp serves a newer delta (or a
+        // folded base), which no longer equals the pinned snapshot
         val base = idx match {
-          case Some((quant, v, radii)) if coll.currentVersion.contains(v) =>
-            binCells(pm, coll, v, cursor match {
+          case Some((b, radii)) if coll.currentVersion.contains(b.version) =>
+            val quant = b.quant
+            binCells(pm, coll, b, cursor match {
               case Some((d0, _)) => GraftClient.DropCells(radii.collect {
                 case (cell, rc)
                   if quant.hamming(quant.centers(cell), q) + rc < d0 => cell
@@ -4678,9 +5046,9 @@ class GraftClient(spark: SparkSession, root: String,
       val pm = partMeta(m, part)
       val coll = collection(pm)
       liveBinIndex(pm, coll) match {
-        case Some((quant, v)) if pm.metric == "hamming" =>
+        case Some(idx) if pm.metric == "hamming" =>
           val centersBc =
-            cachedBroadcast(pm.name, "bincenters", v)(quant.centers)
+            cachedBroadcast(pm.name, "bincenters", idx.delta.base)(idx.quant.centers)
           val np = nprobe
           // executor-side probe: the same (hamming, id) ordering
           // BinQuantizer.probes uses, over the broadcast centers
@@ -4697,8 +5065,8 @@ class GraftClient(spark: SparkSession, root: String,
           }
           val qCells = q.withColumn("centroidId",
             explode(probeCells(col("qcodes"))))
-          binCells(pm, coll, v, GraftClient.AllCells)
-            .join(broadcast(qCells), Seq("centroidId"))
+          probedCellsFrame(pm, coll, "cells", binCellsSchema, idx.delta,
+              broadcast(qCells), broadcast(q))
             .select(col("qid"), col("qcodes"), col("key"), col("vec"),
               col("meta"), col("ingest_ts"))
         case _ =>
@@ -4882,7 +5250,7 @@ class GraftClient(spark: SparkSession, root: String,
       choose: LoadedIndex => GraftClient.CellChoice): DataFrame =
     liveIdx match {
       case Some(idx) if indexableMetric(m.metric) =>
-        cellsFrame(coll, cellsPath(m), cellsSchema, idx.version, choose(idx))
+        cellsFrame(m, coll, "cells", cellsSchema, idx.delta, choose(idx))
       case _ => exactScan
     }
 
@@ -4943,7 +5311,7 @@ class GraftClient(spark: SparkSession, root: String,
     // the same float-rounded vector that probes the cells
     val qa = if (m.metric == "cosine") normalizeQuery(qvec) else qvec
     val q1 = typedLit(qa)
-    val sq8 = cellsFrame(coll, sq8CellsPath(m), sq8CellsSchema, idx.version,
+    val sq8 = cellsFrame(m, coll, "sq8cells", sq8CellsSchema, idx.delta,
       GraftClient.KeepCells(idx.probe.probes(qa, nprobe)))
     val metaFiltered = filter.fold(sq8)(sq8.filter)
     // the TEXT_MATCH gate applies BEFORE the stage-1 depth bound, like
@@ -4982,14 +5350,14 @@ class GraftClient(spark: SparkSession, root: String,
       gate: Option[DataFrame] = None): DataFrame = {
     val qa = if (m.metric == "cosine") normalizeQuery(qvec) else qvec
     val cells = idx.probe.probes(qa, nprobe)
-    // per-cell ADC tables, indexed by centroidId (null ⇔ unprobed — the
-    // cell selection below guarantees the kernel never reads one); ~nprobe
-    // · m·ksub doubles, broadcast per query and reclaimed by the
-    // ContextCleaner like any expired plan broadcast
-    val luts = Array.fill[Array[Double]](idx.assign.nlist)(null)
-    cells.foreach(c => luts(c) = pq.lutFor(qa, idx.assign.centers(c)))
-    val lutsBc = spark.sparkContext.broadcast(luts)
-    val codes = cellsFrame(coll, pqCellsPath(m), pqCellsSchema, idx.version,
+    // per-cell ADC tables, indexed by centroidId (null ⇔ neither probed
+    // nor holding a delta row — the cell selection below guarantees the
+    // kernel never reads one); ~nprobe · m·ksub doubles, broadcast per
+    // query and reclaimed by the ContextCleaner like any expired plan
+    // broadcast
+    val lutsBc = spark.sparkContext.broadcast(
+      pqLuts(idx, pq, qa, cells.toSet ++ idx.delta.cellsOf("pqcells")))
+    val codes = cellsFrame(m, coll, "pqcells", pqCellsSchema, idx.delta,
       GraftClient.KeepCells(cells))
     val metaFiltered = filter.fold(codes)(codes.filter)
     val cand = gate.fold(metaFiltered)(g =>
@@ -5007,6 +5375,16 @@ class GraftClient(spark: SparkSession, root: String,
     coll.read(spark).join(broadcast(cand), Seq("key"))
       .select(col("key").as("vector_key"), score.as("distance"),
         col("meta").as("metadata"))
+  }
+
+  /** The ADC lookup tables of query `qa` for `cells`, indexed by
+    * centroidId (null elsewhere): each from the query's residual against
+    * the cell's FROZEN assign center. */
+  private def pqLuts(idx: LoadedIndex, pq: PqIndex.ProductQuantizer,
+      qa: Array[Float], cells: Set[Int]): Array[Array[Double]] = {
+    val luts = Array.fill[Array[Double]](idx.assign.nlist)(null)
+    cells.foreach(c => luts(c) = pq.lutFor(qa, idx.assign.centers(c)))
+    luts
   }
 
   /** The HNSW scatter-gather search: stage 1 walks every shard's graph
@@ -6090,8 +6468,8 @@ class GraftClient(spark: SparkSession, root: String,
       private val qa = if (pm.metric == "cosine") normalizeQuery(qvec) else qvec
       private val q1 = typedLit(qa)
       private val cells = idx.probe.probes(qa, nprobe)
-      private def codes = cellsFrame(coll, sq8CellsPath(pm), sq8CellsSchema,
-        idx.version, GraftClient.KeepCells(cells))
+      private def codes = cellsFrame(pm, coll, "sq8cells", sq8CellsSchema,
+        idx.delta, GraftClient.KeepCells(cells))
       override protected def s1Frame: DataFrame = {
         val mf = filter.fold(codes)(codes.filter)
         gate.fold(mf)(g => mf.join(g, Seq("key"), "left_semi"))
@@ -6129,11 +6507,10 @@ class GraftClient(spark: SparkSession, root: String,
       private val cells = idx.probe.probes(qa, nprobe)
       // per-cell ADC tables from the query's residual against the FROZEN
       // assign centers — the pqScored stage-1 shape, reused for paging
-      private val luts = Array.fill[Array[Double]](idx.assign.nlist)(null)
-      cells.foreach(c => luts(c) = pq.lutFor(qa, idx.assign.centers(c)))
-      private val lutsBc = spark.sparkContext.broadcast(luts)
-      private def codes = cellsFrame(coll, pqCellsPath(pm), pqCellsSchema,
-        idx.version, GraftClient.KeepCells(cells))
+      private val lutsBc = spark.sparkContext.broadcast(
+        pqLuts(idx, pq, qa, cells.toSet ++ idx.delta.cellsOf("pqcells")))
+      private def codes = cellsFrame(pm, coll, "pqcells", pqCellsSchema,
+        idx.delta, GraftClient.KeepCells(cells))
       override protected def s1Frame: DataFrame = {
         val mf = filter.fold(codes)(codes.filter)
         gate.fold(mf)(g => mf.join(g, Seq("key"), "left_semi"))
@@ -6141,16 +6518,18 @@ class GraftClient(spark: SparkSession, root: String,
             col("pqcode"), col("centroidId"), lutsBc, pq.ksub).as("adist"))
       }
       // ε = max measured per-cell reconstruction error over the probed
-      // cells (pq_recon, maintained touched-cell-exactly): adist is the
+      // cells (pq_recon for the base, each delta code's own error for the
+      // delta — both exact against the frozen codebooks): adist is the
       // EXACT distance to the reconstructed point ṽ, so
       // |exact − adist| ≤ ‖v − ṽ‖ ≤ the cell's bound by the triangle
       // inequality. Soundness requires every probed NON-EMPTY cell to
-      // carry a bound — the same per-commit invariant that keeps the
-      // codes themselves in sync with the float cells — and that is
+      // carry a bound — the same invariant that keeps the codes
+      // themselves in sync with the float cells — and that is
       // VERIFIED here against the pruned layout (≤ nprobe rows), loud
       // beats silently-truncated.
       override protected val eps: Double = {
-        val bounds = readPqRecon(pm)
+        val bounds = readPqRecon(pm).foldLeft(idx.delta.reconBounds) {
+          case (b, (c, r)) => b.updated(c, math.max(r, b.getOrElse(c, 0.0))) }
         val present = codes.select("centroidId").distinct()
           .collect().map(_.getInt(0))
         val missing = present.filterNot(bounds.contains)
@@ -6434,8 +6813,11 @@ class GraftClient(spark: SparkSession, root: String,
     * before trusting nprobe/radius behavior on their corpus (one hot
     * cell = one slow probe; one huge radius = a cell the range prune can
     * never exclude; many empty cells = nlist oversized for the data).
-    * Columns: (centroidId, n_rows, radius, fresh). A stale index reports
-    * its stored cells with null radii. One scan of the cell
+    * Columns: (centroidId, n_rows, radius, fresh). `n_rows` counts the
+    * rows each cell serves — its base rows minus the keys the delta
+    * supersedes, plus the delta rows assigned to it; the radius is the
+    * base cells' (the delta is scanned whatever the prune). A stale index
+    * reports its stored cells with null radii. One scan of the cell
     * layout — an admin-sized job, not a query-path one. Pairs with
     * [[estimateRecall]]: that measures the recall knob's effect, this
     * shows the layout property causing it. */
@@ -6448,9 +6830,12 @@ class GraftClient(spark: SparkSession, root: String,
     // ONE index load serves the freshness column, the cell-id seed and
     // the radii — two loads could straddle a concurrent rebuild and
     // describe different quantizers
-    val idx = liveIndex(m, collection(m))
+    val coll = collection(m)
+    val idx = liveIndex(m, coll)
     val radii = idx.fold(Seq.empty[(Int, Double)])(_.radii.toSeq)
-    val counts = IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema))
+    // the rows each cell serves: base minus superseded keys plus delta
+    val counts = idx.fold(IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema)))(
+        i => cellsFrame(m, coll, "cells", cellsSchema, i.delta, GraftClient.AllCells))
       .groupBy(col("centroidId"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_rows"))
     // seed the report with EVERY quantizer cell, not just the populated
@@ -6668,12 +7053,12 @@ class GraftClient(spark: SparkSession, root: String,
         // false) — re-normalizing inside NearestCentroids would run the
         // norm+divide pass twice per query row for identical results
         val normalize = m.metric == "cosine"
-        val probed = q.select(col("qid"),
-            (if (normalize) l2_normalize(col("qvec")) else col("qvec")).as("__qv"))
-          .withColumn("centroidId", explode(
-            probeCellsCol(m, idx, col("__qv"), normalize = false, nprobe)))
-        val scanned = Sq8Index.loadQuantized(spark, sq8CellsPath(m), Some(sq8CellsSchema))
-          .join(probed, Seq("centroidId"))
+        val qv = q.select(col("qid"),
+          (if (normalize) l2_normalize(col("qvec")) else col("qvec")).as("__qv"))
+        val probed = qv.withColumn("centroidId", explode(
+          probeCellsCol(m, idx, col("__qv"), normalize = false, nprobe)))
+        val scanned = probedCellsFrame(m, coll, "sq8cells", sq8CellsSchema, idx.delta,
+          probed, hintQ(qv))
         val stage1 = filter.fold(scanned)(scanned.filter)
           .select(col("qid"),
             sq8_l2_distance(col("qvec"), col("qmax"), col("__qv")).as("dist"),
@@ -6712,17 +7097,16 @@ class GraftClient(spark: SparkSession, root: String,
           if (nQ <= 100000L / math.max(1L, k.toLong * refine)) broadcast
           else identity
         val normalize = m.metric == "cosine"
-        val centersBc = cachedBroadcast(m.name, "assign", idx.version)(
+        val centersBc = cachedBroadcast(m.name, "assign", idx.delta.base)(
           idx.assign.centers)
-        val booksBc = cachedBroadcast(m.name, "pqbooks", idx.version)(
+        val booksBc = cachedBroadcast(m.name, "pqbooks", idx.delta.base)(
           idx.pq.get.codebooks)
-        val probed = q.select(col("qid"),
-            (if (normalize) l2_normalize(col("qvec")) else col("qvec")).as("__qv"))
-          .withColumn("centroidId", explode(
-            probeCellsCol(m, idx, col("__qv"), normalize = false, nprobe)))
-        val scanned = cellsFrame(coll, pqCellsPath(m), pqCellsSchema,
-            idx.version, GraftClient.AllCells)
-          .join(probed, Seq("centroidId"))
+        val qv = q.select(col("qid"),
+          (if (normalize) l2_normalize(col("qvec")) else col("qvec")).as("__qv"))
+        val probed = qv.withColumn("centroidId", explode(
+          probeCellsCol(m, idx, col("__qv"), normalize = false, nprobe)))
+        val scanned = probedCellsFrame(m, coll, "pqcells", pqCellsSchema, idx.delta,
+          probed, hintQ(qv))
         val stage1 = filter.fold(scanned)(scanned.filter)
           .select(col("qid"),
             graft.functions.PqFunctions.pq_asym_distance(col("__qv"),
@@ -6738,7 +7122,10 @@ class GraftClient(spark: SparkSession, root: String,
       case Some(idx) if indexableMetric(m.metric) =>
         val probed = q.withColumn("centroidId", explode(
           probeCellsCol(m, idx, col("qvec"), normalize = m.metric == "cosine", nprobe)))
-        IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema)).join(probed, Seq("centroidId"))
+        // the delta rows meet every query: broadcast the queries when they
+        // plausibly fit (|Q| is sized only when there is a delta)
+        probedCellsFrame(m, coll, "cells", cellsSchema, idx.delta, probed,
+          if (idx.delta.isEmpty || nQ > 100000L) q else broadcast(q))
       case _ =>
         // broadcast only when the query set plausibly fits the driver —
         // a forced hint on a huge batch would OOM instead of shuffling
@@ -6998,7 +7385,7 @@ class GraftClient(spark: SparkSession, root: String,
       s"'${m.name}' is a ${m.vectorType} collection — estimateRecallBinary " +
         "serves BINARY_VECTOR; use estimateRecall for float vectors")
     val nlist = liveBinIndex(m, collection(m))
-      .map(_._1.nlist)
+      .map(_.quant.nlist)
       .getOrElse(throw new IllegalStateException(
         s"${m.name} has no FRESH BIN_IVF_FLAT index — buildIndex first " +
           "(without one, pruned and exact are the same scan)"))
@@ -7982,22 +8369,24 @@ class GraftClient(spark: SparkSession, root: String,
       offset: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = col("__s")
-    val perArm = arms.zip(cols).map { case ((df, asc), c) =>
+    val perArm = arms.zip(cols).zipWithIndex.map { case (((df, asc), c), i) =>
+      // each window sees one arm's top-armK rows — at most armK here,
+      // n·armK across the arms — partitioned by the arm's id. The id is
+      // a column of a one-row range: the optimizer drops a literal
+      // partition key (EliminateWindowPartitions), which would leave an
+      // unpartitioned window and its single-partition warning
+      val arm = Window.partitionBy(col("__arm"))
       val v =
         if (ranker == "rrf")
-          // rank window, unpartitioned by design: it sees one arm's
-          // top-armK rows — at most armK here, n·armK across the arms
-          row_number().over(Window.orderBy(if (asc) s else s.desc, col("key")))
+          row_number().over(arm.orderBy(if (asc) s else s.desc, col("key")))
             .cast("long")
         else {
-          // min/max window over the same rows: at most armK per arm,
-          // n·armK across the arms
-          val arm = Window.partitionBy()
           val (mn, mx) = (min(s).over(arm), max(s).over(arm))
           when(mx > mn, if (asc) (mx - s) / (mx - mn) else (s - mn) / (mx - mn))
             .otherwise(lit(1.0))
         }
-      df.select(col("key"), v.as(c))
+      df.crossJoin(broadcast(spark.range(i, i + 1L).toDF("__arm")))
+        .select(col("key"), v.as(c))
     }
     val fused =
       if (ranker == "rrf")
@@ -9175,12 +9564,14 @@ object GraftClient {
     * 4·depth margin with a floor of 64 (the hnswlib guidance). */
   val DefaultHnswEf: Int = 64
 
-  /** Growing-tail fold threshold: a commit folds the HNSW tail back
-    * into the graphs once the estimated tail reaches this fraction of
-    * the graph rows. Below it, commits cost O(1) on the index and
-    * searches pay an exact scan over at most this fraction of the
-    * corpus (bounded to the churned buckets' directories). */
-  val HnswTailFoldRatio: Double = 0.2
+  /** Growing-tail fold threshold, shared by every maintained vector
+    * index: a commit folds the HNSW tail back into the graphs once the
+    * estimated tail reaches this fraction of the graph rows, and folds a
+    * centroid-partitioned index's delta segments into its base cells once
+    * the keys touched since the base reach this fraction of the base
+    * rows. Below it, commits cost no rewrite of the index and searches
+    * pay an exact scan over at most this fraction of the corpus. */
+  val TailFoldRatio: Double = 0.2
 
   /** Filtered-HNSW selectivity floor: when a filter admits at most this
     * many graph-covered rows, the filtered search skips the walk and
@@ -9217,8 +9608,9 @@ object GraftClient {
     *     writes); vacuumed snapshots upgrade to a strong read.
     * Scope: the scalar read surface (query/get/fetch). Vector search
     * stays Strong by construction — the at-rest index layouts exist
-    * only at their LATEST version (maintenance rewrites cells in
-    * place), so a stale-pinned search would have to abandon the index
+    * only at their LATEST version (a fold rewrites cells in place and
+    * drops the segments it folded), so a stale-pinned search would have
+    * to abandon the index
     * for an exact scan: a pessimization sold as a consistency level,
     * refused rather than shipped. */
   val ConsistencyLevels: Set[String] =

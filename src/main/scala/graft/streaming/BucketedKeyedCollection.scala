@@ -5,12 +5,14 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The keyed vector store at 100 TB shape — the at-rest form of the
   * reference's vector store (one row per live key, same-key overwrite,
@@ -431,14 +433,16 @@ object BucketedKeyedCollection {
   // evictUnder, so no cached frame outlives its files. Frames are
   // MEMORY_AND_DISK — an oversized load spills instead of OOMing.
   //
-  // Index layouts of a loaded root are cached per (layout path, index
-  // VERSION stamp) beside the snapshot frames, under the same loaded
-  // flag, eviction and release-race rules: the centroid-partitioned
-  // layouts as CellLayouts (one cell per RDD partition, probed by
-  // partition pruning), the HNSW graph blobs as persisted frames
-  // (indexFrame). The first search after a commit that moved the stamp
-  // re-reads and re-partitions the layout — the same per-commit re-scan
-  // the snapshot frame pays, charged to that search, not to the commit.
+  // Index layouts of a loaded root are cached beside the snapshot
+  // frames, under the same loaded flag, eviction and release-race rules:
+  // the centroid-partitioned layouts as CellLayouts (one cell per RDD
+  // partition, probed by partition pruning), keyed by layout path + the
+  // version of their BASE cells, and the HNSW graph blobs as persisted
+  // frames (indexFrame) keyed by their VERSION stamp. A commit appends a
+  // delta segment and leaves the base cells alone, so the base layout
+  // survives commits and the first search after one reads no parquet; a
+  // fold rewrites the base and moves the key, and the first search after
+  // it re-reads and re-partitions the layout.
   private val loadedRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -518,7 +522,7 @@ object BucketedKeyedCollection {
       (_, v, df) => VersionedFrame(v, df)).map(_.df)
 
   /** A loaded centroid-partitioned index layout (IVF_FLAT and
-    * BIN_IVF_FLAT cells, SQ8 and PQ codes) stamped at `version`: ONE
+    * BIN_IVF_FLAT cells, SQ8 and PQ codes) whose base is at `version`: ONE
     * persisted RDD whose partition `i` holds every row of cell
     * `cells(i)`, and nothing else. A probe selects partitions
     * ([[select]]) instead of filtering rows, so the search plan is the
@@ -533,12 +537,29 @@ object BucketedKeyedCollection {
       try rows.unpersist(blocking = false)
       catch { case _: Throwable => () }
 
-    /** The layout's rows of the cells `keep` accepts, as a frame. */
-    def select(spark: SparkSession, keep: Int => Boolean): DataFrame = {
+    /** The layout's rows of the cells `keep` accepts, as a frame —
+      * without the rows whose key is in `superseded`, and with every row
+      * of `extra` dealt round-robin over the chosen partitions, so they
+      * ride the same tasks (a probe still runs one task per chosen cell,
+      * and the rows ship once per broadcast, not once per task). */
+    def select(spark: SparkSession, keep: Int => Boolean,
+        superseded: Option[Broadcast[Set[UTF8String]]] = None,
+        extra: Option[Broadcast[Array[InternalRow]]] = None): DataFrame = {
       val picked = cells.indices.filter(i => keep(cells(i))).toSet
-      val rdd =
+      val pruned =
         if (picked.size == cells.size) rows
         else PartitionPruningRDD.create(rows, picked)
+      val n = pruned.getNumPartitions
+      val at = schema.fieldIndex("key")
+      val rdd =
+        if (superseded.isEmpty && extra.isEmpty) pruned
+        else if (n == 0) extra.fold(pruned)(x =>
+          spark.sparkContext.parallelize(Seq(0), 1).mapPartitions(_ => x.value.iterator))
+        else pruned.mapPartitionsWithIndex({ (i, it) =>
+          val kept = superseded.fold(it)(keys =>
+            it.filter(r => !keys.value.contains(r.getUTF8String(at))))
+          extra.fold(kept)(x => kept ++ Iterator.range(i, x.value.length, n).map(x.value(_)))
+        }, preservesPartitioning = true)
       GraftShim.internalCreateDataFrame(spark, rdd, schema)
     }
   }
@@ -572,9 +593,9 @@ object BucketedKeyedCollection {
     override def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
-  // Loaded cell layouts, keyed like indexFrameCache (canonical path +
-  // version stamp) and invalidated the same ways. Unlike a frame, each
-  // RDD is its own cache entry, so versions of one path never alias.
+  // Loaded cell layouts, keyed by canonical path + base version and
+  // invalidated like indexFrameCache. Unlike a frame, each RDD is its own
+  // cache entry, so versions of one path never alias.
   private val cellLayoutCache =
     new java.util.concurrent.ConcurrentHashMap[String, CellLayout]()
 

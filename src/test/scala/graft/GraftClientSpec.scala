@@ -204,7 +204,9 @@ class GraftClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hit = df.head()
     assert(hit.getAs[String]("vector_key") == "doc-a")
     assert(hit.getAs[Double]("distance") < 1e-6, "self-query must be ~0")
-    // the streamed rows' codes are real: they live in the pq cells
+    // the streamed rows' codes are real: once compact folds the delta
+    // segments, they live in the pq cells
+    client.compact("pqs")
     val pqCells = spark.read.parquet(s"${client.describe("pqs").dataPath}-ivf/pqcells")
     assert(pqCells.filter(col("key").isin("doc-a", "doc-b")).count() == 2)
   }
@@ -912,9 +914,22 @@ class GraftClientSpec extends AnyFunSuite with BeforeAndAfterAll {
         .sortBy { case (k, d) => (d, k) }.take(8).map(_._1)
       assert(got == exact, s"q=vec($qSeed): $got != $exact")
     }
-    // the deleted and moved-away copies must be gone from the cells on disk
+    // commits append delta segments and leave the base cells alone;
+    // compact folds them, and the on-disk cells then hold exactly the
+    // live rows: the deleted and moved-away copies must be gone
+    assert(client.compact("inc").contains(("_default", "ivf", "delta folded")))
+    for (qSeed <- Seq(17, 30, 170, 500)) {
+      val q = vec(qSeed).toArray
+      def l2(v: Seq[Float]): Double =
+        v.zip(q).map { case (a, b) => val d = a.toDouble - b; d * d }.sum
+      val exact = live.toSeq.map { case (k, v) => (k, l2(v)) }
+        .sortBy { case (k, d) => (d, k) }.take(8).map(_._1)
+      assert(client.search("inc", q, k = 8, nprobe = 4).collect()
+        .map(_.getAs[String]("vector_key")).toSeq == exact, s"after compact, q=vec($qSeed)")
+    }
     val cells = spark.read.parquet(
       s"${client.describe("inc").dataPath}-ivf/cells")
+    assert(cells.count() == live.size, "the folded cells hold exactly the live rows")
     assert(cells.filter(col("key") === "k17").count() == 0, "deleted key lingers in a cell")
     assert(cells.filter(col("key") === "k30").count() == 1, "moved key must exist exactly once")
     // the batch timestamp is a driver literal, so the index-cell rows and
@@ -1038,6 +1053,8 @@ class GraftClientSpec extends AnyFunSuite with BeforeAndAfterAll {
       val got = df.collect().map(_.getAs[String]("vector_key")).toSeq
       assert(got == exactTop(live, q, 8), s"q=vec($qSeed): $got")
     }
+    // compact folds the delta segments into the base cells
+    client.compact("sq8")
     val sq8OnDisk = spark.read.parquet(s"$dp-ivf/sq8cells")
     assert(sq8OnDisk.filter(col("key") === "k17").count() == 0,
       "deleted key lingers in the quantized cells")

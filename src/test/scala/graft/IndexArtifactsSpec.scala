@@ -7,13 +7,15 @@ import org.scalatest.BeforeAndAfterAll
 import graft.api.GraftClient
 
 /** The index readers REQUIRE every artifact a current build writes (the
-  * probe table, cell radii, binary radii, `pq_recon`, `hnsw_meta`): a
-  * stamped index without one raises a missing-artifact error instead of
-  * serving a fallback. This spec pins the writer side of that contract —
-  * every build, maintained commit and rebucket leaves each artifact in
-  * place — and the crash side: a failure between the artifact writes and
-  * the VERSION stamp leaves an unstamped or stale index, which answers
-  * exactly through the snapshot scan rather than raising. */
+  * probe table, cell radii, binary radii, `pq_recon`, `hnsw_meta`, the
+  * `DELTA` bookkeeping and every delta segment it names): a stamped index
+  * without one raises a missing-artifact error instead of serving a
+  * fallback. This spec pins the writer side of that contract — every
+  * build, maintained commit and rebucket leaves each artifact in place —
+  * and the crash side: a failure between the artifact writes and the
+  * VERSION stamp (in a build, a segment append or a fold) leaves an
+  * unstamped or stale index, which answers exactly through the snapshot
+  * scan rather than raising. */
 class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -40,15 +42,15 @@ class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val families = Seq(
     Family("IVF_FLAT", binary = false,
-      Seq("cells", "centroids", "probe_centroids", "cell_radii")),
+      Seq("cells", "centroids", "probe_centroids", "cell_radii", "DELTA")),
     Family("IVF_SQ8", binary = false,
-      Seq("cells", "centroids", "probe_centroids", "cell_radii", "sq8cells")),
+      Seq("cells", "centroids", "probe_centroids", "cell_radii", "sq8cells", "DELTA")),
     Family("IVF_PQ", binary = false,
       Seq("cells", "centroids", "probe_centroids", "cell_radii", "pqcells",
-        "pq_codebooks", "pq_recon")),
+        "pq_codebooks", "pq_recon", "DELTA")),
     Family("HNSW", binary = false, Seq("hnsw_graphs", "hnsw_meta")),
     Family("BIN_IVF_FLAT", binary = true,
-      Seq("cells", "bin_centroids", "bin_radii")))
+      Seq("cells", "bin_centroids", "bin_radii", "DELTA")))
 
   private def floatVec(seed: Int): Seq[Float] = {
     val r = new scala.util.Random(seed)
@@ -80,8 +82,9 @@ class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
     c.upsert("c", df)
   }
 
-  /** Brute-force top-10 keys over the live model, (distance, key) order. */
-  private def exactTop(f: Family, live: Map[String, Int], q: Int): Seq[String] =
+  /** Every live key with its distance to query seed `q`, in (distance,
+    * key) order. */
+  private def ranked(f: Family, live: Map[String, Int], q: Int): Seq[(Double, String)] =
     live.toSeq.map { case (k, s) =>
       val d =
         if (f.binary) binVec(s).zip(binVec(q))
@@ -89,7 +92,11 @@ class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
         else math.sqrt(floatVec(s).zip(floatVec(q))
           .map { case (a, b) => val x = a.toDouble - b; x * x }.sum)
       (d, k)
-    }.sorted.take(10).map(_._2)
+    }.sorted
+
+  /** Brute-force top-10 keys over the live model, (distance, key) order. */
+  private def exactTop(f: Family, live: Map[String, Int], q: Int): Seq[String] =
+    ranked(f, live, q).take(10).map(_._2)
 
   private def searchTop(c: GraftClient, f: Family, q: Int): Seq[String] = {
     val df =
@@ -97,6 +104,46 @@ class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
       else c.search("c", floatVec(q).toArray, k = 10)
     df.collect().map(_.getString(0)).toSeq
   }
+
+  /** Top-k, range (the 10 nearest), batch and a drained iterator all
+    * equal brute force for query seed `q`. */
+  private def surfacesExact(c: GraftClient, f: Family, live: Map[String, Int],
+      q: Int, what: String): Unit = {
+    import spark.implicits._
+    val byDist = ranked(f, live, q)
+    val all = byDist.map(_._2)
+    // range: every row as near as the 10th, the radius halfway to the next
+    val cut = byDist(9)._1
+    val inRange = byDist.takeWhile(_._1 <= cut).map(_._2)
+    val radius = (cut + byDist.map(_._1).find(_ > cut).getOrElse(cut + 1)) / 2
+    val keys = (df: DataFrame) => df.collect().map(_.getString(1)).toSeq
+    val (range, batch, drained) =
+      if (f.binary) {
+        val qa = binVec(q).toArray
+        (c.searchBinaryRange("c", qa, radius),
+          c.searchBinaryBatch("c", Seq((1L, qa.toSeq)).toDF("qid", "qcodes"), k = 10),
+          c.searchBinaryIterator("c", qa, batchSize = 50))
+      } else {
+        val qa = floatVec(q).toArray
+        (c.searchRange("c", qa, radius),
+          c.searchBatch("c", Seq((1L, qa.toSeq)).toDF("qid", "qvec"), k = 10),
+          c.searchIterator("c", qa, batchSize = 50))
+      }
+    assert(searchTop(c, f, q) == all.take(10), s"${f.indexType} $what: top-k (q=$q)")
+    assert(range.collect().map(_.getString(0)).toSeq == inRange,
+      s"${f.indexType} $what: range (q=$q)")
+    assert(keys(batch) == all.take(10), s"${f.indexType} $what: batch (q=$q)")
+    assert(drained.flatten.map(_.getString(0)).toSeq == all,
+      s"${f.indexType} $what: iterator (q=$q)")
+  }
+
+  /** The segments the DELTA bookkeeping names, as index-dir paths. */
+  private def namedSegments(c: GraftClient): Seq[java.nio.file.Path] =
+    new String(java.nio.file.Files.readAllBytes(ivfDir(c).resolve("DELTA")))
+      .split("\n").toSeq.filter(_.startsWith("segment ")).flatMap { l =>
+        val w = l.split(" ")
+        w.drop(2).map(layout => ivfDir(c).resolve(f"delta/$layout-${w(1).toLong}%08d"))
+      }
 
   private def ivfDir(c: GraftClient): java.nio.file.Path =
     java.nio.file.Paths.get(s"${c.describe("c").dataPath}-ivf")
@@ -136,6 +183,12 @@ class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
       c.deleteByKeys("c", Seq("k010", "k011", "k012"))
       live = live ++ batch -- Seq("k010", "k011", "k012")
       assertArtifacts(c, f, "after a maintained upsert + delete")
+      if (f.indexType != "HNSW") {
+        val segments = namedSegments(c)
+        assert(segments.size >= 2, s"${f.indexType}: both commits append a segment")
+        segments.foreach(p => assert(java.nio.file.Files.exists(p),
+          s"${f.indexType}: the stamp names $p but it is missing"))
+      }
 
       // rebucket re-homes the store and drops the index: nothing stamped
       // is left behind without its artifacts, and a rebuild has them all
@@ -176,17 +229,32 @@ class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
         live = live ++ batch
         assert(!fresh(c), s"${f.indexType}: a crashed refresh must read stale")
         Seq(3, 77, 500).foreach(q =>
-          assert(searchTop(c, f, q) == exactTop(f, live, q),
-            s"${f.indexType}: stale index must answer exactly (q=$q)"))
+          surfacesExact(c, f, live, q, "after a crashed segment append"))
         // the next commit succeeds and the index stays stale, not wrong
         c.deleteByKeys("c", Seq("k001"))
         live = live - "k001"
         assert(!fresh(c))
         assert(searchTop(c, f, 1) == exactTop(f, live, 1))
+
+        // the same through a FOLD: a batch past the tail ratio (24 of
+        // the 120-odd base rows) folds, and dies before its stamp
+        c.buildIndex("c", nlist = 4)
+        val folding = (200 until 230).map(i => f"k$i%03d" -> i)
+        c.armed = true
+        intercept[InjectedCrash](upsert(c, f, folding))
+        c.armed = false
+        live = live ++ folding
+        assert(!fresh(c), s"${f.indexType}: a crashed fold must read stale")
+        Seq(3, 77, 215).foreach(q => surfacesExact(c, f, live, q, "after a crashed fold"))
+        upsert(c, f, Seq("k002" -> 600))
+        live = live + ("k002" -> 600)
+        assert(!fresh(c))
+        surfacesExact(c, f, live, 600, "after the commit following a crashed fold")
       }
       // buildIndex is the recovery
       c.buildIndex("c", nlist = 4)
       assertArtifacts(c, f, "after the recovery build")
+      if (f.indexType != "HNSW") surfacesExact(c, f, live, 77, "after the recovery build")
     }
   }
 
@@ -211,6 +279,33 @@ class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
         else searchTop(fresh, f, 3))
       assert(e.getMessage.contains(path.toString) &&
         e.getMessage.contains("rebuild the index"), s"$it: ${e.getMessage}")
+    }
+  }
+
+  test("a stamped index missing a delta segment its DELTA names raises the " +
+       "missing-artifact error") {
+    Seq("IVF_SQ8", "BIN_IVF_FLAT").foreach { it =>
+      val f = families.find(_.indexType == it).get
+      val root = newRoot()
+      val c = new GraftClient(spark, root)
+      create(c, f)
+      upsert(c, f, (0 until 60).map(i => f"k$i%03d" -> i))
+      c.buildIndex("c", nlist = 4)
+      upsert(c, f, Seq("k001" -> 500, "k100" -> 100))
+      val segments = namedSegments(c)
+      assert(segments.nonEmpty, s"$it: the commit must append a segment")
+      segments.foreach { path =>
+        val saved = java.nio.file.Files.createTempDirectory("segment").resolve("s")
+        java.nio.file.Files.move(path, saved)
+        try {
+          val e = intercept[IllegalStateException](searchTop(new GraftClient(spark, root), f, 3))
+          assert(e.getMessage.contains(path.toString) &&
+            e.getMessage.contains("rebuild the index"), s"$it: ${e.getMessage}")
+        } finally java.nio.file.Files.move(saved, path)
+      }
+      assert(searchTop(new GraftClient(spark, root), f, 3) ==
+        exactTop(f, (0 until 60).map(i => f"k$i%03d" -> i).toMap ++
+          Map("k001" -> 500, "k100" -> 100), 3))
     }
   }
 }

@@ -177,6 +177,8 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       val got = df.collect().map(_.getAs[String]("vector_key")).toSeq
       assert(got == exactTop(live, q, 8), s"q=vec($qSeed): $got")
     }
+    // compact folds the delta segments into the base codes
+    client.compact("pq")
     val pqOnDisk = spark.read.parquet(s"$dp-ivf/pqcells")
     assert(pqOnDisk.filter(col("key") === "k17").count() == 0,
       "deleted key lingers in the PQ cells")

@@ -119,11 +119,14 @@ class TtlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val c = mkClient()
     c.createCollection("al", dim = dim, buckets = 4, ttlSeconds = 3600L)
     seed(c, "al")
+    val seeded = System.currentTimeMillis()
     assert(!topKeys(c.search("al", qv, k = 1)).contains("!dk"))
     c.alterCollectionTtl("al", 0L) // disable: the mask lifts entirely
     assert(topKeys(c.search("al", qv, k = 1)) == Seq("!dk"))
     assert(c.count("al") == 41)
     c.alterCollectionTtl("al", 1L) // 1s: everything seeded is expired
+    // once it is older than the 1 s TTL — the calls above can take less
+    Thread.sleep(math.max(0L, seeded + 1100L - System.currentTimeMillis()))
     assert(c.count("al") == 0)
     assert(c.search("al", qv, k = 5).count() == 0)
   }

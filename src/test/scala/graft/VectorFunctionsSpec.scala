@@ -21,7 +21,6 @@ object SparkTestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s
   }
