@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.index.{Catalog, CollectionMeta, HnswIndex, IvfIndex, KeyBloom, PqIndex, ScalarIndex, SparseIndex, Sq8Index, TextIndex}
 import graft.ingest.IngestOps
@@ -2035,7 +2035,7 @@ class GraftClient(spark: SparkSession, root: String,
       if (m.extraVecFields.isEmpty) df else df.select(canon: _*)
     // keep a fresh IVF index fresh across the commit
     describedJobs("graft: ivf refresh") {
-      refreshIndexIncremental(m, preVersion, newVersion, tk, dec.map(canonical)) }
+      indexFamily(m).refreshAfterCommit(preVersion, newVersion, tk, dec.map(canonical)) }
     // extra vector fields' indexes roll forward on the SAME commit
     // through the same machinery, each under its field view (the
     // field column surfaced AS vec) and its OWN index dir/lock/
@@ -2053,7 +2053,7 @@ class GraftClient(spark: SparkSession, root: String,
         if (f.nullable) s.filter(col("vec").isNotNull) else s
       }
       describedJobs(s"graft: field ${f.name} ivf refresh") {
-        refreshIndexIncremental(fieldMeta(m, f.name), preVersion,
+        indexFamily(fieldMeta(m, f.name)).refreshAfterCommit(preVersion,
           newVersion, tk, dec.map(slice)) }
     }
     // scalar indexes roll forward by appending the BATCH's own
@@ -2109,30 +2109,15 @@ class GraftClient(spark: SparkSession, root: String,
     val m = metaOrThrow(name)
     resolveParts(m, partitions).map { p =>
       val pm = partMeta(m, p)
-      val coll = collection(pm)
-      val n = coll.load(spark)
+      val n = collection(pm).load(spark)
       // Milvus's load waits for the INDEX segments too: materialize the
-      // live index layout frames now so the first search after load is
-      // already memory-resident (indexed searches read the cells/codes
-      // layouts, not the keyed store — pinning only the store would give
-      // them nothing). SQ8 warms BOTH layouts: stage 1 reads the codes,
-      // range search reads the float cells.
-      liveIndex(pm, coll).foreach { idx =>
-        val all = GraftClient.AllCells
-        cellLayouts(pm).foreach { case (layout, schema) =>
-          cellsFrame(pm, coll, layout, schema, idx.delta, all).count() }
-      }
-      // HNSW warms its graph blobs (liveIndex is None for graph layouts;
-      // servable covers the tail era — graphs serve across commits)
-      hnswServable(pm).foreach { case (vB, _) =>
-        loadedIndexFrame(coll, hnswGraphsPath(pm), vB,
-          () => HnswIndex.loadShards(spark, hnswGraphsPath(pm))).count()
-      }
-      // BIN_IVF_FLAT warms its cell layout (liveIndex is None for binary
-      // collections too — freshness resolves through loadBinIndex)
-      liveBinIndex(pm, coll).foreach { idx =>
-        binCells(pm, coll, idx, GraftClient.AllCells).count()
-      }
+      // live index layout frames of the primary vector and of every extra
+      // field now, so the first search after load is already
+      // memory-resident (indexed searches read the cells/codes layouts,
+      // not the keyed store — pinning only the store would give them
+      // nothing). SQ8 warms BOTH layouts: stage 1 reads the codes, range
+      // search reads the float cells.
+      vectorFamilies(pm).foreach(_.warm())
       n
     }.sum
   }
@@ -2145,7 +2130,10 @@ class GraftClient(spark: SparkSession, root: String,
     listedPartitions(m).foreach { p =>
       val pm = partMeta(m, p)
       collection(pm).release()
-      graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(pm))
+      // every vector index's layouts: an extra field's live under
+      // fieldsRoot, a sibling of the store's root, not under it
+      vectorFamilies(pm).foreach(f =>
+        graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(f.m)))
     }
   }
 
@@ -2342,64 +2330,10 @@ class GraftClient(spark: SparkSession, root: String,
           graft.index.SparseIndex.compact(spark, sparseIdxDir(pm))
           Seq((p, "sparse", "-"))
         } else Nil
-      // a sparse COLLECTION's own inverted index accumulates one delta
-      // segment per merge commit (auto-maintenance) — fold on demand,
-      // same as the attached layout above
-      val sparseOwn =
-        if (sparseVec(pm) &&
-            graft.index.SparseIndex.exists(sparsePostingsPath(pm))) {
-          graft.index.SparseIndex.compact(spark, sparsePostingsPath(pm))
-          Seq((p, "sparse_inverted", "-"))
-        } else Nil
-      // HNSW growing tail: fold it back into the graphs on demand (the
-      // same operation the tail-ratio clock auto-triggers at commit) —
-      // Milvus's compact seals growing segments the same way. No-op
-      // when the tail is empty.
-      val hnsw =
-        if (hnswServable(pm).exists(_._2.tailEst > 0)) {
-          graft.streaming.BucketedKeyedCollection.withCommitLock(
-              java.nio.file.Paths.get(ivfDir(pm))) {
-            val v = coll.currentVersion.getOrElse(0L)
-            foldHnswTail(pm, v)
-          }
-          Seq((p, "hnsw", "tail folded"))
-        } else Nil
-      // extra vector fields' HNSW layouts grow tails exactly like the
-      // primary's (the per-commit field refresh shares the machinery) —
-      // compact folds each under ITS OWN index dir's lock and stamp
-      val fieldHnsw = pm.extraVecFields
-        .filter(_.indexType == "HNSW")
-        .map(f => (f.name, fieldMeta(pm, f.name)))
-        .filter { case (_, fm) =>
-          hnswServable(fm).exists(_._2.tailEst > 0) }
-        .map { case (fname, fm) =>
-          graft.streaming.BucketedKeyedCollection.withCommitLock(
-              java.nio.file.Paths.get(ivfDir(fm))) {
-            val v = coll.currentVersion.getOrElse(0L)
-            foldHnswTail(fm, v)
-          }
-          (p, "hnsw", s"$fname tail folded")
-        }
-      // IVF-family delta segments — the primary's and each extra vector
-      // field's, each under its own index dir's lock and stamp — fold
-      // into their base cells on demand (the commit-time fold, early)
-      val cellFolds = (("", pm) +: pm.extraVecFields.map(f => (f.name, fieldMeta(pm, f.name))))
-        .filter { case (_, fm) => foldCellDelta(fm) }
-        .map { case (fname, _) =>
-          (p, "ivf", if (fname.isEmpty) "delta folded" else s"$fname delta folded") }
-      // NAMED sparse fields' postings accumulate one delta segment per
-      // commit exactly like a sparse collection's own index (the field
-      // refresh shares refreshSparseInvIncremental) — fold each on
-      // demand under its own layout, the sparseOwn arm per field
-      val fieldSparse = pm.extraVecFields
-        .filter(_.family == "SPARSE_FLOAT_VECTOR")
-        .map(f => (f.name, fieldMeta(pm, f.name)))
-        .filter { case (_, fm) =>
-          graft.index.SparseIndex.exists(sparsePostingsPath(fm)) }
-        .map { case (fname, fm) =>
-          graft.index.SparseIndex.compact(spark, sparsePostingsPath(fm))
-          (p, "sparse_inverted", fname)
-        }
+      // every vector index's pending increments — the primary's, then
+      // each extra field's, each under its own index dir's lock and stamp
+      // — fold into its base on demand (the commit-time fold, early)
+      val vectors = vectorFamilies(pm).flatMap(_.compact().map { case (a, d) => (p, a, d) })
       // TTL garbage collection — Milvus compaction's expired-data sweep:
       // expiry is a read-time mask everywhere else; HERE the bytes are
       // physically reclaimed, as one ordinary tombstone merge-commit of
@@ -2418,8 +2352,7 @@ class GraftClient(spark: SparkSession, root: String,
           } else Nil
         case None => Nil
       }
-      scalars ++ text ++ sparse ++ sparseOwn ++ hnsw ++ fieldHnsw ++
-        cellFolds ++ fieldSparse ++ ttl
+      scalars ++ text ++ sparse ++ vectors ++ ttl
     }
   }
 
@@ -3182,32 +3115,13 @@ class GraftClient(spark: SparkSession, root: String,
 
   // ---- BIN_IVF_FLAT (BINARY_VECTOR collections' one index family) ----
 
-  private def binCentroidsPath(m: CollectionMeta) = s"${ivfDir(m)}/bin_centroids"
-
-  /** Whether the collection's index carries k-majority Hamming cells —
-    * the BINARY_VECTOR sibling of [[sq8Indexed]]/[[pqIndexed]]. */
-  private def binIndexed(m: CollectionMeta): Boolean =
-    m.indexType == "BIN_IVF_FLAT" &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(cellsPath(m)))
-
-  /** Per-(collection, version) loaded binary index — the same
-    * collect-once-per-version contract [[idxCache]] keeps for the float
-    * centroid tables (the VERSION file is re-read every call; the
-    * nlist-row centroid collect and the segment reads are not). */
-  private val binIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), LoadedBinIndex]()
-
-  private def loadBinIndex(m: CollectionMeta): Option[LoadedBinIndex] =
-    if (!binIndexed(m)) None
-    else readVersionFile(ivfDir(m)).map { v =>
-      val state = readDeltaState(m)
-      cachedAt(binIdxCache, m.name, v, state)(_.delta) {
-        LoadedBinIndex(graft.index.BinIvfIndex.BinQuantizer(
-          spark.read.schema("centroid_id INT, center ARRAY<BIGINT>")
-            .parquet(binCentroidsPath(m))
-            .collect().sortBy(_.getInt(0)).map(_.getSeq[Long](1).toArray)),
-          v, readCellDelta(m, v, state))
-      }
+  /** The binary index IF it is stamped at snapshot `at` — the
+    * [[loadIndex]] rule; only a BIN_IVF_FLAT build writes binary cells. */
+  private def loadBinIndex(m: CollectionMeta, at: Option[Long]): Option[LoadedBinIndex] =
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(cellsPath(m)))) None
+    else stampedCells(m, at) { (v, state) =>
+      LoadedBinIndex(graft.index.BinIvfIndex.BinQuantizer(binCentroidsTable.ordered(m)),
+        v, readCellDelta(m, binLayouts, v, state))
     }
 
   /** Whether the collection's index carries SQ8 quantized cells — the
@@ -3270,13 +3184,10 @@ class GraftClient(spark: SparkSession, root: String,
     * must preserve the over-count direction or use an exact count. */
   private case class HnswMeta(maxSeq: Long, graphRows: Long, tailEst: Long)
 
-  private def hnswMetaPath(m: CollectionMeta) =
-    java.nio.file.Paths.get(ivfDir(m), "hnsw_meta")
-
   /** Written before every stamp (build and fold), so a stamped HNSW
     * index always has it. */
   private def readHnswMeta(m: CollectionMeta): HnswMeta = {
-    val p = hnswMetaPath(m)
+    val p = java.nio.file.Paths.get(ivfDir(m), "hnsw_meta")
     graft.index.Artifact.required(p.toString) {
       val kv = new String(java.nio.file.Files.readAllBytes(p)).split("\n")
         .filter(_.nonEmpty).map { l =>
@@ -3286,23 +3197,16 @@ class GraftClient(spark: SparkSession, root: String,
     }
   }
 
-  private def writeHnswMeta(m: CollectionMeta, meta: HnswMeta): Unit = {
-    val dir = java.nio.file.Paths.get(ivfDir(m))
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = java.nio.file.Files.createTempFile(dir, ".hm-", "")
-    java.nio.file.Files.write(tmp,
-      s"maxseq ${meta.maxSeq}\ngraphrows ${meta.graphRows}\ntailest ${meta.tailEst}\n".getBytes)
-    java.nio.file.Files.move(tmp, hnswMetaPath(m),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeHnswMeta(m: CollectionMeta, meta: HnswMeta): Unit =
+    writeAtomically(ivfDir(m), "hnsw_meta",
+      s"maxseq ${meta.maxSeq}\ngraphrows ${meta.graphRows}\ntailest ${meta.tailEst}\n")
 
   /** HNSW servability: stamped graphs. UNLIKE the IVF family's
     * stamp-equals-current rule, an HNSW layout serves index-backed
     * searches at ANY later snapshot — the graph arm takes live rows
     * with seq ≤ S_b, the tail arm exact-scans the churned buckets' rows
     * with seq > S_b, and the two partition the live set exactly (see
-    * [[refreshHnswIncremental]]). Returns (stamped build version,
+    * [[HnswFamily]]). Returns (stamped build version,
     * meta). */
   private def hnswServable(m: CollectionMeta): Option[(Long, HnswMeta)] =
     if (!hnswIndexed(m)) None
@@ -3328,22 +3232,40 @@ class GraftClient(spark: SparkSession, root: String,
     if (n == 0.0) q else q.map(x => (x / n).toFloat)
   }
 
-  private def writeCentroids(quant: IvfIndex.CoarseQuantizer, path: String): Unit = {
-    import spark.implicits._
-    quant.centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("centroid_id", "center")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+  /** A per-cell side table of an index dir: one `(centroid_id, value)`
+    * parquet row per cell. Reads take the explicit schema (an inferred
+    * read fires a footer job per index-version load — the latency the
+    * cellsSchema comment above says interactive paths must not pay) and
+    * raise the missing-artifact error when the table is absent. */
+  private final class CellTable[V: scala.reflect.ClassTag](file: String,
+      value: StructField, get: Row => V) {
+    private val schema =
+      StructType(Seq(StructField("centroid_id", IntegerType, nullable = false), value))
+    private def path(m: CollectionMeta): String = s"${ivfDir(m)}/$file"
+    def write(m: CollectionMeta, cells: Iterable[(Int, V)]): Unit = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(cells.toSeq.map { case (c, v) => Row(c, v) }.asJava, schema)
+        .coalesce(1).write.mode("overwrite").parquet(path(m))
+    }
+    def read(m: CollectionMeta): Map[Int, V] =
+      graft.index.Artifact.required(path(m))(spark.read.schema(schema).parquet(path(m))
+        .collect().map(r => r.getInt(0) -> get(r)).toMap)
+    /** The values in cell order — a quantizer's centers. */
+    def ordered(m: CollectionMeta): Array[V] = read(m).toSeq.sortBy(_._1).map(_._2).toArray
   }
 
-  private def readCentroids(path: String): IvfIndex.CoarseQuantizer =
-    // explicit schema: an inferred read fires a footer job per index-
-    // version load — the exact latency the cellsSchema comment above
-    // says interactive paths must not pay
-    graft.index.Artifact.required(path)(IvfIndex.CoarseQuantizer(
-      spark.read.schema("centroid_id INT, center ARRAY<DOUBLE>").parquet(path)
-        .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)))
-
-  private def cellRadiiPath(m: CollectionMeta) = s"${ivfDir(m)}/cell_radii"
+  private def centerTable[E: scala.reflect.ClassTag](file: String, element: DataType) =
+    new CellTable[Array[E]](file, StructField("center", ArrayType(element, containsNull = false)),
+      _.getSeq[E](1).toArray)
+  private def scalarTable[V: scala.reflect.ClassTag](file: String, column: String,
+      dataType: DataType) =
+    new CellTable[V](file, StructField(column, dataType, nullable = false), _.getAs[V](1))
+  private lazy val centroidsTable = centerTable[Double]("centroids", DoubleType)
+  private lazy val probeCentroidsTable = centerTable[Double]("probe_centroids", DoubleType)
+  private lazy val cellRadiiTable = scalarTable[Double]("cell_radii", "radius", DoubleType)
+  private lazy val pqReconTable = scalarTable[Double]("pq_recon", "bound", DoubleType)
+  private lazy val binCentroidsTable = centerTable[Long]("bin_centroids", LongType)
+  private lazy val binRadiiTable = scalarTable[Int]("bin_radii", "radius", IntegerType)
 
   /** One NON-EMPTY cell of an assigned frame: its refreshed probe
     * center, its radius and its row count. */
@@ -3379,20 +3301,6 @@ class GraftClient(spark: SparkSession, root: String,
       }.toMap
   }
 
-  private def writeCellRadii(radii: Map[Int, Double], m: CollectionMeta): Unit = {
-    import spark.implicits._
-    radii.toSeq.toDF("centroid_id", "radius")
-      .coalesce(1).write.mode("overwrite").parquet(cellRadiiPath(m))
-  }
-
-  private def readPqRecon(m: CollectionMeta): Map[Int, Double] =
-    graft.index.Artifact.required(pqReconPath(m))(
-      spark.read.schema("centroid_id INT, bound DOUBLE")
-        .parquet(pqReconPath(m))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap)
-
-  private def pqReconPath(m: CollectionMeta) = s"${ivfDir(m)}/pq_recon"
-
   /** Per-cell MAX PQ reconstruction error `max ‖v − ṽ‖` (assign space,
     * `ṽ = center + decode(encode(v))`) — the measured ε the PQ margin
     * drain holds rows back by, exactly as SQ8's drain holds by its
@@ -3410,46 +3318,6 @@ class GraftClient(spark: SparkSession, root: String,
         col("__v"), col("centroidId"), centersBc, booksBc)).as("bound"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
-  private def writePqRecon(bounds: Map[Int, Double], m: CollectionMeta): Unit = {
-    import spark.implicits._
-    bounds.toSeq.toDF("centroid_id", "bound")
-      .coalesce(1).write.mode("overwrite").parquet(pqReconPath(m))
-  }
-
-  private def readCellRadii(m: CollectionMeta): Map[Int, Double] =
-    graft.index.Artifact.required(cellRadiiPath(m))(
-      spark.read.schema("centroid_id INT, radius DOUBLE")
-        .parquet(cellRadiiPath(m))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap)
-
-  /** Build (or rebuild) the IVF_FLAT index over the CURRENT snapshot —
-    * the reference's `create_index(IVF_FLAT, L2, nlist)`
-    * (`milvus-app/pythonvectordbceph_milvus.py:100-102`). Persists the
-    * cell-partitioned layout, TWO centroid tables, and the snapshot
-    * version indexed:
-    *
-    *   - `centroids` — the frozen ASSIGNMENT centers. These never move
-    *     after build, so any row's cell is recomputable from its vector
-    *     alone — which is what lets a commit assign its rows to cells
-    *     without reading the index, and a fold find the cells it rewrites.
-    *   - `probe_centroids` — the refreshed PER-CELL MEANS used to choose
-    *     cells at query time. Folds move these toward the cells' true
-    *     current means, so probe quality tracks drift while cell
-    *     membership stays frozen.
-    *
-    * Collections created with `indexType = "IVF_SQ8"` additionally get
-    * SQ8-quantized cells (`qvec` binary + `qmax` double — 0.30× the bytes
-    * at rest): `search` scans THOSE for stage-1 candidates (the fused
-    * int8 dequantize-distance kernel reads a quarter of the IO) and
-    * re-ranks exactly against the float cells. The float cells stay on
-    * disk as the exact re-rank side and the staleness fallback — the same
-    * two-layout split FAISS/Milvus IVF_SQ8 keeps (quantized scan +
-    * full-precision refine). SQ8 codes are encoded in the ASSIGN space:
-    * raw vectors for l2, unit-normalized for cosine (L2 order over unit
-    * vectors ≡ cosine order, so the same fused kernel ranks stage 1 for
-    * both; the exact re-rank uses the collection's own metric over the
-    * original vectors). Dot collections reject any IVF index at build
-    * (no Voronoi prune exists for inner product). */
   /** Milvus `drop_index` for the vector index: destroy the collection's
     * index layout (coarse cells, SQ8/PQ codes, codebooks, centroid and
     * radii tables). Search falls back to the exact snapshot scan —
@@ -3469,10 +3337,7 @@ class GraftClient(spark: SparkSession, root: String,
       require(!collection(pm).isLoaded,
         s"${pm.name} is loaded — release_collection before drop_index " +
           "(Milvus refuses the drop on a loaded collection the same way)")
-      graft.streaming.BucketedKeyedCollection.withCommitLock(
-          java.nio.file.Paths.get(ivfDir(pm))) {
-        deleteDir(ivfDir(pm))
-      }
+      indexFamily(pm).locked(deleteDir(ivfDir(pm)))
     }
     // cached LoadedIndex entries and quantizer broadcasts for this name
     // would never be evicted by a later call otherwise (same hook drop()
@@ -3483,6 +3348,9 @@ class GraftClient(spark: SparkSession, root: String,
     invalidateIndexCaches(m.name)
   }
 
+  /** Milvus `create_index`: build (or rebuild) the vector index of each
+    * partition's current snapshot — the family's own layout
+    * ([[IndexFamily]]). */
   def buildIndex(name: String, nlist: Int, sampleFraction: Double = 1.0,
                  partitions: Seq[String] = Nil,
                  field: String = ""): Unit = {
@@ -3491,48 +3359,22 @@ class GraftClient(spark: SparkSession, root: String,
     // its own dir + VERSION stamp under fieldsRoot) — rebuilding one
     // field never stales another's index or the primary's
     val m = fieldMetaOpt(metaOrThrow(name), field)
-    if (binaryVec(m)) {
-      require(m.indexType == "BIN_IVF_FLAT",
-        s"'${m.name}' is a FLAT binary collection — only BIN_IVF_FLAT " +
-          "collections build a vector index (exact Hamming/Jaccard scans " +
-          "need none)")
-      require(nlist >= 1, s"nlist must be >= 1 (got $nlist)")
-    } else if (sparseVec(m)) {
-      require(m.indexType == "SPARSE_INVERTED_INDEX",
-        s"'${m.name}' is a FLAT sparse collection — only " +
-          "SPARSE_INVERTED_INDEX collections build a vector index " +
-          "(exact sparse-dot scans need none)")
-      // nlist plays the postings layout's dim-hash BUCKET role here
-      // (the directory-prune granularity), not a Voronoi cell count
-      require(nlist >= 1, s"nlist must be >= 1 (got $nlist)")
-    } else require(indexableMetric(m.metric),
-      s"vector indexes support l2 and cosine (dot has no Voronoi prune " +
-        s"and no monotone graph distance — dot searches stay exact); " +
-        s"collection is ${m.metric}")
+    indexFamily(m).requireBuildable(nlist)
     // per-partition indexes (Milvus builds per segment, clustered by
     // partition): the default all-partition build skips EMPTY partitions
     // (registered but never written) but must still build SOMETHING;
     // a named empty partition fails loudly.
     val built = resolveParts(m, partitions).count { p =>
-      val pm = partMeta(m, p)
-      val empty = collection(pm).currentVersion.isEmpty
+      val family = indexFamily(partMeta(m, p))
+      val empty = collection(family.m).currentVersion.isEmpty
       if (empty) require(partitions.isEmpty,
         s"partition '$p' of '$name' is empty — nothing to index")
-      if (!empty) buildIndexFor(pm, nlist, sampleFraction)
+      if (!empty) family.rebuild(nlist, sampleFraction)
       !empty
     }
     if (built == 0) throw new IllegalStateException(
       s"collection $name is empty — nothing to index")
   }
-
-  private def buildIndexFor(m: CollectionMeta, nlist: Int,
-                            sampleFraction: Double): Unit =
-    if (m.indexType == "HNSW") buildHnswFor(m) // nlist/sampleFraction are
-                                               // IVF knobs — HNSW's were
-                                               // frozen at create (M, efC)
-    else if (binaryVec(m)) buildBinIvfFor(m, nlist)
-    else if (sparseVec(m)) buildSparseInvFor(m, nlist)
-    else buildIvfFor(m, nlist, sampleFraction)
 
   /** Where a sparse COLLECTION's own inverted index lives — inside the
     * index dir (so the per-commit refresh's exists-fast-path and the
@@ -3541,75 +3383,10 @@ class GraftClient(spark: SparkSession, root: String,
   private def sparsePostingsPath(m: CollectionMeta) =
     s"${ivfDir(m)}/sparse_postings"
 
-  /** SPARSE_INVERTED_INDEX build — Milvus's (only) index for
-    * SPARSE_FLOAT_VECTOR fields: the store's (key, dim, w) postings at
-    * rest partitioned by `pmod(xxhash64(dim), nlist)` with the norms
-    * side table cosine needs ([[graft.index.SparseIndex]] — the same
-    * layout the attached family uses, but DERIVED FROM THE STORE, which
-    * is what makes auto-maintenance and an exact fallback possible).
-    * Same serialization (index commit lock), snapshot pinning
-    * (readBucketsAt the stamped version), and VERSION-last crash stance
-    * as every other family. The prune is LOSSLESS by construction (a
-    * posting's bucket is a pure function of its dim), so unlike
-    * IVF/HNSW there is no recall knob to estimate — a fresh index
-    * answers exactly. */
-  private def buildSparseInvFor(m: CollectionMeta, nlist: Int): Unit =
-    graft.streaming.BucketedKeyedCollection.withCommitLock(
-        java.nio.file.Paths.get(ivfDir(m))) {
-      val coll = collection(m)
-      val version = coll.currentVersion.getOrElse(
-        throw new IllegalStateException(s"collection ${m.name} is empty — nothing to index"))
-      val snapshot = coll.readBucketsAt(spark, version, 0 until m.buckets)
-      SparseIndex.build(storePostings(snapshot), sparsePostingsPath(m),
-        buckets = nlist, idCol = "key")
-      stampIndexVersion(m, version)
-      invalidateIndexCaches(m.name)
-      graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(m))
-    }
-
   /** Store rows → the (key, dim, w) posting set the sparse layouts
     * take — one explode of the stored maps. */
   private def storePostings(rows: DataFrame): DataFrame =
     rows.select(col("key"), explode(col("vec")).as(Seq("dim", "w")))
-
-  /** BIN_IVF_FLAT build — Milvus's index for BINARY_VECTOR fields: a
-    * k-majority coarse quantizer trained on a bounded driver-side sample
-    * (the PQ-codebook bounded-build pattern), the full corpus assigned
-    * distributed through the fused XOR+popcount kernel, cells persisted
-    * partitioned by `centroidId` (the float family's directory-prune
-    * contract). Same serialization (index commit lock), snapshot pinning
-    * (readBucketsAt the stamped version), VERSION-last crash stance, and
-    * cache eviction as the IVF build. Centers are FROZEN at build like
-    * the float assignment centers — any row's cell is recomputable from
-    * its codes alone, which is what lets incremental maintenance evict a
-    * key's old copy without a key→cell sidecar. */
-  private def buildBinIvfFor(m: CollectionMeta, nlist: Int): Unit =
-    graft.streaming.BucketedKeyedCollection.withCommitLock(
-        java.nio.file.Paths.get(ivfDir(m))) {
-      val coll = collection(m)
-      val version = coll.currentVersion.getOrElse(
-        throw new IllegalStateException(s"collection ${m.name} is empty — nothing to index"))
-      val snapshot = coll.readBucketsAt(spark, version, 0 until m.buckets)
-      val (indexed, quant) = graft.index.BinIvfIndex.build(snapshot, "vec", nlist)
-      graft.index.BinIvfIndex.writeIndexed(indexed, cellsPath(m))
-      import spark.implicits._
-      quant.centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("centroid_id", "center")
-        .coalesce(1).write.mode("overwrite").parquet(binCentroidsPath(m))
-      // per-cell max Hamming radius to the FROZEN center — searchBinaryRange's
-      // lossless triangle-inequality prune (Hamming is a true metric, and
-      // the distances are exact small ints, so unlike the float family's
-      // cell_radii no fp slack term is ever needed); read the just-written
-      // cells back (partition-local) like the float build does
-      val stats = binCellStats(
-        spark.read.schema(binCellsSchema).parquet(cellsPath(m)), quant.centers)
-      writeBinRadii(stats.map { case (cell, (r, _)) => cell -> r }, m)
-      publishBase(m, version, stats.values.map(_._2).sum)
-      invalidateIndexCaches(m.name)
-      graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(m))
-    }
-
-  private def binRadiiPath(m: CollectionMeta) = s"${ivfDir(m)}/bin_radii"
 
   /** Per-cell MAX Hamming distance to the frozen k-majority center, and
     * the cell's row count — one fused-kernel pass over the given cells'
@@ -3628,138 +3405,6 @@ class GraftClient(spark: SparkSession, root: String,
         org.apache.spark.sql.functions.count(lit(1)).as("rows"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1).toInt, r.getLong(2))).toMap
   }
-
-  private def writeBinRadii(radii: Map[Int, Int], m: CollectionMeta): Unit = {
-    import spark.implicits._
-    radii.toSeq.toDF("centroid_id", "radius")
-      .coalesce(1).write.mode("overwrite").parquet(binRadiiPath(m))
-  }
-
-  private def readBinRadii(m: CollectionMeta): Map[Int, Int] =
-    graft.index.Artifact.required(binRadiiPath(m))(
-      spark.read.schema("centroid_id INT, radius INT")
-        .parquet(binRadiiPath(m))
-        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
-
-  /** HNSW build: one graph per store bucket (the shard route IS the
-    * bucket route, so a merge commit's touched buckets name exactly the
-    * shards to rebuild), persisted as blob rows partitioned by shard.
-    * Same serialization (index commit lock), snapshot pinning
-    * (readBucketsAt the stamped version), VERSION-last crash stance, and
-    * cache eviction as the IVF build. */
-  private def buildHnswFor(m: CollectionMeta): Unit =
-    graft.streaming.BucketedKeyedCollection.withCommitLock(
-        java.nio.file.Paths.get(ivfDir(m))) {
-      val coll = collection(m)
-      val version = coll.currentVersion.getOrElse(
-        throw new IllegalStateException(s"collection ${m.name} is empty — nothing to index"))
-      val snapshot = coll.readBucketsAt(spark, version, 0 until m.buckets)
-        .withColumn("__assign", assignSpace(m)(col("vec")))
-        .select(col("key"), col("__assign"))
-      HnswIndex.writeShards(
-        HnswIndex.buildShards(snapshot, "__assign", m.buckets,
-          m.hnswM, m.hnswEfC),
-        hnswGraphsPath(m))
-      // growing-tail bookkeeping: S_b = the pinned snapshot's seq
-      // high-water mark (NOT the possibly-newer current one — rows of a
-      // commit racing this build must land in the tail, not be claimed
-      // covered). graphRows off the just-written 1-row-per-shard layout.
-      // Meta BEFORE the version stamp — see foldHnswTail's ordering note.
-      val graphRows = HnswIndex.loadShards(spark, hnswGraphsPath(m))
-        .agg(sum(col("n"))).head().getLong(0)
-      writeHnswMeta(m, HnswMeta(coll.maxSeqAt(version), graphRows, 0L))
-      stampIndexVersion(m, version)
-      invalidateIndexCaches(m.name)
-      graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(m))
-    }
-
-  private def buildIvfFor(m: CollectionMeta, nlist: Int,
-                          sampleFraction: Double): Unit =
-    // EVERY writer of the IVF layout — admin builds here, per-commit
-    // incremental refreshes in refreshIndexIncremental — serializes on
-    // the index dir's commit lock, the same serialized-writers guarantee
-    // the scalar and text indexes hold: interleaved build/refresh writes
-    // could otherwise tear the cell layout while a fresh stamp still
-    // claims coverage (ghost-fresh). The snapshot read is PINNED to the
-    // version being stamped (readBucketsAt): a store commit racing the
-    // build can advance CURRENT mid-build, and an unpinned read would
-    // index the newer rows under the older stamp — instead the build
-    // stays internally consistent, reads as stale if overtaken, and the
-    // overtaking commit's refresh (queued on this lock, stamp re-read
-    // inside it) rolls the just-built index forward — no lost refresh.
-    graft.streaming.BucketedKeyedCollection.withCommitLock(
-        java.nio.file.Paths.get(ivfDir(m))) {
-    val coll = collection(m)
-    val version = coll.currentVersion.getOrElse(
-      throw new IllegalStateException(s"collection ${m.name} is empty — nothing to index"))
-    val snapshot = coll.readBucketsAt(spark, version, 0 until m.buckets)
-      .withColumn("__assign", assignSpace(m)(col("vec")))
-    val (indexed, quant) = IvfIndex.build(
-      snapshot, "__assign", nlist, sampleFraction = sampleFraction)
-    IvfIndex.writeIndexed(indexed.drop("__assign"), cellsPath(m))
-    // SQ8 codes live in the ASSIGN space: raw vectors for l2, unit-
-    // normalized for cosine (L2 order over unit vectors ≡ cosine order,
-    // so stage 1 ranks with the same fused int8 kernel in both metrics);
-    // the exact re-rank always reads the ORIGINAL vectors from the store
-    if (m.indexType == "IVF_SQ8")
-      Sq8Index.writeQuantized(
-        Sq8Index.quantize(
-          IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema))
-            .withColumn("__v", assignSpace(m)(col("vec"))).drop("vec"),
-          "__v"),
-        sq8CellsPath(m))
-    // IVF_PQ: train per-subspace codebooks on the residuals (assign
-    // space, frozen coarse centers), persist them beside the centroid
-    // tables, and write the m-bytes-per-vector encoded cells. Codebooks
-    // freeze at build exactly like the assignment centers — commits
-    // encode their delta rows, and folds re-encode touched cells,
-    // bit-for-bit against them.
-    if (m.indexType == "IVF_PQ") {
-      val pqm = if (m.pqM > 0) m.pqM else PqIndex.defaultM(m.dim)
-      val assignedCells = IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema))
-        .withColumn("__v", assignSpace(m)(col("vec")))
-      val pq = PqIndex.train(assignedCells, "__v", quant.centers, pqm,
-        ksub = 1 << m.pqNbits, sampleFraction = sampleFraction)
-      PqIndex.writeCodebooks(pq, pqCodebooksPath(m))
-      val centersBc = spark.sparkContext.broadcast(quant.centers)
-      val booksBc = spark.sparkContext.broadcast(pq.codebooks)
-      PqIndex.writeEncoded(
-        PqIndex.encode(assignedCells.drop("vec"), "__v", centersBc, booksBc),
-        pqCellsPath(m))
-      // per-cell max reconstruction error — what lets searchIterator
-      // page PQ stage 1 on the (adc, key) keyset with a sound hold-back
-      // margin instead of falling back to the float-cell drain. One more
-      // fused-encode pass over the cells (codebooks are frozen, so the
-      // bound is exact for the codes just written); recomputed for the
-      // touched cells at every fold like cell_radii.
-      writePqRecon(pqReconBounds(assignedCells, centersBc, booksBc), m)
-    }
-    writeCentroids(quant, s"${ivfDir(m)}/centroids")
-    writeCentroids(quant, s"${ivfDir(m)}/probe_centroids")
-    // per-cell radii for range search's lossless prune — computed against
-    // the frozen assignment centers, recomputed for the touched cells at
-    // every fold. Read the JUST-WRITTEN cells back rather than
-    // re-evaluating the unpersisted `indexed` plan: that lineage repeats
-    // the full snapshot scan, assignment, and clustering shuffle —
-    // roughly doubling build cost — while the parquet read-back is
-    // partition-local (the SQ8 branch above reads back for the same
-    // reason). The same aggregate counts the base rows the fold clock
-    // measures the delta against.
-    val stats = cellStats(
-      IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema))
-        .withColumn("__assign", assignSpace(m)(col("vec"))), quant)
-    writeCellRadii(stats.map { case (id, s) => id -> s.radius }, m)
-    // a fresh base: empty delta, superseded segments swept after the stamp
-    publishBase(m, version, stats.values.map(_.rows).sum)
-    // a REBUILD can land at an unchanged store version (e.g. new nlist,
-    // no new upserts) — version-keyed caches must not serve the old
-    // quantizers over the new cells. Invalidate under the RESOLVED name:
-    // cache entries are keyed by m.name, and `name` may be an alias.
-    invalidateIndexCaches(m.name)
-    // the LOADED index frames are version-keyed too, and writeIndexed's
-    // overwrite bypasses deleteTree's eviction hook — evict by path
-    graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(m))
-    }
 
   /** Drop every version-keyed cache entry for `name` — required whenever
     * index artifacts are rewritten WITHOUT a guaranteed version bump
@@ -3786,7 +3431,6 @@ class GraftClient(spark: SparkSession, root: String,
         fieldOfPartition(k)
     idxCache.keySet().removeIf(k => dead(k._1))
     bcCache.keySet().removeIf(k => dead(k._1))
-    binIdxCache.keySet().removeIf(k => dead(k._1))
   }
 
   /** What a stamped centroid-partitioned index (IVF_FLAT, IVF_SQ8 and
@@ -3892,10 +3536,21 @@ class GraftClient(spark: SparkSession, root: String,
       new CellDelta(state, Set.empty, Map.empty, Map.empty)
   }
 
+  /** A stamped centroid-partitioned index: its stamp and the delta it
+    * serves on top of its base cells. */
+  private sealed trait StampedCells {
+    def version: Long
+    def delta: CellDelta
+    /** This index as stamped at `v`, serving `delta`. */
+    def at(v: Long, delta: CellDelta): StampedCells
+  }
+
   /** A stamped BIN_IVF_FLAT index: the frozen k-majority centers and the
     * delta the stamp serves on top of the base cells. */
   private case class LoadedBinIndex(quant: graft.index.BinIvfIndex.BinQuantizer,
-      version: Long, delta: CellDelta)
+      version: Long, delta: CellDelta) extends StampedCells {
+    def at(v: Long, d: CellDelta): LoadedBinIndex = copy(version = v, delta = d)
+  }
 
   /** A stamped float index's driver-side tables: the frozen assignment
     * centers, the refreshed probe centers, the per-cell radii of the base
@@ -3906,16 +3561,18 @@ class GraftClient(spark: SparkSession, root: String,
                                  version: Long,
                                  radii: Map[Int, Double],
                                  pq: Option[PqIndex.ProductQuantizer],
-                                 delta: CellDelta)
+                                 delta: CellDelta) extends StampedCells {
+    def at(v: Long, d: CellDelta): LoadedIndex = copy(version = v, delta = d)
+  }
 
-  /** Per-(collection, version) LoadedIndex cache: the VERSION file is
-    * re-read on every call (staleness must always be detected), but the
-    * centroid-table collects and the segment reads — Spark jobs of pure
-    * latency — run once per index version, not once per search. A commit
-    * seeds the entry of the version it stamps; superseded entries are
-    * evicted like [[bcCache]]. */
+  /** Per-(collection, version) cache of the stamped float and binary
+    * indexes: the VERSION file is re-read on every call (staleness must
+    * always be detected), but the centroid-table collects and the segment
+    * reads — Spark jobs of pure latency — run once per index version, not
+    * once per search. A commit seeds the entry of the version it stamps;
+    * superseded entries are evicted like [[bcCache]]. */
   private val idxCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), LoadedIndex]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), StampedCells]()
 
   /** The float index IF it is stamped at snapshot `at`. Every table it
     * loads is written before the stamp, so a stamp at `at` implies all of
@@ -3929,32 +3586,33 @@ class GraftClient(spark: SparkSession, root: String,
     // sparse collections through sparseIndexServable (their ivfDir holds
     // a postings layout + stamp, no centroids to read).
     if (m.indexType == "HNSW" || binaryVec(m) || sparseVec(m)) None
-    else readVersionFile(ivfDir(m)).filter(at.contains).map { v =>
-      val state = readDeltaState(m)
-      cachedAt(idxCache, m.name, v, state)(_.delta) {
-        val pq =
-          if (pqIndexed(m)) Some(graft.index.Artifact.required(
-            pqCodebooksPath(m))(PqIndex.readCodebooks(spark, pqCodebooksPath(m))))
-          else None
-        LoadedIndex(readCentroids(s"${ivfDir(m)}/centroids"),
-          readCentroids(s"${ivfDir(m)}/probe_centroids"), v, readCellRadii(m), pq,
-          readCellDelta(m, v, state))
-      }
+    else stampedCells(m, at) { (v, state) =>
+      val pq =
+        if (pqIndexed(m)) Some(graft.index.Artifact.required(
+          pqCodebooksPath(m))(PqIndex.readCodebooks(spark, pqCodebooksPath(m))))
+        else None
+      LoadedIndex(IvfIndex.CoarseQuantizer(centroidsTable.ordered(m)),
+        IvfIndex.CoarseQuantizer(probeCentroidsTable.ordered(m)), v, cellRadiiTable.read(m),
+        pq, readCellDelta(m, ivfLayouts(m), v, state))
     }
 
-  /** `cache`'s entry for `name` at stamp `v` while its delta still
-    * matches the on-disk `state` (another client may have rebuilt or
-    * folded the index), else `load` — cached. Entries of every other
-    * stamp of `name` are evicted. */
-  private def cachedAt[T](cache: java.util.concurrent.ConcurrentHashMap[(String, Long), T],
-      name: String, v: Long, state: DeltaState)(delta: T => CellDelta)(load: => T): T = {
-    cache.keySet().removeIf(k => k._1 == name && k._2 != v)
-    Option(cache.get((name, v))).filter(e => delta(e).matches(state, v)).getOrElse {
-      val e = load
-      cache.put((name, v), e)
-      e
+  /** `m`'s cached index IF stamped at `at`, while its delta still matches
+    * the on-disk DELTA (another client may have rebuilt or folded the
+    * index), else `load`ed at the stamp and cached. Entries of every
+    * other stamp of `m` are evicted. */
+  private def stampedCells[T <: StampedCells: scala.reflect.ClassTag](m: CollectionMeta,
+      at: Option[Long])(load: (Long, DeltaState) => T): Option[T] =
+    readVersionFile(ivfDir(m)).filter(at.contains).map { v =>
+      val state = readDeltaState(m)
+      idxCache.keySet().removeIf(k => k._1 == m.name && k._2 != v)
+      Option(idxCache.get((m.name, v))).collect {
+        case e: T if e.delta.matches(state, v) => e
+      }.getOrElse {
+        val e = load(v, state)
+        idxCache.put((m.name, v), e)
+        e
+      }
     }
-  }
 
   /** The delta bookkeeping of a centroid-partitioned index — its `DELTA`
     * file beside the VERSION stamp: the version its base cells hold (the
@@ -3989,15 +3647,15 @@ class GraftClient(spark: SparkSession, root: String,
       })
     }
 
-  /** The layouts a centroid-partitioned index keeps, each with its
-    * schema: the cells (float or binary) — the primary layout, whose
-    * segments also carry the commit's deleted keys — then the SQ8 or PQ
-    * codes. */
-  private def cellLayouts(m: CollectionMeta): Seq[(String, StructType)] =
-    if (binaryVec(m)) Seq("cells" -> binCellsSchema)
-    else ("cells" -> cellsSchema) +:
+  /** The layouts of a float index, each with its schema: the cells —
+    * the primary layout, whose segments also carry the commit's deleted
+    * keys — then the SQ8 or PQ codes. */
+  private def ivfLayouts(m: CollectionMeta): Seq[(String, StructType)] =
+    ("cells" -> cellsSchema) +:
       ((if (sq8Indexed(m)) Seq("sq8cells" -> sq8CellsSchema) else Nil) ++
         (if (pqIndexed(m)) Seq("pqcells" -> pqCellsSchema) else Nil))
+
+  private lazy val binLayouts: Seq[(String, StructType)] = Seq("cells" -> binCellsSchema)
 
   /** A segment file's schema: the layout's rows, the commit version, and
     * (PQ codes) each row's reconstruction error. */
@@ -4007,16 +3665,16 @@ class GraftClient(spark: SparkSession, root: String,
     if (layout == "pqcells") s.add("__recon", DoubleType) else s
   }
 
-  /** The delta of `m`'s index at stamp `v`: every segment `state` names
-    * up to `v`, read once per layout (one job each) and resolved commit
-    * by commit. A named segment that is missing raises the
-    * missing-artifact error. */
-  private def readCellDelta(m: CollectionMeta, v: Long, state: DeltaState): CellDelta = {
+  /** The delta of `m`'s index, kept in `layouts`, at stamp `v`: every
+    * segment `state` names up to `v`, read once per layout (one job each)
+    * and resolved commit by commit. A named segment that is missing
+    * raises the missing-artifact error. */
+  private def readCellDelta(m: CollectionMeta, layouts: Seq[(String, StructType)],
+      v: Long, state: DeltaState): CellDelta = {
     val segs = state.upTo(v)
     val empty = CellDelta.empty(state.copy(segments = Nil))
     if (segs.isEmpty) empty
     else {
-      val layouts = cellLayouts(m)
       val read = layouts.map { case (layout, schema) =>
         val paths = segs.collect { case (s, ls) if ls.contains(layout) =>
           segmentPath(m, layout, s) }
@@ -4048,101 +3706,6 @@ class GraftClient(spark: SparkSession, root: String,
   private case class CommitRows(touched: Set[String],
       puts: Map[String, Seq[Row]], recon: Map[String, Double])
 
-  /** The [[CommitRows]] of a commit, from ONE job: `coded` (the put rows
-    * with every layout's columns) and the commit's touched keys. Deletes
-    * never share a key with the puts of their batch (the streaming loop
-    * keeps each key's latest event; routed moves delete other
-    * partitions' copies), so a touched key without a put row is a
-    * delete. */
-  private def collectCommit(m: CollectionMeta, touchKeys: DataFrame,
-      coded: Option[DataFrame]): CommitRows = {
-    val rows = coded match {
-      case Some(c) =>
-        val wide = c.withColumn("__put", lit(true))
-        wide.union(touchKeys.select(wide.schema.fields.toIndexedSeq.map(f => f.name match {
-          case "key" => col("key")
-          case "__put" => lit(false).as("__put")
-          case n => lit(null).cast(f.dataType).as(n)
-        }): _*)).collect()
-      case None => touchKeys.select(col("key"), lit(false).as("__put")).collect()
-    }
-    val puts = rows.filter(_.getAs[Boolean]("__put")).toSeq
-    CommitRows(rows.map(_.getString(0)).toSet,
-      if (puts.isEmpty) Map.empty
-      else cellLayouts(m).map { case (layout, schema) =>
-        val at = schema.fieldNames.map(puts.head.fieldIndex)
-        layout -> puts.map(r => Row.fromSeq(at.toSeq.map(r.get)))
-      }.toMap,
-      if (puts.isEmpty || !puts.head.schema.fieldNames.contains("__recon")) Map.empty
-      else puts.map(r => r.getString(0) -> r.getAs[Double]("__recon")).toMap)
-  }
-
-  /** The commit path of every centroid-partitioned index: fold when the
-    * keys touched since the base — this commit's included — reach
-    * [[GraftClient.TailFoldRatio]] of the base rows, else append this
-    * commit's segments (the cells one also lists its deleted keys), then
-    * the DELTA bookkeeping, then the stamp. `seed` receives the appended
-    * delta, so the committing client's next search reads no segment. */
-  private def appendOrFold(m: CollectionMeta, delta: CellDelta, v: Long,
-      batch: CommitRows)(fold: CellDelta => Unit)(seed: CellDelta => Unit): Unit = {
-    val written = cellLayouts(m).filter { case (layout, _) =>
-      layout == "cells" || batch.puts.get(layout).exists(_.nonEmpty) }
-    val next = delta.advance(v, batch.touched, batch.puts, written.map(_._1), batch.recon)
-    if (next.superseded.size >=
-        GraftClient.TailFoldRatio * math.max(1L, delta.state.baseRows)) fold(next)
-    else {
-      import scala.jdk.CollectionConverters._
-      written.foreach { case (layout, schema) =>
-        val puts = batch.puts.getOrElse(layout, Nil)
-        val deleted =
-          if (layout != "cells") Nil
-          else (batch.touched -- puts.map(_.getString(0))).toSeq.map(k =>
-            Row.fromSeq(k +: Seq.fill(schema.length - 1)(null)))
-        val rows = (puts ++ deleted).map(r => Row.fromSeq(r.toSeq :+ v :++
-          (if (layout == "pqcells") Seq(batch.recon(r.getString(0))) else Nil)))
-        spark.createDataFrame(rows.asJava, segmentSchema(layout, schema))
-          .coalesce(1).write.mode("overwrite").parquet(segmentPath(m, layout, v))
-      }
-      writeDeltaState(m, next.state)
-      stampIndexVersion(m, v)
-      seed(next)
-    }
-  }
-
-  /** The fold's durable tail, shared by the float and binary folds and
-    * by the builds: the DELTA bookkeeping of a base at `v` with
-    * `baseRows` rows, the stamp, then the superseded segments. Returns
-    * the (empty) delta the stamp serves. */
-  private def publishBase(m: CollectionMeta, v: Long, baseRows: Long): CellDelta = {
-    val state = DeltaState(v, baseRows, Nil)
-    writeDeltaState(m, state)
-    stampIndexVersion(m, v)
-    deleteDir(segmentsDir(m))
-    CellDelta.empty(state)
-  }
-
-  /** The touched-cell merge — the one rewrite path of a base layout,
-    * run by a fold: the new contents of every base cell that holds a key
-    * of `delta.superseded` or receives one of its delta rows (the cell's
-    * surviving base rows plus those delta rows), materialized so the
-    * layout can be overwritten under the plan; the touched cells; and
-    * how many base rows the superseded keys evicted. */
-  private def mergedCells(m: CollectionMeta, schema: StructType,
-      delta: CellDelta): (Option[DataFrame], Seq[Int], Long) = {
-    import scala.jdk.CollectionConverters._
-    val base = spark.read.schema(schema).parquet(cellsPath(m))
-    // the cells of the superseded keys' base copies: one key-column scan
-    val evicted = base.filter(supersededCol(delta)).select("centroidId")
-      .collect().map(_.getInt(0))
-    val touched = (evicted.toSet ++ delta.cellsOf("cells")).toSeq.sorted
-    val contents = if (touched.isEmpty) None else Some(
-      base.filter(col("centroidId").isin(touched: _*) && !supersededCol(delta))
-        .unionByName(spark.createDataFrame(
-          delta.rows.getOrElse("cells", Map.empty).values.toSeq.asJava, schema))
-        .localCheckpoint())
-    (contents, touched, evicted.length.toLong)
-  }
-
   /** Dynamic-overwrite the `touched` cells of the layout at `path` with
     * `contents`. A touched cell the contents leave empty (absent from
     * `written`) loses its directory: the overwrite only replaces the
@@ -4156,243 +3719,566 @@ class GraftClient(spark: SparkSession, root: String,
     (touched.toSet -- written).foreach(cell => deleteDir(s"$path/centroidId=$cell"))
   }
 
-  /** Keep a fresh IVF index fresh across one merge commit without
-    * touching its base cells: the commit appends one immutable delta
-    * segment per layout — its put rows assigned with the frozen
-    * assignment centers (SQ8 and PQ codes encoded with the frozen
-    * quantizer and codebooks, bit-identical to what a fold writes) and
-    * its deleted keys — then the DELTA bookkeeping, then the stamp.
+  // ---- vector index families ----
+
+  /** One vector index family's lifecycle over one meta — a collection's
+    * primary vector or an extra field's view ([[fieldMeta]]), either per
+    * partition — resolved once by [[indexFamily]]: IVF (IVF_FLAT, IVF_SQ8
+    * and IVF_PQ, the codes as sub-layouts of the float cells),
+    * BIN_IVF_FLAT, HNSW or SPARSE_INVERTED_INDEX. Each keeps a base built
+    * from a pinned snapshot plus per-commit increments (cell delta
+    * segments, the HNSW growing tail, postings segments) that a commit
+    * past the tail ratio, or [[compact]], folds into the base — the
+    * base-plus-increments maintenance of "Incremental Based Framework for
+    * Efficient Top-K Similarity Search" (EDBT 2020). Every writer holds
+    * the index dir's commit lock and stamps VERSION last. */
+  private sealed abstract class IndexFamily(val m: CollectionMeta) {
+    def requireBuildable(nlist: Int): Unit
+    /** Every artifact of an index over `snapshot`, the store at
+      * `version`, up to and including the stamp. */
+    protected def build(version: Long, snapshot: DataFrame, nlist: Int,
+        sampleFraction: Double): Unit
+    /** Rolls an index stamped at `preVersion` forward across the commit
+      * that published `newVersion`; under the index dir's lock. */
+    def refresh(preVersion: Option[Long], newVersion: Long,
+        touchKeys: => DataFrame, puts: => Option[DataFrame]): Unit
+    /** [[compact]]'s (artifact, detail) when it folded anything. */
+    def compact(): Option[(String, String)]
+    def warm(): Unit = ()
+    def describe(current: Option[Long]): Option[IndexRow]
+    def stats(): Option[DataFrame] = None
+
+    /** [[build]] under the index dir's commit lock, which EVERY writer of
+      * an index layout — builds, per-commit refreshes and folds — holds:
+      * interleaved writes could otherwise tear the layout while a fresh
+      * stamp still claims coverage (ghost-fresh). The snapshot read is
+      * PINNED to the version being stamped: a store commit racing the
+      * build can advance CURRENT mid-build, and an unpinned read would
+      * index the newer rows under the older stamp — instead the build
+      * stays internally consistent, reads as stale if overtaken, and the
+      * overtaking commit's refresh (queued on this lock, stamp re-read
+      * inside it) rolls the just-built index forward — no lost refresh. */
+    final def rebuild(nlist: Int, sampleFraction: Double): Unit = locked {
+      val coll = collection(m)
+      val version = coll.currentVersion.getOrElse(throw new IllegalStateException(
+        s"collection ${m.name} is empty — nothing to index"))
+      build(version, coll.readBucketsAt(spark, version, 0 until m.buckets),
+        nlist, sampleFraction)
+      // a REBUILD can land at an unchanged store version (e.g. new
+      // nlist, no new upserts) — version-keyed caches must not serve the
+      // old quantizers over the new layout. Invalidate under the
+      // RESOLVED name: cache entries are keyed by m.name, and the
+      // caller's name may be an alias. The LOADED index frames are
+      // version-keyed too, and the layout writes bypass deleteTree's
+      // eviction hook — evict by path.
+      invalidateIndexCaches(m.name)
+      graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(m))
+    }
+
+    /** [[refresh]] across the commit that moved the store from
+      * `preVersion` to `newVersion`. Fast path: no index DIR means no
+      * build has ever STARTED (a build's lock creates the dir before it
+      * pins its snapshot) — taking the lock here would create the dir for
+      * every never-indexed collection and pay a flock per commit for
+      * nothing. Raceless: a build starting after this check pins CURRENT,
+      * which the caller already advanced, so it covers this commit by
+      * construction. Past it, the stamp is re-read INSIDE the lock, so a
+      * build that just finished is seen — if it stamped the version this
+      * commit replaced, the roll-forward covers the commit (no lost
+      * refresh), and if it stamped anything else the index reads stale
+      * and the refresh skips (never a ghost-fresh stamp over writes the
+      * index missed). */
+    final def refreshAfterCommit(preVersion: Option[Long], newVersion: Long,
+        touchKeys: => DataFrame, puts: => Option[DataFrame]): Unit =
+      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ivfDir(m))))
+        locked(refresh(preVersion, newVersion, touchKeys, puts))
+
+    def locked[T](body: => T): T =
+      graft.streaming.BucketedKeyedCollection.withCommitLock(
+        java.nio.file.Paths.get(ivfDir(m)))(body)
+    protected def folded(what: String): String =
+      if (m.fieldView.isEmpty) what else s"${m.fieldView} $what"
+    protected def row(kind: String, current: Option[Long], params: String): IndexRow =
+      indexRow(kind, if (m.fieldView.isEmpty) "vec" else m.fieldView, ivfDir(m),
+        params, current)
+  }
+
+  /** A [[listIndexes]] row: (kind, field, fresh, stamped_version,
+    * current_version, params). */
+  private type IndexRow = (String, String, Boolean, Long, Long, String)
+
+  /** The row of an index stamped in `dir`, which serves only at its own
+    * stamp. */
+  private def indexRow(kind: String, field: String, dir: String, params: String,
+      current: Option[Long]): IndexRow = {
+    val stamped = readVersionFile(dir)
+    (kind, field, stamped.isDefined && stamped == current,
+      stamped.getOrElse(-1L), current.getOrElse(-1L), params)
+  }
+
+  private def indexFamily(m: CollectionMeta): IndexFamily = m.vectorType match {
+    case "BINARY_VECTOR" => new BinIvfFamily(m)
+    case "SPARSE_FLOAT_VECTOR" => new SparseFamily(m)
+    case _ if m.indexType == "HNSW" => new HnswFamily(m)
+    case _ => new IvfFamily(m)
+  }
+
+  /** The vector index families of (partition) meta `m`: the primary
+    * vector's, then each extra vector field's in declaration order. */
+  private def vectorFamilies(m: CollectionMeta): Seq[IndexFamily] =
+    (m +: m.extraVecFields.map(f => fieldMeta(m, f.name))).map(indexFamily)
+
+  private def requireIndexableMetric(m: CollectionMeta): Unit =
+    require(indexableMetric(m.metric),
+      s"vector indexes support l2 and cosine (dot has no Voronoi prune " +
+        s"and no monotone graph distance — dot searches stay exact); " +
+        s"collection is ${m.metric}")
+
+  /** The centroid-partitioned families, IVF and BIN_IVF_FLAT: base cells
+    * assigned with frozen centers, plus the delta segments of the commits
+    * since the base ([[CellDelta]]).
+    *
+    * A commit appends one immutable segment per layout — its put rows
+    * assigned with the frozen centers (SQ8 and PQ codes encoded with the
+    * frozen quantizer and codebooks, bit-identical to what a fold writes)
+    * and its deleted keys — then the DELTA bookkeeping, then the stamp.
     * Searches serve the base cells minus every key touched since the
     * base, plus every delta row ([[cellsFrame]]), so the index stays
-    * exact under full probe and `search` keeps its cell prune across
-    * upserts and deletes. The reference's backend keeps its index live
-    * across upserts the same way — Milvus appends writes to a growing
-    * segment that is searched by brute force until it is sealed
-    * (`milvus-app/pythonvectordbceph_milvus.py:100-102,154`).
+    * exact under full probe and keeps its cell prune across upserts and
+    * deletes. The reference's backend keeps its index live across upserts
+    * the same way — Milvus appends writes to a growing segment that is
+    * searched by brute force until it is sealed
+    * (`milvus-app/pythonvectordbceph_milvus.py:100-102,154`). Cost is ONE
+    * job over the batch plus one small write per segment; nothing of the
+    * base is read.
     *
-    * Cost is ONE job over the batch plus one small write per segment;
-    * nothing of the base is read. Once the keys touched since the base
-    * reach [[GraftClient.TailFoldRatio]] of the base rows, the commit
-    * FOLDS instead ([[foldIvf]]): the touched-cell merge rewrites the
-    * cells the delta touches, refreshes their probe centers and radii,
-    * and starts a new base. Between folds the base only loses rows, so
-    * the probe centers and radii stay sound for the base, and the loaded
-    * cell layout — keyed by the base version — survives every commit.
+    * Once the keys touched since the base reach
+    * [[GraftClient.TailFoldRatio]] of the base rows, the commit FOLDS
+    * instead: the touched-cell merge ([[mergedCells]]) rewrites the cells
+    * the delta touches, refreshes their per-cell tables, and starts a new
+    * base. Between folds the base only loses rows, so its probe centers
+    * and radii stay sound, and the loaded cell layout — keyed by the base
+    * version — survives every commit.
     *
     * Crash-safety: segments and DELTA are written before the VERSION
     * stamp. A crash before the stamp leaves VERSION behind the store
-    * version, so `search` falls back to the exact scan and `buildIndex`
-    * is the recovery path (later commits see a stale index and skip
-    * this). */
-  private def refreshIndexIncremental(m: CollectionMeta, preVersion: Option[Long],
-      newVersion: Long, touchKeys: => DataFrame, puts: => Option[DataFrame]): Unit = {
-    // fast path: no index DIR means no build has ever STARTED (a build's
-    // withCommitLock creates the dir before it pins its snapshot) —
-    // taking the lock here would create the dir for every never-indexed
-    // collection and pay a flock per commit for nothing. Raceless: a
-    // build starting after this check pins CURRENT, which our caller
-    // already advanced, so it covers this commit by construction.
-    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ivfDir(m))))
-      return
-    // serialized with buildIndexFor on the index dir's lock; the stamp is
-    // re-read INSIDE the lock (loadIndex), so a build that just finished
-    // is seen — if it stamped the version this commit replaced, the
-    // roll-forward below covers the commit (no lost refresh), and if it
-    // stamped anything else the index reads stale and the refresh skips
-    // (never a ghost-fresh stamp over writes the index missed)
-    graft.streaming.BucketedKeyedCollection.withCommitLock(
-        java.nio.file.Paths.get(ivfDir(m))) {
-    if (m.indexType == "HNSW")
-      refreshHnswIncremental(m, newVersion, touchKeys)
-    else if (binaryVec(m))
-      refreshBinIvfIncremental(m, preVersion, newVersion, touchKeys, puts)
-    else if (sparseVec(m))
-      refreshSparseInvIncremental(m, preVersion, newVersion, touchKeys, puts)
-    else loadIndex(m, preVersion) match {
-    case Some(idx) if indexableMetric(m.metric) =>
-      val centersBc =
-        cachedBroadcast(m.name, "assign", idx.delta.base)(idx.assign.centers)
-      val coded = puts.map { p =>
-        val assigned = IvfIndex.assignCells(
-          p.withColumn("__assign", assignSpace(m)(col("vec"))), "__assign", centersBc)
-        val sq8 =
-          if (!sq8Indexed(m)) assigned
-          else Sq8Index.quantize(assigned.withColumn("__v", col("__assign")), "__v")
-        idx.pq.filter(_ => pqIndexed(m)).fold(sq8) { pq =>
-          val booksBc =
-            cachedBroadcast(m.name, "pqbooks", idx.delta.base)(pq.codebooks)
-          PqIndex.encode(sq8.withColumn("__v", col("__assign")), "__v", centersBc, booksBc)
-            .withColumn("__recon", graft.functions.PqFunctions.pq_recon_error(
-              col("__assign"), col("centroidId"), centersBc, booksBc))
-        }.drop("__assign")
-      }
-      appendOrFold(m, idx.delta, newVersion, collectCommit(m, touchKeys, coded))(
-        foldIvf(m, idx, _, newVersion)) { next =>
-        // the stamp now names this delta: seed the cache so the first
-        // search after the commit reads neither the tables nor a segment
-        idxCache.put((m.name, newVersion), idx.copy(version = newVersion, delta = next))
-      }
-    case _ => () // no index or already stale — search falls back to the
-                 // exact scan
-    }
-    }
-  }
+    * version, so searches fall back to the exact scan and `buildIndex` is
+    * the recovery path (later commits see a stale index and skip). */
+  private abstract class CellFamily[S <: StampedCells](m: CollectionMeta)
+      extends IndexFamily(m) {
+    /** The layouts, each with its schema: the cells first, whose
+      * segments also carry the commit's deleted keys. */
+    def layouts: Seq[(String, StructType)]
+    /** The index IF it is stamped at snapshot `at`. */
+    def stamped(at: Option[Long]): Option[S]
+    protected def kind: String
+    protected def params: String = s"""{"nlist":${m.nlist}}"""
+    protected def nlist(idx: S): Int
+    protected def radii(idx: S): Map[Int, Double]
+    /** A commit's put rows assigned to cells, and coded, with the frozen
+      * quantizer. */
+    protected def encode(idx: S, puts: DataFrame): DataFrame
+    /** Folds `delta` into the base cells and stamps `v`. */
+    protected def fold(idx: S, delta: CellDelta, v: Long): Unit
+    /** Caches `idx` as stamped at `v` serving `delta`, so the committing
+      * client's next search reads neither the tables nor a segment. */
+    protected def seed(idx: S, v: Long, delta: CellDelta): Unit =
+      idxCache.put((m.name, v), idx.at(v, delta))
 
-  /** Fold `delta` into the float index's base cells and stamp `v`: the
-    * touched-cell merge ([[mergedCells]]) rewrites the cells the delta
-    * touches — and their SQ8 or PQ codes, re-encoded against the frozen
-    * quantizer — moves their probe centers to the new means, recomputes
-    * their radii and PQ reconstruction bounds exactly against the frozen
-    * centers, and publishes the result as the new base. */
-  private def foldIvf(m: CollectionMeta, idx: LoadedIndex, delta: CellDelta,
-      v: Long): Unit = {
-    val (merged, touched, evicted) = mergedCells(m, cellsSchema, delta)
-    val (probe, radii) = merged.fold((idx.probe, idx.radii)) { contents =>
-      // ONE grouped aggregate over the new contents gives the cells
-      // written, their refreshed probe means (the touched cells move to
-      // their new means; untouched cells keep theirs) and their radii for
-      // range search's lossless prune — each the same expression as
-      // IvfIndex.refreshCentroids / the build's radii, so the values stay
-      // exact. Radii are measured against the FROZEN assign centers.
-      val assigned = contents.withColumn("__assign", assignSpace(m)(col("vec")))
-      val cells = cellStats(assigned, idx.assign)
-      val written = cells.keySet
-      overwriteCells(contents, cellsPath(m), touched, written)
-      // SQ8 and PQ codes mirror the float cells cell-for-cell: re-encode
-      // ONLY the touched cells' new contents, in the ASSIGN space
-      // (normalized for cosine), exactly as buildIndex wrote them
-      val inAssign = contents.withColumn("__v", assignSpace(m)(col("vec"))).drop("vec")
-      if (sq8Indexed(m))
-        overwriteCells(Sq8Index.quantize(inAssign, "__v"), sq8CellsPath(m), touched, written)
-      if (pqIndexed(m)) idx.pq.foreach { pq =>
-        val centersBc = cachedBroadcast(m.name, "assign", idx.delta.base)(idx.assign.centers)
-        val booksBc = cachedBroadcast(m.name, "pqbooks", idx.delta.base)(pq.codebooks)
-        overwriteCells(PqIndex.encode(inAssign, "__v", centersBc, booksBc),
-          pqCellsPath(m), touched, written)
-        // the margin drain's per-cell reconstruction bounds follow the
-        // same touched-cell merge as the radii: recomputed EXACTLY from
-        // the touched cells' new contents, untouched cells kept
-        writePqRecon((readPqRecon(m) -- touched) ++
-          pqReconBounds(assigned.withColumn("__v", col("__assign")), centersBc, booksBc), m)
-      }
-      val centers = idx.probe.centers.map(_.clone())
-      cells.foreach { case (id, s) =>
-        if (s.center != null && id >= 0 && id < centers.length) centers(id) = s.center }
-      val refreshed = IvfIndex.CoarseQuantizer(centers)
-      writeCentroids(refreshed, s"${ivfDir(m)}/probe_centroids")
-      val newRadii = (idx.radii -- touched) ++ cells.map { case (id, s) => id -> s.radius }
-      writeCellRadii(newRadii, m)
-      (refreshed, newRadii)
-    }
-    val next = publishBase(m, v,
-      delta.state.baseRows - evicted + delta.rows.getOrElse("cells", Map.empty).size)
-    idxCache.put((m.name, v),
-      idx.copy(probe = probe, version = v, radii = radii, delta = next))
-  }
-
-  /** Fold the delta of `m`'s centroid-partitioned index into its base
-    * cells when the index is fresh and the delta is not empty —
-    * [[compact]]'s arm. Returns whether it folded. */
-  private def foldCellDelta(m: CollectionMeta): Boolean =
-    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ivfDir(m))) &&
-      graft.streaming.BucketedKeyedCollection.withCommitLock(
-          java.nio.file.Paths.get(ivfDir(m))) {
-        val v = collection(m).currentVersion
-        loadIndex(m, v).filter(i => !i.delta.isEmpty && indexableMetric(m.metric)) match {
-          case Some(idx) => foldIvf(m, idx, idx.delta, idx.version); true
-          case None => loadBinIndex(m).filter(b => v.contains(b.version) && !b.delta.isEmpty) match {
-            case Some(b) => foldBinIvf(m, b, b.delta, b.version); true
-            case None => false
+    def refresh(preVersion: Option[Long], newVersion: Long,
+        touchKeys: => DataFrame, puts: => Option[DataFrame]): Unit =
+      stamped(preVersion).foreach { idx =>
+        val batch = collectCommit(touchKeys, puts.map(encode(idx, _)))
+        val written = layouts.filter { case (layout, _) =>
+          layout == "cells" || batch.puts.get(layout).exists(_.nonEmpty) }
+        val next = idx.delta.advance(newVersion, batch.touched, batch.puts,
+          written.map(_._1), batch.recon)
+        if (next.superseded.size >=
+            GraftClient.TailFoldRatio * math.max(1L, idx.delta.state.baseRows))
+          fold(idx, next, newVersion)
+        else {
+          import scala.jdk.CollectionConverters._
+          written.foreach { case (layout, schema) =>
+            val puts = batch.puts.getOrElse(layout, Nil)
+            val deleted =
+              if (layout != "cells") Nil
+              else (batch.touched -- puts.map(_.getString(0))).toSeq.map(k =>
+                Row.fromSeq(k +: Seq.fill(schema.length - 1)(null)))
+            val rows = (puts ++ deleted).map(r => Row.fromSeq(r.toSeq :+ newVersion :++
+              (if (layout == "pqcells") Seq(batch.recon(r.getString(0))) else Nil)))
+            spark.createDataFrame(rows.asJava, segmentSchema(layout, schema))
+              .coalesce(1).write.mode("overwrite").parquet(segmentPath(m, layout, newVersion))
           }
+          writeDeltaState(m, next.state)
+          stampIndexVersion(m, newVersion)
+          seed(idx, newVersion, next)
         }
       }
 
-  /** SPARSE_INVERTED_INDEX's per-commit maintenance — the
-    * [[appendSparseIndex]] contract made AUTOMATIC, which only a sparse
-    * COLLECTION can have: the store owns the sparse vectors, so the
-    * commit's put batch IS the complete posting sets of the upserted
-    * keys (the attached family must trust a caller-supplied delta).
-    * Appends one segment (cost ∝ the batch's postings), tombstones the
-    * deleted keys' prior postings through the norms manifests, lets
-    * [[graft.index.SparseIndex.append]]'s thresholds auto-compact, and
-    * stamps the new version LAST. Stale stamp (crash mid-append, or a
-    * build overtaken by a racing commit) → [[searchSparse]] falls back
-    * to the exact map-lookup scan; buildIndex is the recovery — the
-    * float contract exactly. */
-  private def refreshSparseInvIncremental(m: CollectionMeta,
-      preVersion: Option[Long], newVersion: Long, touchKeys: DataFrame,
-      puts: Option[DataFrame]): Unit = {
-    if (!SparseIndex.exists(sparsePostingsPath(m))) return
-    // only roll forward an index that covered the PRE-image — stamping
-    // over writes it never saw would be ghost-fresh (the loadIndex
-    // loadIndex(m, preVersion) check of the float family, done on the
-    // stamp file)
-    if (!readVersionFile(ivfDir(m)).exists(v => preVersion.contains(v)))
-      return
-    val delta = puts.map(storePostings).getOrElse(
-      touchKeys.limit(0).select(col("key"),
-        lit(0L).as("dim"), lit(0.0).as("w")))
-    // keys touched but not re-put are the batch's deletes; append()
-    // requires the two id sets disjoint, which the anti-join guarantees
-    val deleted = puts match {
-      case Some(p) => touchKeys.join(p.select("key"), Seq("key"), "left_anti")
-      case None => touchKeys
-    }
-    SparseIndex.append(delta, sparsePostingsPath(m), Some(deleted))
-    stampIndexVersion(m, newVersion)
-  }
-
-  /** BIN_IVF_FLAT's per-commit maintenance — the float family's delta
-    * segments ([[refreshIndexIncremental]]) minus the codes and the probe
-    * table (a k-majority center has no incremental mean to track; probing
-    * always uses the frozen assignment centers, so probe quality degrades
-    * only with genuine distribution drift — a rebuild's concern). The
-    * commit appends its rows assigned with the frozen centers and its
-    * deleted keys; past the tail ratio it folds ([[foldBinIvf]]). Stamped
-    * LAST: a stale stamp (crash before it) makes searchBinary fall back
-    * to the exact scan; buildIndex is the recovery, exactly the float
-    * contract. */
-  private def refreshBinIvfIncremental(m: CollectionMeta,
-      preVersion: Option[Long], newVersion: Long, touchKeys: DataFrame,
-      puts: Option[DataFrame]): Unit =
-    loadBinIndex(m) match {
-      case Some(idx) if preVersion.contains(idx.version) =>
-        val centersBc = cachedBroadcast(m.name, "bincenters", idx.delta.base)(
-          idx.quant.centers)
-        val coded = puts.map(graft.index.BinIvfIndex.assignCells(_, "vec", centersBc))
-        appendOrFold(m, idx.delta, newVersion, collectCommit(m, touchKeys, coded))(
-          foldBinIvf(m, idx, _, newVersion)) { next =>
-          binIdxCache.put((m.name, newVersion), idx.copy(version = newVersion, delta = next))
+    def compact(): Option[(String, String)] =
+      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(ivfDir(m)))) None
+      else locked {
+        stamped(collection(m).currentVersion).filter(!_.delta.isEmpty).map { idx =>
+          fold(idx, idx.delta, idx.version)
+          "ivf" -> folded("delta folded")
         }
-      case _ => () // no index or already stale — exact-scan fallback
+      }
+
+    override def warm(): Unit = {
+      val coll = collection(m)
+      stamped(coll.currentVersion).foreach { idx =>
+        layouts.foreach { case (layout, schema) =>
+          cellsFrame(m, coll, layout, schema, idx.delta, GraftClient.AllCells).count() }
+      }
     }
 
-  /** Fold `delta` into the binary index's base cells and stamp `v`: the
-    * touched-cell merge, then the touched cells' Hamming radii
-    * recomputed EXACTLY from their new contents against the FROZEN
-    * centers (untouched cells keep theirs, emptied cells drop out). */
-  private def foldBinIvf(m: CollectionMeta, idx: LoadedBinIndex,
-      delta: CellDelta, v: Long): Unit = {
-    val (merged, touched, evicted) = mergedCells(m, binCellsSchema, delta)
-    merged.foreach { contents =>
-      val stats = binCellStats(contents, idx.quant.centers)
-      overwriteCells(contents, cellsPath(m), touched, stats.keySet)
-      writeBinRadii((readBinRadii(m) -- touched) ++
-        stats.map { case (cell, (r, _)) => cell -> r }, m)
+    def describe(current: Option[Long]): Option[IndexRow] =
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(cellsPath(m)))) None
+      else Some(row(kind, current, params))
+
+    /** Per cell: the rows it serves — its base rows minus the keys the
+      * delta supersedes, plus the delta rows assigned to it — and the
+      * base cells' radius (the delta is scanned whatever the prune). A
+      * stale index reports its stored cells with null radii. */
+    override def stats(): Option[DataFrame] =
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(cellsPath(m)))) None
+      else Some {
+        import spark.implicits._
+        val coll = collection(m)
+        // ONE index load serves the freshness column, the cell-id seed
+        // and the radii — two loads could straddle a concurrent rebuild
+        // and describe different quantizers
+        val idx = stamped(coll.currentVersion)
+        val (cells, schema) = layouts.head
+        val counts = idx.fold(spark.read.schema(schema).parquet(cellsPath(m)))(
+            i => cellsFrame(m, coll, cells, schema, i.delta, GraftClient.AllCells))
+          .groupBy(col("centroidId"))
+          .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_rows"))
+        // seed the report with EVERY quantizer cell, not just the
+        // populated ones: the empty cells ARE the oversized-nlist signal
+        // this report exists to surface, and a groupBy over stored rows
+        // can never emit a zero. FULL outer with the stored counts keeps
+        // any stored cell the quantizer does not name counted, not
+        // silently dropped by the seed.
+        val seeded = idx match {
+          case Some(i) => (0 until nlist(i)).toDF("centroidId")
+          case None => counts.select("centroidId") // stale: report what's stored
+        }
+        seeded.join(counts, Seq("centroidId"), "full_outer")
+          .na.fill(0L, Seq("n_rows"))
+          .join(idx.fold(Seq.empty[(Int, Double)])(radii(_).toSeq).toDF("centroidId", "radius"),
+            Seq("centroidId"), "left_outer")
+          .withColumn("fresh", lit(idx.isDefined))
+          .orderBy(col("centroidId"))
+      }
+
+    /** The [[CommitRows]] of a commit, from ONE job: `coded` (the put rows
+      * with every layout's columns) and the commit's touched keys.
+      * Deletes never share a key with the puts of their batch (the
+      * streaming loop keeps each key's latest event; routed moves delete
+      * other partitions' copies), so a touched key without a put row is a
+      * delete. */
+    private def collectCommit(touchKeys: DataFrame, coded: Option[DataFrame]): CommitRows = {
+      val rows = coded match {
+        case Some(c) =>
+          val wide = c.withColumn("__put", lit(true))
+          wide.union(touchKeys.select(wide.schema.fields.toIndexedSeq.map(f => f.name match {
+            case "key" => col("key")
+            case "__put" => lit(false).as("__put")
+            case n => lit(null).cast(f.dataType).as(n)
+          }): _*)).collect()
+        case None => touchKeys.select(col("key"), lit(false).as("__put")).collect()
+      }
+      val puts = rows.filter(_.getAs[Boolean]("__put")).toSeq
+      CommitRows(rows.map(_.getString(0)).toSet,
+        if (puts.isEmpty) Map.empty
+        else layouts.map { case (layout, schema) =>
+          val at = schema.fieldNames.map(puts.head.fieldIndex)
+          layout -> puts.map(r => Row.fromSeq(at.toSeq.map(r.get)))
+        }.toMap,
+        if (puts.isEmpty || !puts.head.schema.fieldNames.contains("__recon")) Map.empty
+        else puts.map(r => r.getString(0) -> r.getAs[Double]("__recon")).toMap)
     }
-    val next = publishBase(m, v,
-      delta.state.baseRows - evicted + delta.rows.getOrElse("cells", Map.empty).size)
-    binIdxCache.put((m.name, v), idx.copy(version = v, delta = next))
+
+    /** The durable tail of a build or a fold: the DELTA bookkeeping of a
+      * base at `v` with `baseRows` rows, the stamp, then the superseded
+      * segments. Returns the (empty) delta the stamp serves. */
+    protected def publishBase(v: Long, baseRows: Long): CellDelta = {
+      val state = DeltaState(v, baseRows, Nil)
+      writeDeltaState(m, state)
+      stampIndexVersion(m, v)
+      deleteDir(segmentsDir(m))
+      CellDelta.empty(state)
+    }
+
+    /** The touched-cell merge — the one rewrite path of the base cells,
+      * run by a fold: the new contents of every base cell that holds a
+      * key of `delta.superseded` or receives one of its delta rows (the
+      * cell's surviving base rows plus those delta rows), materialized so
+      * the layout can be overwritten under the plan; the touched cells;
+      * and how many base rows the superseded keys evicted. */
+    protected def mergedCells(delta: CellDelta): (Option[DataFrame], Seq[Int], Long) = {
+      import scala.jdk.CollectionConverters._
+      val schema = layouts.head._2
+      val base = spark.read.schema(schema).parquet(cellsPath(m))
+      // the cells of the superseded keys' base copies: one key-column scan
+      val evicted = base.filter(supersededCol(delta)).select("centroidId")
+        .collect().map(_.getInt(0))
+      val touched = (evicted.toSet ++ delta.cellsOf("cells")).toSeq.sorted
+      val contents = if (touched.isEmpty) None else Some(
+        base.filter(col("centroidId").isin(touched: _*) && !supersededCol(delta))
+          .unionByName(spark.createDataFrame(
+            delta.rows.getOrElse("cells", Map.empty).values.toSeq.asJava, schema))
+          .localCheckpoint())
+      (contents, touched, evicted.length.toLong)
+    }
+
+    /** The base rows after folding `delta`, which evicted `evicted`. */
+    protected def foldedRows(delta: CellDelta, evicted: Long): Long =
+      delta.state.baseRows - evicted + delta.rows.getOrElse("cells", Map.empty).size
   }
 
-  /** HNSW's per-commit maintenance — the GROWING-TAIL design (Milvus's
-    * own growing/sealed-segment architecture, re-expressed on the keyed
-    * store): a commit does NOT rebuild graphs. It only bumps the tail
-    * estimate (one tiny count of the batch) — searches keep serving
-    * from the index the whole time, because the graph arm takes live
-    * rows with `seq ≤ S_b` and an exact TAIL arm scans the churned
-    * buckets' rows with `seq > S_b`, and those two sets partition the
-    * live snapshot EXACTLY whatever committed since the build:
+  /** IVF_FLAT and its quantized siblings — the reference's
+    * `create_index(IVF_FLAT, L2, nlist)`
+    * (`milvus-app/pythonvectordbceph_milvus.py:100-102`). A build persists
+    * the cell-partitioned layout, TWO centroid tables, and the snapshot
+    * version indexed:
+    *
+    *   - `centroids` — the frozen ASSIGNMENT centers. These never move
+    *     after build, so any row's cell is recomputable from its vector
+    *     alone — which is what lets a commit assign its rows to cells
+    *     without reading the index, and a fold find the cells it rewrites.
+    *   - `probe_centroids` — the refreshed PER-CELL MEANS used to choose
+    *     cells at query time. Folds move these toward the cells' true
+    *     current means, so probe quality tracks drift while cell
+    *     membership stays frozen.
+    *
+    * Collections created with `indexType = "IVF_SQ8"` additionally get
+    * SQ8-quantized cells (`qvec` binary + `qmax` double — 0.30× the bytes
+    * at rest): `search` scans THOSE for stage-1 candidates (the fused
+    * int8 dequantize-distance kernel reads a quarter of the IO) and
+    * re-ranks exactly against the float cells. The float cells stay on
+    * disk as the exact re-rank side and the staleness fallback — the same
+    * two-layout split FAISS/Milvus IVF_SQ8 keeps (quantized scan +
+    * full-precision refine). SQ8 codes are encoded in the ASSIGN space:
+    * raw vectors for l2, unit-normalized for cosine (L2 order over unit
+    * vectors ≡ cosine order, so the same fused kernel ranks stage 1 for
+    * both; the exact re-rank uses the collection's own metric over the
+    * original vectors). `IVF_PQ` collections get PQ-encoded cells the same
+    * way. Dot collections reject any IVF index at build (no Voronoi prune
+    * exists for inner product). */
+  private final class IvfFamily(m: CollectionMeta) extends CellFamily[LoadedIndex](m) {
+    def requireBuildable(nlist: Int): Unit = requireIndexableMetric(m)
+    def layouts: Seq[(String, StructType)] = ivfLayouts(m)
+    def stamped(at: Option[Long]): Option[LoadedIndex] =
+      loadIndex(m, at).filter(_ => indexableMetric(m.metric))
+
+    protected def kind: String =
+      if (sq8Indexed(m)) "IVF_SQ8" else if (pqIndexed(m)) "IVF_PQ" else "IVF_FLAT"
+    override protected def params: String =
+      if (kind == "IVF_PQ") s"""{"nlist":${m.nlist},"m":${m.pqM},"nbits":${m.pqNbits}}"""
+      else super.params
+    protected def nlist(idx: LoadedIndex): Int = idx.assign.nlist
+    protected def radii(idx: LoadedIndex): Map[Int, Double] = idx.radii
+
+    private def centersBc(idx: LoadedIndex) =
+      cachedBroadcast(m.name, "assign", idx.delta.base)(idx.assign.centers)
+    private def booksBc(idx: LoadedIndex, pq: PqIndex.ProductQuantizer) =
+      cachedBroadcast(m.name, "pqbooks", idx.delta.base)(pq.codebooks)
+
+    private def pqOf(idx: LoadedIndex) = idx.pq.filter(_ => pqIndexed(m))
+
+    /** `rows` with their assign-space vector `__v` coded as the index's
+      * SQ8 or PQ codes (IVF_FLAT: dropped). */
+    private def coded(idx: LoadedIndex, rows: DataFrame): DataFrame =
+      if (sq8Indexed(m)) Sq8Index.quantize(rows, "__v")
+      else pqOf(idx).fold(rows.drop("__v"))(pq =>
+        PqIndex.encode(rows, "__v", centersBc(idx), booksBc(idx, pq)))
+
+    protected def encode(idx: LoadedIndex, puts: DataFrame): DataFrame = {
+      val assigned = IvfIndex.assignCells(
+        puts.withColumn("__assign", assignSpace(m)(col("vec"))), "__assign", centersBc(idx))
+      coded(idx, pqOf(idx).fold(assigned)(pq => assigned.withColumn("__recon",
+          graft.functions.PqFunctions.pq_recon_error(
+            col("__assign"), col("centroidId"), centersBc(idx), booksBc(idx, pq))))
+        .withColumn("__v", col("__assign"))).drop("__assign")
+    }
+
+    protected def build(version: Long, snapshot: DataFrame, nlist: Int,
+        sampleFraction: Double): Unit = {
+      val (indexed, quant) = IvfIndex.build(
+        snapshot.withColumn("__assign", assignSpace(m)(col("vec"))), "__assign", nlist,
+        sampleFraction = sampleFraction)
+      IvfIndex.writeIndexed(indexed.drop("__assign"), cellsPath(m))
+      // the codes, radii and row counts below read the JUST-WRITTEN cells
+      // back rather than re-evaluating the unpersisted `indexed` plan:
+      // that lineage repeats the full snapshot scan, assignment, and
+      // clustering shuffle — roughly doubling build cost — while the
+      // parquet read-back is partition-local
+      val assignedCells = IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema))
+        .withColumn("__v", assignSpace(m)(col("vec")))
+      // SQ8 codes live in the ASSIGN space: raw vectors for l2, unit-
+      // normalized for cosine (L2 order over unit vectors ≡ cosine order,
+      // so stage 1 ranks with the same fused int8 kernel in both metrics);
+      // the exact re-rank always reads the ORIGINAL vectors from the store
+      if (m.indexType == "IVF_SQ8")
+        Sq8Index.writeQuantized(Sq8Index.quantize(assignedCells.drop("vec"), "__v"),
+          sq8CellsPath(m))
+      // IVF_PQ: train per-subspace codebooks on the residuals (assign
+      // space, frozen coarse centers), persist them beside the centroid
+      // tables, and write the m-bytes-per-vector encoded cells. Codebooks
+      // freeze at build exactly like the assignment centers — commits
+      // encode their delta rows, and folds re-encode touched cells,
+      // bit-for-bit against them.
+      if (m.indexType == "IVF_PQ") {
+        val pqm = if (m.pqM > 0) m.pqM else PqIndex.defaultM(m.dim)
+        val pq = PqIndex.train(assignedCells, "__v", quant.centers, pqm,
+          ksub = 1 << m.pqNbits, sampleFraction = sampleFraction)
+        PqIndex.writeCodebooks(pq, pqCodebooksPath(m))
+        val centersBc = spark.sparkContext.broadcast(quant.centers)
+        val booksBc = spark.sparkContext.broadcast(pq.codebooks)
+        PqIndex.writeEncoded(
+          PqIndex.encode(assignedCells.drop("vec"), "__v", centersBc, booksBc),
+          pqCellsPath(m))
+        // per-cell max reconstruction error — what lets searchIterator
+        // page PQ stage 1 on the (adc, key) keyset with a sound hold-back
+        // margin instead of falling back to the float-cell drain. One more
+        // fused-encode pass over the cells (codebooks are frozen, so the
+        // bound is exact for the codes just written); recomputed for the
+        // touched cells at every fold like cell_radii.
+        pqReconTable.write(m, pqReconBounds(assignedCells, centersBc, booksBc))
+      }
+      val centers = quant.centers.zipWithIndex.map(_.swap)
+      centroidsTable.write(m, centers)
+      probeCentroidsTable.write(m, centers)
+      // per-cell radii for range search's lossless prune — computed against
+      // the frozen assignment centers, recomputed for the touched cells at
+      // every fold. The same aggregate counts the base rows the fold clock
+      // measures the delta against.
+      val stats = cellStats(assignedCells.withColumnRenamed("__v", "__assign"), quant)
+      cellRadiiTable.write(m, stats.map { case (id, s) => id -> s.radius })
+      // a fresh base: empty delta, superseded segments swept after the stamp
+      publishBase(version, stats.values.map(_.rows).sum)
+    }
+
+    /** The touched-cell merge rewrites the cells the delta touches — and
+      * their SQ8 or PQ codes, re-encoded against the frozen quantizer —,
+      * moves their probe centers to the new means, recomputes their radii
+      * and PQ reconstruction bounds exactly against the frozen centers,
+      * and publishes the result as the new base. */
+    protected def fold(idx: LoadedIndex, delta: CellDelta, v: Long): Unit = {
+      val (merged, touched, evicted) = mergedCells(delta)
+      val (probe, radii) = merged.fold((idx.probe, idx.radii)) { contents =>
+        // ONE grouped aggregate over the new contents gives the cells
+        // written, their refreshed probe means (the touched cells move to
+        // their new means; untouched cells keep theirs) and their radii
+        // for range search's lossless prune — each the same expression as
+        // IvfIndex.refreshCentroids / the build's radii, so the values
+        // stay exact. Radii are measured against the FROZEN assign centers.
+        val assigned = contents.withColumn("__assign", assignSpace(m)(col("vec")))
+        val cells = cellStats(assigned, idx.assign)
+        val written = cells.keySet
+        overwriteCells(contents, cellsPath(m), touched, written)
+        // SQ8 and PQ codes mirror the float cells cell-for-cell: re-encode
+        // ONLY the touched cells' new contents, in the ASSIGN space
+        // (normalized for cosine), exactly as the build wrote them
+        val inAssign = contents.withColumn("__v", assignSpace(m)(col("vec"))).drop("vec")
+        layouts.tail.foreach { case (layout, _) =>
+          overwriteCells(coded(idx, inAssign), s"${ivfDir(m)}/$layout", touched, written) }
+        pqOf(idx).foreach { pq =>
+          // the margin drain's per-cell reconstruction bounds follow the
+          // same touched-cell merge as the radii: recomputed EXACTLY from
+          // the touched cells' new contents, untouched cells kept
+          pqReconTable.write(m, (pqReconTable.read(m) -- touched) ++
+            pqReconBounds(assigned.withColumn("__v", col("__assign")), centersBc(idx),
+              booksBc(idx, pq)))
+        }
+        val centers = idx.probe.centers.map(_.clone())
+        cells.foreach { case (id, s) =>
+          if (s.center != null && id >= 0 && id < centers.length) centers(id) = s.center }
+        probeCentroidsTable.write(m, centers.zipWithIndex.map(_.swap))
+        val newRadii = (idx.radii -- touched) ++ cells.map { case (id, s) => id -> s.radius }
+        cellRadiiTable.write(m, newRadii)
+        (IvfIndex.CoarseQuantizer(centers), newRadii)
+      }
+      seed(idx.copy(probe = probe, radii = radii), v, publishBase(v, foldedRows(delta, evicted)))
+    }
+  }
+
+  /** BIN_IVF_FLAT — Milvus's index for BINARY_VECTOR fields: a k-majority
+    * coarse quantizer trained on a bounded driver-side sample (the
+    * PQ-codebook bounded-build pattern), the full corpus assigned
+    * distributed through the fused XOR+popcount kernel, cells persisted
+    * partitioned by `centroidId` (the float family's directory-prune
+    * contract). Centers are FROZEN at build like the float assignment
+    * centers — any row's cell is recomputable from its codes alone. A
+    * commit's maintenance is the float family's minus the codes and the
+    * probe table (a k-majority center has no incremental mean to track;
+    * probing always uses the frozen centers, so probe quality degrades
+    * only with genuine distribution drift — a rebuild's concern). */
+  private final class BinIvfFamily(m: CollectionMeta)
+      extends CellFamily[LoadedBinIndex](m) {
+    def requireBuildable(nlist: Int): Unit = {
+      require(m.indexType == "BIN_IVF_FLAT",
+        s"'${m.name}' is a FLAT binary collection — only BIN_IVF_FLAT " +
+          "collections build a vector index (exact Hamming/Jaccard scans " +
+          "need none)")
+      require(nlist >= 1, s"nlist must be >= 1 (got $nlist)")
+    }
+    def layouts: Seq[(String, StructType)] = binLayouts
+    def stamped(at: Option[Long]): Option[LoadedBinIndex] = loadBinIndex(m, at)
+
+    protected def kind: String = "BIN_IVF_FLAT"
+    protected def nlist(idx: LoadedBinIndex): Int = idx.quant.nlist
+    /** The Hamming radii, as the double the stats report carries. */
+    protected def radii(idx: LoadedBinIndex): Map[Int, Double] =
+      binRadiiTable.read(m).map { case (cell, r) => cell -> r.toDouble }
+
+    protected def encode(idx: LoadedBinIndex, puts: DataFrame): DataFrame =
+      graft.index.BinIvfIndex.assignCells(puts, "vec",
+        cachedBroadcast(m.name, "bincenters", idx.delta.base)(idx.quant.centers))
+
+    protected def build(version: Long, snapshot: DataFrame, nlist: Int,
+        sampleFraction: Double): Unit = {
+      val (indexed, quant) = graft.index.BinIvfIndex.build(snapshot, "vec", nlist)
+      graft.index.BinIvfIndex.writeIndexed(indexed, cellsPath(m))
+      binCentroidsTable.write(m, quant.centers.zipWithIndex.map(_.swap))
+      // per-cell max Hamming radius to the FROZEN center — searchBinaryRange's
+      // lossless triangle-inequality prune (Hamming is a true metric, and
+      // the distances are exact small ints, so unlike the float family's
+      // cell_radii no fp slack term is ever needed); read the just-written
+      // cells back (partition-local) like the float build does
+      val stats = binCellStats(
+        spark.read.schema(binCellsSchema).parquet(cellsPath(m)), quant.centers)
+      binRadiiTable.write(m, stats.map { case (cell, (r, _)) => cell -> r })
+      publishBase(version, stats.values.map(_._2).sum)
+    }
+
+    /** The touched-cell merge, then the touched cells' Hamming radii
+      * recomputed EXACTLY from their new contents against the FROZEN
+      * centers (untouched cells keep theirs, emptied cells drop out). */
+    protected def fold(idx: LoadedBinIndex, delta: CellDelta, v: Long): Unit = {
+      val (merged, touched, evicted) = mergedCells(delta)
+      merged.foreach { contents =>
+        val stats = binCellStats(contents, idx.quant.centers)
+        overwriteCells(contents, cellsPath(m), touched, stats.keySet)
+        binRadiiTable.write(m, (binRadiiTable.read(m) -- touched) ++
+          stats.map { case (cell, (r, _)) => cell -> r })
+      }
+      seed(idx, v, publishBase(v, foldedRows(delta, evicted)))
+    }
+  }
+
+  /** HNSW: one graph per store bucket (the shard route IS the bucket
+    * route), persisted as blob rows partitioned by shard, plus the
+    * GROWING TAIL (Milvus's own growing/sealed-segment architecture,
+    * re-expressed on the keyed store): a commit does NOT rebuild graphs.
+    * It only bumps the tail estimate (one tiny count of the batch) —
+    * searches keep serving from the index the whole time, because the
+    * graph arm takes live rows with `seq ≤ S_b` and an exact TAIL arm
+    * scans the churned buckets' rows with `seq > S_b`, and those two sets
+    * partition the live snapshot EXACTLY whatever committed since the
+    * build:
     *
     *   - every live row with seq ≤ S_b is in its shard's graph (the
     *     build invariant: S_b was the seq high-water mark when the
@@ -4409,77 +4295,190 @@ class GraftClient(spark: SparkSession, root: String,
     *
     * When the tail estimate crosses [[GraftClient.TailFoldRatio]] of
     * the graph rows, the commit FOLDS: rebuilds only the changed
-    * buckets' graphs from current content and advances S_b ([[
-    * foldHnswTail]]) — so maintenance cost scales with CHURN SINCE LAST
-    * FOLD, amortized, never with per-commit touched-shard rebuilds (a
-    * 1-row commit used to pay a shard rebuild; now it pays a count).
-    * Whole-shard rebuild at fold (not node-level insert/delete) stays
-    * the deliberate choice: HNSW deletes need tombstones + periodic
-    * rebuild anyway, and key-hashed levels make rebuilds reproducible.
-    * Crash-safety: a fold that dies mid-overwrite leaves mixed old/new
-    * shard dirs — all readable, all sound under the OLD S_b (rebuilding
-    * from newer content only ADDS coverage), and the stale meta makes
-    * the next commit retry the fold. */
-  private def refreshHnswIncremental(m: CollectionMeta, newVersion: Long,
-      touchKeys: DataFrame): Unit =
-    if (readVersionFile(ivfDir(m)).isDefined && indexableMetric(m.metric)) {
-      val meta0 = readHnswMeta(m)
-      val batchRows = touchKeys.count()
-      val meta = meta0.copy(tailEst = meta0.tailEst + batchRows)
-      if (meta.tailEst.toDouble >=
-          GraftClient.TailFoldRatio * math.max(1L, meta.graphRows))
-        foldHnswTail(m, newVersion)
-      else writeHnswMeta(m, meta) // O(1) commit — VERSION stays at the
-                                  // build version; the tail arm covers
-                                  // everything since
-    } // else never built — nothing to maintain
+    * buckets' graphs from current content and advances S_b — so
+    * maintenance cost scales with CHURN SINCE LAST FOLD, amortized, never
+    * with per-commit touched-shard rebuilds. Whole-shard rebuild at fold
+    * (not node-level insert/delete) stays the deliberate choice: HNSW
+    * deletes need tombstones + periodic rebuild anyway, and key-hashed
+    * levels make rebuilds reproducible. Crash-safety: a fold that dies
+    * mid-overwrite leaves mixed old/new shard dirs — all readable, all
+    * sound under the OLD S_b (rebuilding from newer content only ADDS
+    * coverage), and the stale meta makes the next commit retry the
+    * fold. */
+  private final class HnswFamily(m: CollectionMeta) extends IndexFamily(m) {
+    private def graphs = hnswGraphsPath(m)
 
-  /** Fold the growing tail into the graphs: rebuild ONLY the buckets
-    * changed since the last build/fold (their current content — puts,
-    * moves, and deletions all land by construction), advance S_b to the
-    * CURRENT seq high-water mark, reset the tail. Rows of a commit
-    * racing this fold carry seq > the S_b we record (seq allocation is
-    * monotone past it), so they fall into the NEW tail — never claimed
-    * covered. Runs under the index commit lock (callers hold it). */
-  private def foldHnswTail(m: CollectionMeta, stampVersion: Long): Unit = {
-    val coll = collection(m)
-    val sNew = coll.maxSeq
-    val vB = readVersionFile(ivfDir(m)).getOrElse(return)
-    val changed = coll.bucketsChangedSince(vB)
-    if (changed.nonEmpty) {
-      // localCheckpoint: the rebuild is read twice (written-shard
-      // listing + the write) and graph builds are the expensive part
-      val rebuilt = HnswIndex.buildShards(
-          coll.readBuckets(spark, changed)
-            .withColumn("__assign", assignSpace(m)(col("vec")))
-            .select(col("key"), col("__assign")),
-          "__assign", m.buckets, m.hnswM, m.hnswEfC)
-        .localCheckpoint()
-      val written = rebuilt.select("shard").distinct()
-        .collect().map(_.getInt(0)).toSet
-      rebuilt.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "uncompressed") // match writeShards
-        .partitionBy("shard").parquet(hnswGraphsPath(m))
-      // a changed bucket whose every row was deleted writes no graph
-      // row — drop its directory or the dead graph would keep serving
-      // (harmless — the live join drops its hits — but pure waste)
-      (changed.toSet -- written).foreach { s =>
-        deleteDir(s"${hnswGraphsPath(m)}/shard=$s")
+    def requireBuildable(nlist: Int): Unit = requireIndexableMetric(m)
+
+    /** nlist and sampleFraction are IVF knobs — HNSW's were frozen at
+      * create (M, efConstruction). */
+    protected def build(version: Long, snapshot: DataFrame, nlist: Int,
+        sampleFraction: Double): Unit = {
+      HnswIndex.writeShards(graphsOf(snapshot), graphs)
+      // growing-tail bookkeeping: S_b = the pinned snapshot's seq
+      // high-water mark (NOT the possibly-newer current one — rows of a
+      // commit racing this build must land in the tail, not be claimed
+      // covered). Meta BEFORE the version stamp — see foldTail's
+      // ordering note.
+      writeHnswMeta(m, HnswMeta(collection(m).maxSeqAt(version), graphRows(), 0L))
+      stampIndexVersion(m, version)
+    }
+
+    private def graphsOf(rows: DataFrame): DataFrame = HnswIndex.buildShards(
+      rows.withColumn("__assign", assignSpace(m)(col("vec"))).select(col("key"), col("__assign")),
+      "__assign", m.buckets, m.hnswM, m.hnswEfC)
+
+    /** Graph rows, off the 1-row-per-shard layout. */
+    private def graphRows(): Long =
+      HnswIndex.loadShards(spark, graphs).agg(sum(col("n"))).head().getLong(0)
+
+    def refresh(preVersion: Option[Long], newVersion: Long,
+        touchKeys: => DataFrame, puts: => Option[DataFrame]): Unit =
+      if (readVersionFile(ivfDir(m)).isDefined && indexableMetric(m.metric)) {
+        val meta0 = readHnswMeta(m)
+        val meta = meta0.copy(tailEst = meta0.tailEst + touchKeys.count())
+        if (meta.tailEst.toDouble >=
+            GraftClient.TailFoldRatio * math.max(1L, meta.graphRows))
+          foldTail(newVersion)
+        else writeHnswMeta(m, meta) // O(1) commit — VERSION stays at the
+                                    // build version; the tail arm covers
+                                    // everything since
+      } // else never built — nothing to maintain
+
+    /** The growing tail folded back into the graphs on demand — Milvus's
+      * compact seals growing segments the same way. */
+    def compact(): Option[(String, String)] =
+      if (!hnswServable(m).exists(_._2.tailEst > 0)) None
+      else {
+        locked(foldTail(collection(m).currentVersion.getOrElse(0L)))
+        Some("hnsw" -> folded("tail folded"))
+      }
+
+    /** The graph blobs; servable covers the tail era — graphs serve
+      * across commits. */
+    override def warm(): Unit =
+      hnswServable(m).foreach { case (vB, _) =>
+        loadedIndexFrame(collection(m), graphs, vB,
+          () => HnswIndex.loadShards(spark, graphs)).count()
+      }
+
+    /** Tail-era HNSW serves index-backed searches at ANY snapshot (graph
+      * arm + growing tail) — fresh = servable, not stamp-equals-current;
+      * stamped_version still shows the fold point for operators watching
+      * tail growth. */
+    def describe(current: Option[Long]): Option[IndexRow] =
+      if (!hnswIndexed(m)) None
+      else Some(row("HNSW", current, s"""{"M":${m.hnswM},"efConstruction":${m.hnswEfC}}""")
+        .copy(_3 = hnswServable(m).isDefined))
+
+    /** Rebuild ONLY the buckets changed since the last build/fold (their
+      * current content — puts, moves, and deletions all land by
+      * construction), advance S_b to the CURRENT seq high-water mark,
+      * reset the tail. Rows of a commit racing this fold carry seq > the
+      * S_b we record (seq allocation is monotone past it), so they fall
+      * into the NEW tail — never claimed covered. Callers hold the index
+      * commit lock. */
+    private def foldTail(stampVersion: Long): Unit = {
+      val coll = collection(m)
+      val sNew = coll.maxSeq
+      readVersionFile(ivfDir(m)).foreach { vB =>
+        val changed = coll.bucketsChangedSince(vB)
+        if (changed.nonEmpty) {
+          // localCheckpoint: the rebuild is read twice (written-shard
+          // listing + the write) and graph builds are the expensive part
+          val rebuilt = graphsOf(coll.readBuckets(spark, changed)).localCheckpoint()
+          val written = rebuilt.select("shard").distinct()
+            .collect().map(_.getInt(0)).toSet
+          rebuilt.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .option("compression", "uncompressed") // match writeShards
+            .partitionBy("shard").parquet(graphs)
+          // a changed bucket whose every row was deleted writes no graph
+          // row — drop its directory or the dead graph would keep serving
+          // (harmless — the live join drops its hits — but pure waste)
+          (changed.toSet -- written).foreach(s => deleteDir(s"$graphs/shard=$s"))
+        }
+        // meta BEFORE the version stamp, and readers resolve VERSION
+        // first: every interleaving then pairs a reader's (vB, S_b) as
+        // vB-at-least-as-old-as-S_b's-fold, whose changed-bucket set is a
+        // SUPERSET of what the tail needs — sound. The reverse order had a
+        // window where a new stamp narrowed the bucket set while the old
+        // S_b widened the seq band, losing the rows in between. Crash
+        // between the two writes: new meta + old stamp = the same sound
+        // superset.
+        writeHnswMeta(m, HnswMeta(sNew, graphRows(), 0L))
+        stampIndexVersion(m, stampVersion)
+        graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(m))
       }
     }
-    val graphRows = HnswIndex.loadShards(spark, hnswGraphsPath(m))
-      .agg(sum(col("n"))).head().getLong(0)
-    // meta BEFORE the version stamp, and readers resolve VERSION first:
-    // every interleaving then pairs a reader's (vB, S_b) as vB-at-least-
-    // as-old-as-S_b's-fold, whose changed-bucket set is a SUPERSET of
-    // what the tail needs — sound. The reverse order had a window where
-    // a new stamp narrowed the bucket set while the old S_b widened the
-    // seq band, losing the rows in between. Crash between the two
-    // writes: new meta + old stamp = the same sound superset.
-    writeHnswMeta(m, HnswMeta(sNew, graphRows, 0L))
-    stampIndexVersion(m, stampVersion)
-    graft.streaming.BucketedKeyedCollection.evictUnder(ivfDir(m))
+  }
+
+  /** SPARSE_INVERTED_INDEX — Milvus's (only) index for
+    * SPARSE_FLOAT_VECTOR fields: the store's (key, dim, w) postings at
+    * rest partitioned by `pmod(xxhash64(dim), nlist)` with the norms side
+    * table cosine needs ([[graft.index.SparseIndex]] — the same layout
+    * the attached family uses, but DERIVED FROM THE STORE, which is what
+    * makes auto-maintenance and an exact fallback possible). The prune is
+    * LOSSLESS by construction (a posting's bucket is a pure function of
+    * its dim), so unlike IVF/HNSW there is no recall knob to estimate — a
+    * fresh index answers exactly. Not warmed at load: postings reads are
+    * term-pruned already (see [[loadCollection]]). */
+  private final class SparseFamily(m: CollectionMeta) extends IndexFamily(m) {
+    private def postings = sparsePostingsPath(m)
+
+    def requireBuildable(nlist: Int): Unit = {
+      require(m.indexType == "SPARSE_INVERTED_INDEX",
+        s"'${m.name}' is a FLAT sparse collection — only " +
+          "SPARSE_INVERTED_INDEX collections build a vector index " +
+          "(exact sparse-dot scans need none)")
+      // nlist plays the postings layout's dim-hash BUCKET role here
+      // (the directory-prune granularity), not a Voronoi cell count
+      require(nlist >= 1, s"nlist must be >= 1 (got $nlist)")
+    }
+
+    protected def build(version: Long, snapshot: DataFrame, nlist: Int,
+        sampleFraction: Double): Unit = {
+      SparseIndex.build(storePostings(snapshot), postings, buckets = nlist, idCol = "key")
+      stampIndexVersion(m, version)
+    }
+
+    /** The [[appendSparseIndex]] contract made AUTOMATIC, which only a
+      * sparse COLLECTION can have: the store owns the sparse vectors, so
+      * the commit's put batch IS the complete posting sets of the
+      * upserted keys (the attached family must trust a caller-supplied
+      * delta). Appends one segment (cost ∝ the batch's postings),
+      * tombstones the deleted keys' prior postings through the norms
+      * manifests, lets [[graft.index.SparseIndex.append]]'s thresholds
+      * auto-compact, and stamps the new version LAST. Stale stamp →
+      * [[searchSparse]] falls back to the exact map-lookup scan. */
+    def refresh(preVersion: Option[Long], newVersion: Long,
+        touchKeys: => DataFrame, puts: => Option[DataFrame]): Unit =
+      // only roll forward an index that covered the PRE-image — stamping
+      // over writes it never saw would be ghost-fresh
+      if (SparseIndex.exists(postings) &&
+          readVersionFile(ivfDir(m)).exists(v => preVersion.contains(v))) {
+        val delta = puts.map(storePostings).getOrElse(
+          touchKeys.limit(0).select(col("key"), lit(0L).as("dim"), lit(0.0).as("w")))
+        // keys touched but not re-put are the batch's deletes; append()
+        // requires the two id sets disjoint, which the anti-join guarantees
+        val deleted = puts match {
+          case Some(p) => touchKeys.join(p.select("key"), Seq("key"), "left_anti")
+          case None => touchKeys
+        }
+        SparseIndex.append(delta, postings, Some(deleted))
+        stampIndexVersion(m, newVersion)
+      }
+
+    def compact(): Option[(String, String)] =
+      if (!SparseIndex.exists(postings)) None
+      else {
+        SparseIndex.compact(spark, postings)
+        Some("sparse_inverted" -> (if (m.fieldView.isEmpty) "-" else m.fieldView))
+      }
+
+    def describe(current: Option[Long]): Option[IndexRow] =
+      if (!SparseIndex.exists(postings)) None
+      else Some(row("SPARSE_INVERTED_INDEX", current, s"""{"metric":"${m.metric}"}"""))
   }
 
   /** Distributed per-query cell probe: cells chosen executor-side against
@@ -4709,10 +4708,12 @@ class GraftClient(spark: SparkSession, root: String,
     * `output_fields` all match [[search]] — one envelope, two families.
     *
     * With a FRESH BIN_IVF_FLAT index (stamped at the current snapshot —
-    * merge-commits maintain it touched-cell-incrementally), stage 1
-    * reads only the `nprobe` nearest k-majority Hamming cells of the
-    * partitioned at-rest layout (a parquet directory prune; the probe is
-    * O(nlist) tiny driver-side Hamming distances); `nprobe >= nlist` is
+    * each commit appends a delta segment, and a fold past the tail ratio
+    * re-encodes the cells it touches), stage 1 reads only the `nprobe`
+    * nearest k-majority Hamming cells plus every delta row (a parquet
+    * directory prune; a loaded collection prunes partitions of its cached
+    * cell layout; the probe is O(nlist) tiny driver-side Hamming
+    * distances); `nprobe >= nlist` is
     * the exact fallback, and recall at small nprobe is governed by how
     * clustered the sign patterns are (BinIvfSpec measures both). Stale
     * or absent index — or a FLAT/jaccard collection — scans the exact
@@ -4844,7 +4845,7 @@ class GraftClient(spark: SparkSession, root: String,
     * — the binary family's one staleness rule. */
   private def liveBinIndex(pm: CollectionMeta, coll: BucketedKeyedCollection)
       : Option[LoadedBinIndex] =
-    loadBinIndex(pm).filter(idx => coll.currentVersion.contains(idx.version))
+    loadBinIndex(pm, coll.currentVersion)
 
   /** The `choice` cells of the BIN_IVF_FLAT layout as `idx` serves them. */
   private def binCells(pm: CollectionMeta, coll: BucketedKeyedCollection,
@@ -4916,7 +4917,7 @@ class GraftClient(spark: SparkSession, root: String,
           // (d(q, cᵢ) − radiusᵢ, triangle inequality) is >= radius —
           // every row it holds would fail `dist < radius`
           val quant = idx.quant
-          binCells(pm, coll, idx, GraftClient.DropCells(readBinRadii(pm).collect {
+          binCells(pm, coll, idx, GraftClient.DropCells(binRadiiTable.read(pm).collect {
             case (cell, rc)
               if quant.hamming(quant.centers(cell), q) - rc >=
                 math.ceil(radius) => cell
@@ -4979,9 +4980,8 @@ class GraftClient(spark: SparkSession, root: String,
     val pins = snapshotPins(m, resolveParts(m, partitions))
     val arms = pins.map { case (p, pin) =>
       val pm = partMeta(m, p)
-      val idx = loadBinIndex(pm)
-        .filter(b => pin.contains(b.version) && pm.metric == "hamming")
-        .map(b => (b, readBinRadii(pm)))
+      val idx = loadBinIndex(pm, pin).filter(_ => pm.metric == "hamming")
+        .map(b => (b, binRadiiTable.read(pm)))
       (pm, pin, idx)
     }
     keysetIterator(m, pins, allowDrift, batchSize) { cursor =>
@@ -5403,7 +5403,7 @@ class GraftClient(spark: SparkSession, root: String,
     * exhaustive (layer-0 connectivity is repaired at build), the
     * exact-search fallback role nprobe = nlist plays for IVF.
     *
-    * GROWING TAIL (see [[refreshHnswIncremental]]): the graph arm keeps
+    * GROWING TAIL (see [[HnswFamily]]): the graph arm keeps
     * only candidates whose LIVE row has seq ≤ S_b (a stale graph copy
     * of an overwritten key must not rank — its live row comes from the
     * tail), and rows committed since the build are exact-scanned from
@@ -6528,7 +6528,7 @@ class GraftClient(spark: SparkSession, root: String,
       // VERIFIED here against the pruned layout (≤ nprobe rows), loud
       // beats silently-truncated.
       override protected val eps: Double = {
-        val bounds = readPqRecon(pm).foldLeft(idx.delta.reconBounds) {
+        val bounds = pqReconTable.read(pm).foldLeft(idx.delta.reconBounds) {
           case (b, (c, r)) => b.updated(c, math.max(r, b.getOrElse(c, 0.0))) }
         val present = codes.select("centroidId").distinct()
           .collect().map(_.getInt(0))
@@ -6757,62 +6757,29 @@ class GraftClient(spark: SparkSession, root: String,
     // `params` = the Milvus describe_index param dict for the kind —
     // the DECLARED (create-time) values, read off the catalog and index
     // METAs only; this surface stays driver-side with zero Spark jobs
-    def row(kind: String, field: String, dir: String, params: String) = {
-      val stamped = readVersionFile(dir)
-      (kind, field, stamped.isDefined && stamped == current,
-        stamped.getOrElse(-1L), current.getOrElse(-1L), params)
-    }
-    def ivfRows(m: CollectionMeta, fieldLabel: String) =
-      if (binaryVec(m)) {
-        if (!binIndexed(m)) Nil
-        else Seq(row("BIN_IVF_FLAT", fieldLabel, ivfDir(m),
-          s"""{"nlist":${m.nlist}}"""))
-      }
-      else if (sparseVec(m)) {
-        if (!SparseIndex.exists(sparsePostingsPath(m))) Nil
-        else Seq(row("SPARSE_INVERTED_INDEX", fieldLabel, ivfDir(m),
-          s"""{"metric":"${m.metric}"}"""))
-      }
-      else if (hnswIndexed(m))
-        // tail-era HNSW serves index-backed searches at ANY snapshot
-        // (graph arm + growing tail) — fresh = servable, not
-        // stamp-equals-current; stamped_version still shows the fold
-        // point for operators watching tail growth
-        Seq((("HNSW", fieldLabel,
-          hnswServable(m).isDefined,
-          readVersionFile(ivfDir(m)).getOrElse(-1L),
-          collection(m).currentVersion.getOrElse(-1L),
-          s"""{"M":${m.hnswM},"efConstruction":${m.hnswEfC}}""")))
-      else if (!java.nio.file.Files.exists(java.nio.file.Paths.get(cellsPath(m)))) Nil
-      else if (sq8Indexed(m))
-        Seq(row("IVF_SQ8", fieldLabel, ivfDir(m), s"""{"nlist":${m.nlist}}"""))
-      else if (pqIndexed(m))
-        Seq(row("IVF_PQ", fieldLabel, ivfDir(m),
-          s"""{"nlist":${m.nlist},"m":${m.pqM},"nbits":${m.pqNbits}}"""))
-      else Seq(row("IVF_FLAT", fieldLabel, ivfDir(m), s"""{"nlist":${m.nlist}}"""))
     // the primary `vec` plus one row per extra vector field's own index
     // layout (its freshness is its OWN stamp vs the shared store clock)
-    val ivf = ivfRows(m, "vec") ++
-      m.extraVecFields.flatMap(f => ivfRows(fieldMeta(m, f.name), f.name))
+    val ivf = vectorFamilies(m).flatMap(_.describe(current))
     val text =
       if (!TextIndex.exists(textDir(m))) Nil
-      else Seq(row("TEXT", "text", textDir(m),
-        s"""{"analyzer":"${TextIndex.analyzerOf(textDir(m)).serialize}"}"""))
+      else Seq(indexRow("TEXT", "text", textDir(m),
+        s"""{"analyzer":"${TextIndex.analyzerOf(textDir(m)).serialize}"}""", current))
     val sparse =
       if (!SparseIndex.exists(sparseIdxDir(m))) Nil
-      else Seq(row("SPARSE", "sparse", sparseIdxDir(m), "{}"))
+      else Seq(indexRow("SPARSE", "sparse", sparseIdxDir(m), "{}", current))
     val scalars = scalarIndexedFields(m).map(f =>
-      row("SCALAR", f, scalarFieldDir(m, f), "{}"))
+      indexRow("SCALAR", f, scalarFieldDir(m, f), "{}", current))
     (ivf ++ text ++ sparse ++ scalars)
       .toDF("kind", "field", "fresh", "stamped_version", "current_version",
         "params")
   }
 
   /** Index observability: per-cell occupancy and radius of the CURRENT
-    * IVF layout, plus freshness — the skew report an operator reads
-    * before trusting nprobe/radius behavior on their corpus (one hot
-    * cell = one slow probe; one huge radius = a cell the range prune can
-    * never exclude; many empty cells = nlist oversized for the data).
+    * IVF or BIN_IVF_FLAT layout (Hamming radii as doubles), plus
+    * freshness — the skew report an operator reads before trusting
+    * nprobe/radius behavior on their corpus (one hot cell = one slow
+    * probe; one huge radius = a cell the range prune can never exclude;
+    * many empty cells = nlist oversized for the data).
     * Columns: (centroidId, n_rows, radius, fresh). `n_rows` counts the
     * rows each cell serves — its base rows minus the keys the delta
     * supersedes, plus the delta rows assigned to it; the radius is the
@@ -6823,35 +6790,10 @@ class GraftClient(spark: SparkSession, root: String,
     * shows the layout property causing it. */
   def indexStats(name: String,
                  partition: String = GraftClient.DefaultPartition): DataFrame = {
-    import spark.implicits._
     val m = partMeta(metaOrThrow(name), partition)
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(cellsPath(m))),
-      s"${m.name} has no IVF index — buildIndex first")
-    // ONE index load serves the freshness column, the cell-id seed and
-    // the radii — two loads could straddle a concurrent rebuild and
-    // describe different quantizers
-    val coll = collection(m)
-    val idx = liveIndex(m, coll)
-    val radii = idx.fold(Seq.empty[(Int, Double)])(_.radii.toSeq)
-    // the rows each cell serves: base minus superseded keys plus delta
-    val counts = idx.fold(IvfIndex.loadIndexed(spark, cellsPath(m), Some(cellsSchema)))(
-        i => cellsFrame(m, coll, "cells", cellsSchema, i.delta, GraftClient.AllCells))
-      .groupBy(col("centroidId"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_rows"))
-    // seed the report with EVERY quantizer cell, not just the populated
-    // ones: the empty cells ARE the oversized-nlist signal this report
-    // exists to surface, and a groupBy over stored rows can never emit a
-    // zero. FULL outer with the stored counts keeps any stored cell the
-    // quantizer does not name counted, not silently dropped by the seed.
-    val base = idx match {
-      case Some(i) => (0 until i.assign.nlist).toDF("centroidId")
-      case None => counts.select("centroidId") // stale: report what's stored
-    }
-    base.join(counts, Seq("centroidId"), "full_outer")
-      .na.fill(0L, Seq("n_rows"))
-      .join(radii.toDF("centroidId", "radius"), Seq("centroidId"), "left_outer")
-      .withColumn("fresh", lit(idx.isDefined))
-      .orderBy(col("centroidId"))
+    val stats = indexFamily(m).stats()
+    require(stats.isDefined, s"${m.name} has no IVF or BIN_IVF_FLAT index — buildIndex first")
+    stats.get
   }
 
   /** Batched top-k search: `queries` needs (qid BIGINT, qvec ARRAY<FLOAT>);

@@ -28,9 +28,9 @@ import graft.functions.{PqFunctions, PqKernels}
   * Same layout/maintenance contract as the other index layouts: cells
   * partitioned by `centroidId` (directory-level probe prune), codebooks
   * FROZEN at build time so any row's codes are recomputable bit-for-bit
-  * from its vector + cell (incremental maintenance re-encodes only
-  * touched cells), all writers serialized on the index dir's commit
-  * lock. */
+  * from its vector + cell (a commit appends its rows' codes as a delta
+  * segment; a fold re-encodes only the cells it touches), all writers
+  * serialized on the index dir's commit lock. */
 object PqIndex {
 
   /** Trained codebooks: `codebooks(j)(c)` = codeword `c` of subspace `j`
@@ -121,7 +121,8 @@ object PqIndex {
   /** Replace `vecCol` with the `pqcode` byte column — run on an
     * IVF-assigned frame, keeping `centroidId` for pruning. The encode
     * kernel is the codegen'd [[graft.functions.PqEncode]] (this re-runs
-    * on every merge-commit's touched-cell re-encode). */
+    * on every commit's delta segment and every fold's touched-cell
+    * re-encode). */
   def encode(indexed: DataFrame, vecCol: String,
              centersBc: Broadcast[Array[Array[Double]]],
              codebooksBc: Broadcast[Array[Array[Array[Double]]]]): DataFrame = {

@@ -297,6 +297,44 @@ class BinaryClientSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("indexStats on BIN_IVF_FLAT: fresh across appended commits, the base " +
+       "cells' Hamming radii, and counts that include the delta") {
+    import spark.implicits._
+    val client = mkClient()
+    client.createCollection("bs", dim = dim, metric = "hamming",
+      indexType = "BIN_IVF_FLAT", nlist = 4, buckets = 4, vectorType = "BINARY_VECTOR")
+    def put(is: Seq[Int]): Unit = client.upsert("bs",
+      is.map(i => (key(i), code(i).toSeq, Map.empty[String, String])).toDF("key", "vec", "meta"))
+    put(0 until 80)
+    client.buildIndex("bs", nlist = 4)
+    // two new keys and one delete, far below the tail ratio: both commits
+    // append a delta segment and leave the base cells as built
+    put(Seq(80, 81))
+    client.deleteByKeys("bs", Seq(key(3)))
+    val ivf = java.nio.file.Paths.get(client.describe("bs").dataPath + "-ivf")
+    assert(new String(java.nio.file.Files.readAllBytes(ivf.resolve("DELTA")))
+      .split("\n").count(_.startsWith("segment ")) == 2, "no commit may fold")
+
+    // brute force over the base cells: each cell's largest Hamming
+    // distance to its frozen center
+    val centers = spark.read.parquet(ivf.resolve("bin_centroids").toString).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Long](1).toArray).toMap
+    val radii = spark.read.parquet(ivf.resolve("cells").toString)
+      .select("centroidId", "vec").collect()
+      .groupMapReduce(_.getInt(0))(r => hamming(r.getSeq[Long](1).toArray,
+        centers(r.getInt(0))).toDouble)(math.max)
+    val stats = client.indexStats("bs").collect()
+    assert(stats.map(_.getAs[Int]("centroidId")).toSeq == (0 until 4))
+    stats.foreach { r =>
+      val cell = r.getAs[Int]("centroidId")
+      assert(r.getAs[Boolean]("fresh"), s"cell $cell must read fresh")
+      assert(Option(r.getAs[java.lang.Double]("radius")).map(_.doubleValue) == radii.get(cell),
+        s"cell $cell radius")
+    }
+    assert(stats.map(_.getAs[Long]("n_rows")).sum == client.count("bs"))
+    assert(client.count("bs") == 81)
+  }
+
   test("create/write/search boundary validation") {
     import spark.implicits._
     val client = mkClient()

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import graft.api.GraftClient
+import graft.index.VecField
 
 /** The index readers REQUIRE every artifact a current build writes (the
   * probe table, cell radii, binary radii, `pq_recon`, `hnsw_meta`, the
@@ -51,6 +52,47 @@ class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Family("HNSW", binary = false, Seq("hnsw_graphs", "hnsw_meta")),
     Family("BIN_IVF_FLAT", binary = true,
       Seq("cells", "bin_centroids", "bin_radii", "DELTA")))
+
+  /** The families table's index types plus SPARSE_INVERTED_INDEX — the
+    * four vector index families — each pinned on the primary vector and
+    * on an extra field `f2` of the same family and index type. */
+  private val lifecycleTypes = families.map(_.indexType) :+ "SPARSE_INVERTED_INDEX"
+
+  /** Each index type's describe_index params on the primary, then on
+    * `f2`: the create-time values (nlist 4, the primary's pqNbits 4; a
+    * field takes the family defaults). */
+  private val lifecycleParams = Map(
+    "IVF_FLAT" -> Seq("""{"nlist":4}""", """{"nlist":4}"""),
+    "IVF_SQ8" -> Seq("""{"nlist":4}""", """{"nlist":4}"""),
+    "IVF_PQ" -> Seq("""{"nlist":4,"m":4,"nbits":4}""", """{"nlist":4,"m":4,"nbits":8}"""),
+    "HNSW" -> Seq("""{"M":16,"efConstruction":200}""", """{"M":16,"efConstruction":200}"""),
+    "BIN_IVF_FLAT" -> Seq("""{"nlist":4}""", """{"nlist":4}"""),
+    "SPARSE_INVERTED_INDEX" -> Seq("""{"metric":"dot"}""", """{"metric":"dot"}"""))
+
+  /** Each index type's compact detail on the primary, then on `f2`. */
+  private val lifecycleCompact = Map(
+    "HNSW" -> ("hnsw", Seq("tail folded", "f2 tail folded")),
+    "SPARSE_INVERTED_INDEX" -> ("sparse_inverted", Seq("-", "f2")))
+      .withDefaultValue(("ivf", Seq("delta folded", "f2 delta folded")))
+
+  private def sparseVec(seed: Int): Map[Long, Double] =
+    Map((seed % 7).toLong -> (1.0 + seed % 3), (20 + seed % 11).toLong -> 2.0)
+
+  /** (key, vec, f2, meta) rows of index type `it`'s family. */
+  private def lifecycleRows(it: String, seeds: Seq[Int]): DataFrame = {
+    import spark.implicits._
+    val k = (s: Int) => f"k$s%03d"
+    val meta = Map.empty[String, String]
+    it match {
+      case "BIN_IVF_FLAT" =>
+        seeds.map(s => (k(s), binVec(s), binVec(s + 500), meta)).toDF("key", "vec", "f2", "meta")
+      case "SPARSE_INVERTED_INDEX" =>
+        seeds.map(s => (k(s), sparseVec(s), sparseVec(s + 500), meta))
+          .toDF("key", "vec", "f2", "meta")
+      case _ =>
+        seeds.map(s => (k(s), floatVec(s), floatVec(s + 500), meta)).toDF("key", "vec", "f2", "meta")
+    }
+  }
 
   private def floatVec(seed: Int): Seq[Float] = {
     val r = new scala.util.Random(seed)
@@ -255,6 +297,34 @@ class IndexArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
       c.buildIndex("c", nlist = 4)
       assertArtifacts(c, f, "after the recovery build")
       if (f.indexType != "HNSW") surfacesExact(c, f, live, 77, "after the recovery build")
+    }
+  }
+
+  test("listIndexes and compact rows of every family, on the primary and on " +
+       "an extra field") {
+    lifecycleTypes.foreach { it =>
+      val c = new GraftClient(spark, newRoot())
+      val (vectorType, metric, dim) = it match {
+        case "BIN_IVF_FLAT" => ("BINARY_VECTOR", "hamming", 128)
+        case "SPARSE_INVERTED_INDEX" => ("SPARSE_FLOAT_VECTOR", "dot", 0)
+        case _ => ("FLOAT_VECTOR", "l2", 8)
+      }
+      c.createCollection("c", dim = dim, metric = metric, indexType = it, nlist = 4,
+        buckets = 4, pqNbits = if (it == "IVF_PQ") 4 else 8, vectorType = vectorType,
+        vectorFields = Seq(VecField("f2", dim, metric, it, family = vectorType)))
+      c.upsert("c", lifecycleRows(it, 0 until 40))
+      c.buildIndex("c", nlist = 4)
+      c.buildIndex("c", nlist = 4, field = "f2")
+      val expected = Seq("vec", "f2").zip(lifecycleParams(it)).map { case (field, params) =>
+        (it, field, true, params) }
+      def rows(): Seq[(String, String, Boolean, String)] = c.listIndexes("c").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getBoolean(2), r.getString(5))).toSeq
+      assert(rows() == expected, s"$it after the builds")
+      // one new key: far below the tail ratio, so every family appends
+      c.upsert("c", lifecycleRows(it, Seq(40)))
+      assert(rows() == expected, s"$it after a non-folding commit")
+      val (artifact, details) = lifecycleCompact(it)
+      assert(c.compact("c") == details.map(d => ("_default", artifact, d)), s"$it compact")
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -270,6 +271,44 @@ class MultiVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got3 = client.search("mvi", qI, k = 8, field = "img_vec")
       .collect().map(_.getString(0)).toSeq
     assert(got3 == exact2)
+  }
+
+  test("loadCollection warms every field's index: a field's first search " +
+       "after load runs no more tasks than its second") {
+    val client = mkClient()
+    client.createCollection("mvl", dim = dimText, indexType = "IVF_FLAT", buckets = 4,
+      vectorFields = Seq(VecField("img_vec", dimImg, "l2", "IVF_SQ8")))
+    upsertAll(client, "mvl", 0 until 200)
+    client.buildIndex("mvl", nlist = 8)
+    client.buildIndex("mvl", nlist = 8, field = "img_vec")
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    client.loadCollection("mvl")
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+    }
+    /** The tasks one search runs, planned and collected. */
+    def tasksOf(search: => org.apache.spark.sql.DataFrame): Int = {
+      GraftShim.drainListenerBus(spark)
+      tasks.set(0)
+      search.collect()
+      GraftShim.drainListenerBus(spark)
+      tasks.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try Seq("" -> tvec(5), "img_vec" -> ivec(5)).foreach { case (field, q) =>
+      def run() = tasksOf(client.search("mvl", q.toArray, k = 5, nprobe = 2, field = field))
+      val first = run()
+      val second = run()
+      assert(first <= second,
+        s"field '$field': the first search after load ran $first tasks, the second $second")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      client.releaseCollection("mvl")
+    }
+    // release unpins every layout load pinned, the field's included
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
+    assert(leaked.isEmpty, s"released collection still pins RDDs $leaked")
   }
 
   test("HNSW field index: exact at full ef through the graph dispatch; " +

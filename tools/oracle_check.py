@@ -28,6 +28,8 @@ Exit 0 iff every query matches exactly.
 """
 import json
 import math
+import os
+import signal
 import subprocess
 import sys
 from pathlib import Path
@@ -37,18 +39,32 @@ import pyarrow as pa
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("-") else "/root/testdata/sf0.01"
 OUT_DIR = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("-") else "/tmp/verify_out"
+# A graft.Verify run at sf0.01 takes about 5 minutes; one that has not
+# finished in 30 has stalled.
+VERIFY_TIMEOUT_S = 1800
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def run_verify():
     cmd = ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT_DIR}']
     print("+", " ".join(cmd), flush=True)
-    r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True)
-    if r.returncode != 0:
-        print(r.stdout[-4000:])
-        print(r.stderr[-4000:])
+    # own session: on a stall, the kill reaches sbt's forked Verify JVM too
+    p = subprocess.Popen(cmd, cwd=REPO, stdout=subprocess.PIPE,
+                         stderr=subprocess.PIPE, text=True, start_new_session=True)
+    try:
+        stdout, stderr = p.communicate(timeout=VERIFY_TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        os.killpg(p.pid, signal.SIGKILL)
+        p.communicate()
+        print(f"graft.Verify did not finish within {VERIFY_TIMEOUT_S} s "
+              "(VERIFY_TIMEOUT_S); killed its process tree", flush=True)
         sys.exit(1)
-    for line in r.stdout.splitlines():
+    if p.returncode != 0:
+        print(stdout[-4000:])
+        print(stderr[-4000:])
+        sys.exit(1)
+    for line in stdout.splitlines():
         if "[verify]" in line or "error" in line.lower():
             print(line)
 
